@@ -266,7 +266,7 @@ object DevProbe {
         }
       case "pp" =>
         import org.apache.spark.sql.functions._
-        val inv = llm.Dedup.invIndexProbe(spark, sfDir)
+        val inv = llm.Dedup.invIndex(spark, sfDir)
         time("inv build+count")(println(s"[probe]   inv=${inv.count()}"))
         val ranked = inv
           .withColumn("df", count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("shingle")))

@@ -20,9 +20,12 @@ import org.apache.spark.storage.StorageLevel
   * lifecycle-seam ask; same class as the r12 kcore dead-block drift).
   */
 object Memo {
-  private val registry =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[
-      java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  // by IDENTITY: map equality is by content, so a content-keyed set refuses
+  // a fresh (empty) memo map whenever another registered map is empty too
+  // (every map is, after a releaseAll) and releaseAll would never see it
+  private val registry = java.util.Collections.synchronizedSet(
+    java.util.Collections.newSetFromMap(new java.util.IdentityHashMap[
+      java.util.concurrent.ConcurrentHashMap[String, DataFrame], java.lang.Boolean]()))
 
   def cached(
       map: java.util.concurrent.ConcurrentHashMap[String, DataFrame],
@@ -41,7 +44,7 @@ object Memo {
     registry.forEach { map =>
       map.values.forEach { df =>
         try df.unpersist(blocking = true)
-        catch { case _: Throwable => () } // a stopped session has no blocks
+        catch { case scala.util.control.NonFatal(_) => () } // a stopped session has no blocks
       }
       map.clear()
     }

@@ -2011,6 +2011,10 @@ object Mining extends QueryPack {
     */
   def tsMatrixProfile(s: SparkSession, dir: String): DataFrame = {
     val (out, pairs) = tsMatrixProfileInner(s, dir)
+    // materialize the pair cache FIRST: motif and the profile union scan it
+    // three times, and an unmaterialized entry is computed by every leg's
+    // concurrent tasks (the cfItemRecs discipline)
+    pairs.count()
     val rows = out.collect()
     pairs.unpersist(blocking = true)
     s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)

@@ -121,27 +121,29 @@ object Dedup extends QueryPack {
     * window partitions on `shingle` — the SAME key the downstream self-join
     * shuffles on, so the filter adds no extra exchange.
     *
-    * cache()'d: jaccard consumes it twice (sizes + both self-join sides)
-    * and minhash three times (signatures + shingle sets + via candidates);
-    * CacheManager keys by canonical plan, so all consumers across all dedup
-    * queries share ONE entry per dataset instead of re-running the shingle
-    * UDF + df window each time. A production deployment would persist the
-    * index as a shingle-bucketed table — this is the local-mode analogue.
+    * Memoized per dir ([[graft.Memo]]): jaccard consumes it twice (sizes +
+    * both self-join sides) and minhash three times (signatures + shingle
+    * sets + via candidates), so all consumers across all dedup queries
+    * share ONE cached entry per dataset instead of re-running the shingle
+    * UDF + df window each time, and [[graft.Memo.releaseAll]] unpins it
+    * with the other memos. A production deployment would persist the index
+    * as a shingle-bucketed table — this is the local-mode analogue.
     */
-  /** dev-probe access to the cached inverted index (DevProbe `pp`) */
-  private[graft] def invIndexProbe(s: SparkSession, dir: String): DataFrame =
-    invIndex(Tables.loadSpread(s, dir, "documents"))
+  private val invIndexCache =
+    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  private def invIndex(docs: DataFrame): DataFrame =
-    withShingles(docs)
-      .select(col("doc_id"), explode(col("sh")).as("shingle"))
-      .withColumn("df", count(lit(1)).over(Window.partitionBy("shingle")))
-      .where(col("df") <= DfCap)
-      // df is KEPT in the cache: the cap removes whole shingle groups, so
-      // the capped df equals a recomputed one — ppjoin's rarity order reads
-      // it straight off the cache instead of paying a second shingle-keyed
-      // exchange + window (one int per row of cache for one less shuffle)
-      .cache()
+  private[graft] def invIndex(s: SparkSession, dir: String): DataFrame =
+    graft.Memo.cached(invIndexCache, dir) { d =>
+      withShingles(Tables.loadSpread(s, d, "documents"))
+        .select(col("doc_id"), explode(col("sh")).as("shingle"))
+        .withColumn("df", count(lit(1)).over(Window.partitionBy("shingle")))
+        // df is KEPT in the cache: the cap removes whole shingle groups, so
+        // the capped df equals a recomputed one — ppjoin's rarity order
+        // reads it straight off the cache instead of paying a second
+        // shingle-keyed exchange + window (one int per row of cache for one
+        // less shuffle)
+        .where(col("df") <= DfCap)
+    }
 
   /** shared-shingle pair machinery: per-doc retained-shingle sizes + the
     * shingle-keyed self-join pair counts ([[jaccard]] and
@@ -163,7 +165,7 @@ object Dedup extends QueryPack {
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   private def sizedPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val inv = invIndex(Tables.loadSpread(s, dir, "documents"))
+    val inv = invIndex(s, dir)
     // sizes memoized too (doc-count-sized): jaccard runs per consumer now,
     // so its per-call cost must be the tiny joins, not an index re-aggregate
     val sizes = graft.Memo.cached(docSizesCache, dir) { _ =>
@@ -337,7 +339,7 @@ object Dedup extends QueryPack {
     * `dedup_jaccard` predates the rule).
     */
   def ppjoin(s: SparkSession, dir: String): DataFrame = {
-    val inv = invIndex(Tables.loadSpread(s, dir, "documents"))
+    val inv = invIndex(s, dir)
     // rarity order (df, shingle) reads the df the index cache already
     // carries (the cap removes whole shingle groups, so the capped df IS
     // the recomputed one) — the r13 formulation paid a second
@@ -492,7 +494,7 @@ object Dedup extends QueryPack {
     * pair join for ALL co-shingled pairs, defeating the bucketing).
     */
   def minhash(s: SparkSession, dir: String): DataFrame = {
-    val inv  = invIndex(Tables.loadSpread(s, dir, "documents"))
+    val inv  = invIndex(s, dir)
     val sigs = docSketch(inv)
     // bands as ONE exploded band-key relation → a single self-join;
     // per-band joins would recompute the signature aggregation once per band

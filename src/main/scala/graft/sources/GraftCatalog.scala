@@ -1520,7 +1520,7 @@ private[sources] class GraftLogScan(path: String, v: Long, required: StructType,
       // falls back to the Group row reader. Everything else rows.
       def conf(key: String, dflt: Boolean): Boolean =
         try SparkSession.active.conf.get(key, dflt.toString).toBoolean
-        catch { case _: Throwable => dflt }
+        catch { case scala.util.control.NonFatal(_) => dflt }
       import org.apache.spark.sql.graftx.VectorizedLogReader
       val flat = VectorizedLogReader.flatSchema(required)
       val vec = flat ||

@@ -14,9 +14,11 @@ import scala.jdk.CollectionConverters._
   * Layout: `tableDir/data/<uuid>.parquet` (immutable data files, written
   * once, never rewritten) + `tableDir/_log/v<N>.txt` (manifest: the data
   * files LIVE at version N, one relative path per line). A commit writes
-  * new data files, then publishes the next manifest via temp-file + atomic
-  * rename — readers either see version N or N+1, never a torn state, and a
-  * crashed commit leaves only unreferenced files for [[vacuum]].
+  * new data files, then publishes the next manifest by hard-linking a
+  * fully-written temp file to `v<N>.txt` (put-if-absent `link(2)`, see
+  * [[publish]]) — readers either see version N or N+1, never a torn state,
+  * two writers can never both take N+1, and a crashed commit leaves only
+  * unreferenced files for [[gcOrphans]].
   *
   * Scale notes (100 TB posture): every operation here is METADATA-scale on
   * the driver (lists of file names — the same asymptotics as a Delta log);
@@ -59,7 +61,7 @@ object TableLog extends QueryPack {
       .filter(_.nonEmpty).filterNot(_.startsWith("#"))
 
   /** manifest publish instant of version `v` in MICROseconds — what the
-    * catalog's `TIMESTAMP AS OF` resolves against (the rename that
+    * catalog's `TIMESTAMP AS OF` resolves against (the link that
     * publishes the manifest IS the commit, so its mtime is the commit time)
     */
   private[sources] def versionCommitTimeMicros(table: String, v: Long): Long =
@@ -290,8 +292,10 @@ object TableLog extends QueryPack {
     * counts are observed DURING the write (single pass); if any constraint
     * is FALSE on any row, the freshly-staged files are deleted and the
     * commit aborts with [[CheckViolation]] before anything is published.
+    * The returned files stay unreferenced (and [[gcOrphans]]-collectable)
+    * until [[commitFiles]] publishes them — [[Txn]] stages here first.
     */
-  private def writeConstrained(df: DataFrame, table: String,
+  private[sources] def writeConstrained(df: DataFrame, table: String,
       bucketBy: Option[(String, Int)] = None): Seq[String] = {
     val cs = checkConstraints(table)
     if (cs.isEmpty) writeDataFiles(df, table, bucketBy)
@@ -438,10 +442,15 @@ object TableLog extends QueryPack {
     else None
   }
 
-  /** Publish manifest `v` atomically (temp + rename). An optional txn id
-    * rides as a `#txn:` header line INSIDE the manifest, so the rename that
+  /** Publish manifest `v` atomically (temp + link). An optional txn id
+    * rides as a `#txn:` header line INSIDE the manifest, so the link that
     * publishes the version is also what records the transaction — there is
     * no window where data is committed but its idempotence marker is not.
+    * `stats` (sidecar lines of the published files) are written only AFTER
+    * the link wins version `v`: a pre-publish sidecar could clobber a
+    * concurrent winner's, and a crash in between just leaves a statless
+    * version, which [[readPruned]] keeps whole and later commits heal
+    * ([[latestStatsLines]]).
     *
     * OPTIMISTIC CONCURRENCY: on Linux, rename() silently REPLACES an
     * existing target — two writers that both computed v = n+1 would have
@@ -460,7 +469,7 @@ object TableLog extends QueryPack {
 
   private[graft] def publish(
       table: String, v: Long, files: Seq[String], txn: Option[String] = None,
-      dvs: Seq[String] = Nil): Long = {
+      dvs: Seq[String] = Nil, stats: Seq[String] = Nil): Long = {
     Files.createDirectories(logDir(table))
     val tmp = logDir(table).resolve(s".v$v.${java.util.UUID.randomUUID()}.tmp")
     val lines = txn.map(t => s"#txn:$t").toSeq ++ dvs.map(d => s"#dv:$d") ++ files
@@ -471,7 +480,26 @@ object TableLog extends QueryPack {
       throw new CommitConflict(table, v)
     }
     Files.deleteIfExists(tmp)
+    if (stats.nonEmpty) {
+      Files.write(statsFile(table, v), stats.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    }
     v
+  }
+
+  /** what version `v` hands to the next commit: its live files (less
+    * `drop`), its DVs, and the stats lines of exactly those files, taken
+    * from the newest ancestor that has a sidecar ([[latestStatsLines]]) so
+    * a statless version never erases the index and dead-file stats never
+    * carry forward
+    */
+  private final case class Carried(files: Seq[String], dvs: Seq[String], stats: Seq[String])
+  private val NothingCarried = Carried(Nil, Nil, Nil)
+
+  private def carried(table: String, v: Long, drop: Set[String] = Set.empty): Carried = {
+    val files = liveFiles(table, v).filterNot(drop)
+    val live = files.toSet
+    Carried(files, dvFiles(table, v),
+      latestStatsLines(table, v).filter(l => live(l.takeWhile(_ != '|'))))
   }
 
   /** Publish data files written EXECUTOR-SIDE (a DSv2 `DataWriter` fleet —
@@ -511,20 +539,10 @@ object TableLog extends QueryPack {
       }
     }
     recordRowCounts(table, moved)
-    val keep = liveFiles(table, basedOn).filterNot(replaced)
-    val keepSet = keep.toSet
-    val dvs = if (keep.isEmpty) Seq.empty[String] else dvFiles(table, basedOn)
-    val stats =
-      if (keep.isEmpty) Seq.empty[String]
-      else latestStatsLines(table, basedOn).filter(l => keepSet(l.takeWhile(_ != '|')))
-    try {
-      val nv = publish(table, basedOn + 1, keep ++ moved, dvs = dvs)
-      if (stats.nonEmpty) {
-        Files.write(statsFile(table, nv),
-          stats.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      }
-      nv
-    } catch {
+    val keep = carried(table, basedOn, drop = replaced)
+    try publish(table, basedOn + 1, keep.files ++ moved,
+      dvs = if (keep.files.isEmpty) Nil else keep.dvs, stats = keep.stats)
+    catch {
       case _: CommitConflict =>
         dropStaged()
         throw new java.util.ConcurrentModificationException(
@@ -560,6 +578,28 @@ object TableLog extends QueryPack {
         .filter(_.startsWith("#txn:")).map(_.stripPrefix("#txn:"))
     }.toSet
 
+  /** Append commit: new version = previous live files (with their DVs and
+    * stats) + the new ones. `statCols` (long- or string-valued columns)
+    * adds per-file [min, max] stats to the version's sidecar — the
+    * Delta-style file-statistics index that [[readPruned]] skips by.
+    * Gathering them is ONE footer-light aggregate over the new files
+    * ([[gatherStats]]: rows scale with the data ONCE at write; the collected
+    * result scales with file count — the same driver-metadata asymptotics
+    * as the manifest itself).
+    */
+  def commitAppend(df: DataFrame, table: String, statCols: Seq[String] = Nil,
+      bucketBy: Option[(String, Int)] = None): Long =
+    writeAndCommit(df, table, overwrite = false, None, statCols, bucketBy).get
+
+  /** Logical overwrite: new version references ONLY the new files; prior
+    * versions stay readable (their files are untouched) until vacuumed.
+    * `statCols` writes a fresh per-file stats sidecar for the new version
+    * (the overwrite drops prior files, so prior stats never carry forward).
+    */
+  def commitOverwrite(df: DataFrame, table: String, statCols: Seq[String] = Nil,
+      bucketBy: Option[(String, Int)] = None): Long =
+    writeAndCommit(df, table, overwrite = true, None, statCols, bucketBy).get
+
   /** Exactly-once logical overwrite: a no-op when `txnId` already committed.
     * This is the sink half of end-to-end exactly-once streaming — a replayed
     * `foreachBatch` (same batch id after a crash) re-runs the same merge and
@@ -567,18 +607,8 @@ object TableLog extends QueryPack {
     * leaves only unreferenced data files for [[vacuum]].
     */
   def commitOnceOverwrite(
-      df: DataFrame, table: String, txnId: String): Option[Long] = {
-    if (committedTxns(table).contains(txnId)) None
-    else {
-      // writeConstrained, not writeDataFiles: idempotent transactional
-      // commits enforce the table's CHECK constraints exactly like
-      // commitAppend/commitOverwrite (one consistent enforcement surface).
-      // A conflict loser re-checks the txn set: if the WINNER was a replay
-      // of this same transaction, the no-op applies (its data files stay
-      // unreferenced for gcOrphans — same as any crashed commit)
-      commitStagedOnceOverwrite(table, writeConstrained(df, table), txnId)
-    }
-  }
+      df: DataFrame, table: String, txnId: String): Option[Long] =
+    writeAndCommit(df, table, overwrite = true, Some(txnId), Nil)
 
   /** Exactly-once APPEND: a no-op when `txnId` already committed — the
     * append twin of [[commitOnceOverwrite]] and what the streaming table-log
@@ -589,96 +619,52 @@ object TableLog extends QueryPack {
     */
   def commitOnceAppend(
       df: DataFrame, table: String, txnId: String,
-      statCols: Seq[String] = Nil): Option[Long] = {
-    if (committedTxns(table).contains(txnId)) None
+      statCols: Seq[String] = Nil): Option[Long] =
+    writeAndCommit(df, table, overwrite = false, Some(txnId), statCols)
+
+  /** Write `df` (CHECK constraints enforced, [[writeConstrained]]), gather
+    * its `statCols` stats and commit the files through [[commitFiles]]. A
+    * `txn` that already committed skips the data write entirely.
+    */
+  private def writeAndCommit(df: DataFrame, table: String, overwrite: Boolean,
+      txn: Option[String], statCols: Seq[String],
+      bucketBy: Option[(String, Int)] = None): Option[Long] =
+    if (txn.exists(committedTxns(table).contains)) None
     else {
-      val moved = writeConstrained(df, table)
-      val newStats = gatherStats(df.sparkSession, table, moved, statCols)
-      val r = withRetry(table) { v =>
-        if (committedTxns(table).contains(txnId)) AlreadyCommitted
-        else {
-          val prevV = versions(table).lastOption
-          val prev = prevV.map(liveFiles(table, _)).getOrElse(Seq.empty)
-          val prevStats = prevV.map { pv =>
-            val live = prev.toSet
-            latestStatsLines(table, pv).filter(l => live(l.takeWhile(_ != '|')))
-          }.getOrElse(Seq.empty)
-          publish(table, v, prev ++ moved, Some(txnId),
-            dvs = prevV.map(dvFiles(table, _)).getOrElse(Seq.empty))
-          if ((prevStats ++ newStats).nonEmpty) {
-            Files.write(statsFile(table, v),
-              (prevStats ++ newStats).mkString("\n").getBytes(StandardCharsets.UTF_8))
-          }
-          v
-        }
-      }
-      if (r == AlreadyCommitted) None else Some(r)
+      val moved = writeConstrained(df, table, bucketBy)
+      commitFiles(table, moved, overwrite, txn,
+        gatherStats(df.sparkSession, table, moved, statCols))
     }
+
+  /** The one commit body: publish ALREADY-WRITTEN `moved` files (plus their
+    * sidecar lines `stats`) as the next version under [[withRetry]] — an
+    * append on top of the head's [[carried]] files, DVs and stats, an
+    * overwrite alone. The head is re-read INSIDE the retry, so a conflict
+    * loser appends onto the winner's head. A `txn` rides in the manifest
+    * and makes the commit exactly-once: the committed txns are re-checked
+    * inside the retry, so a loser whose winner was a replay of the same txn
+    * becomes a no-op (None; its files stay unreferenced for [[gcOrphans]],
+    * like any crashed commit's). [[Txn]] publishes its staged files here.
+    */
+  private[sources] def commitFiles(
+      table: String, moved: Seq[String], overwrite: Boolean,
+      txn: Option[String] = None, stats: Seq[String] = Nil): Option[Long] = {
+    val r = withRetry(table) { v =>
+      if (txn.exists(committedTxns(table).contains)) AlreadyCommitted
+      else {
+        val head =
+          if (overwrite) NothingCarried
+          else versions(table).lastOption.fold(NothingCarried)(carried(table, _))
+        publish(table, v, head.files ++ moved, txn, head.dvs, head.stats ++ stats)
+      }
+    }
+    if (r == AlreadyCommitted) None else Some(r)
   }
 
-  /** sentinel for [[commitOnceOverwrite]]'s retry lambda: the txn landed
-    * via a concurrent replica, so this attempt must become a no-op
+  /** sentinel for [[commitFiles]]'s retry lambda: the txn landed via a
+    * concurrent replica, so this attempt must become a no-op
     */
   private val AlreadyCommitted = -2L
-
-  // -------------------------------------------------------------------------
-  // Staged-commit primitives — the two-phase surface [[Txn]] coordinates
-  // cross-table transactions with: stage data first (constraints enforced,
-  // nothing referenced), publish later (idempotent via txn tags), possibly
-  // from a DIFFERENT process than the one that staged (roll-forward
-  // recovery replays publishes from the intent record alone).
-  // -------------------------------------------------------------------------
-
-  /** Phase 1: write `df`'s rows as staged (unreferenced) data files under
-    * `table`, CHECK constraints enforced. Until some manifest references
-    * the returned paths they are invisible to every reader and
-    * [[gcOrphans]]-collectable — a crash after staging obliges nothing.
-    */
-  private[sources] def stageConstrained(df: DataFrame, table: String): Seq[String] =
-    writeConstrained(df, table)
-
-  /** Phase 2, append flavor: publish ALREADY-STAGED files exactly once
-    * under `txnId` (None when the txn had landed — same contract as
-    * [[commitOnceAppend]], which this is the staged half of).
-    */
-  private[sources] def commitStagedOnceAppend(
-      table: String, moved: Seq[String], txnId: String): Option[Long] = {
-    if (committedTxns(table).contains(txnId)) None
-    else {
-      val r = withRetry(table) { v =>
-        if (committedTxns(table).contains(txnId)) AlreadyCommitted
-        else {
-          val prevV = versions(table).lastOption
-          val prev = prevV.map(liveFiles(table, _)).getOrElse(Seq.empty)
-          val prevStats = prevV.map { pv =>
-            val live = prev.toSet
-            latestStatsLines(table, pv).filter(l => live(l.takeWhile(_ != '|')))
-          }.getOrElse(Seq.empty)
-          publish(table, v, prev ++ moved, Some(txnId),
-            dvs = prevV.map(dvFiles(table, _)).getOrElse(Seq.empty))
-          if (prevStats.nonEmpty) {
-            Files.write(statsFile(table, v),
-              prevStats.mkString("\n").getBytes(StandardCharsets.UTF_8))
-          }
-          v
-        }
-      }
-      if (r == AlreadyCommitted) None else Some(r)
-    }
-  }
-
-  /** Phase 2, overwrite flavor (staged half of [[commitOnceOverwrite]]). */
-  private[sources] def commitStagedOnceOverwrite(
-      table: String, moved: Seq[String], txnId: String): Option[Long] = {
-    if (committedTxns(table).contains(txnId)) None
-    else {
-      val r = withRetry(table) { v =>
-        if (committedTxns(table).contains(txnId)) AlreadyCommitted
-        else publish(table, v, moved, Some(txnId))
-      }
-      if (r == AlreadyCommitted) None else Some(r)
-    }
-  }
 
   /** txn tags recorded by ONE version's manifest ([[Txn]]'s landed-version
     * lookup and the split detector behind consistent snapshots)
@@ -764,11 +750,11 @@ object TableLog extends QueryPack {
     * unsigned byte-wise comparison of UTF-8 equals Spark's `UTF8String`
     * ordering AND parquet's unsigned lexicographic binary order, so the
     * sidecar, the engine, and the footers all compare in one collation).
-    * Written AFTER the manifest publish (a pre-publish write could clobber
-    * a concurrent winner's sidecar), so a crash in that window yields a
-    * STATLESS version — sound (readPruned keeps all files) and
-    * self-healing: later commits recover stats from the newest ancestor
-    * that has a sidecar ([[latestStatsLines]]).
+    * Written by [[publish]] AFTER the manifest link wins (a pre-publish
+    * write could clobber a concurrent winner's sidecar), so a crash in
+    * that window yields a STATLESS version — sound (readPruned keeps all
+    * files) and self-healing: later commits recover stats from the newest
+    * ancestor that has a sidecar ([[latestStatsLines]]).
     */
   private def statsFile(table: String, v: Long): Path =
     logDir(table).resolve(s"s$v.txt")
@@ -806,44 +792,6 @@ object TableLog extends QueryPack {
   private def latestStatsLines(table: String, upTo: Long): Seq[String] =
     versions(table).filter(_ <= upTo).sorted.reverseIterator
       .map(statsLines(table, _)).find(_.nonEmpty).getOrElse(Seq.empty)
-
-  /** Append commit: new version = previous live files + the new ones.
-    * `statCols` (long- or string-valued columns) adds per-file [min, max] stats to the
-    * version's sidecar — the Delta-style file-statistics index that
-    * [[readPruned]] skips by. Gathering them is ONE footer-light aggregate
-    * over the new files grouped by `input_file_name()` (rows scale with the
-    * data ONCE at write; the collected result scales with file count — the
-    * same driver-metadata asymptotics as the manifest itself). Prior
-    * versions' stats carry forward untouched.
-    */
-  def commitAppend(df: DataFrame, table: String, statCols: Seq[String] = Nil,
-      bucketBy: Option[(String, Int)] = None): Long = {
-    val moved = writeConstrained(df, table, bucketBy)
-    val newStats = gatherStats(df.sparkSession, table, moved, statCols)
-    withRetry(table) { v =>
-      // everything derived from the previous version re-reads INSIDE the
-      // retry, so a conflict loser appends onto the winner's head
-      val prevV = versions(table).lastOption
-      val prev = prevV.map(liveFiles(table, _)).getOrElse(Seq.empty)
-      val prevStats = prevV.map { pv =>
-        val live = prev.toSet
-        // newest-ancestor fallback heals a crash-orphaned statless version;
-        // restrict to files live NOW so dead-file stats never carry forward
-        latestStatsLines(table, pv).filter(l => live(l.takeWhile(_ != '|')))
-      }.getOrElse(Seq.empty)
-      // prior files keep their deletion vectors across an append
-      publish(table, v, prev ++ moved,
-        dvs = prevV.map(dvFiles(table, _)).getOrElse(Seq.empty))
-      // stats sidecar AFTER the manifest wins its version: a pre-publish
-      // sidecar could clobber a concurrent winner's; a crash here just
-      // leaves a statless version, which readPruned treats as keep-all
-      if ((prevStats ++ newStats).nonEmpty) {
-        Files.write(statsFile(table, v),
-          (prevStats ++ newStats).mkString("\n").getBytes(StandardCharsets.UTF_8))
-      }
-      v
-    }
-  }
 
   /** per-file `relpath|col|min|max` lines for freshly-written files — the
     * shared gather behind [[commitAppend]] and [[commitOverwrite]]: ONE
@@ -1242,25 +1190,6 @@ object TableLog extends QueryPack {
       spark.read.parquet(kept.map(f => Paths.get(table).resolve(f).toString): _*))
   }
 
-  /** Logical overwrite: new version references ONLY the new files; prior
-    * versions stay readable (their files are untouched) until vacuumed.
-    * `statCols` writes a fresh per-file stats sidecar for the new version
-    * (the overwrite drops prior files, so prior stats never carry forward).
-    */
-  def commitOverwrite(df: DataFrame, table: String, statCols: Seq[String] = Nil,
-      bucketBy: Option[(String, Int)] = None): Long = {
-    val moved = writeConstrained(df, table, bucketBy)
-    val stats = gatherStats(df.sparkSession, table, moved, statCols)
-    withRetry(table) { v =>
-      publish(table, v, moved)
-      if (stats.nonEmpty) {
-        Files.write(statsFile(table, v),
-          stats.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      }
-      v
-    }
-  }
-
   /** Snapshot read at `asOf` (default: latest). The file list is pinned at
     * plan time — concurrent commits cannot tear the read (snapshot
     * isolation).
@@ -1336,34 +1265,25 @@ object TableLog extends QueryPack {
       // re-matches against the winner's files and DVs (a lost DV file from
       // the failed attempt stays unreferenced for gcOrphans)
       val v = nv - 1
-      val files = liveFiles(table, v)
-      require(files.nonEmpty, s"version $v of $table has no data files")
+      val head = carried(table, v)
+      require(head.files.nonEmpty, s"version $v of $table has no data files")
       // mergeSchema: on a schema-evolved table (which read() supports) a
       // single-file-inferred schema would make a predicate on a later-added
       // column throw or silently match nothing for the files lacking it
       val hits = spark.read.option("mergeSchema", true).parquet(
-          files.map(f => Paths.get(table).resolve(f).toString): _*)
+          head.files.map(f => Paths.get(table).resolve(f).toString): _*)
         .where(expr(cond))
         .select(
           concat(lit("data/"),
             element_at(split(col("_metadata.file_path"), "/"), -1)).as("f"),
           col("_metadata.row_index").as("p"))
-      val prevDvs = dvFiles(table, v)
       val merged =
-        if (prevDvs.isEmpty) hits.distinct()
+        if (head.dvs.isEmpty) hits.distinct()
         else hits.unionByName(spark.read.parquet(
-            prevDvs.map(f => Paths.get(table).resolve(f).toString): _*))
+            head.dvs.map(f => Paths.get(table).resolve(f).toString): _*))
           .distinct()
       val moved = writeDataFiles(merged.coalesce(1), table)
-      val liveSet = files.toSet
-      val prevStats =
-        latestStatsLines(table, v).filter(l => liveSet(l.takeWhile(_ != '|')))
-      publish(table, nv, files, dvs = moved)
-      if (prevStats.nonEmpty) {
-        Files.write(statsFile(table, nv),
-          prevStats.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      }
-      nv
+      publish(table, nv, head.files, dvs = moved, stats = head.stats)
     }
   }
 
@@ -1373,7 +1293,7 @@ object TableLog extends QueryPack {
     * small-file layout until [[vacuum]] reclaims it. The metadata-log twin
     * of [[Compaction]]'s in-place partition rewrite: here the table's
     * mutability lives entirely in the manifest, so "rewrite" is an append
-    * of new files plus one atomic rename.
+    * of new files plus one atomic manifest publish.
     */
   /** test seam: runs between a compaction's snapshot read and its publish
     * attempt, so a spec can interleave a concurrent commit deterministically
@@ -1401,14 +1321,8 @@ object TableLog extends QueryPack {
       val moved = writeConstrained(snapshot, table)
       val stats = gatherStats(spark, table, moved, statCols)
       testBeforeCompactPublish()
-      try {
-        val nv = publish(table, head + 1, moved)
-        if (stats.nonEmpty) {
-          Files.write(statsFile(table, nv),
-            stats.mkString("\n").getBytes(StandardCharsets.UTF_8))
-        }
-        return nv
-      } catch {
+      try return publish(table, head + 1, moved, stats = stats)
+      catch {
         case _: CommitConflict =>
           moved.foreach(f => Files.deleteIfExists(Paths.get(table).resolve(f)))
           attempts += 1
@@ -1583,16 +1497,8 @@ object TableLog extends QueryPack {
     require(versions(table).contains(toVersion),
       s"version $toVersion not in committed set ${versions(table).mkString(",")}")
     withRetry(table) { v =>
-      val files = liveFiles(table, toVersion)
-      publish(table, v, files, dvs = dvFiles(table, toVersion))
-      val live = files.toSet
-      val stats =
-        latestStatsLines(table, toVersion).filter(l => live(l.takeWhile(_ != '|')))
-      if (stats.nonEmpty) {
-        Files.write(statsFile(table, v),
-          stats.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      }
-      v
+      val target = carried(table, toVersion)
+      publish(table, v, target.files, dvs = target.dvs, stats = target.stats)
     }
   }
 
@@ -1812,9 +1718,8 @@ object TableLog extends QueryPack {
     require(versions(dst).isEmpty, s"clone target $dst already has versions")
     val v = asOf.getOrElse(vs.last)
     require(vs.contains(v), s"version $v of $src does not exist (have $vs)")
-    val files = liveFiles(src, v)
-    val dvs = dvFiles(src, v)
-    (files ++ dvs).foreach { rel =>
+    val snap = carried(src, v)
+    (snap.files ++ snap.dvs).foreach { rel =>
       val (s, d) = (Paths.get(src).resolve(rel), Paths.get(dst).resolve(rel))
       Files.createDirectories(d.getParent)
       try Files.createLink(d, s)
@@ -1825,7 +1730,7 @@ object TableLog extends QueryPack {
     }
     // row counts + stats are per-relpath facts about immutable files — filter
     // to the cloned live set and re-key nothing
-    val liveSet = (files ++ dvs).toSet
+    val liveSet = (snap.files ++ snap.dvs).toSet
     val counts = rowCounts(src).filter { case (f, _) => liveSet(f) }
     Files.createDirectories(logDir(dst))
     if (counts.nonEmpty) {
@@ -1836,13 +1741,7 @@ object TableLog extends QueryPack {
         java.nio.file.StandardOpenOption.APPEND)
     }
     checkConstraints(src).foreach { case (n, e) => addCheckConstraint(dst, n, e) }
-    val nv = publish(dst, 0L, files, dvs = dvs)
-    val stats = latestStatsLines(src, v).filter(l => liveSet(l.takeWhile(_ != '|')))
-    if (stats.nonEmpty) {
-      Files.write(statsFile(dst, nv),
-        stats.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    }
-    nv
+    publish(dst, 0L, snap.files, dvs = snap.dvs, stats = snap.stats)
   }
 
   /** Build/refresh the per-file [min, max] STATS sidecar for the head

@@ -12,15 +12,15 @@ import scala.jdk.CollectionConverters._
   * multi-table commit neither Delta nor Iceberg gives a filesystem
   * catalog, built from the log's own primitives:
   *
-  *  1. STAGE every table's data first ([[TableLog.stageConstrained]] —
+  *  1. STAGE every table's data first ([[TableLog.writeConstrained]] —
   *     CHECK constraints enforced, nothing referenced yet; a crash here
   *     obliges nothing, the staged files are [[TableLog.gcOrphans]] food);
   *  2. write the INTENT record (one atomic file move: the txn's member
   *     tables, kinds, and staged file lists) — this instant is the
   *     durability point: once the intent exists the transaction WILL
   *     complete, by this process or any later [[recover]];
-  *  3. publish per table via the idempotent txn-tagged commit
-  *     ([[TableLog.commitStagedOnceAppend]]/`Overwrite`, tag `xt_<id>`) —
+  *  3. publish per table via the idempotent txn-tagged commit of the
+  *     staged files ([[TableLog.commitFiles]], tag `xt_<id>`) —
   *     a crash mid-way leaves a roll-FORWARD obligation that replays
   *     from the intent alone (no DataFrames needed), and a replayed
   *     publish no-ops on tables where the tag already landed;
@@ -93,7 +93,7 @@ object Txn extends QueryPack {
       // stage EVERYTHING before any publish: once publishing starts the
       // only direction is forward, so the data it needs must all exist
       val staged = writes.map(w =>
-        (norm(w.table), w.overwrite, TableLog.stageConstrained(w.df, w.table)))
+        (norm(w.table), w.overwrite, TableLog.writeConstrained(w.df, w.table)))
       writeAtomic(intentFile(txnRoot, id),
         staged.map { case (t, ow, fs) => s"$t|$ow|${fs.mkString(",")}" })
     }
@@ -105,9 +105,7 @@ object Txn extends QueryPack {
       case ((table, ow, files), i) =>
         if (i >= failAfter)
           throw new IllegalStateException(s"txn $id: injected crash after $i tables")
-        val landed =
-          if (ow) TableLog.commitStagedOnceOverwrite(table, files, tag(id))
-          else TableLog.commitStagedOnceAppend(table, files, tag(id))
+        val landed = TableLog.commitFiles(table, files, ow, Some(tag(id)))
         table -> landed.getOrElse(landedVersion(table, tag(id)).getOrElse(
           sys.error(s"txn $id claims committed on $table but no version carries it")))
     }.toMap

@@ -67,4 +67,17 @@ class RebaseSpec extends SparkSpec {
     val b = get()
     assert(builds == 2 && b.count() == 10, "next access must rebuild + re-memoize")
   }
+
+  test("memo releaseAll leaves no dedup cache pinned, the shingle index included") {
+    // start with an empty registered memo map: a fresh map must still
+    // register although it equals that one by content
+    Memo.cached(new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame](),
+      "k")(_ => spark.range(1).toDF())
+    Memo.releaseAll()
+    spark.catalog.clearCache()
+    assert(llm.Dedup.jaccard(spark, sfDir).collect().nonEmpty)
+    Memo.releaseAll()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a dedup cache outlived Memo.releaseAll")
+  }
 }

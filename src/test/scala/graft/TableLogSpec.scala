@@ -518,6 +518,44 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.commitOnceOverwrite(Seq((2L, 7L)).toDF("k", "v"), t, "txnA").isEmpty)
   }
 
+  test("commitOnceAppend carries DVs and stats forward; a replayed txn adds no version") {
+    rm(new java.io.File(s"$root/once_append"))
+    val t = s"$root/once_append/t"
+    TableLog.commitAppend(
+      (0L until 400L).map(k => (k, k % 7)).toDF("k", "payload")
+        .repartitionByRange(4, col("k")), t, statCols = Seq("k"))      // v0
+    TableLog.deleteWhere(spark, t, "k = 130")                          // v1
+    val dvs = TableLog.dvFiles(t, 1L)
+    val (kept, total) = TableLog.prunedFiles(t, "k", 120L, 140L)
+    assert(dvs.nonEmpty && total == 4 && kept.size < total)
+
+    def batch = (1000L until 1100L).map(k => (k, k % 7)).toDF("k", "payload").coalesce(1)
+    assert(TableLog.commitOnceAppend(batch, t, "batch-7", statCols = Seq("k"))
+      .contains(2L))                                                   // v2
+    assert(TableLog.dvFiles(t, 2L) == dvs, "prior DVs must survive the append")
+    assert(TableLog.committedTxns(t).contains("batch-7"))
+    // old files keep their stats (the new range skips all four of them) and
+    // the new file has stats (the old range skips it)
+    assert(TableLog.prunedFiles(t, "k", 120L, 140L) == ((kept, 5)))
+    assert(TableLog.prunedFiles(t, "k", 1000L, 1099L)._1.size == 1)
+    assert(TableLog.read(spark, t).count() == 499L)
+
+    // a replay of the same txn is a no-op: no version, no rows
+    assert(TableLog.commitOnceAppend(batch, t, "batch-7", statCols = Seq("k")).isEmpty)
+    assert(TableLog.versions(t) == Seq(0L, 1L, 2L))
+    assert(TableLog.read(spark, t).count() == 499L)
+
+    // a cross-table txn append (statless staged file) keeps the index
+    val landed = graft.sources.Txn.commitAll(spark, s"$root/once_append/txns", "x1",
+      Seq(graft.sources.Txn.Write(Seq((5000L, 1L)).toDF("k", "payload"), t)))
+    assert(landed.values.toSeq == Seq(3L))
+    assert(TableLog.dvFiles(t, 3L) == dvs)
+    val (kept3, total3) = TableLog.prunedFiles(t, "k", 120L, 140L)
+    assert(total3 == 6 && kept3.size == kept.size + 1,
+      s"statless txn file is kept, indexed old files still skip: $kept3")
+    assert(TableLog.read(spark, t).count() == 500L)
+  }
+
   test("bloom index: no false negatives ever, real skipping on hash layout, incremental builds") {
     rm(new java.io.File(s"$root/bloom"))
     val t = s"$root/bloom"
