@@ -42,11 +42,7 @@ object DevProbe {
           api.withColumn("t2", to_timestamp(col("time"), ingest.Schemas.TsFormat))
             .write.mode("overwrite").format("noop").save())
         val path = "/tmp/devprobe_grid/candles"
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles.foreach(rm)
-          f.delete(); ()
-        }
-        rm(new java.io.File("/tmp/devprobe_grid"))
+        Scratch.wipe("/tmp/devprobe_grid")
         val newRows = ingest.Normalize.projectCandles(api)
           .withColumn("timestamp", to_timestamp(col("timestamp"), ingest.Schemas.TsFormat))
           .where(col("timestamp") >= lit("1995-01-01").cast("timestamp") &&
@@ -189,11 +185,7 @@ object DevProbe {
       case "ivf" =>
         val emb = Tables.loadSpread(spark, sfDir, "embeddings")
         val path = "/tmp/devprobe_ivfpq"
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles.foreach(rm)
-          f.delete(); ()
-        }
-        rm(new java.io.File(path))
+        Scratch.wipe(path)
         time("ivfIndex build+write")(
           llm.Similarity.ivfIndex(emb).write.mode("overwrite").parquet(s"$path/centroids"))
         val st = time("pqStateOf plan")(llm.Similarity.pqStateOf(emb))

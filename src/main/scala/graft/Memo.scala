@@ -18,6 +18,10 @@ import org.apache.spark.storage.StorageLevel
   * clears the maps, so the next consumer rebuilds from scratch instead of
   * accumulating one cached base per dir forever (the r13 verdict's
   * lifecycle-seam ask; same class as the r12 kcore dead-block drift).
+  *
+  * CONTRACT: entries are keyed by the data-dir string alone; a data dir
+  * must not change inside one JVM, or its entries serve the old contents
+  * (the same contract as [[Scratch.Fixture]]).
   */
 object Memo {
   // by IDENTITY: map equality is by content, so a content-keyed set refuses

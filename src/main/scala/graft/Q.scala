@@ -24,17 +24,58 @@ trait QueryPack {
     all.flatMap(q => q.oracle.map(q.name -> _)).toMap
 }
 
-/** pid-scoped scratch roots for the memoized per-data-dir table builders.
-  * Every builder follows delete → rebuild → commit on its path; with a FIXED
-  * path two concurrent JVMs (sbt test alongside a Verify run) can interleave
-  * those steps and leave one reader a half-built log. The pid in the path
-  * makes the sequence single-writer by construction; per-JVM memoization is
-  * unchanged.
+/** Scratch fixtures: tables a query builds under `/tmp` once per data dir.
+  *
+  * A [[Fixture]] owns some paths under its pid-scoped root
+  * `dir(prefix, dataDir)`. Its first call for a data dir wipes exactly those
+  * paths, runs the build and memoizes the result for the JVM; later calls
+  * return the memo. A build that throws memoizes nothing, so the next call
+  * wipes and builds again. Several fixtures may share one root (a catalog
+  * root holds many tables), so a fixture never wipes a path it does not
+  * own. The pid in the root keeps two concurrent JVMs (tests beside a
+  * Verify run) from interleaving their wipes and writes.
+  *
+  * CONTRACT: fixtures are keyed by the data-dir string alone; a data dir
+  * must not change inside one JVM, or its fixtures serve the old build.
+  *
+  * Declare every such table with [[fixture]], never with a private map.
   */
 object Scratch {
   def dir(prefix: String, dataDir: String): String =
     "/tmp/" + prefix + "_p" + ProcessHandle.current().pid() + "_" +
       dataDir.replaceAll("[^A-Za-z0-9]", "_")
+
+  /** Best-effort recursive delete; an absent path is a no-op. */
+  def wipe(path: String): Unit = wipeFile(new java.io.File(path))
+
+  private def wipeFile(f: java.io.File): Unit = {
+    Option(f.listFiles).foreach(_.foreach(wipeFile))
+    f.delete(); ()
+  }
+
+  /** @param owned sub-paths of the root this fixture builds; empty means
+    *              the whole root. A shared root is created before the build.
+    */
+  final class Fixture[T] private[Scratch] (prefix: String, owned: Seq[String]) {
+    // one map per fixture: a build may call another fixture with the same
+    // data dir, which one shared map would refuse as a recursive update
+    private val memo = new java.util.concurrent.ConcurrentHashMap[String, T]()
+
+    /** the memoized build for `dataDir`; `build` gets the fixture's root */
+    def apply(dataDir: String)(build: String => T): T =
+      memo.computeIfAbsent(dataDir, { d =>
+        val root = dir(prefix, d)
+        if (owned.isEmpty) wipe(root)
+        else {
+          owned.foreach(p => wipe(root + "/" + p))
+          new java.io.File(root).mkdirs()
+        }
+        build(root)
+      })
+  }
+
+  def fixture[T](prefix: String, owned: String*): Fixture[T] =
+    new Fixture[T](prefix, owned)
 }
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md / FIXTURES.md §B). */

@@ -32,10 +32,7 @@ object ScaleProbe {
     // for the ~minutes regeneration costs on a focused re-measure)
     if (sys.env.get("SCALEPROBE_REUSE").contains("1") &&
       new java.io.File(dir, "lineitem.parquet").exists()) return
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory) x.listFiles.foreach(rm); x.delete(); ()
-    }
-    rm(fs); fs.mkdirs()
+    Scratch.wipe(dir); fs.mkdirs()
     val rep = explode(sequence(lit(0), lit(f - 1))).as("r")
     def remap(df: DataFrame, keys: Seq[String]): DataFrame = {
       val withR = df.select(col("*"), rep)
@@ -79,10 +76,7 @@ object ScaleProbe {
     import graft.sources.TableLog
     import org.apache.spark.sql.streaming.Trigger
     val base = "/tmp/graft_scaleprobe/cdf"
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory) x.listFiles.foreach(rm); x.delete(); ()
-    }
-    rm(new java.io.File(base))
+    Scratch.wipe(base)
     new java.io.File(base).mkdirs()
 
     final case class Drain(sec: Double, batches: Int, appendPartsMax: Int,
@@ -175,11 +169,7 @@ object ScaleProbe {
     */
   private def probeRowLevel(spark: SparkSession, factor: Int): String = {
     val root = "/tmp/graft_scaleprobe/rowlevel"
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory) x.listFiles.foreach(rm)
-      x.delete(); ()
-    }
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     new java.io.File(root).mkdirs()
     spark.conf.set("spark.sql.catalog.graftsp", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graftsp.root", root)
@@ -238,11 +228,7 @@ object ScaleProbe {
     import graft.sources.{MatView, TableLog, Txn}
     import graft.sources.MatView.AggSpec
     val root = "/tmp/graft_scaleprobe/mvtxn"
-    def rm(x: java.io.File): Unit = {
-      if (x.isDirectory) x.listFiles.foreach(rm)
-      x.delete(); ()
-    }
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     new java.io.File(root).mkdirs()
 
     def buildBase(name: String, rows: Long): String = {
@@ -320,11 +306,7 @@ object ScaleProbe {
     */
   private def probeColumnarScan(spark: SparkSession, rows: Long): String = {
     val root = "/tmp/graft_scaleprobe_col"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/colscan"
     sources.TableLog.commitAppend(
       spark.range(0, rows).selectExpr(

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Memo, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -42,15 +42,15 @@ object Indicators extends QueryPack {
     * the first query pays the fact scan and every later one reuses the
     * ~instrument×calendar-sized cached relation — the in-session analogue
     * of the materialized bar table a production deployment keeps (the
-    * `ordersVersioned` memoization discipline). Entries are tiny and live
-    * for the session.
+    * `ordersVersioned` memoization discipline). Both are tiny [[Memo]]
+    * entries: re-cached after a `clearCache()`, dropped by `releaseAll`.
     */
   private val closesCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private val barsCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** trades → per-(company, day) close (cents, max_by total order) + volume */
   private def dailyCloses(s: SparkSession, dir: String): DataFrame =
-    closesCache.computeIfAbsent(dir, _ => buildDailyCloses(s, dir).cache())
+    Memo.cached(closesCache, dir)(_ => buildDailyCloses(s, dir))
 
   private def buildDailyCloses(s: SparkSession, dir: String): DataFrame = {
     // loadSpread, not load: the per-row projection (timestampadd +
@@ -359,7 +359,7 @@ object Indicators extends QueryPack {
     * (memoized + cached per dir like [[dailyCloses]])
     */
   private def dailyBars(s: SparkSession, dir: String): DataFrame =
-    barsCache.computeIfAbsent(dir, _ => buildDailyBars(s, dir).cache())
+    Memo.cached(barsCache, dir)(_ => buildDailyBars(s, dir))
 
   private def buildDailyBars(s: SparkSession, dir: String): DataFrame = {
     // loadSpread: same per-row-expensive projection as [[buildDailyCloses]]

@@ -549,27 +549,22 @@ object IngestPack extends QueryPack {
     */
   /** one materialized grid table per data dir per JVM: query CONSTRUCTION
     * must be read-only (PlanAudit/Perf/tests build plans repeatedly without
-    * running them), so the rm + ingest side effects run once behind this
+    * running them), so the wipe + ingest side effects run once behind this
     * memo and every later call just reads the written table.
     */
-  private val gridIngested = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val gridIngested = graft.Scratch.fixture[String]("graft_grid", "candles")
 
   def gridCandles(s: SparkSession, dir: String): DataFrame = {
-    val out = gridIngested.computeIfAbsent(dir, { d =>
-      val path = graft.Scratch.dir("graft_grid", d) + "/candles"
-      // self-contained verification run: start from an empty table so window
+    val out = gridIngested(dir) { root =>
+      val path = root + "/candles"
+      // self-contained verification run: the fixture wipes `candles` so window
       // dirs left by a DIFFERENT grid layout (older code, other tests) cannot
       // leak into the read-back — dynamic overwrite only replaces its own
       // windows by design
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(path))
       BatchIngest.ingestCandles(
-        apiCandles(s, d), "1995-01-01", "2002-01-01", path, gridBuckets = 1)
+        apiCandles(s, dir), "1995-01-01", "2002-01-01", path, gridBuckets = 1)
       path
-    })
+    }
     val table = s.read.parquet(out)
     table
       .where(col("window") >= lit("1996-01-01").cast("date") &&
@@ -647,8 +642,7 @@ object IngestPack extends QueryPack {
     * gridCandles memo discipline: construction is read-only after the first
     * materialization)
     */
-  private val incrRollup =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val incrRollup = graft.Scratch.fixture[String]("graft_incragg")
 
   /** monthly (window, status) rollup — the aggregate both refreshes and the
     * oracle share
@@ -668,14 +662,8 @@ object IngestPack extends QueryPack {
     * the incremental table equals the from-scratch answer row for row.
     */
   def incrementalRollup(s: SparkSession, dir: String): DataFrame = {
-    val aggDir = incrRollup.computeIfAbsent(dir, { d =>
-      val root = graft.Scratch.dir("graft_incragg", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(root))
-      val orders = Tables.load(s, d, "orders")
+    val aggDir = incrRollup(dir) { root =>
+      val orders = Tables.load(s, dir, "orders")
         .withColumn("win", date_format(col("o_orderdate"), "yyyy-MM"))
       val cut = lit("1998-06-15").cast("timestamp")
       graft.operators.IncrementalAgg.appendAndRefresh(
@@ -685,7 +673,7 @@ object IngestPack extends QueryPack {
         orders.where(col("o_orderdate") >= cut),
         "win", s"$root/base", s"$root/agg", rollupAgg)
       s"$root/agg"
-    })
+    }
     s.read.parquet(aggDir)
       .select(col("win"), col("o_orderstatus"), col("n_orders"), col("sum_price"))
   }
@@ -741,7 +729,7 @@ object IngestPack extends QueryPack {
   /** one ORC materialization per data dir per JVM (the gridCandles memo
     * discipline: query construction stays read-only after the first run)
     */
-  private val orcWritten = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val orcWritten = graft.Scratch.fixture[String]("graft_orc", "candles")
 
   /** ORC round-trip e2e — the third sink/source format next to Parquet and
     * the CSV/JSON wire paths: the SAME normalized candle relation written as
@@ -752,18 +740,13 @@ object IngestPack extends QueryPack {
     * sources to the scan planner.
     */
   def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val out = orcWritten.computeIfAbsent(dir, { d =>
-      val path = graft.Scratch.dir("graft_orc", d) + "/candles"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(path))
-      Normalize.projectCandles(apiCandles(s, d))
+    val out = orcWritten(dir) { root =>
+      val path = root + "/candles"
+      Normalize.projectCandles(apiCandles(s, dir))
         .withColumn("timestamp", to_timestamp(col("timestamp"), Schemas.TsFormat))
         .write.mode("overwrite").orc(path)
       path
-    })
+    }
     s.read.orc(out)
       .groupBy(figiBucket(col("company_id"), 10).as("bucket"))
       .agg(

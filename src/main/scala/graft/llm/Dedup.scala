@@ -582,24 +582,18 @@ object Dedup extends QueryPack {
     ()
   }
 
-  private val mhIdxBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mhIdxBuilt = graft.Scratch.fixture[String]("graft_mhidx")
 
   /** standing corpus index + one appended batch, memoized per data dir
     * (pid-scoped path — the [[graft.Scratch]] single-writer rule)
     */
   private[graft] def minhashIndex(s: SparkSession, dir: String): String =
-    mhIdxBuilt.computeIfAbsent(dir, { d =>
-      val path = graft.Scratch.dir("graft_mhidx", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(path))
-      val docs = Tables.loadSpread(s, d, "documents")
+    mhIdxBuilt(dir) { path =>
+      val docs = Tables.loadSpread(s, dir, "documents")
       writeMinhashIndex(docs.where(col("doc_id") % IncBatchMod =!= 0), path, append = false)
       writeMinhashIndex(docs.where(col("doc_id") % IncBatchMod === 0), path, append = true)
       path
-    })
+    }
 
   /** Incremental near-dup detection: dedup an arriving batch (doc_id %
     * [[IncBatchMod]] == 0) against the standing corpus THROUGH the persisted
@@ -908,12 +902,10 @@ object Dedup extends QueryPack {
     * its SparkContext).
     */
   def components(s: SparkSession, dir: String): DataFrame = {
-    val out = componentsMemo.computeIfAbsent(dir, { d =>
-      val labelsDf = propagate(s, d)
-      val path = graft.Scratch.dir("graft_components", d)
-      labelsDf.write.mode("overwrite").parquet(path)
+    val out = componentsMemo(dir) { path =>
+      propagate(s, dir).write.mode("overwrite").parquet(path)
       path
-    })
+    }
     s.read.parquet(out)
   }
 
@@ -1000,8 +992,7 @@ object Dedup extends QueryPack {
     s.createDataset(labels.toSeq).toDF("doc_id", "canon_id")
   }
 
-  private val componentsMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val componentsMemo = graft.Scratch.fixture[String]("graft_components")
 
   /** components oracle: same pair graph, transitive closure via a recursive
     * CTE (UNION-dedup guarantees termination), min reachable id per doc.

@@ -155,11 +155,7 @@ object Erasure {
         case (f, i) => java.nio.file.Files.move(
           f.toPath, new java.io.File(dir, s"compact_${tag}_$i.parquet").toPath)
       }
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(tmp))
+    graft.Scratch.wipe(tmp)
     // phase 2: the superseded files go
     oldFiles.foreach(f => java.nio.file.Files.deleteIfExists(f.toPath))
     (before, after)

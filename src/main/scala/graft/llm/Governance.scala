@@ -613,7 +613,7 @@ object Governance extends QueryPack {
     */
   val ErasureMod = 37
 
-  private val erased = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val erased = graft.Scratch.fixture[String]("graft_gdpr", "events_log")
 
   /** replay a right-to-be-forgotten request through the table log, memoized
     * per data dir: v0 commits the full events extract, v1 overwrites it with
@@ -623,20 +623,15 @@ object Governance extends QueryPack {
     * log directory.
     */
   private[graft] def erasureLog(s: SparkSession, dir: String): String =
-    erased.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_gdpr", d) + "/events_log"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
-      val ev = Tables.load(s, d, "events")
+    erased(dir) { root =>
+      val table = root + "/events_log"
+      val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"))
       graft.sources.TableLog.commitOverwrite(ev, table)
       graft.sources.TableLog.commitOverwrite(
         ev.where(col("user_id") % ErasureMod =!= 0), table)
       table
-    })
+    }
 
   /** GDPR erasure with audit: delete every event of the requested user
     * cohort by publishing a NEW table-log version (the physical-rewrite

@@ -839,13 +839,12 @@ object Similarity extends QueryPack {
   }
 
   /** memoized per-data-dir IVF-PQ index build (pid-scoped scratch path) */
-  private val ivfPqBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val ivfPqBuilt = graft.Scratch.fixture[String]("graft_ivfpq")
   private def ivfPqIndexPath(s: SparkSession, dir: String): String =
-    ivfPqBuilt.computeIfAbsent(dir, { d =>
-      val path = graft.Scratch.dir("graft_ivfpq", d)
-      writeIvfPqIndex(Tables.loadSpread(s, d, "embeddings"), path)
+    ivfPqBuilt(dir) { path =>
+      writeIvfPqIndex(Tables.loadSpread(s, dir, "embeddings"), path)
       path
-    })
+    }
 
   /** `ann_ivfpq_topk` — end-to-end persisted IVF-PQ: build (memoized) →
     * serve the first-5 query set with the default [[NProbe]] cell probes.

@@ -973,7 +973,7 @@ object TextStats extends QueryPack {
       cursorFile: String): Option[(Long, Long)] =
     Erasure.propagate(s, docsTable, indexPath, cursorFile, "doc_id")
 
-  private val textIndexed = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val textIndexed = graft.Scratch.fixture[String]("graft_tindex")
 
   /** Index build + multi-term lookup, end to end: the engine REALLY writes
     * the bucketed index once per data dir (memoized — construction stays
@@ -983,16 +983,10 @@ object TextStats extends QueryPack {
     * (lookup bucket ≠ write bucket) surfaces as missing rows, not silence.
     */
   def textIndexLookup(s: SparkSession, dir: String): DataFrame = {
-    val path = textIndexed.computeIfAbsent(dir, { d =>
-      val p = graft.Scratch.dir("graft_tindex", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(p))
-      writeTextIndex(graft.Tables.loadSpread(s, d, "documents"), p)
+    val path = textIndexed(dir) { p =>
+      writeTextIndex(graft.Tables.loadSpread(s, dir, "documents"), p)
       p
-    })
+    }
     Seq("table", "spark", "window")
       .map(t => termLookup(s, path, t))
       .reduce(_ unionByName _)

@@ -64,21 +64,16 @@ object IncrementalView extends QueryPack {
         sum((col("o_totalprice").cast("decimal(12,2)") * 100).cast("long"))
           .as("revenue_cents"))
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val built = graft.Scratch.fixture[String]("graft_ivm", "rev_mv")
 
   /** replay 3 insert batches through the incremental path, memoized per
     * data dir; returns the table-log path of the maintained view
     */
   private[graft] def revenueMv(s: SparkSession, dir: String): String =
-    built.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_ivm", d) + "/rev_mv"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
-      val orders = Tables.load(s, d, "orders")
-      val dimDf = dim(s, d)
+    built(dir) { root =>
+      val table = root + "/rev_mv"
+      val orders = Tables.load(s, dir, "orders")
+      val dimDf = dim(s, dir)
       (0 until 3).foreach { i =>
         val delta = deltaAgg(orders.where(batchPredicate(i)), dimDf)
         val next =
@@ -88,7 +83,7 @@ object IncrementalView extends QueryPack {
         ()
       }
       table
-    })
+    }
 
   // -------------------------------------------------------------------------
   // CDC (retraction-capable) maintenance
@@ -145,20 +140,15 @@ object IncrementalView extends QueryPack {
     }
   }
 
-  private val cdcBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val cdcBuilt = graft.Scratch.fixture[String]("graft_ivm_cdc", "rev_cdc_mv")
 
   /** replay the 3 CDC batches through the signed-merge path, one table-log
     * version per batch, memoized per data dir
     */
   private[graft] def cdcMv(s: SparkSession, dir: String): String =
-    cdcBuilt.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_ivm_cdc", d) + "/rev_cdc_mv"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
-      val orders = Tables.load(s, d, "orders")
+    cdcBuilt(dir) { root =>
+      val table = root + "/rev_cdc_mv"
+      val orders = Tables.load(s, dir, "orders")
       val keys = Seq("o_orderpriority")
       val sums = Seq("n_orders", "revenue_cents")
       (0 until 3).foreach { b =>
@@ -173,7 +163,7 @@ object IncrementalView extends QueryPack {
         ()
       }
       table
-    })
+    }
 
   /** Every version of the CDC-maintained view (version k = the view after
     * CDC batches 0..k) — the oracle recomputes EACH version's live row set
@@ -231,7 +221,7 @@ object IncrementalView extends QueryPack {
     }
   }
 
-  private val mmBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mmBuilt = graft.Scratch.fixture[String]("graft_ivm_mm", "mm_mv")
 
   /** MIN/MAX view maintained under the same CDC stream — the
     * NON-INVERTIBLE-aggregate case [[mergeCdc]]'s abelian-group trick
@@ -246,14 +236,9 @@ object IncrementalView extends QueryPack {
     * proving the partial-recompute rule itself, not just the results.
     */
   private[graft] def minmaxMv(s: SparkSession, dir: String): String =
-    mmBuilt.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_ivm_mm", d) + "/mm_mv"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
-      val orders = Tables.load(s, d, "orders")
+    mmBuilt(dir) { root =>
+      val table = root + "/mm_mv"
+      val orders = Tables.load(s, dir, "orders")
       val key = "o_orderpriority"
       (0 until 3).foreach { b =>
         val legs = cdcLegs(orders, b)
@@ -313,7 +298,7 @@ object IncrementalView extends QueryPack {
         ()
       }
       table
-    })
+    }
 
   /** Every version of the min/max CDC view with its per-group recompute
     * flags; the oracle rebuilds states AND flags from the raw fact.

@@ -162,22 +162,17 @@ object Layout extends QueryPack {
     * memo discipline)
     */
   private val zOrdered =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+    graft.Scratch.fixture[(String, String)]("graft_zorder", "orders", "orders_manifest")
 
   private[graft] def ordersZOrdered(s: SparkSession, dir: String): (String, String) = {
-    zOrdered.computeIfAbsent(dir, { d =>
-      val path = graft.Scratch.dir("graft_zorder", d) + "/orders"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(path)); rm(new java.io.File(path + "_manifest"))
+    zOrdered(dir) { root =>
+      val path = root + "/orders"
       writeZOrdered(
-        Tables.load(s, d, "orders"),
+        Tables.load(s, dir, "orders"),
         col("o_custkey"),
         datediff(col("o_orderdate"), lit("1970-01-01").cast("date")),
         path, nFiles = 32)
-    })
+    }
   }
 
   /** predicate box: one customer band × one calendar year (non-empty at

@@ -299,22 +299,16 @@ object MatView extends QueryPack {
   // registry query — the routed SQL aggregate, hash-gated end to end
   // ---------------------------------------------------------------------
 
-  private val builtQ = new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+  private val builtQ = graft.Scratch.fixture[(String, String)]("graft_mv")
 
   /** scratch base log (orders with an exact cents column, one append + one
     * DV delete past the view's creation) + its maintained view
     */
   private def built(s: SparkSession, dir: String): (String, String) =
-    builtQ.computeIfAbsent(dir, { d =>
-      val root = graft.Scratch.dir("graft_mv", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(root))
+    builtQ(dir) { root =>
       val base = s"$root/orders_mv"
       val view = s"$root/orders_mv_rollup"
-      val orders = Tables.load(s, d, "orders").select(
+      val orders = Tables.load(s, dir, "orders").select(
         col("o_orderkey"), col("o_orderstatus"), col("o_orderpriority"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
       TableLog.commitAppend(orders.where(col("o_orderkey") % 4 =!= 0), base)
@@ -328,7 +322,7 @@ object MatView extends QueryPack {
       val (_, mode) = refresh(s, view)
       require(mode == "incremental", s"expected incremental refresh, got $mode")
       (base, view)
-    })
+    }
 
   /** Per-(status, priority) count / exact cents sum / mean cents, as plain
     * SQL through the catalog with [[MatViewRewrite]] enabled — asserted to

@@ -1842,22 +1842,17 @@ object TableLog extends QueryPack {
 
   // ---- the graded query: time travel over two commits of orders ----------
 
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val built = graft.Scratch.fixture[String]("graft_tlog", "orders")
 
   private[graft] def ordersVersioned(s: SparkSession, dir: String): String =
-    built.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_tlog", d) + "/orders"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
-      val orders = Tables.load(s, d, "orders")
+    built(dir) { root =>
+      val table = root + "/orders"
+      val orders = Tables.load(s, dir, "orders")
       val cut = lit("1998-01-01").cast("timestamp")
       commitAppend(orders.where(col("o_orderdate") < cut), table)
       commitAppend(orders.where(col("o_orderdate") >= cut), table)
       table
-    })
+    }
 
   /** Per-version accounting across the log: version 0 must still read as
     * exactly the pre-1998 snapshot AFTER version 1 was committed — the
@@ -1918,7 +1913,7 @@ object TableLog extends QueryPack {
           .otherwise("unchanged").as("class"))
   }
 
-  private val diffBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val diffBuilt = graft.Scratch.fixture[String]("graft_tlog", "orders_diff")
 
   /** versioned table whose second commit is a full next-state OVERWRITE
     * exercising every diff class: keys ≡0 (mod 10) disappear, ≡1 double
@@ -1927,14 +1922,9 @@ object TableLog extends QueryPack {
     * classification without ever seeing the log.
     */
   private[graft] def ordersDiffed(s: SparkSession, dir: String): String =
-    diffBuilt.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_tlog", d) + "/orders_diff"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
-      val base = Tables.load(s, d, "orders").select(
+    diffBuilt(dir) { root =>
+      val table = root + "/orders_diff"
+      val base = Tables.load(s, dir, "orders").select(
         col("o_orderkey"),
         (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long").as("cents"))
       commitAppend(base, table)
@@ -1947,7 +1937,7 @@ object TableLog extends QueryPack {
             (col("cents") + 7).as("cents")))
       commitOverwrite(next, table)
       table
-    })
+    }
 
   /** Version-diff accounting v0→v1 over [[ordersDiffed]]: per class, the
     * key count, exact key sum, and the signed cents delta (removed rows
@@ -1987,21 +1977,16 @@ object TableLog extends QueryPack {
       |       CAST(sum(delta) AS BIGINT) AS delta_cents
       |FROM cls GROUP BY class""".stripMargin
 
-  private val evolved = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val evolved = graft.Scratch.fixture[String]("graft_tlog", "orders_evolved")
 
   /** versioned table whose second commit WIDENS the schema: v0 holds even
     * orders as (o_orderkey, cents); v1 appends odd orders with a new
     * `status` column v0's files have never heard of.
     */
   private[graft] def ordersEvolved(s: SparkSession, dir: String): String =
-    evolved.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_tlog", d) + "/orders_evolved"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
-      val orders = Tables.load(s, d, "orders")
+    evolved(dir) { root =>
+      val table = root + "/orders_evolved"
+      val orders = Tables.load(s, dir, "orders")
         .withColumn("cents",
           (col("o_totalprice").cast("decimal(12,2)") * 100).cast("long"))
       commitAppend(orders.where(col("o_orderkey") % 2 === 0)
@@ -2009,7 +1994,7 @@ object TableLog extends QueryPack {
       commitAppend(orders.where(col("o_orderkey") % 2 === 1)
         .select(col("o_orderkey"), col("cents"), col("o_orderstatus").as("status")), table)
       table
-    })
+    }
 
   /** Schema-evolution read: after a widening commit, the latest snapshot
     * must surface the new column with pre-evolution rows null-backfilled —
@@ -2046,16 +2031,11 @@ object TableLog extends QueryPack {
     * the events that had ARRIVED on time (md5 picks a deterministic 20% as
     * late/out-of-order), tx-version 1 sees the corrected full history.
     */
-  private val btBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val btBuilt = graft.Scratch.fixture[String]("graft_btemp", "user_state")
   private def btTable(s: SparkSession, dir: String): String =
-    btBuilt.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_btemp", d) + "/user_state"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
-      val ev = graft.Tables.load(s, d, "events")
+    btBuilt(dir) { root =>
+      val table = root + "/user_state"
+      val ev = graft.Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"),
           unix_micros(col("ts")).as("us"),
           floor(col("value") * 100).cast("long").as("cents"))
@@ -2069,7 +2049,7 @@ object TableLog extends QueryPack {
       commitOverwrite(scd2(ev.where(md5i("bt:late:", col("event_id")) % 5 =!= 0)), table)
       commitOverwrite(scd2(ev), table)
       table
-    })
+    }
 
   /** Bitemporal as-of: "what do we believe, at each TRANSACTION-time
     * version of the table, about each user's state VALID at instant V?" —
@@ -2159,7 +2139,7 @@ object TableLog extends QueryPack {
       |       CAST(coalesce(sum(CAST('0x' || substr(md5('bt:' || CAST(user_id AS VARCHAR) || ':' || CAST(cents AS VARCHAR)), 1, 8) AS BIGINT)), 0) AS BIGINT)
       |FROM ad""".stripMargin
 
-  private val dvBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val dvBuilt = graft.Scratch.fixture[String]("graft_tlog", "orders_dv")
 
   /** versioned table exercising the DV lifecycle: v0 = full orders append,
     * v1 = DV delete of finished orders with key ≡ 0,1,2 (mod 10), v2 = a
@@ -2169,18 +2149,13 @@ object TableLog extends QueryPack {
     * surviving set without ever seeing the log.
     */
   private[graft] def ordersDvDeleted(s: SparkSession, dir: String): String =
-    dvBuilt.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_tlog", d) + "/orders_dv"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
-      commitAppend(Tables.load(s, d, "orders"), table)
+    dvBuilt(dir) { root =>
+      val table = root + "/orders_dv"
+      commitAppend(Tables.load(s, dir, "orders"), table)
       deleteWhere(s, table, "o_orderstatus = 'F' AND o_orderkey % 10 < 3")
       deleteWhere(s, table, "o_orderpriority = '1-URGENT'")
       table
-    })
+    }
 
   /** Merge-on-read accounting over [[ordersDvDeleted]]: the per-status
     * survivor counts and exact cents totals after two overlapping DV
@@ -2206,7 +2181,7 @@ object TableLog extends QueryPack {
       |GROUP BY 1""".stripMargin
 
   private val cloneQBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+    graft.Scratch.fixture[(String, String)]("graft_tlog", "clone_src", "clone_dev")
 
   /** Shallow-clone divergence, hash-gated end to end: an orders-derived
     * table takes a DV delete, is CLONED (zero-copy hard links), and the two
@@ -2217,15 +2192,9 @@ object TableLog extends QueryPack {
     * re-read a vacuumed-in-one-side file flips a side's sums.
     */
   def cloneDivergence(s: SparkSession, dir: String): DataFrame = {
-    val (src, dev) = cloneQBuilt.computeIfAbsent(dir, { d =>
-      val root = graft.Scratch.dir("graft_tlog", d)
+    val (src, dev) = cloneQBuilt(dir) { root =>
       val (srcT, devT) = (root + "/clone_src", root + "/clone_dev")
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(srcT)); rm(new java.io.File(devT))
-      val base = Tables.load(s, d, "orders").select(
+      val base = Tables.load(s, dir, "orders").select(
         col("o_orderkey").as("k"),
         col("o_orderstatus").as("status"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -2234,11 +2203,11 @@ object TableLog extends QueryPack {
       cloneTable(srcT, devT)                                     // dev v0 == src v1
       deleteWhere(s, devT, "status = 'F'")                       // dev diverges
       commitAppend(                                              // src diverges
-        Tables.load(s, d, "orders").where(col("o_orderkey") % 100 === 0)
+        Tables.load(s, dir, "orders").where(col("o_orderkey") % 100 === 0)
           .select((col("o_orderkey") + 3000000L).as("k"),
             lit("Z").as("status"), lit(1L).as("cents")), srcT)
       (srcT, devT)
-    })
+    }
     read(s, src).withColumn("side", lit("src"))
       .unionByName(read(s, dev).withColumn("side", lit("dev")))
       .groupBy(col("side"), col("status"))
@@ -2264,7 +2233,7 @@ object TableLog extends QueryPack {
       |       CAST(sum(cents) AS BIGINT) AS cents
       |FROM both_sides GROUP BY side, status""".stripMargin
 
-  private val retrofitBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val retrofitBuilt = graft.Scratch.fixture[String]("graft_tlog", "orders_retrofit")
 
   /** Footer-only ANALYZE retrofit, hash-gated for SOUNDNESS: a
     * range-clustered table committed WITHOUT a stats index gets its sidecar
@@ -2275,15 +2244,10 @@ object TableLog extends QueryPack {
     * catches; the spec twin pins that files actually skip.
     */
   def statsRetrofitRead(s: SparkSession, dir: String): DataFrame = {
-    val t = retrofitBuilt.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_tlog", d) + "/orders_retrofit"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
+    val t = retrofitBuilt(dir) { root =>
+      val table = root + "/orders_retrofit"
       commitAppend(
-        Tables.load(s, d, "orders").select(
+        Tables.load(s, dir, "orders").select(
           col("o_orderkey").as("k"),
           col("o_orderstatus").as("status"),
           floor(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -2291,7 +2255,7 @@ object TableLog extends QueryPack {
       val n = buildStatsIndex(table, Seq("k"))
       require(n > 0, s"footer ANALYZE recorded nothing for $table")
       table
-    })
+    }
     readPruned(s, t, "k", 1000L, 5000L)
       .where(col("k") >= 1000L && col("k") <= 5000L)
       .groupBy(col("status"))
@@ -2304,7 +2268,7 @@ object TableLog extends QueryPack {
       |FROM orders WHERE o_orderkey BETWEEN 1000 AND 5000
       |GROUP BY 1""".stripMargin
 
-  private val strPrunedBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val strPrunedBuilt = graft.Scratch.fixture[String]("graft_tlog", "orders_strstats")
 
   /** STRING-stats pruned read, hash-gated for SOUNDNESS: orders committed
     * range-clustered on (priority, key) with a per-file STRING stats index
@@ -2315,22 +2279,17 @@ object TableLog extends QueryPack {
     * catches; TableLogSpec's twin pins that files actually skip.
     */
   def statsStringPrunedRead(s: SparkSession, dir: String): DataFrame = {
-    val t = strPrunedBuilt.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_tlog", d) + "/orders_strstats"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
+    val t = strPrunedBuilt(dir) { root =>
+      val table = root + "/orders_strstats"
       commitAppend(
-        Tables.load(s, d, "orders").select(
+        Tables.load(s, dir, "orders").select(
           col("o_orderkey").as("k"),
           col("o_orderpriority").as("pri"),
           floor(col("o_totalprice") * 100).cast("long").as("cents"))
           .repartitionByRange(8, col("pri"), col("k")),
         table, statCols = Seq("pri"))
       table
-    })
+    }
     readPrunedStr(s, t, "pri", Some("2-HIGH"), Some("3-MEDIUM"))
       .where(col("pri") >= "2-HIGH" && col("pri") <= "3-MEDIUM")
       .groupBy(col("pri"))
@@ -2344,7 +2303,7 @@ object TableLog extends QueryPack {
       |WHERE o_orderpriority BETWEEN '2-HIGH' AND '3-MEDIUM'
       |GROUP BY 1""".stripMargin
 
-  private val clusteredCatBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val clusteredCatBuilt = graft.Scratch.fixture[String]("graft_tlog", "orders_clustered")
 
   /** Clustered INSERT through the SQL catalog: CREATE TABLE with the
     * `graft.clusterBy` property, INSERT INTO from the source relation —
@@ -2356,16 +2315,10 @@ object TableLog extends QueryPack {
     * relational replay.
     */
   private[graft] def ordersClustered(s: SparkSession, dir: String): String =
-    clusteredCatBuilt.computeIfAbsent(dir, { d =>
-      val rt = graft.Scratch.dir("graft_tlog", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(rt + "/orders_clustered"))
+    clusteredCatBuilt(dir) { rt =>
       s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.graft.root", rt)
-      Tables.load(s, d, "orders").select(
+      Tables.load(s, dir, "orders").select(
         col("o_orderkey").as("k"),
         col("o_orderpriority").as("pri"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
@@ -2374,7 +2327,7 @@ object TableLog extends QueryPack {
         "TBLPROPERTIES ('graft.clusterBy'='pri,k', 'graft.clusterBy.files'='8')")
       s.sql("INSERT INTO graft.orders_clustered SELECT k, pri, cents FROM orders_clus_src")
       rt
-    })
+    }
 
   def catalogClusteredInsert(s: SparkSession, dir: String): DataFrame = {
     val root = ordersClustered(s, dir)
@@ -2396,7 +2349,8 @@ object TableLog extends QueryPack {
       |FROM orders WHERE o_orderpriority <= '2-HIGH'
       |GROUP BY 1""".stripMargin
 
-  private val bucketedJoinBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val bucketedJoinBuilt =
+    graft.Scratch.fixture[String]("graft_tlog", "orders_bkt", "customer_bkt")
 
   /** Storage-partitioned-join fixture: orders and customer both written
     * through the catalog as `graft.bucketBy` tables on the customer key
@@ -2404,22 +2358,15 @@ object TableLog extends QueryPack {
     * zero-shuffle join law (CatalogSpec) runs on. Built once per dir.
     */
   private[graft] def bucketedTables(s: SparkSession, dir: String): String =
-    bucketedJoinBuilt.computeIfAbsent(dir, { d =>
-      val rt = graft.Scratch.dir("graft_tlog", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(rt + "/orders_bkt"))
-      rm(new java.io.File(rt + "/customer_bkt"))
+    bucketedJoinBuilt(dir) { rt =>
       s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.graft.root", rt)
-      Tables.load(s, d, "orders").select(
+      Tables.load(s, dir, "orders").select(
         col("o_orderkey").as("k"),
         col("o_custkey").as("ck"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
         .createOrReplaceTempView("orders_bkt_src")
-      Tables.load(s, d, "customer").select(
+      Tables.load(s, dir, "customer").select(
         col("c_custkey").as("ck"),
         col("c_mktsegment").as("seg"))
         .createOrReplaceTempView("customer_bkt_src")
@@ -2433,7 +2380,7 @@ object TableLog extends QueryPack {
       // rows between buckets, so the join below still runs shuffle-free
       s.sql("DELETE FROM graft.orders_bkt WHERE cents >= 40000000")
       rt
-    })
+    }
 
   /** Co-bucketed catalog join, hash-gated: both sides wrote through the
     * `graft.bucketBy` layout (bucket-pure files + per-file bucket sidecar)
@@ -2486,25 +2433,20 @@ object TableLog extends QueryPack {
       |       CAST(max(o_orderkey) AS BIGINT) AS k_hi
       |FROM orders""".stripMargin
 
-  private val bloomQBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val bloomQBuilt = graft.Scratch.fixture[String]("graft_tlog", "orders_bloom")
 
   /** orders committed HASH-clustered on o_custkey (8 files) with a Bloom
     * index built on that column — the layout where min/max stats are
     * useless (every file spans the full key range) and only a Bloom skips.
     */
   private[graft] def ordersBloomed(s: SparkSession, dir: String): String =
-    bloomQBuilt.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_tlog", d) + "/orders_bloom"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
+    bloomQBuilt(dir) { root =>
+      val table = root + "/orders_bloom"
       commitAppend(
-        Tables.load(s, d, "orders").repartition(8, col("o_custkey")), table)
+        Tables.load(s, dir, "orders").repartition(8, col("o_custkey")), table)
       buildBloomIndex(s, table, "o_custkey")
       table
-    })
+    }
 
   /** Bloom point lookups over [[ordersBloomed]]: five data-derived probe
     * keys (max custkey and its integer fractions — some may not exist,
@@ -2813,24 +2755,17 @@ object TableLog extends QueryPack {
         sum(floor(col("o_totalprice") * 100).cast("long")).as("cents"))
   }
 
-  private val cdcBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val cdcBuilt = graft.Scratch.fixture[String]("graft_cdc", "orders_cdc")
 
   /** scratch log table (orders keyed by o_orderkey with exact cents), then
     * one selective SQL `UPDATE` through the catalog — the file-granular
     * row-level rewrite whose churn [[changeFeedCdc]] must net out
     */
   private[graft] def ordersCdcUpdated(s: SparkSession, dir: String): String =
-    cdcBuilt.computeIfAbsent(dir, { d =>
-      val root = graft.Scratch.dir("graft_cdc", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(root + "/orders_cdc"))
-      new java.io.File(root).mkdirs()
+    cdcBuilt(dir) { root =>
       val table = root + "/orders_cdc"
       commitAppend(
-        Tables.load(s, d, "orders").select(
+        Tables.load(s, dir, "orders").select(
           col("o_orderkey"), col("o_orderstatus"),
           floor(col("o_totalprice") * 100).cast("long").as("cents")), table) // v0
       // Spark caches catalog INSTANCES by name: a fixed name plus a second
@@ -2843,7 +2778,7 @@ object TableLog extends QueryPack {
         s"""UPDATE $cat.orders_cdc SET cents = cents + 7
            |WHERE o_orderkey % 100 = 3""".stripMargin)                       // v1
       table
-    })
+    }
 
   /** Row-level CDC accounting over [[ordersCdcUpdated]]: per change type
     * the row count, exact cents, and key sum across the UPDATE commit.
@@ -3025,7 +2960,7 @@ object TableLog extends QueryPack {
       |GROUP BY 1""".stripMargin
 
   private val streamAggBuilt =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Long)]]()
+    graft.Scratch.fixture[Seq[(String, Long, Long)]]("graft_cdfstream", "ckpt")
 
   /** [[cdfMaintainedAgg]]'s STREAMING twin: the same signed per-status fold,
     * but consumed through the DSv2 [[TableChangeSource]] — one real
@@ -3038,14 +2973,9 @@ object TableLog extends QueryPack {
     * dir (the stream consumes the full history once per JVM).
     */
   def cdfStreamAgg(s: SparkSession, dir: String): DataFrame = {
-    val parts = streamAggBuilt.computeIfAbsent(dir, { d =>
-      val t = ordersDvDeleted(s, d)
-      val ckpt = graft.Scratch.dir("graft_cdfstream", d) + "/ckpt"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(ckpt))
+    val parts = streamAggBuilt(dir) { root =>
+      val t = ordersDvDeleted(s, dir)
+      val ckpt = root + "/ckpt"
       val acc = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long, Long)]()
       val q = s.readStream.format("graft.sources.TableChangeSource")
         .option("table", t).option("versionsPerTrigger", "1")
@@ -3067,7 +2997,7 @@ object TableLog extends QueryPack {
         .start()
       q.processAllAvailable(); q.stop(); q.awaitTermination()
       acc.asScala.toSeq
-    })
+    }
     import s.implicits._
     parts.toDF("o_orderstatus", "dn", "dc")
       .groupBy("o_orderstatus")
@@ -3171,6 +3101,8 @@ object TableLog extends QueryPack {
       |UNION ALL
       |SELECT 'files', 'live', count(*) FROM orders""".stripMargin
 
+  private val rtfDim = graft.Scratch.fixture[String]("graft_tlog", "rtf_dim_parquet")
+
   /** Join-key RUNTIME pruning end to end, hash-gated: the bloom-indexed
     * hash-clustered orders log joins a customer dim whose residual filter
     * survives only a few keys — the dim's VALUES must reach the scan at
@@ -3186,10 +3118,11 @@ object TableLog extends QueryPack {
     s.conf.set("spark.sql.catalog.graft.root", root)
     // the dim must be a REAL source with a residual filter for dynamic
     // pruning to plan, and the toy-scale stats veto must be off
-    val dimPath = graft.Scratch.dir("graft_tlog", dir) + "/rtf_dim_parquet"
-    if (!new java.io.File(dimPath).exists()) {
+    val dimPath = rtfDim(dir) { r =>
+      val p = r + "/rtf_dim_parquet"
       Tables.load(s, dir, "customer").select(col("c_custkey"))
-        .write.mode("overwrite").parquet(dimPath)
+        .write.mode("overwrite").parquet(p)
+      p
     }
     s.read.parquet(dimPath).createOrReplaceTempView("graft_rtf_dim")
     val prev = s.conf.get(
@@ -3243,7 +3176,7 @@ object TableLog extends QueryPack {
       |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       |WHERE c.c_custkey % 131 = 0""".stripMargin
 
-  private val mmxBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mmxBuilt = graft.Scratch.fixture[String]("graft_tlog", "orders_mmx")
 
   /** Metadata-only EXTREMES through SQL: orders committed with a stats
     * sidecar on both key columns, then `min`/`max`/`count(*)` in one
@@ -3253,18 +3186,13 @@ object TableLog extends QueryPack {
     * all flip a value.
     */
   def metadataMinMaxQ(s: SparkSession, dir: String): DataFrame = {
-    val t = mmxBuilt.computeIfAbsent(dir, { d =>
-      val table = graft.Scratch.dir("graft_tlog", d) + "/orders_mmx"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(table))
-      commitAppend(Tables.load(s, d, "orders")
+    val t = mmxBuilt(dir) { root =>
+      val table = root + "/orders_mmx"
+      commitAppend(Tables.load(s, dir, "orders")
         .select("o_orderkey", "o_custkey").repartition(4), table,
         statCols = Seq("o_orderkey", "o_custkey"))
       table
-    })
+    }
     val root = t.substring(0, t.lastIndexOf('/'))
     s.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.graft.root", root)
@@ -3285,7 +3213,7 @@ object TableLog extends QueryPack {
       |       count(*) AS n
       |FROM orders""".stripMargin
 
-  private val dmlBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val dmlBuilt = graft.Scratch.fixture[String]("graft_catdml", "orders_dml")
 
   /** The SQL WRITE face of the log: the whole DML lifecycle — CTAS,
     * INSERT INTO ... SELECT, INSERT ... VALUES, a DV `DELETE FROM`, an
@@ -3300,17 +3228,10 @@ object TableLog extends QueryPack {
     * null-backfill, or an off-by-one version pin all flip a number.
     */
   def catalogSqlDml(s: SparkSession, dir: String): DataFrame = {
-    val root = dmlBuilt.computeIfAbsent(dir, { d =>
-      val r = graft.Scratch.dir("graft_catdml", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(r + "/orders_dml"))
-      new java.io.File(r).mkdirs()
+    val root = dmlBuilt(dir) { r =>
       s.conf.set("spark.sql.catalog.graftw", classOf[GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.graftw.root", r)
-      Tables.load(s, d, "orders").createOrReplaceTempView("orders_dml_src")
+      Tables.load(s, dir, "orders").createOrReplaceTempView("orders_dml_src")
       s.sql(
         """CREATE TABLE graftw.orders_dml AS
           |SELECT o_orderkey, o_orderstatus,
@@ -3332,7 +3253,7 @@ object TableLog extends QueryPack {
           |       CAST(floor(o_totalprice * 100) AS LONG), o_orderkey
           |FROM orders_dml_src WHERE o_orderkey % 4 = 2""".stripMargin) // v6
       r
-    })
+    }
     s.conf.set("spark.sql.catalog.graftw", classOf[GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.graftw.root", root)
     s.sql(
@@ -3376,7 +3297,7 @@ object TableLog extends QueryPack {
       |SELECT '_v3', CAST(count(*) AS BIGINT), CAST(0 AS BIGINT), CAST(0 AS BIGINT)
       |FROM pre""".stripMargin
 
-  private val mergeBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mergeBuilt = graft.Scratch.fixture[String]("graft_catmerge", "cust_bal")
 
   /** SQL UPDATE + MERGE INTO through the catalog's group-based row-level
     * rewrite ([[GraftRowLevelOperation]]): a CTAS'd customer-balance table
@@ -3388,18 +3309,11 @@ object TableLog extends QueryPack {
     * branch applied in the wrong order all flip the per-nation sums.
     */
   def catalogSqlMerge(s: SparkSession, dir: String): DataFrame = {
-    val root = mergeBuilt.computeIfAbsent(dir, { d =>
-      val r = graft.Scratch.dir("graft_catmerge", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(r + "/cust_bal"))
-      new java.io.File(r).mkdirs()
+    val root = mergeBuilt(dir) { r =>
       s.conf.set("spark.sql.catalog.graftm", classOf[GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.graftm.root", r)
-      Tables.load(s, d, "customer").createOrReplaceTempView("merge_cust_src")
-      Tables.load(s, d, "orders").createOrReplaceTempView("merge_orders_src")
+      Tables.load(s, dir, "customer").createOrReplaceTempView("merge_cust_src")
+      Tables.load(s, dir, "orders").createOrReplaceTempView("merge_orders_src")
       s.sql(
         """CREATE TABLE graftm.cust_bal AS
           |SELECT c_custkey AS k, c_nationkey AS nat,
@@ -3420,7 +3334,7 @@ object TableLog extends QueryPack {
           |WHEN NOT MATCHED THEN INSERT (k, nat, bal) VALUES (s.k, -1, s.n)
           |""".stripMargin)                                          // v3 CoW
       r
-    })
+    }
     s.conf.set("spark.sql.catalog.graftm", classOf[GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.graftm.root", root)
     s.sql(
@@ -3451,7 +3365,7 @@ object TableLog extends QueryPack {
       |       CAST(sum(bal) AS BIGINT) AS bal_sum
       |FROM final GROUP BY nat""".stripMargin
 
-  private val mergeEvolveBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val mergeEvolveBuilt = graft.Scratch.fixture[String]("graft_catmergeevo", "cust_evo")
 
   /** `MERGE WITH SCHEMA EVOLUTION` through the catalog: the source carries a
     * `spend` column the target lacks; Spark's ResolveMergeIntoSchemaEvolution
@@ -3465,20 +3379,13 @@ object TableLog extends QueryPack {
     * INSTANCES by name, so a fixed name would pin the first dir's root.
     */
   def catalogSqlMergeEvolve(s: SparkSession, dir: String): DataFrame = {
-    val root = mergeEvolveBuilt.computeIfAbsent(dir, { d =>
-      val r = graft.Scratch.dir("graft_catmergeevo", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(r + "/cust_evo"))
-      new java.io.File(r).mkdirs()
+    val root = mergeEvolveBuilt(dir) { r =>
       val cat = "graftme_" + java.lang.Long.toHexString(
         java.lang.Integer.toUnsignedLong(r.hashCode))
       s.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
       s.conf.set(s"spark.sql.catalog.$cat.root", r)
-      Tables.load(s, d, "customer").createOrReplaceTempView("mevo_cust_src")
-      Tables.load(s, d, "orders").createOrReplaceTempView("mevo_orders_src")
+      Tables.load(s, dir, "customer").createOrReplaceTempView("mevo_cust_src")
+      Tables.load(s, dir, "orders").createOrReplaceTempView("mevo_orders_src")
       s.sql(
         s"""CREATE TABLE $cat.cust_evo AS
            |SELECT c_custkey AS k, c_nationkey AS nat,
@@ -3500,7 +3407,7 @@ object TableLog extends QueryPack {
            |WHEN NOT MATCHED THEN INSERT (k, nat, bal, spend)
            |  VALUES (s.k, -1, s.n, s.spend)""".stripMargin)      // v2 widen + v3 CoW
       r
-    })
+    }
     val cat = "graftme_" + java.lang.Long.toHexString(
       java.lang.Integer.toUnsignedLong(root.hashCode))
     s.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
@@ -3536,7 +3443,7 @@ object TableLog extends QueryPack {
       |       CAST(sum(coalesce(spend, -1)) AS BIGINT) AS spend_sum
       |FROM final GROUP BY nat""".stripMargin
 
-  private val nestedBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val nestedBuilt = graft.Scratch.fixture[String]("graft_catnested", "orders_nested")
 
   /** NESTED columns (struct / struct-of-struct / array-of-struct / map)
     * through the catalog's Group-API read path: an orders-derived table
@@ -3550,15 +3457,8 @@ object TableLog extends QueryPack {
     * read defect breaks the equality through the hash gate.)
     */
   def catalogSqlNested(s: SparkSession, dir: String): DataFrame = {
-    val root = nestedBuilt.computeIfAbsent(dir, { d =>
-      val r = graft.Scratch.dir("graft_catnested", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(r + "/orders_nested"))
-      new java.io.File(r).mkdirs()
-      val nested = Tables.load(s, d, "orders").selectExpr(
+    val root = nestedBuilt(dir) { r =>
+      val nested = Tables.load(s, dir, "orders").selectExpr(
         "o_orderkey AS k",
         "named_struct('status', o_orderstatus, 'price', named_struct(" +
           "'cents', CAST(floor(o_totalprice * 100) AS LONG), " +
@@ -3567,7 +3467,7 @@ object TableLog extends QueryPack {
         "map(o_orderstatus, CAST(floor(o_totalprice * 100) AS LONG)) AS bal")
       commitAppend(nested, r + "/orders_nested")
       r
-    })
+    }
     s.conf.set("spark.sql.catalog.graftn", classOf[GraftCatalog].getName)
     s.conf.set("spark.sql.catalog.graftn.root", root)
     s.sql(
@@ -3587,22 +3487,17 @@ object TableLog extends QueryPack {
       |       CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS balsum
       |FROM orders GROUP BY o_orderstatus""".stripMargin
 
-  private val embCatBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val embCatBuilt = graft.Scratch.fixture[String]("graft_tlog", "embeddings_cat")
 
   /** embeddings committed to a table log next to [[ordersDvDeleted]] (same
     * catalog root), memoized per data dir
     */
   private def embeddingsCat(s: SparkSession, dir: String): String =
-    embCatBuilt.computeIfAbsent(dir, { d =>
-      val t = graft.Scratch.dir("graft_tlog", d) + "/embeddings_cat"
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(t))
-      commitAppend(Tables.load(s, d, "embeddings"), t)
+    embCatBuilt(dir) { root =>
+      val t = root + "/embeddings_cat"
+      commitAppend(Tables.load(s, dir, "embeddings"), t)
       t
-    })
+    }
 
   /** ARRAY columns through the SQL catalog: the embeddings table served by
     * [[GraftCatalog]]'s Group-API read path — per-element fixed-point sums

@@ -198,7 +198,7 @@ object Txn extends QueryPack {
   // registry query — torn-then-recovered accounting, hash-gated
   // ---------------------------------------------------------------------
 
-  private val builtQ = new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long, Long, Long, Long)]]()
+  private val builtQ = graft.Scratch.fixture[Seq[(String, Long, Long, Long, Long)]]("graft_txn")
 
   /** Two tables written by cross-table txns; txn2 crash-lands on only the
     * first. Phase 'torn' reads the consistent snapshot BEFORE recovery
@@ -209,17 +209,11 @@ object Txn extends QueryPack {
     * consistent snapshots exist to prevent — flips the 'torn' sums.
     */
   def txnSnapshotQ(s: SparkSession, dir: String): DataFrame = {
-    val rows = builtQ.computeIfAbsent(dir, { d =>
-      val root = graft.Scratch.dir("graft_txn", d)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles.foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(root))
+    val rows = builtQ(dir) { root =>
       val (ta, tb, tr) = (s"$root/t_orders", s"$root/t_items", s"$root/_txns")
-      val orders = Tables.load(s, d, "orders").select(col("o_orderkey"),
+      val orders = Tables.load(s, dir, "orders").select(col("o_orderkey"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
-      val items = Tables.load(s, d, "lineitem").select(col("l_orderkey"),
+      val items = Tables.load(s, dir, "lineitem").select(col("l_orderkey"),
         col("l_quantity").cast("long").as("qty"))
       commitAll(s, tr, "txn1", Seq(
         Write(orders.where(col("o_orderkey") % 3 === 0), ta),
@@ -243,7 +237,7 @@ object Txn extends QueryPack {
       val rec = recover(s, tr)
       require(rec == Seq("txn2"), s"recovery must roll txn2 forward, got $rec")
       Seq(torn, phase("recovered"))
-    })
+    }
     import s.implicits._
     rows.toDF("phase", "a_rows", "a_cents", "b_rows", "b_qty")
   }

@@ -9,11 +9,7 @@ import org.apache.spark.sql.functions._
 class BatchIngestSpec extends SparkSpec {
 
   private def fresh(path: String): String = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(path))
+    Scratch.wipe(path)
     path
   }
 

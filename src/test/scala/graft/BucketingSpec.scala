@@ -12,12 +12,8 @@ class BucketingSpec extends SparkSpec {
 
   test("equi-join of co-bucketed tables plans with zero exchanges") {
     // pre-clean: stale catalog entries / external data from a previous run
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
     Seq("b_orders", "b_lineitem").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-    rm(new java.io.File("/tmp/graft_test_bucketed"))
+    Scratch.wipe("/tmp/graft_test_bucketed")
 
     val orders = Tables.load(spark, sfDir, "orders")
       .select("o_orderkey", "o_custkey", "o_totalprice")

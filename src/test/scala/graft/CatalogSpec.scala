@@ -15,18 +15,13 @@ class CatalogSpec extends SparkSpec {
 
   private val root = "/tmp/graft_test_catalog"
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rm)
-    f.delete(); ()
-  }
-
   private def register(): Unit = {
     spark.conf.set("spark.sql.catalog.graftcat", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.graftcat.root", root)
   }
 
   test("SQL snapshot, VERSION AS OF and TIMESTAMP AS OF equal the API reads") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/orders_c"
     val orders = Tables.load(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -62,7 +57,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("count(*) is answered from metadata: zero data files read, DV-exact") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/cnt"
     TableLog.commitAppend(spark.range(0, 1000).selectExpr("id AS k"), t) // v0
     TableLog.deleteWhere(spark, t, "k % 7 = 0")                          // v1
@@ -83,7 +78,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("ungrouped min/max push to metadata under full stats coverage and no DVs") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/mmx"
     TableLog.commitAppend(
       spark.range(5, 9005).selectExpr("id AS k", "id % 13 AS vv")
@@ -116,7 +111,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("clusterBy property: INSERT writes clustered files and string predicates skip them") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     spark.sql("CREATE TABLE graftcat.clus (k BIGINT, sk STRING) " +
       "TBLPROPERTIES ('graft.clusterBy'='sk,k', 'graft.clusterBy.files'='8')")
@@ -162,7 +157,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("string min/max answer from metadata; DVs and partial coverage block the push") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/smmx"
     TableLog.commitAppend(
       spark.range(0, 900)
@@ -194,7 +189,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("scan statistics are metadata-exact, so the small log table broadcasts") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/dim"
     TableLog.commitAppend(
       spark.range(0, 50).selectExpr("id AS k", "concat('n', id) AS nm"), t)
@@ -234,7 +229,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("pushed filters skip files from the stats and bloom sidecars") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     // range-clustered on k with a stats sidecar AND a bloom index
     val t = s"$root/skip"
     TableLog.commitAppend(
@@ -272,7 +267,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("vectorized batch reads: typed round-trip on the columnar path; DVs and nested fall back") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/typed_c"
     import spark.implicits._
     val src = spark.sql(
@@ -340,7 +335,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("DV-columnar default-on: survivor-compacted batches stay position-exact") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/dvcol"
     // one file spanning MANY 4096-row vector batches, typed payload
     TableLog.commitAppend(
@@ -378,7 +373,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("array columns are SQL-queryable through the catalog") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/emb"
     TableLog.commitAppend(
       Tables.load(spark, sfDir, "embeddings"), t)
@@ -399,7 +394,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("absent tables and absent versions fail cleanly") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/ro"
     TableLog.commitAppend(spark.range(3).selectExpr("id AS k"), t)
     register()
@@ -416,7 +411,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("CREATE TABLE + INSERT INTO/OVERWRITE route through the commit protocol") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     spark.sql("CREATE TABLE graftcat.w (k BIGINT, s STRING)")           // v0: empty
     val t = s"$root/w"
@@ -450,7 +445,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("CTAS, DELETE FROM via deletion vectors, TRUNCATE and DROP") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     Tables.load(spark, sfDir, "orders")
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
@@ -502,7 +497,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("ALTER TABLE ADD COLUMN widens; old rows and old versions stay sound") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     spark.sql("CREATE TABLE graftcat.ev (k BIGINT)")
     spark.sql("INSERT INTO graftcat.ev VALUES (1), (2)")
@@ -521,7 +516,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("SQL UPDATE is a pinned copy-on-write rewrite through a real DSv2 batch write") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     spark.sql("CREATE TABLE graftcat.u (k BIGINT, s STRING, x DOUBLE)")
     spark.sql("INSERT INTO graftcat.u SELECT id, concat('s', id), CAST(id AS DOUBLE) / 4 " +
@@ -558,7 +553,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("SQL MERGE INTO upserts, updates and deletes in one statement") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     spark.sql("CREATE TABLE graftcat.m (k BIGINT, v BIGINT)")
     spark.sql("INSERT INTO graftcat.m SELECT id, id FROM range(0, 100)")
@@ -586,7 +581,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("MERGE WITH SCHEMA EVOLUTION widens the target; old snapshots stay narrow") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     spark.sql("CREATE TABLE graftcat.me (k BIGINT, v BIGINT)")
     spark.sql("INSERT INTO graftcat.me SELECT id, id FROM range(0, 100)")
@@ -626,7 +621,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("a selective UPDATE rewrites only the files its predicate touches") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     val t = s"$root/scoped"
     // 8 range-clustered files: k 0..999 → 1000..1999 → ... per file
@@ -673,7 +668,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("the _file metadata column is SQL-queryable") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     val t = s"$root/mf"
     TableLog.commitAppend(
@@ -688,7 +683,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("vacuum reclaims files a scoped rewrite replaced; kept files survive") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     val t = s"$root/vr"
     TableLog.commitAppend(
@@ -715,7 +710,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("readStream.table streams catalog tables as an append feed") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     val t = s"$root/st"
     TableLog.commitAppend(spark.range(0, 5).selectExpr("id AS k"), t)   // v0
@@ -761,7 +756,7 @@ class CatalogSpec extends SparkSpec {
     import graft.sources.TableLog
     import org.apache.spark.sql.functions.col
     val t = s"$root/meta_t"
-    rm(new java.io.File(t))
+    Scratch.wipe(t)
     register()
     import spark.implicits._
     TableLog.commitAppend((1L to 100L).toDF("k"), t)                   // v0 append
@@ -798,7 +793,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("CHECK constraints enforce through SQL INSERT") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     spark.sql("CREATE TABLE graftcat.ck (k BIGINT)")
     val t = s"$root/ck"
@@ -817,7 +812,7 @@ class CatalogSpec extends SparkSpec {
   }
 
   test("bucketBy property: co-bucketed tables join with ZERO shuffle (storage-partitioned join)") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     register()
     spark.sql("CREATE TABLE graftcat.bfact (k BIGINT, v BIGINT) " +
       "TBLPROPERTIES ('graft.bucketBy'='k', 'graft.bucketBy.n'='8')")

@@ -12,13 +12,8 @@ class CompactionSpec extends SparkSpec {
 
   private val base = "/tmp/graft_test_compact/t"
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rm)
-    f.delete(); ()
-  }
-
   test("compaction merges small files, preserves rows, skips compact partitions") {
-    rm(new java.io.File("/tmp/graft_test_compact"))
+    Scratch.wipe("/tmp/graft_test_compact")
 
     // partition p=0: 12 small files; p=1: already a single file
     (0L until 3000L).map(k => (k, 0, s"row$k")).toDF("k", "p", "v")
@@ -62,7 +57,7 @@ class CompactionSpec extends SparkSpec {
 
   test("compaction heals a crashed swap from the trash dir before proceeding") {
     val t = "/tmp/graft_test_compact_heal/t"
-    rm(new java.io.File("/tmp/graft_test_compact_heal"))
+    Scratch.wipe("/tmp/graft_test_compact_heal")
     (0L until 3000L).map(k => (k, 0, s"r$k")).toDF("k", "p", "v")
       .repartition(6)
       .write.partitionBy("p").mode("overwrite").parquet(t)

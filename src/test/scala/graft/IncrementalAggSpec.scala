@@ -13,18 +13,13 @@ class IncrementalAggSpec extends SparkSpec {
 
   private val root = "/tmp/graft_test_incragg"
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rm)
-    f.delete(); ()
-  }
-
   private def agg(b: DataFrame): DataFrame =
     b.groupBy("win", "k").agg(
       count(lit(1)).as("n"),
       sum(col("v")).as("sum_v"))
 
   test("overlapping appends converge to the full recompute; untouched partitions untouched") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val base = s"$root/base"
     val aggd = s"$root/agg"
 

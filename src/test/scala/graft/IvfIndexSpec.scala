@@ -12,11 +12,7 @@ class IvfIndexSpec extends SparkSpec {
   private val path = "/tmp/graft_test_ivf_index"
 
   test("persisted IVF index reproduces ivfTopK exactly and prunes cells") {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(path))
+    Scratch.wipe(path)
     val emb = Tables.load(spark, sfDir, "embeddings")
     Similarity.writeIvfIndex(emb, path)
 
@@ -51,12 +47,8 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("persisted IVF-PQ: full-probe serve == in-memory ADC; default probes prune code cells") {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
     val p = "/tmp/graft_test_ivfpq_index"
-    rm(new java.io.File(p))
+    Scratch.wipe(p)
     val emb = Tables.load(spark, sfDir, "embeddings")
     Similarity.writeIvfPqIndex(emb, p)
     // three artifacts on disk; codes are cell-partitioned
@@ -93,13 +85,9 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("IVF-PQ append is batch-size invariant: build(A)+append(B) == assign-all") {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
     val inc  = "/tmp/graft_test_ivfpq_inc"
     val mono = "/tmp/graft_test_ivfpq_mono"
-    Seq(inc, mono).foreach(p => rm(new java.io.File(p)))
+    Seq(inc, mono).foreach(Scratch.wipe)
     val emb = Tables.load(spark, sfDir, "embeddings")
     val a = emb.where(col("vec_id") % 2 === 0)
     val b = emb.where(col("vec_id") % 2 =!= 0)
@@ -120,13 +108,9 @@ class IvfIndexSpec extends SparkSpec {
   }
 
   test("incremental append is batch-size invariant: build(A)+append(B) == assign-all") {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
     val inc  = "/tmp/graft_test_ivf_inc"
     val mono = "/tmp/graft_test_ivf_mono"
-    Seq(inc, mono).foreach(p => rm(new java.io.File(p)))
+    Seq(inc, mono).foreach(Scratch.wipe)
     val emb = Tables.load(spark, sfDir, "embeddings")
     val a = emb.where(col("vec_id") % 2 === 0)
     val b = emb.where(col("vec_id") % 2 =!= 0)

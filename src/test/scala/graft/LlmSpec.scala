@@ -1089,10 +1089,7 @@ class LlmSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     val docs = Tables.load(spark, sfDir, "documents")
     val tmp = "/tmp/graft_test_mhidx"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
-    }
-    rm(new java.io.File(tmp))
+    Scratch.wipe(tmp)
     // one-shot build over the full corpus
     graft.llm.Dedup.writeMinhashIndex(docs, tmp + "/all", append = false)
     // staged build: corpus first, batch appended blind
@@ -1450,11 +1447,7 @@ class LlmSpec extends SparkSpec {
     import graft.llm.TextStats
     import org.apache.spark.sql.functions._
     val p = "/tmp/graft_tindex_spec"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(p))
+    Scratch.wipe(p)
     TextStats.writeTextIndex(Tables.loadSpread(spark, sfDir, "documents"), p)
     // bucketed layout on disk
     val dirs = new java.io.File(p).listFiles.filter(_.isDirectory)

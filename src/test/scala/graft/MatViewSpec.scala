@@ -27,11 +27,7 @@ class MatViewSpec extends SparkSpec {
 
   private def root(tag: String): String = {
     val d = Scratch.dir(s"graft_mvspec_$tag", "x")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(d))
+    Scratch.wipe(d)
     d
   }
 

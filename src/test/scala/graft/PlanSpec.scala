@@ -177,11 +177,7 @@ class PlanSpec extends SparkSpec {
     // a DV'd read exactly one anti-join
     import spark.implicits._
     val t = "/tmp/graft_test_plandv/t"
-    val rmf = new java.io.File("/tmp/graft_test_plandv")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
-    }
-    rm(rmf)
+    Scratch.wipe("/tmp/graft_test_plandv")
     graft.sources.TableLog.commitAppend((1L to 10L).toDF("k"), t)
     val clean = graft.sources.TableLog.read(spark, t)
     clean.collect()

@@ -80,4 +80,14 @@ class RebaseSpec extends SparkSpec {
     assert(spark.sharedState.cacheManager.isEmpty,
       "a dedup cache outlived Memo.releaseAll")
   }
+
+  test("memo releaseAll leaves no indicator base pinned, closes and bars both") {
+    Memo.releaseAll()
+    spark.catalog.clearCache()
+    assert(analytics.Indicators.obv(spark, sfDir).collect().nonEmpty) // daily closes
+    assert(analytics.Indicators.atr(spark, sfDir).collect().nonEmpty) // daily bars
+    Memo.releaseAll()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "an indicator base outlived Memo.releaseAll")
+  }
 }

@@ -12,11 +12,7 @@ class RowGroupSkipSpec extends SparkSpec {
 
   test("pushed ranges skip row groups; DV positions stay aligned across the gaps") {
     val root = Scratch.dir("graft_rgs", "x")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/t"
     val hconf = spark.sparkContext.hadoopConfiguration
     val prevBlock = hconf.get("parquet.block.size")
@@ -84,11 +80,7 @@ class RowGroupSkipSpec extends SparkSpec {
 
   test("nested-field predicates never feed row-group envelopes (no row loss)") {
     val root = Scratch.dir("graft_rgn", "x")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/t"
     // DSv2 pushes struct-field comparisons as dotted names ("s.x") —
     // those must NOT become row-group ranges: the per-file reader resolves
@@ -116,11 +108,7 @@ class RowGroupSkipSpec extends SparkSpec {
 
   test("STRING predicates skip row groups on binary footer stats (both readers)") {
     val root = Scratch.dir("graft_rgstr", "x")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/t"
     val hconf = spark.sparkContext.hadoopConfiguration
     val prevBlock = hconf.get("parquet.block.size")

@@ -29,11 +29,7 @@ class RuntimeFilterSpec extends SparkSpec {
 
   test("a selective dim join prunes fact files at runtime via the stats sidecar") {
     val root = Scratch.dir("graft_rtf", "x")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/fact"
     // the fact must be too big to broadcast (a broadcast build side makes
     // its own runtime filter pointless and AQE trivializes it to `true`);
@@ -74,11 +70,7 @@ class RuntimeFilterSpec extends SparkSpec {
 
   test("hash-clustered facts prune via the BLOOM sidecar (stats ranges are useless there)") {
     val root = Scratch.dir("graft_rtf3", "x")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/fact"
     // hash layout: every file's [min, max] spans the whole domain, so only
     // the per-file bloom can skip; no stats sidecar is built at all.
@@ -117,11 +109,7 @@ class RuntimeFilterSpec extends SparkSpec {
 
   test("bucketed facts prune at runtime via bucket-id arithmetic") {
     val root = Scratch.dir("graft_rtf4", "x")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     spark.conf.set("spark.sql.catalog.graftrtf4", classOf[GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.graftrtf4.root", root)
     // a bucketed INSERT records k stats too, but a hash layout's per-file
@@ -157,11 +145,7 @@ class RuntimeFilterSpec extends SparkSpec {
 
   test("joins on an un-indexed column leave the scan untouched") {
     val root = Scratch.dir("graft_rtf2", "x")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/fact"
     TableLog.commitAppend(
       spark.range(0, 4000).selectExpr("id AS k", "id AS payload")

@@ -14,13 +14,8 @@ class SeedRateSourceSpec extends SparkSpec {
 
   private val base = "/tmp/graft_test_seedrate"
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rm)
-    f.delete(); ()
-  }
-
   test("seed-rate source admits rowsPerBatch per trigger and resumes from checkpoint") {
-    rm(new java.io.File(base))
+    Scratch.wipe(base)
     Files.createDirectories(Paths.get(base))
     val seed = s"$base/seed.jsonl"
     Files.writeString(Paths.get(seed), (0 until 10).map(i => s"frame-$i").mkString("\n"))
@@ -63,7 +58,7 @@ class SeedRateSourceSpec extends SparkSpec {
   }
 
   test("adaptive admission: an over-target batch halves row admission, then recovers") {
-    rm(new java.io.File(s"$base/adapt"))
+    Scratch.wipe(s"$base/adapt")
     Files.createDirectories(Paths.get(s"$base/adapt"))
     val seed = s"$base/adapt/seed.jsonl"
     Files.writeString(Paths.get(seed), (0 until 16).map(i => s"f-$i").mkString("\n"))
@@ -99,7 +94,7 @@ class SeedRateSourceSpec extends SparkSpec {
   }
 
   test("pluggable paged upstream: admission math holds when page size ≠ rowsPerBatch") {
-    rm(new java.io.File(s"$base/paged"))
+    Scratch.wipe(s"$base/paged")
     Files.createDirectories(Paths.get(s"$base/paged"))
     PagedFrameUpstream.reset()
     val out = collection.mutable.ArrayBuffer.empty[Seq[String]]
@@ -134,7 +129,7 @@ class SeedRateSourceSpec extends SparkSpec {
   }
 
   test("seed-rate frames flow through the ingest demux unchanged") {
-    rm(new java.io.File(s"$base/demux"))
+    Scratch.wipe(s"$base/demux")
     Files.createDirectories(Paths.get(s"$base/demux"))
     val seed = s"$base/demux/seed.jsonl"
     val candle =

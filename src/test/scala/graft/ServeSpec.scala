@@ -12,12 +12,8 @@ import java.sql.DriverManager
 class ServeSpec extends SparkSpec {
 
   test("thrift endpoint serves A1 analysis, raw tables, and table-log snapshots over JDBC") {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
     val root = "/tmp/graft_test_serve_tlog"
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
 
     val port = 10816 // fixed uncommon port; sandbox runs one test JVM
     val server = Serve.start(spark, sfDir, port)

@@ -13,11 +13,6 @@ import org.apache.spark.sql.functions._
   */
 class StatsBroadcastSpec extends SparkSpec {
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rm)
-    f.delete(); ()
-  }
-
   private def joins(df: DataFrame): (Int, Int) = {
     val p = df.queryExecution.sparkPlan
     (p.collect { case b: BroadcastHashJoinExec => b }.size,
@@ -26,7 +21,7 @@ class StatsBroadcastSpec extends SparkSpec {
 
   test("NDV evidence flips a shuffle join to broadcast; no evidence leaves it alone") {
     val root = Scratch.dir("graft_sbr", "x")
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     // fact: 50k distinct u (the filter column), payload padding so the
     // table is well above the broadcast threshold; dim: 50k rows, too big
     // to broadcast on size alone

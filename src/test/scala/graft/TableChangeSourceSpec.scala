@@ -15,11 +15,6 @@ class TableChangeSourceSpec extends SparkSpec {
 
   private val base = "/tmp/graft_test_tchange"
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rm)
-    f.delete(); ()
-  }
-
   /** drain the feed into (batch, version-set, signed k values) triples */
   private def drain(
       table: String, ckpt: String,
@@ -40,7 +35,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("one commit per trigger; DV deletes; compaction nets zero; checkpoint resume is exactly-once") {
-    rm(new java.io.File(base))
+    Scratch.wipe(base)
     val t = s"$base/t"
     val ckpt = s"$base/ckpt"
     TableLog.commitAppend(spark.range(1, 6).selectExpr("id AS k"), t)  // v0
@@ -76,7 +71,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("adaptive admission: a slow batch halves the next cap, fast batches recover it, exactly-once") {
-    rm(new java.io.File(s"$base/adapt"))
+    Scratch.wipe(s"$base/adapt")
     val t = s"$base/adapt/t"
     val ckpt = s"$base/adapt/ckpt"
     (0 until 32).foreach(i =>
@@ -123,7 +118,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("typed columns round-trip the Group-API read (timestamp/date/decimal/int/double/string)") {
-    rm(new java.io.File(s"$base/typed"))
+    Scratch.wipe(s"$base/typed")
     val t = s"$base/typed"
     val df = spark.range(0, 5).select(
       col("id").as("k"),
@@ -151,7 +146,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("columns option projects at the file read: unsupported columns cost nothing unless listed") {
-    rm(new java.io.File(s"$base/pruned"))
+    Scratch.wipe(s"$base/pruned")
     val t = s"$base/pruned"
     // an ARRAY column the Group-API reader cannot convert — projecting
     // around it must work, which proves the projection reached the reader
@@ -173,7 +168,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("array columns round-trip the Group-API read (nulls, empties, null elements)") {
-    rm(new java.io.File(s"$base/arr"))
+    Scratch.wipe(s"$base/arr")
     val t = s"$base/arr"
     val df = spark.sql(
       """SELECT * FROM VALUES
@@ -199,7 +194,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("nested columns round-trip: structs, struct-of-struct, array-of-struct, maps") {
-    rm(new java.io.File(s"$base/nested"))
+    Scratch.wipe(s"$base/nested")
     val t = s"$base/nested"
     val df = spark.sql(
       """SELECT * FROM VALUES
@@ -242,7 +237,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("struct member evolution null-backfills per file, like top-level columns") {
-    rm(new java.io.File(s"$base/sevo"))
+    Scratch.wipe(s"$base/sevo")
     val t = s"$base/sevo"
     TableLog.commitAppend(
       spark.sql("SELECT 0L AS k, named_struct('a', 1L) AS meta"), t)          // v0: meta<a>
@@ -258,7 +253,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("column resolution is case-insensitive, matching the session default") {
-    rm(new java.io.File(s"$base/ci"))
+    Scratch.wipe(s"$base/ci")
     val t = s"$base/ci"
     // the table's canonical name is mixed-case; the option uses another case
     TableLog.commitAppend(spark.range(1, 4).selectExpr("id AS Keyed"), t)
@@ -280,7 +275,7 @@ class TableChangeSourceSpec extends SparkSpec {
     // reader side: a case-CHANGED evolved column — the old file spells the
     // field 'val', the merged schema (from the latest files) spells it
     // 'VAL' — must still DECODE from the old file, not null-backfill
-    rm(new java.io.File(s"$base/ci2"))
+    Scratch.wipe(s"$base/ci2")
     val t2 = s"$base/ci2"
     TableLog.commitAppend(spark.range(1, 3).selectExpr("id AS val"), t2)  // v0
     TableLog.commitOverwrite(spark.range(5, 7).selectExpr("id AS VAL"), t2) // v1
@@ -304,7 +299,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("per-batch work scales with the batch's touched files, never the log size") {
-    rm(new java.io.File(s"$base/sized"))
+    Scratch.wipe(s"$base/sized")
     val t = s"$base/sized"
     // 6 appends with a KNOWN file count each (1,1,3,1,2,1), then a DV
     // delete touching every file
@@ -341,7 +336,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("Trigger.AvailableNow drains the full history under admission and terminates") {
-    rm(new java.io.File(s"$base/avnow"))
+    Scratch.wipe(s"$base/avnow")
     val t = s"$base/avnow"
     TableLog.commitAppend(spark.range(1, 4).selectExpr("id AS k"), t)  // v0
     TableLog.commitAppend(spark.range(4, 7).selectExpr("id AS k"), t)  // v1
@@ -364,7 +359,7 @@ class TableChangeSourceSpec extends SparkSpec {
 
   test("log-to-log rollup: exactly-once across BOTH logs, even when a batch replays") {
     import graft.streaming.StreamIngest
-    rm(new java.io.File(s"$base/l2l"))
+    Scratch.wipe(s"$base/l2l")
     val src = s"$base/l2l/src"
     val dst = s"$base/l2l/dst"
     val ck = s"$base/l2l/ck"
@@ -419,7 +414,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("graft-log streaming sink: format-to-format pipeline, exactly-once under forced replay") {
-    rm(new java.io.File(s"$base/sink"))
+    Scratch.wipe(s"$base/sink")
     val src = s"$base/sink/src"
     val dst = s"$base/sink/dst"
     val ck = s"$base/sink/ck"
@@ -474,7 +469,7 @@ class TableChangeSourceSpec extends SparkSpec {
   }
 
   test("startingVersion skips history; vacuumed checkpoint fails with a clear error") {
-    rm(new java.io.File(s"$base/startv"))
+    Scratch.wipe(s"$base/startv")
     val t = s"$base/startv"
     TableLog.commitAppend(spark.range(1, 4).selectExpr("id AS k"), t)   // v0
     TableLog.commitAppend(spark.range(4, 6).selectExpr("id AS k"), t)   // v1

@@ -13,13 +13,8 @@ class TableLogSpec extends SparkSpec {
 
   private val root = "/tmp/graft_test_tlog"
 
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles.foreach(rm)
-    f.delete(); ()
-  }
-
   test("append/overwrite commits version; old snapshots stay readable; vacuum prunes") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/t"
 
     val v0 = TableLog.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
@@ -54,11 +49,8 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("backup/restore: snapshot round-trips exactly; a tampered backup is refused") {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
-    }
     val root = "/tmp/graft_test_backup"
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val src = s"$root/src"; val bak = s"$root/bak"; val restored = s"$root/restored"
     val v0 = Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "payload")
     val v1 = Seq((1L, "a"), (2L, "B"), (4L, "d")).toDF("id", "payload")
@@ -86,11 +78,8 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("gcOrphans removes crashed-commit leftovers and spares every live file") {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
-    }
     val t = "/tmp/graft_test_gc"
-    rm(new java.io.File(t))
+    Scratch.wipe(t)
     TableLog.commitOverwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "p"), t)
     TableLog.commitAppend(Seq((3L, "c")).toDF("id", "p"), t)
     val before = TableLog.read(spark, t).as[(Long, String)].collect().toSet
@@ -117,11 +106,8 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("vacuumPlan is a faithful dry run: vacuum executes exactly the plan") {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm); f.delete(); ()
-    }
     val t = "/tmp/graft_test_vacplan"
-    rm(new java.io.File(t))
+    Scratch.wipe(t)
     TableLog.commitOverwrite(Seq((1L, "a")).toDF("id", "p"), t)
     TableLog.commitOverwrite(Seq((2L, "b"), (3L, "c")).toDF("id", "p"), t)
     TableLog.commitAppend(Seq((4L, "d")).toDF("id", "p"), t)
@@ -139,7 +125,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("vacuum keeps files still referenced by a kept version") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/t2"
     TableLog.commitAppend(Seq((1L, "a")).toDF("k", "v"), t) // v0: fileA
     TableLog.commitAppend(Seq((2L, "b")).toDF("k", "v"), t) // v1: fileA + fileB
@@ -150,7 +136,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("schema evolution: widened commit reads merged, old rows null-backfilled") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/t3"
     TableLog.commitAppend(Seq((1L, 10L)).toDF("k", "cents"), t)
     TableLog.commitAppend(Seq((2L, 20L, "NEW")).toDF("k", "cents", "status"), t)
@@ -164,7 +150,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("optimize compacts the snapshot into a new version; history intact until vacuum") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/t5"
     // many small commits → many small files
     (0L until 6L).foreach(i =>
@@ -188,7 +174,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("file stats prune range-clustered files; pruned read equals full read") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/t4"
     // range-cluster on k at write → narrow per-file key ranges
     val rows = (0L until 400L).map(k => (k, k % 7)).toDF("k", "payload")
@@ -214,7 +200,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("STRING stats prune files in UTF-8 byte order; retrofit ANALYZE indexes them too") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/t4s"
     // range-cluster on a string key → narrow per-file string ranges
     val rows = (0L until 400L).map(k => (f"key$k%04d", k)).toDF("sk", "payload")
@@ -260,7 +246,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("optimize re-gathers stats: compacted table keeps skipping files") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/t5"
     val rows = (0L until 400L).map(k => (k, k % 7)).toDF("k", "payload")
       .repartitionByRange(8, col("k"))
@@ -283,7 +269,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("optimize zorder clusters the snapshot so BOTH dimensions skip files") {
-    rm(new java.io.File(root))
+    Scratch.wipe(root)
     val t = s"$root/t6"
     // 40×40 grid in row-major order: unclustered in b (every file sees all b)
     val rows = (0L until 1600L).map(i => (i % 40, i / 40)).toDF("a", "b")
@@ -305,7 +291,7 @@ class TableLogSpec extends SparkSpec {
 
   test("check constraints: violating commit aborts untouched; observe adds no extra pass") {
     val t = s"$root/chk"
-    rm(new java.io.File(t))
+    Scratch.wipe(t)
     TableLog.commitAppend(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), t)
     TableLog.addCheckConstraint(t, "v_positive", "v > 0")
     TableLog.addCheckConstraint(t, "k_nonnull", "k IS NOT NULL")
@@ -339,7 +325,7 @@ class TableLogSpec extends SparkSpec {
 
   test("optimistic concurrency: a claimed version forces retry onto the next; no lost commit") {
     val t = s"$root/occ"
-    rm(new java.io.File(t))
+    Scratch.wipe(t)
     TableLog.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
     // simulate a concurrent writer that already claimed v1: copy v0's
     // manifest to v1 (a valid published version this writer hasn't seen)
@@ -368,7 +354,7 @@ class TableLogSpec extends SparkSpec {
 
   test("deletion vectors: no file rewrite; merged deletes; optimize materializes; gc spares DVs") {
     val t = s"$root/dv"
-    rm(new java.io.File(t))
+    Scratch.wipe(t)
     val df = (1L to 100L).map(k => (k, k % 7)).toDF("k", "g")
     TableLog.commitAppend(df.repartition(3), t)
     val filesV0 = TableLog.liveFileCount(t)
@@ -445,7 +431,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("optimize vs concurrent commit: stale compaction restarts, no lost update") {
-    rm(new java.io.File(s"$root/opt_conflict"))
+    Scratch.wipe(s"$root/opt_conflict")
     val t = s"$root/opt_conflict"
     TableLog.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)
     TableLog.commitAppend(Seq((3L, "c")).toDF("k", "v"), t)
@@ -471,7 +457,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("deleteWhere on a schema-evolved table matches rows in pre-evolution files too") {
-    rm(new java.io.File(s"$root/del_evolved"))
+    Scratch.wipe(s"$root/del_evolved")
     val t = s"$root/del_evolved"
     TableLog.commitAppend(Seq((1L, 10L), (2L, 20L)).toDF("k", "cents"), t)
     // widening commit adds `status`; v0's files have never heard of it
@@ -488,7 +474,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("DV read preserves user columns literally named _f and _p") {
-    rm(new java.io.File(s"$root/dv_cols"))
+    Scratch.wipe(s"$root/dv_cols")
     val t = s"$root/dv_cols"
     TableLog.commitAppend(
       Seq((1L, "f1", "p1"), (2L, "f2", "p2"), (3L, "f3", "p3"))
@@ -502,7 +488,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("commitOnceOverwrite enforces CHECK constraints like every other commit") {
-    rm(new java.io.File(s"$root/once_check"))
+    Scratch.wipe(s"$root/once_check")
     val t = s"$root/once_check"
     TableLog.commitAppend(Seq((1L, 5L)).toDF("k", "v"), t)
     TableLog.addCheckConstraint(t, "v_pos", "v > 0")
@@ -519,7 +505,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("commitOnceAppend carries DVs and stats forward; a replayed txn adds no version") {
-    rm(new java.io.File(s"$root/once_append"))
+    Scratch.wipe(s"$root/once_append")
     val t = s"$root/once_append/t"
     TableLog.commitAppend(
       (0L until 400L).map(k => (k, k % 7)).toDF("k", "payload")
@@ -557,7 +543,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("bloom index: no false negatives ever, real skipping on hash layout, incremental builds") {
-    rm(new java.io.File(s"$root/bloom"))
+    Scratch.wipe(s"$root/bloom")
     val t = s"$root/bloom"
     // hash-clustered on k: every file spans the full range (min/max useless)
     val df = spark.range(0, 400).selectExpr("id AS k", "id * 7 AS v")
@@ -591,7 +577,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("change feed: signed replay reconstructs the snapshot; compaction nets to zero") {
-    rm(new java.io.File(s"$root/cdf"))
+    Scratch.wipe(s"$root/cdf")
     val t = s"$root/cdf"
     TableLog.commitAppend(spark.range(0, 50).selectExpr("id AS k"), t)  // v0
     TableLog.commitAppend(spark.range(50, 80).selectExpr("id AS k"), t) // v1
@@ -624,8 +610,8 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("followChanges: durable cursor, redelivery on crash, caught-up is a no-op") {
-    rm(new java.io.File(s"$root/follow"))
-    rm(new java.io.File(s"$root/follow_cursor"))
+    Scratch.wipe(s"$root/follow")
+    Scratch.wipe(s"$root/follow_cursor")
     val t = s"$root/follow"
     val cursor = s"$root/follow_cursor"
     val seen = scala.collection.mutable.ArrayBuffer[(Long, Long, Seq[Long])]()
@@ -653,7 +639,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("change feed reads only the requested range's touched files") {
-    rm(new java.io.File(s"$root/cdf_scope"))
+    Scratch.wipe(s"$root/cdf_scope")
     val t = s"$root/cdf_scope"
     TableLog.commitAppend(spark.range(0, 100).selectExpr("id AS k").coalesce(2), t) // v0: 2 files
     TableLog.commitAppend(spark.range(100, 110).selectExpr("id AS k").coalesce(1), t) // v1: 1 file
@@ -670,7 +656,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("metadataCount answers count(*) from metadata across append/delete/overwrite/optimize") {
-    rm(new java.io.File(s"$root/mcount"))
+    Scratch.wipe(s"$root/mcount")
     val t = s"$root/mcount"
     def check(): Unit = {
       val vs = TableLog.versions(t)
@@ -692,7 +678,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("append after a statless version recovers the stats index from an ancestor") {
-    rm(new java.io.File(s"$root/stats_heal"))
+    Scratch.wipe(s"$root/stats_heal")
     val t = s"$root/stats_heal"
     TableLog.commitAppend(
       Seq((1L, 10L), (2L, 20L)).toDF("k", "v").coalesce(1), t, statCols = Seq("k"))
@@ -712,7 +698,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("optimize on a statless HEAD still recovers the stats index from an ancestor") {
-    rm(new java.io.File(s"$root/stats_heal_opt"))
+    Scratch.wipe(s"$root/stats_heal_opt")
     val t = s"$root/stats_heal_opt"
     TableLog.commitAppend(
       Seq((1L, 10L), (2L, 20L)).toDF("k", "v").coalesce(1), t, statCols = Seq("k"))
@@ -735,7 +721,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("rollbackTo: head equals the target again, history intact, feed derives the undo") {
-    rm(new java.io.File(s"$root/rollback"))
+    Scratch.wipe(s"$root/rollback")
     val t = s"$root/rollback"
     TableLog.commitAppend(
       Seq((1L, 10L), (2L, 20L)).toDF("k", "v").coalesce(1), t, statCols = Seq("k")) // v0
@@ -763,8 +749,8 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("followChanges past retention: dedicated error, explicit full-snapshot restart") {
-    rm(new java.io.File(s"$root/follow_ret"))
-    rm(new java.io.File(s"$root/follow_ret_cursor"))
+    Scratch.wipe(s"$root/follow_ret")
+    Scratch.wipe(s"$root/follow_ret_cursor")
     val t = s"$root/follow_ret"
     val cursor = s"$root/follow_ret_cursor"
     TableLog.commitAppend(spark.range(1, 4).selectExpr("id AS k"), t)
@@ -793,8 +779,8 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("followChanges cursor AHEAD of head: loud lineage error, never a silent wedge") {
-    rm(new java.io.File(s"$root/follow_ahead"))
-    rm(new java.io.File(s"$root/follow_ahead_cursor"))
+    Scratch.wipe(s"$root/follow_ahead")
+    Scratch.wipe(s"$root/follow_ahead_cursor")
     val t = s"$root/follow_ahead"
     val cursor = s"$root/follow_ahead_cursor"
     TableLog.commitAppend(spark.range(1, 4).selectExpr("id AS k"), t)
@@ -802,7 +788,7 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.followChanges(spark, t, cursor)((_, _, _) => ()).contains((-1L, 1L)))
     // the log is dropped and recreated at the same path: head is now BEHIND
     // the durable cursor — a lineage break, not "caught up"
-    rm(new java.io.File(t))
+    Scratch.wipe(t)
     TableLog.commitAppend(spark.range(20, 23).selectExpr("id AS k"), t)
     val e = intercept[TableLog.RetentionExceeded] {
       TableLog.followChanges(spark, t, cursor)((_, _, _) => ())
@@ -819,7 +805,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("changeFeedCdc: UPDATE emits O(k) update pairs, churn nets out, folds replay") {
-    rm(new java.io.File(s"$root/cdc"))
+    Scratch.wipe(s"$root/cdc")
     val t = s"$root/cdc/t"
     // one data file of 10k rows — the file-granular UPDATE rewrite touches
     // ALL of them, so the plain feed over-reports by 2×file while the CDC
@@ -868,7 +854,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("followChangesCdc: durable cursor delivers update images, not rewrite churn") {
-    rm(new java.io.File(s"$root/cdcfollow"))
+    Scratch.wipe(s"$root/cdcfollow")
     val t = s"$root/cdcfollow/t"
     val cursor = s"$root/cdcfollow/cursor"
     TableLog.commitAppend(
@@ -896,7 +882,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("version tags: named time travel, vacuum protection, write-once names") {
-    rm(new java.io.File(s"$root/tags"))
+    Scratch.wipe(s"$root/tags")
     val t = s"$root/tags/t"
     TableLog.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("k", "v"), t)  // v0
     TableLog.commitOverwrite(Seq((9L, "z")).toDF("k", "v"), t)          // v1
@@ -947,7 +933,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("cdcStream: update images arrive per trigger; a restarted stream resumes from the cursor") {
-    rm(new java.io.File(s"$root/cdcstream"))
+    Scratch.wipe(s"$root/cdcstream")
     val t = s"$root/cdcstream/t"
     val cursor = s"$root/cdcstream/cursor"
     val ckpt = s"$root/cdcstream/ckpt"
@@ -983,7 +969,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("changeFeedCdc across schema evolution: null-backfilled pre rows net exactly") {
-    rm(new java.io.File(s"$root/cdcevo"))
+    Scratch.wipe(s"$root/cdcevo")
     val t = s"$root/cdcevo/t"
     TableLog.commitAppend(
       spark.range(0, 100).selectExpr("id AS k", "id AS v").coalesce(1), t)     // v0 (no 'w')
@@ -1005,8 +991,8 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("shallow clone: zero-copy hard links, isolated histories, DVs and stats carry") {
-    rm(new java.io.File(s"$root/clonesrc"))
-    rm(new java.io.File(s"$root/clonedst"))
+    Scratch.wipe(s"$root/clonesrc")
+    Scratch.wipe(s"$root/clonedst")
     val src = s"$root/clonesrc"
     val dst = s"$root/clonedst"
     TableLog.commitAppend(
@@ -1041,7 +1027,7 @@ class TableLogSpec extends SparkSpec {
       s"cloned stats must prune ($kept of $total kept)")
 
     // time-travel clone pins the requested version (v1 = post-DV, pre-append)
-    rm(new java.io.File(s"$root/clonedst0"))
+    Scratch.wipe(s"$root/clonedst0")
     TableLog.cloneTable(src, s"$root/clonedst0", asOf = Some(1L))
     assert(TableLog.read(spark, s"$root/clonedst0").count() == 900L,
       "asOf=1 clones the post-delete snapshot")
@@ -1061,7 +1047,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("buildStatsIndex: footer-only ANALYZE enables pruning; optimizeToSize sizes by bytes") {
-    rm(new java.io.File(s"$root/analyze"))
+    Scratch.wipe(s"$root/analyze")
     val t = s"$root/analyze/t"
     // committed WITHOUT statCols — the retrofit case
     TableLog.commitAppend(
@@ -1111,7 +1097,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("optimizeZOrderN: 3-way Morton clustering prunes on every dimension") {
-    rm(new java.io.File(s"$root/zn"))
+    Scratch.wipe(s"$root/zn")
     val t = s"$root/zn/t"
     // 3 independent dimensions, 16 values each, uniformly crossed (4096 rows)
     TableLog.commitAppend(
@@ -1138,7 +1124,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("z-order over a STRING dimension: both string and long predicates prune") {
-    rm(new java.io.File(s"$root/zs"))
+    Scratch.wipe(s"$root/zs")
     val t = s"$root/zs/t"
     // 20 brands × 200 keys, row-major (unclustered in either dimension
     // after the hash repartition)
@@ -1163,7 +1149,7 @@ class TableLogSpec extends SparkSpec {
   }
 
   test("changeFeedCdc: duplicate keys in a rewrite commit fail loudly, never multiply") {
-    rm(new java.io.File(s"$root/cdcdup"))
+    Scratch.wipe(s"$root/cdcdup")
     val t = s"$root/cdcdup/t"
     TableLog.commitAppend(
       Seq((1L, "a"), (1L, "b"), (2L, "c")).toDF("k", "v").coalesce(1), t)  // v0

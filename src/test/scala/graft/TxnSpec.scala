@@ -24,11 +24,7 @@ class TxnSpec extends SparkSpec {
 
   private def root(tag: String): String = {
     val d = Scratch.dir(s"graft_txnspec_$tag", "x")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles.foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(d))
+    Scratch.wipe(d)
     d
   }
 
