@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Plan audit over registered queries — counts the plan features that
   * matter at 100 TB (pushed filters, broadcast joins, exchanges, codegen
@@ -93,7 +94,7 @@ object PlanAudit {
         val f = features(SparkEntry.queries(n)(spark, sfDir))
         rows(n) = Keys.map(k => s""""$k":${f(k)}""").mkString("{", ",", "}")
         println(f"$n%-24s " + Keys.map(k => s"$k=${f(k)}").mkString(" "))
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"$n ERROR ${Option(e.getMessage).getOrElse(e.getClass.getName).take(80)}")
       }
     }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Dev-only plan archiver (not part of the driver contract): writes
   * `.explain("formatted")` of each named registered query to
@@ -56,7 +57,7 @@ object PlanDump {
             java.nio.file.Paths.get(s"$outDir/${n}_inner_$tag.txt"),
             plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           println(s"[plandump] $n (inner) -> $outDir/${n}_inner_$tag.txt (${plan.length} chars)")
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           println(s"[plandump] $n inner FAILED: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}")
         }
       }
@@ -70,7 +71,7 @@ object PlanDump {
           java.nio.file.Paths.get(s"$outDir/${n}_$tag.txt"),
           plan.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         println(s"[plandump] $n -> $outDir/${n}_$tag.txt (${plan.length} chars)")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         println(s"[plandump] $n FAILED: ${Option(e.getMessage).getOrElse(e.getClass.getName).take(120)}")
       }
     }

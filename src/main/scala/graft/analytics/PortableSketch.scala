@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -35,23 +35,13 @@ object PortableSketch extends QueryPack {
   /** sketch size; rsd ≈ 1/sqrt(K-2) ≈ 6.3% */
   val K = 256
 
-  /** 2^52 — the hash domain; 13 hex chars so every hash is double-exact */
+  /** 2^52 — the hash domain; [[HexLen]] hex chars so every hash is double-exact */
   val Scale = 4503599627370496L
 
-  /** 52-bit uniform hash of a value, identical in DuckDB as
-    * `CAST('0x' || substr(md5(CAST(v AS VARCHAR)), 1, 13) AS BIGINT)`.
+  /** hex characters per hash: `Portable.md5Int(v, HexLen)` is a uniform
+    * 52-bit hash of a value in Spark, DuckDB and the JVM alike
     */
-  private def h52(c: Column): Column =
-    conv(substring(md5(c), 1, 13), 16, 10).cast("long")
-
-  /** [[h52]]'s scalar twin for executor-side state updates (the streaming
-    * KMV monitor) — same bytes: md5 of the UTF-8 value, first 13 hex chars.
-    */
-  def h52Of(v: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(v.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 13), 16)
-  }
+  final val HexLen = 13
 
   /** Bounded-state K-minimum-DISTINCT-values aggregate: the buffer is a
     * sorted duplicate-free long array capped at [[K]]. Commutative and
@@ -134,7 +124,7 @@ object PortableSketch extends QueryPack {
     DistinctLegs.map { case (label, table, column) =>
       Tables.load(s, dir, table)
         .select(col(column).cast("string").as("v")).distinct()
-        .select(h52(col("v")).as("h"))
+        .select(Portable.md5Int(col("v"), HexLen).as("h"))
         .agg(count(lit(1)).as("exact_ndv"), minK(col("h")).as("sk"))
         .select(
           lit(label).as("column_name"),
@@ -147,16 +137,13 @@ object PortableSketch extends QueryPack {
 
   private val kmvDistinctSql: String = {
     val legs = DistinctLegs.map { case (label, table, column) =>
+      val sk = s"SELECT DISTINCT ${Portable.md5IntSql(s"CAST($column AS VARCHAR)", HexLen)} AS h " +
+        s"FROM $table ORDER BY h LIMIT $K"
       s"""SELECT '$label' AS column_name,
         |       (SELECT count(*) FROM (SELECT DISTINCT CAST($column AS VARCHAR) FROM $table)) AS exact_ndv,
-        |       (SELECT count(*) FROM (
-        |          SELECT DISTINCT CAST('0x' || substr(md5(CAST($column AS VARCHAR)), 1, 13) AS BIGINT) AS h
-        |          FROM $table ORDER BY h LIMIT $K)) AS sketch_n,
-        |       (SELECT max(h) FROM (
-        |          SELECT DISTINCT CAST('0x' || substr(md5(CAST($column AS VARCHAR)), 1, 13) AS BIGINT) AS h
-        |          FROM $table ORDER BY h LIMIT $K)) AS kth_hash,
-        |       ${estSql("(SELECT count(*) FROM (SELECT DISTINCT CAST('0x' || substr(md5(CAST(" + column + " AS VARCHAR)), 1, 13) AS BIGINT) AS h FROM " + table + " ORDER BY h LIMIT " + K + "))",
-        "(SELECT max(h) FROM (SELECT DISTINCT CAST('0x' || substr(md5(CAST(" + column + " AS VARCHAR)), 1, 13) AS BIGINT) AS h FROM " + table + " ORDER BY h LIMIT " + K + "))")} AS est_ndv""".stripMargin
+        |       (SELECT count(*) FROM ($sk)) AS sketch_n,
+        |       (SELECT max(h) FROM ($sk)) AS kth_hash,
+        |       ${estSql(s"(SELECT count(*) FROM ($sk))", s"(SELECT max(h) FROM ($sk))")} AS est_ndv""".stripMargin
     }
     legs.mkString("\nUNION ALL\n")
   }
@@ -178,7 +165,7 @@ object PortableSketch extends QueryPack {
     def vals(flag: String) =
       li.where(col("l_returnflag") === flag)
         .select(col("l_orderkey").cast("string").as("v")).distinct()
-    def hashes(v: DataFrame) = v.select(h52(col("v")).as("h")).distinct()
+    def hashes(v: DataFrame) = v.select(Portable.md5Int(col("v"), HexLen).as("h")).distinct()
     def sketch(h: DataFrame) = h.orderBy("h").limit(K)
     // each side feeds its sketch chain AND three exact-companion legs —
     // cache the distinct-value relations so lineitem is scanned once per
@@ -217,7 +204,7 @@ object PortableSketch extends QueryPack {
     def hcte(flag: String, nm: String) =
       s"""v$nm AS (SELECT DISTINCT CAST(l_orderkey AS VARCHAR) AS v
         |          FROM lineitem WHERE l_returnflag = '$flag'),
-        |h$nm AS (SELECT DISTINCT CAST('0x' || substr(md5(v), 1, 13) AS BIGINT) AS h FROM v$nm),
+        |h$nm AS (SELECT DISTINCT ${Portable.md5IntSql("v", HexLen)} AS h FROM v$nm),
         |sk$nm AS (SELECT h FROM h$nm ORDER BY h LIMIT $K)""".stripMargin
     s"""WITH ${hcte("R", "a")},
       |${hcte("A", "b")},
@@ -274,7 +261,7 @@ object PortableSketch extends QueryPack {
     def cells(df: DataFrame) = df
       .withColumn("h", md5(col("k").cast("string").cast("binary")))
       .select(posexplode(array((0 until JsDepth).map(r =>
-        conv(substring(col("h"), 1 + 8 * r, 8), 16, 10).cast("long") % JsWidth): _*))
+        Portable.hexInt(col("h"), 1 + 8 * r) % JsWidth): _*))
         .as(Seq("r", "cell")))
       .groupBy("r", "cell").agg(count(lit(1)).as("n"))
     val estPerRow = cells(a).as("x")
@@ -298,11 +285,11 @@ object PortableSketch extends QueryPack {
     s"""WITH a AS (SELECT CAST(o_custkey AS BIGINT) AS k FROM orders),
       |b AS (SELECT CAST(user_id AS BIGINT) AS k FROM events),
       |ca AS (
-      |  SELECT r, CAST('0x' || substr(md5(CAST(k AS VARCHAR)), 1 + 8 * r, 8) AS BIGINT) % $JsWidth AS cell,
+      |  SELECT r, ${Portable.hexIntSql("md5(CAST(k AS VARCHAR))", "1 + 8 * r")} % $JsWidth AS cell,
       |         CAST(count(*) AS BIGINT) AS n
       |  FROM a, range(0, $JsDepth) rr(r) GROUP BY 1, 2),
       |cb AS (
-      |  SELECT r, CAST('0x' || substr(md5(CAST(k AS VARCHAR)), 1 + 8 * r, 8) AS BIGINT) % $JsWidth AS cell,
+      |  SELECT r, ${Portable.hexIntSql("md5(CAST(k AS VARCHAR))", "1 + 8 * r")} % $JsWidth AS cell,
       |         CAST(count(*) AS BIGINT) AS n
       |  FROM b, range(0, $JsDepth) rr(r) GROUP BY 1, 2),
       |est AS (

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2013,23 +2013,23 @@ object Relational extends QueryPack {
       col("o_orderstatus"))
     val h = md5(canon.cast("binary"))
     o.select((col("o_orderkey") % 16).as("bucket"),
-      conv(substring(h, 1, 8), 16, 10).cast("long").as("h1"),
-      conv(substring(h, 9, 8), 16, 10).cast("long").as("h2"))
+      Portable.hexInt(h).as("h1"),
+      Portable.hexInt(h, 9).as("h2"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("n_rows"),
         sum("h1").as("sum_h1"), sum("h2").as("sum_h2"))
   }
 
   private val tableFingerprintSql =
-    """WITH c AS (
+    s"""WITH c AS (
       |  SELECT o_orderkey % 16 AS bucket,
       |         md5(concat_ws('|', o_orderkey, o_custkey,
       |             CAST(CAST(o_totalprice AS DECIMAL(12,2)) * 100 AS BIGINT),
       |             strftime(o_orderdate, '%Y-%m-%d'), o_orderstatus)) AS h
       |  FROM orders)
       |SELECT bucket, count(*) AS n_rows,
-      |       CAST(sum(CAST('0x' || substr(h, 1, 8) AS BIGINT)) AS BIGINT) AS sum_h1,
-      |       CAST(sum(CAST('0x' || substr(h, 9, 8) AS BIGINT)) AS BIGINT) AS sum_h2
+      |       CAST(sum(${Portable.hexIntSql("h")}) AS BIGINT) AS sum_h1,
+      |       CAST(sum(${Portable.hexIntSql("h", "9")}) AS BIGINT) AS sum_h2
       |FROM c GROUP BY bucket""".stripMargin
 
   /** Per-group top-k through the BOUNDED-STATE aggregate
@@ -2220,8 +2220,7 @@ object Relational extends QueryPack {
     val base = Tables.loadSpread(s, dir, "lineitem").select(
       col("l_returnflag").as("flag"),
       floor(col("l_extendedprice").cast("decimal(12,2)") * 100).cast("long").as("cents"),
-      conv(substring(md5(concat_ws(":", col("l_orderkey"), col("l_linenumber"))),
-        1, 13), 16, 10).cast("long").as("h"))
+      Portable.md5Int(concat_ws(":", col("l_orderkey"), col("l_linenumber")), 13).as("h"))
     val topk = udaf(new graft.operators.TopKAgg(SampleK))
     val sample = base.groupBy("flag").agg(topk(-col("h"), col("cents")).as("sk"))
       .select(col("flag"), explode(col("sk")).as("it"))
@@ -2247,8 +2246,7 @@ object Relational extends QueryPack {
     s"""WITH base AS (
       |  SELECT l_returnflag AS flag,
       |         CAST(floor(CAST(l_extendedprice AS DECIMAL(12,2)) * 100) AS BIGINT) AS cents,
-      |         CAST('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || ':' ||
-      |                                 CAST(l_linenumber AS VARCHAR)), 1, 13) AS BIGINT) AS h
+      |         ${Portable.md5IntSql("CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)", 13)} AS h
       |  FROM lineitem),
       |samp AS (
       |  SELECT flag, cents FROM (
@@ -2299,8 +2297,7 @@ object Relational extends QueryPack {
       .withColumn("thr",
         least(lit(PpsFp), expr(s"($PpsK * cents * $PpsFp) div w_tot")))
       .withColumn("u",
-        conv(substring(md5(col("o_orderkey").cast("string").cast("binary")), 1, 8), 16, 10)
-          .cast("long") % PpsFp)
+        Portable.md5Int(col("o_orderkey").cast("string").cast("binary")) % PpsFp)
       .agg(
         max(col("n_pop")).as("n_pop"),
         max(col("w_tot")).as("true_total_c"),
@@ -2324,7 +2321,7 @@ object Relational extends QueryPack {
       |drawn AS (
       |  SELECT cents,
       |         least($PpsFp, ($PpsK * cents * $PpsFp) // w_tot) AS thr,
-      |         CAST('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 8) AS BIGINT) % $PpsFp AS u,
+      |         ${Portable.md5IntSql("CAST(o_orderkey AS VARCHAR)")} % $PpsFp AS u,
       |         w_tot, n_pop
       |  FROM od CROSS JOIN tot),
       |agg AS (

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -50,8 +50,7 @@ object Curation extends QueryPack {
     */
   def weightedSample(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-    val u = conv(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)
-      .cast("long") % 1000000L
+    val u = Portable.md5Int(col("doc_id").cast("string").cast("binary")) % 1000000L
     docs.where(u < col("n_chars") * 250L)
       .groupBy("source")
       .agg(
@@ -60,10 +59,10 @@ object Curation extends QueryPack {
   }
 
   private val weightedSampleSql =
-    """SELECT source, count(*) AS n_kept,
+    s"""SELECT source, count(*) AS n_kept,
       |       CAST(sum(n_chars) AS BIGINT) AS kept_chars
       |FROM documents
-      |WHERE CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000000 < n_chars * 250
+      |WHERE ${Portable.md5IntSql("CAST(doc_id AS VARCHAR)")} % 1000000 < n_chars * 250
       |GROUP BY source""".stripMargin
 
   /** Token-length distribution profile per source — p10/p50/p90 of document
@@ -321,8 +320,7 @@ object Curation extends QueryPack {
         countDistinct(col("doc_id")).as("n_docs"),
         count(lit(1)).as("n_chunks"),
         sum(size(split(col("c"), " ")).cast("long")).as("chunk_tokens"),
-        sum(conv(substring(md5(col("c").cast("binary")), 1, 8), 16, 10).cast("long"))
-          .as("chunk_md5_sum"))
+        sum(Portable.md5Int(col("c").cast("binary"))).as("chunk_md5_sum"))
   }
 
   private val chunkStatsSql =
@@ -343,7 +341,7 @@ object Curation extends QueryPack {
       |  FROM k)
       |SELECT source, count(DISTINCT doc_id) AS n_docs, count(*) AS n_chunks,
       |       CAST(sum(len(string_split(c, ' '))) AS BIGINT) AS chunk_tokens,
-      |       CAST(sum(CAST('0x' || substr(md5(c), 1, 8) AS BIGINT)) AS BIGINT) AS chunk_md5_sum
+      |       CAST(sum(${Portable.md5IntSql("c")}) AS BIGINT) AS chunk_md5_sum
       |FROM c GROUP BY source""".stripMargin
 
   /** content-defined chunking params: boundary test window of [[CdcW]]
@@ -362,20 +360,14 @@ object Curation extends QueryPack {
   private val cdcChunksUdf = udf { toks: Seq[String] =>
     if (toks.isEmpty) Seq.empty[(String, Int)]
     else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      def hexHead(s: String): String = {
-        md.reset()
-        md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      }
       val out = Seq.newBuilder[(String, Int)]
       var start = 0
       var j = 0
       while (j < toks.length) {
         val isBoundary = j >= CdcW - 1 &&
-          java.lang.Long.parseLong(
-            hexHead(toks.slice(j - CdcW + 1, j + 1).mkString(" ")).take(8), 16) % CdcMask == 0L
+          Portable.md5Int(toks.slice(j - CdcW + 1, j + 1).mkString(" ")) % CdcMask == 0L
         if (isBoundary || j == toks.length - 1) {
-          out += ((hexHead(toks.slice(start, j + 1).mkString(" ")), j + 1 - start))
+          out += ((Portable.md5Hex(toks.slice(start, j + 1).mkString(" ")), j + 1 - start))
           start = j + 1
         }
         j += 1
@@ -426,7 +418,7 @@ object Curation extends QueryPack {
       |win AS (
       |  SELECT doc_id, t, i,
       |         CASE WHEN i >= $CdcW AND
-      |                   CAST('0x' || substr(md5(array_to_string(t[i - ${CdcW - 1} : i], ' ')), 1, 8) AS BIGINT) % $CdcMask = 0
+      |                   ${Portable.md5IntSql(s"array_to_string(t[i - ${CdcW - 1} : i], ' ')")} % $CdcMask = 0
       |              THEN 1 ELSE 0 END AS bnd
       |  FROM toks, unnest(range(1, len(t) + 1)) AS s(i)),
       |cid AS (
@@ -603,16 +595,20 @@ object Curation extends QueryPack {
       |SELECT source, $packingAggSql
       |FROM p GROUP BY source""".stripMargin
 
-  /** salted portable coin (the md5 two-half recipe from CLAUDE.md): a pure
-    * function of (salt, doc_id) → [0, 1000), identical in Spark and DuckDB,
-    * so assignment survives retries, replays, and engine swaps.
+  /** The 90/5/5 train/val/test label of a document: its salted portable
+    * coin `md5Int("split:" || doc_id) % 1000` cut at 900 and 950 — a pure
+    * function of doc_id, identical in Spark and DuckDB, so assignment
+    * survives retries, replays, and engine swaps.
     */
-  private def saltedCoin(salt: String): Column =
-    conv(substring(md5(concat(lit(salt + ":"), col("doc_id").cast("string"))
-      .cast("binary")), 1, 8), 16, 10).cast("long") % 1000
+  private val splitLabel: Column = {
+    val coin = Portable.md5Int(concat(lit("split:"), col("doc_id").cast("string")).cast("binary")) % 1000
+    when(coin < 900, "train").when(coin < 950, "val").otherwise("test")
+  }
 
-  private def saltedCoinSql(salt: String): String =
-    s"CAST('0x' || substr(md5('$salt:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000"
+  private val splitLabelSql: String = {
+    val coin = s"${Portable.md5IntSql("'split:' || CAST(doc_id AS VARCHAR)")} % 1000"
+    s"CASE WHEN $coin < 900 THEN 'train' WHEN $coin < 950 THEN 'val' ELSE 'test' END"
+  }
 
   /** Deterministic train/val/test split (90/5/5): the salted hash coin
     * assigns every document to exactly one split as a pure function of its
@@ -630,10 +626,7 @@ object Curation extends QueryPack {
   def splitTrainEval(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
     docs
-      .withColumn("split",
-        when(saltedCoin("split") < 900, "train")
-          .when(saltedCoin("split") < 950, "val")
-          .otherwise("test"))
+      .withColumn("split", splitLabel)
       .groupBy("source", "split")
       .agg(
         count(lit(1)).as("n_docs"),
@@ -642,10 +635,7 @@ object Curation extends QueryPack {
 
   private val splitTrainEvalSql =
     s"""WITH a AS (
-      |  SELECT source, n_chars,
-      |         CASE WHEN ${saltedCoinSql("split")} < 900 THEN 'train'
-      |              WHEN ${saltedCoinSql("split")} < 950 THEN 'val'
-      |              ELSE 'test' END AS split
+      |  SELECT source, n_chars, $splitLabelSql AS split
       |  FROM documents)
       |SELECT source, split, count(*) AS n_docs,
       |       CAST(sum(n_chars) AS BIGINT) AS sum_chars
@@ -666,10 +656,7 @@ object Curation extends QueryPack {
     */
   def splitBalanceAudit(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
-      .withColumn("split",
-        when(saltedCoin("split") < 900, "train")
-          .when(saltedCoin("split") < 950, "val")
-          .otherwise("test"))
+      .withColumn("split", splitLabel)
       .withColumn("n_tokens", size(TextStats.tokensCol).cast("long"))
     val long = docs.select(col("split"), lit("n_chars").as("feature"), col("n_chars").as("x"))
       .unionAll(docs.select(col("split"), lit("n_tokens").as("feature"), col("n_tokens").as("x")))
@@ -698,9 +685,7 @@ object Curation extends QueryPack {
     def v(sx: String, sx2: String, n: String) =
       s"(CAST($sx2 AS DOUBLE) / $n - (CAST($sx AS DOUBLE) / $n) * (CAST($sx AS DOUBLE) / $n))"
     s"""WITH d AS (
-      |  SELECT CASE WHEN ${saltedCoinSql("split")} < 900 THEN 'train'
-      |              WHEN ${saltedCoinSql("split")} < 950 THEN 'val'
-      |              ELSE 'test' END AS split,
+      |  SELECT $splitLabelSql AS split,
       |         n_chars,
       |         CAST(len(list_filter(regexp_split_to_array(trim(text), '${TextStats.WsRe}'), x -> x <> '')) AS BIGINT) AS n_tokens
       |  FROM documents),
@@ -748,7 +733,7 @@ object Curation extends QueryPack {
         md5(concat(col("epoch").cast("string"), lit(":"),
           col("doc_id").cast("string")).cast("binary")))
       .withColumn("shard",
-        conv(substring(col("coin"), 1, 8), 16, 10).cast("long") % EpochShards)
+        Portable.hexInt(col("coin")) % EpochShards)
     withEpoch
       .withColumn("pos", row_number().over(
         Window.partitionBy("epoch", "shard").orderBy(col("coin"), col("doc_id"))))
@@ -762,7 +747,7 @@ object Curation extends QueryPack {
       |  FROM documents, (VALUES (1), (2)) ep(epoch)),
       |sh AS (
       |  SELECT epoch, doc_id, coin,
-      |         CAST('0x' || substr(coin, 1, 8) AS BIGINT) % $EpochShards AS shard
+      |         ${Portable.hexIntSql("coin")} % $EpochShards AS shard
       |  FROM e)
       |SELECT epoch, shard,
       |       CAST(row_number() OVER (PARTITION BY epoch, shard
@@ -797,8 +782,7 @@ object Curation extends QueryPack {
         count(lit(1)).as("n_docs"),
         sum(length(col("noisy")).cast("long")).as("chars_in"),
         sum(length(col("norm")).cast("long")).as("chars_out"),
-        sum(conv(substring(md5(col("norm").cast("binary")), 1, 8), 16, 10)
-          .cast("long")).as("norm_md5_sum"))
+        sum(Portable.md5Int(col("norm").cast("binary"))).as("norm_md5_sum"))
   }
 
   private val textNormalizeSql =
@@ -814,7 +798,7 @@ object Curation extends QueryPack {
       |SELECT source, count(*) AS n_docs,
       |       CAST(sum(len(noisy)) AS BIGINT) AS chars_in,
       |       CAST(sum(len(norm)) AS BIGINT) AS chars_out,
-      |       CAST(sum(CAST('0x' || substr(md5(norm), 1, 8) AS BIGINT)) AS BIGINT) AS norm_md5_sum
+      |       CAST(sum(${Portable.md5IntSql("norm")}) AS BIGINT) AS norm_md5_sum
       |FROM n GROUP BY source""".stripMargin
 
   /** DSIR hashed-feature buckets (2^8 — the published method uses 10^4+ at
@@ -858,8 +842,8 @@ object Curation extends QueryPack {
     docs
       .select(col("doc_id"), col("source"), explode(bigramsUdf(col("text"))).as("gram"))
       .select(col("doc_id"), col("source"),
-        (conv(substring(md5(concat(lit("dsir:"), col("gram")).cast("binary")), 1, 8), 16, 10)
-          .cast("long") % DsirBuckets).as("bucket"),
+        (Portable.md5Int(concat(lit("dsir:"), col("gram")).cast("binary")) % DsirBuckets)
+          .as("bucket"),
         when(col("source").isin(DsirTargetSources: _*), 1L).otherwise(0L).as("is_tgt"))
 
   /** Scalar DSIR scorer against a trained weight vector — the ONLINE form of
@@ -876,13 +860,10 @@ object Curation extends QueryPack {
         val toks = text.trim.split(TextStats.WsRe).filter(_.nonEmpty)
         if (toks.length < 2) 0L
         else {
-          val md = java.security.MessageDigest.getInstance("MD5")
           var s = 0L
           var i = 0
           while (i < toks.length - 1) {
-            val hex = md.digest(s"dsir:${toks(i)} ${toks(i + 1)}".getBytes("UTF-8"))
-              .take(4).map("%02x".format(_)).mkString
-            s += weights((java.lang.Long.parseLong(hex, 16) % weights.length).toInt)
+            s += weights((Portable.md5Int(s"dsir:${toks(i)} ${toks(i + 1)}") % weights.length).toInt)
             i += 1
           }
           s
@@ -931,7 +912,7 @@ object Curation extends QueryPack {
       |  FROM t, unnest(range(1, len(t))) AS r(i)),
       |b AS (
       |  SELECT doc_id, source,
-      |         CAST('0x' || substr(md5('dsir:' || gram), 1, 8) AS BIGINT) % $DsirBuckets AS bucket,
+      |         ${Portable.md5IntSql("'dsir:' || gram")} % $DsirBuckets AS bucket,
       |         CASE WHEN source IN $tgt THEN 1 ELSE 0 END AS is_tgt
       |  FROM g),
       |w AS (
@@ -984,8 +965,7 @@ object Curation extends QueryPack {
       .groupBy("source", "n_docs", "quota")
       .agg(
         count(lit(1)).as("n_selected"),
-        sum(conv(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)
-          .cast("long")).as("sel_checksum"))
+        sum(Portable.md5Int(col("doc_id").cast("string").cast("binary"))).as("sel_checksum"))
   }
 
   private val temperatureMixtureSql =
@@ -1004,7 +984,7 @@ object Curation extends QueryPack {
       |  FROM documents)
       |SELECT q.source, q.n_docs, quota,
       |       count(*) AS n_selected,
-      |       CAST(sum(CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT)) AS BIGINT) AS sel_checksum
+      |       CAST(sum(${Portable.md5IntSql("CAST(doc_id AS VARCHAR)")}) AS BIGINT) AS sel_checksum
       |FROM r JOIN q ON r.source = q.source
       |WHERE rk <= quota
       |GROUP BY 1, 2, 3""".stripMargin
@@ -1036,8 +1016,7 @@ object Curation extends QueryPack {
     // hash, fully map-parallel
     val assigned = o
       .select(col("pr"),
-        conv(substring(md5(concat(lit("synth:"), col("k").cast("string"))), 1, 8),
-          16, 10).cast("long").as("h"))
+        Portable.md5Int(concat(lit("synth:"), col("k").cast("string"))).as("h"))
       .join(broadcast(sizes), "pr")
       .select(col("pr"), (pmod(col("h"), col("n")) + 1).as("rank"))
     val synth = assigned.join(ranked.select("pr", "rank", "cents"), Seq("pr", "rank"))
@@ -1054,7 +1033,7 @@ object Curation extends QueryPack {
   }
 
   private val synthBootstrapAuditSql =
-    """WITH o AS (
+    s"""WITH o AS (
       |  SELECT o_orderkey AS k, o_orderpriority AS pr,
       |         CAST(floor(CAST(o_totalprice AS DECIMAL(12,2)) * 100) AS BIGINT) AS cents
       |  FROM orders),
@@ -1065,7 +1044,7 @@ object Curation extends QueryPack {
       |sizes AS (SELECT pr, count(*) AS n FROM o GROUP BY pr),
       |draws AS (
       |  SELECT pr,
-      |         CAST('0x' || substr(md5('synth:' || CAST(k AS VARCHAR)), 1, 8) AS BIGINT) AS h
+      |         ${Portable.md5IntSql("'synth:' || CAST(k AS VARCHAR)")} AS h
       |  FROM o),
       |assigned AS (
       |  SELECT d.pr, (d.h % s.n) + 1 AS rank

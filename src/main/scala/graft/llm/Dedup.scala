@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -288,8 +288,8 @@ object Dedup extends QueryPack {
     s"""WITH $shCte,
       |sh_h AS (
       |  SELECT doc_id,
-      |         CAST('0x' || substr(md5(shingle), 1, 8) AS BIGINT) % $HashMod AS h1,
-      |         CAST('0x' || substr(md5(shingle), 9, 8) AS BIGINT) % $HashMod AS h2
+      |         ${Portable.md5IntSql("shingle")} % $HashMod AS h1,
+      |         ${Portable.hexIntSql("md5(shingle)", "9")} % $HashMod AS h2
       |  FROM sh),
       |sig AS (SELECT doc_id, $minCols FROM sh_h GROUP BY doc_id),
       |bands AS (SELECT doc_id, unnest([$bandList]) AS bh FROM sig),
@@ -399,8 +399,8 @@ object Dedup extends QueryPack {
   val HashMod = 2147483647L
 
   /** doc_id → minhash signature: ONE md5 per retained shingle, split into
-    * two 32-bit halves (hex → bigint — portable: Spark `conv(…,16,10)`,
-    * DuckDB `CAST('0x'||… AS BIGINT)`), then the classic 2-universal family
+    * two 32-bit halves (hex → bigint — the portable recipe in
+    * [[graft.Portable]]), then the classic 2-universal family
     * `perm_i = (h1 + i*h2) mod (2^31-1)` generates all NumPerms
     * permutations arithmetically. 64× fewer digests than hashing per
     * permutation, the min-aggregate runs over longs instead of strings, and
@@ -453,8 +453,8 @@ object Dedup extends QueryPack {
     val h = md5(col("shingle").cast("binary"))
     inv.select(
       col("doc_id"), col("shingle"),
-      (conv(substring(h, 1, 8), 16, 10).cast("long") % HashMod).as("h1"),
-      (conv(substring(h, 9, 8), 16, 10).cast("long") % HashMod).as("h2"))
+      (Portable.hexInt(h) % HashMod).as("h1"),
+      (Portable.hexInt(h, 9) % HashMod).as("h2"))
       .groupBy("doc_id")
       .agg(
         minSig(col("h1"), col("h2")).as("sig"),
@@ -546,8 +546,8 @@ object Dedup extends QueryPack {
     val h = md5(col("shingle").cast("binary"))
     inv.select(
         col("doc_id"), col("shingle"),
-        (conv(substring(h, 1, 8), 16, 10).cast("long") % HashMod).as("h1"),
-        (conv(substring(h, 9, 8), 16, 10).cast("long") % HashMod).as("h2"))
+        (Portable.hexInt(h) % HashMod).as("h1"),
+        (Portable.hexInt(h, 9) % HashMod).as("h2"))
       .groupBy("doc_id")
       .agg(
         minSig(col("h1"), col("h2")).as("sig"),
@@ -685,8 +685,8 @@ object Dedup extends QueryPack {
       |n AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id),
       |sh_h AS (
       |  SELECT doc_id,
-      |         CAST('0x' || substr(md5(shingle), 1, 8) AS BIGINT) % $HashMod AS h1,
-      |         CAST('0x' || substr(md5(shingle), 9, 8) AS BIGINT) % $HashMod AS h2
+      |         ${Portable.md5IntSql("shingle")} % $HashMod AS h1,
+      |         ${Portable.hexIntSql("md5(shingle)", "9")} % $HashMod AS h2
       |  FROM sh),
       |sig AS (SELECT doc_id, $minCols FROM sh_h GROUP BY doc_id),
       |bands AS (SELECT doc_id, unnest([$bandList]) AS bh FROM sig),
@@ -715,16 +715,16 @@ object Dedup extends QueryPack {
     *
     * The token hash is md5 split into two 32-bit words (`hi`/`lo`), NOT
     * `xxhash64`: the signature lives in two sign-safe BIGINT words that
-    * DuckDB reproduces verbatim (`'0x'||substr(md5)` halves — the portable
-    * recipe), which is what lets `dedup_simhash` be oracle-gated on the
-    * exact pair set instead of a rows-only check.
+    * DuckDB reproduces verbatim (md5 halves — the portable recipe in
+    * [[graft.Portable]]), which is what lets `dedup_simhash` be
+    * oracle-gated on the exact pair set instead of a rows-only check.
     */
   private[llm] def simhashSketch(docs: DataFrame): DataFrame = {
     val toks = docs.select(col("doc_id"), explode(tokensUdf(col("text"))).as("token"))
     val md = md5(col("token").cast("binary"))
     val words = toks.select(col("doc_id"),
-      conv(substring(md, 1, 8), 16, 10).cast("long").as("hi"),
-      conv(substring(md, 9, 8), 16, 10).cast("long").as("lo"))
+      Portable.hexInt(md).as("hi"),
+      Portable.hexInt(md, 9).as("lo"))
     val bitVotes =
       (0 until 32).map(i =>
         sum(when(shiftright(col("lo"), i).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"l$i")) ++
@@ -787,8 +787,8 @@ object Dedup extends QueryPack {
       |  FROM documents),
       |hh AS (
       |  SELECT doc_id,
-      |         CAST('0x' || substr(md5(token), 1, 8) AS BIGINT) AS hi,
-      |         CAST('0x' || substr(md5(token), 9, 8) AS BIGINT) AS lo
+      |         ${Portable.md5IntSql("token")} AS hi,
+      |         ${Portable.hexIntSql("md5(token)", "9")} AS lo
       |  FROM t),
       |v AS (SELECT doc_id, $lVotes, $hVotes FROM hh GROUP BY doc_id),
       |sig AS (SELECT doc_id, CAST($sigHi AS BIGINT) AS sim_hi, CAST($sigLo AS BIGINT) AS sim_lo FROM v),
@@ -1080,16 +1080,9 @@ object Dedup extends QueryPack {
     * only), two low-cardinality aggregates; the coin is md5-based and
     * engine-portable, never a Spark-only hash.
     */
-  /** Portable salted coin in [0, 1000): md5 hex head → bigint, identical
-    * arithmetic in Spark and DuckDB (the repo's standard engine-shared
-    * hash — see [[splitAuditSql]] / [[contrastiveSql]] for the SQL twin).
-    */
-  private def portableCoin(c: Column, salt: String): Column =
-    conv(substring(md5(concat(lit(salt + ":"), c.cast("string")).cast("binary")), 1, 8),
-      16, 10).cast("long") % 1000
-
   def splitAudit(s: SparkSession, dir: String): DataFrame = {
-    def coin(c: Column): Column = portableCoin(c, "split")
+    def coin(c: Column): Column =
+      Portable.md5Int(concat(lit("split:"), c.cast("string")).cast("binary")) % 1000
     val labeled = Tables.load(s, dir, "documents").select("doc_id")
       .join(broadcast(components(s, dir)), Seq("doc_id"), "left")
       .withColumn("cluster", coalesce(col("canon_id"), col("doc_id")))
@@ -1121,9 +1114,9 @@ object Dedup extends QueryPack {
       |  FROM documents d LEFT JOIN lab l ON d.doc_id = l.doc_id),
       |fl AS (
       |  SELECT cluster,
-      |    CASE WHEN CAST('0x' || substr(md5('split:' || CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 900
+      |    CASE WHEN ${Portable.md5IntSql("'split:' || CAST(doc_id AS VARCHAR)")} % 1000 < 900
       |         THEN 'train' ELSE 'eval' END AS naive,
-      |    CASE WHEN CAST('0x' || substr(md5('split:' || CAST(cluster AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < 900
+      |    CASE WHEN ${Portable.md5IntSql("'split:' || CAST(cluster AS VARCHAR)")} % 1000 < 900
       |         THEN 'train' ELSE 'eval' END AS cluster_aware
       |  FROM ld),
       |sch AS (
@@ -1392,12 +1385,7 @@ object Dedup extends QueryPack {
     val n = toks.length - SpanW + 1
     if (n <= 0) Array.empty[String]
     else {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      Array.tabulate(n) { i =>
-        md.reset()
-        md.digest(toks.slice(i, i + SpanW).mkString(" ").getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-      }
+      Array.tabulate(n)(i => Portable.md5Hex(toks.slice(i, i + SpanW).mkString(" ")))
     }
   }
 

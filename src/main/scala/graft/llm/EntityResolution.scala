@@ -1,7 +1,7 @@
 package graft.llm
 
-import graft.{Q, QueryPack, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.{Portable, Q, QueryPack, Tables}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,11 +38,6 @@ object EntityResolution extends QueryPack {
   /** master-table slice resolved in the demo (bounds block sizes at any SF) */
   val MaxKey = 2000L
 
-  /** 32-bit md5 integer of a salted key — the portable randomness recipe */
-  private def md5i(salt: String, key: Column): Column =
-    conv(substring(md5(concat(lit(salt), key.cast("string"))), 1, 8), 16, 10)
-      .cast("long")
-
   /** clean master records: (id, name, nation, cents) */
   private def clean(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "customer")
@@ -58,7 +53,7 @@ object EntityResolution extends QueryPack {
     * `Customer#DDDDDDDDD`) and the balance nudged by md5 cents ∈ [-10, 10]
     */
   private def dirty(s: SparkSession, dir: String): DataFrame = {
-    val p = (md5i("er:pos:", col("id")) % 9 + 10).as("p")
+    val p = (Portable.md5Int(concat(lit("er:pos:"), col("id").cast("string"))) % 9 + 10).as("p")
     clean(s, dir)
       .withColumn("p", p)
       .select(
@@ -67,7 +62,7 @@ object EntityResolution extends QueryPack {
           expr("substring(name, 10, p - 10)"),
           expr("substring(name, p + 1, 18)")).as("dname"),
         col("nation").as("dnation"),
-        (col("cents") + md5i("er:bal:", col("id")) % 21 - lit(10)).as("dcents"))
+        (col("cents") + Portable.md5Int(concat(lit("er:bal:"), col("id").cast("string"))) % 21 - lit(10)).as("dcents"))
   }
 
   def erResolve(s: SparkSession, dir: String): DataFrame = {
@@ -115,9 +110,9 @@ object EntityResolution extends QueryPack {
       |  SELECT id AS true_id,
       |         substr(name, 1, 9) || substr(name, 10, p - 10) || substr(name, p + 1, 18) AS dname,
       |         nation AS dnation,
-      |         cents + CAST('0x' || substr(md5('er:bal:' || CAST(id AS VARCHAR)), 1, 8) AS BIGINT) % 21 - 10 AS dcents
+      |         cents + ${Portable.md5IntSql("'er:bal:' || CAST(id AS VARCHAR)")} % 21 - 10 AS dcents
       |  FROM (SELECT *,
-      |          CAST('0x' || substr(md5('er:pos:' || CAST(id AS VARCHAR)), 1, 8) AS BIGINT) % 9 + 10 AS p
+      |          ${Portable.md5IntSql("'er:pos:' || CAST(id AS VARCHAR)")} % 9 + 10 AS p
       |        FROM cl)),
       |clkeys AS (
       |  SELECT id, name, nation, cents,

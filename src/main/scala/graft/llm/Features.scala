@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -87,7 +87,7 @@ object Features extends QueryPack {
       .where(length(col("tok")) > 0)
     val hashed = toks
       .select(col("doc_id"),
-        conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long").as("h"))
+        Portable.md5Int(col("tok")).as("h"))
       .select(col("doc_id"),
         (col("h") % HashB).as("bucket"),
         when(expr(s"(h div $HashB) % 2") === 0, 1L).otherwise(-1L).as("sgn"))
@@ -101,8 +101,8 @@ object Features extends QueryPack {
        |  FROM documents WHERE doc_id % $HashDocMod = 0),
        |hashed AS (
        |  SELECT doc_id,
-       |         CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) % $HashB AS bucket,
-       |         CASE WHEN (CAST('0x' || substr(md5(tok), 1, 8) AS BIGINT) // $HashB) % 2 = 0
+       |         ${Portable.md5IntSql("tok")} % $HashB AS bucket,
+       |         CASE WHEN (${Portable.md5IntSql("tok")} // $HashB) % 2 = 0
        |              THEN 1 ELSE -1 END AS sgn
        |  FROM toks WHERE length(tok) > 0)
        |SELECT doc_id, bucket, CAST(sum(sgn) AS BIGINT) AS signed_sum,
@@ -130,8 +130,7 @@ object Features extends QueryPack {
     // loadSpread: the per-row md5 fold hash dominates the one-row-group
     // single-task scan, and BOTH passes (fold stats + residuals) pay it
     val li = Tables.loadSpread(s, dir, "lineitem").select(
-      (conv(substring(md5(concat_ws(":", col("l_orderkey"), col("l_linenumber"))), 1, 8), 16, 10)
-        .cast("long") % CvK).as("fold"),
+      (Portable.md5Int(concat_ws(":", col("l_orderkey"), col("l_linenumber"))) % CvK).as("fold"),
       col("l_quantity").cast("long").as("x"),
       floor(col("l_extendedprice") * 100).cast("long").as("y_c"))
     val foldStats = li.groupBy(col("fold")).agg(
@@ -183,7 +182,7 @@ object Features extends QueryPack {
          | - ($slope)
          |   * ((tsx - sx) / (tn - n))""".stripMargin
     s"""WITH li AS (
-       |  SELECT CAST('0x' || substr(md5(CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)), 1, 8) AS BIGINT) % $CvK AS fold,
+       |  SELECT ${Portable.md5IntSql("CAST(l_orderkey AS VARCHAR) || ':' || CAST(l_linenumber AS VARCHAR)")} % $CvK AS fold,
        |         CAST(l_quantity AS BIGINT) AS x,
        |         CAST(floor(l_extendedprice * 100) AS BIGINT) AS y_c
        |  FROM lineitem),
@@ -232,11 +231,9 @@ object Features extends QueryPack {
   def exportManifest(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.loadSpread(s, dir, "documents")
       .select(col("doc_id"), col("n_chars"),
-        conv(substring(md5(concat_ws(":",
-          col("doc_id"), col("n_chars"), md5(col("text")))), 1, 8), 16, 10)
-          .cast("long").as("rh"),
-        (conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10)
-          .cast("long") % ManifestShards).as("shard"))
+        Portable.md5Int(concat_ws(":", col("doc_id"), col("n_chars"), md5(col("text"))))
+          .as("rh"),
+        (Portable.md5Int(col("doc_id").cast("string")) % ManifestShards).as("shard"))
     docs.groupBy(col("shard"))
       .agg(
         count(lit(1)).as("n_rows"),
@@ -249,8 +246,8 @@ object Features extends QueryPack {
   private val exportManifestSql =
     s"""WITH d AS (
        |  SELECT doc_id, n_chars,
-       |         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' || CAST(n_chars AS VARCHAR) || ':' || md5(text)), 1, 8) AS BIGINT) AS rh,
-       |         CAST('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS BIGINT) % $ManifestShards AS shard
+       |         ${Portable.md5IntSql("CAST(doc_id AS VARCHAR) || ':' || CAST(n_chars AS VARCHAR) || ':' || md5(text)")} AS rh,
+       |         ${Portable.md5IntSql("CAST(doc_id AS VARCHAR)")} % $ManifestShards AS shard
        |  FROM documents)
        |SELECT shard, CAST(count(*) AS BIGINT) AS n_rows,
        |       CAST(sum(n_chars) AS BIGINT) AS n_chars,

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -85,8 +85,7 @@ object Governance extends QueryPack {
         sum(col("n_email").cast("long")).as("n_email"),
         sum(col("n_ip").cast("long")).as("n_ip"),
         sum(col("n_phone").cast("long")).as("n_phone"),
-        sum(conv(substring(md5(col("r").cast("binary")), 1, 8), 16, 10).cast("long"))
-          .as("redacted_md5_sum"))
+        sum(Portable.md5Int(col("r").cast("binary"))).as("redacted_md5_sum"))
   }
 
   private val piiRedactSql =
@@ -112,15 +111,8 @@ object Governance extends QueryPack {
       |       CAST(sum(n_email) AS BIGINT) AS n_email,
       |       CAST(sum(n_ip) AS BIGINT) AS n_ip,
       |       CAST(sum(n_phone) AS BIGINT) AS n_phone,
-      |       CAST(sum(CAST('0x' || substr(md5(r), 1, 8) AS BIGINT)) AS BIGINT) AS redacted_md5_sum
+      |       CAST(sum(${Portable.md5IntSql("r")}) AS BIGINT) AS redacted_md5_sum
       |FROM red GROUP BY event_type""".stripMargin
-
-  /** portable per-row coin: md5(doc_id) first 8 hex chars → long → mod 1000
-    * (the cross-engine hash recipe from the minhash oracle / CLAUDE.md).
-    */
-  private val coin1000: Column =
-    conv(substring(md5(col("doc_id").cast("string").cast("binary")), 1, 8), 16, 10)
-      .cast("long") % 1000
 
   /** Source-mixture rebalancing: deterministically downsample each language
     * stratum to (approximately) the smallest stratum's size — the standard
@@ -138,7 +130,7 @@ object Governance extends QueryPack {
       .select(col("lang"), col("n_before"),
         expr("1000 * n_min DIV n_before").as("threshold"))
     val kept = docs.join(broadcast(th.select("lang", "threshold")), "lang")
-      .where(coin1000 < col("threshold"))
+      .where(Portable.md5Int(col("doc_id").cast("string").cast("binary")) % 1000 < col("threshold"))
       .groupBy("lang").agg(count(lit(1)).as("n_kept"))
     th.join(broadcast(kept), Seq("lang"), "left")
       .select(col("lang"), col("n_before"), col("threshold"),
@@ -146,12 +138,12 @@ object Governance extends QueryPack {
   }
 
   private val mixtureRebalanceSql =
-    """WITH cnt AS (SELECT lang, count(*) AS n_before FROM documents GROUP BY lang),
+    s"""WITH cnt AS (SELECT lang, count(*) AS n_before FROM documents GROUP BY lang),
       |m AS (SELECT min(n_before) AS n_min FROM cnt),
       |th AS (SELECT lang, n_before, (1000 * m.n_min) // n_before AS threshold FROM cnt, m),
       |kept AS (
       |  SELECT d.lang AS lang FROM documents d JOIN th ON d.lang = th.lang
-      |  WHERE CAST('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 8) AS BIGINT) % 1000 < th.threshold),
+      |  WHERE ${Portable.md5IntSql("CAST(d.doc_id AS VARCHAR)")} % 1000 < th.threshold),
       |kc AS (SELECT lang, count(*) AS n_kept FROM kept GROUP BY lang)
       |SELECT th.lang, th.n_before, th.threshold, COALESCE(kc.n_kept, 0) AS n_kept
       |FROM th LEFT JOIN kc ON th.lang = kc.lang""".stripMargin
@@ -1124,8 +1116,8 @@ object Governance extends QueryPack {
     def leg(name: String, df: DataFrame, subject: Column, canon: Column): DataFrame = {
       val h = md5(canon.cast("binary"))
       df.select(subject.as("subj"),
-          conv(substring(h, 1, 8), 16, 10).cast("long").as("h1"),
-          conv(substring(h, 9, 8), 16, 10).cast("long").as("h2"))
+          Portable.hexInt(h).as("h1"),
+          Portable.hexInt(h, 9).as("h2"))
         .agg(
           countDistinct(col("subj")).as("n_subjects"),
           count(lit(1)).as("n_rows"),
@@ -1148,7 +1140,9 @@ object Governance extends QueryPack {
       .orderBy(col("table_name"))
   }
 
-  private val gdprSarExportSql =
+  private val gdprSarExportSql = {
+    def sumHalf(from: String) = s"CAST(coalesce(sum(${Portable.hexIntSql("h", from)}), 0) AS BIGINT)"
+    val (h1, h2) = (sumHalf("1"), sumHalf("9"))
     s"""WITH ev AS (
       |  SELECT md5(concat_ws('|', event_id, user_id, event_type,
       |           coalesce(CAST(floor(value * 1000) AS BIGINT), -1))) AS h, user_id AS subj
@@ -1164,20 +1158,18 @@ object Governance extends QueryPack {
       |  FROM customer WHERE c_custkey % $SarMod = 0)
       |SELECT 'events' AS table_name, count(DISTINCT subj) AS n_subjects,
       |       count(*) AS n_rows,
-      |       CAST(coalesce(sum(CAST('0x' || substr(h, 1, 8) AS BIGINT)), 0) AS BIGINT) AS sum_h1,
-      |       CAST(coalesce(sum(CAST('0x' || substr(h, 9, 8) AS BIGINT)), 0) AS BIGINT) AS sum_h2
+      |       $h1 AS sum_h1, $h2 AS sum_h2
       |FROM ev
       |UNION ALL
       |SELECT 'orders', count(DISTINCT subj), count(*),
-      |       CAST(coalesce(sum(CAST('0x' || substr(h, 1, 8) AS BIGINT)), 0) AS BIGINT),
-      |       CAST(coalesce(sum(CAST('0x' || substr(h, 9, 8) AS BIGINT)), 0) AS BIGINT)
+      |       $h1, $h2
       |FROM od
       |UNION ALL
       |SELECT 'customer', count(DISTINCT subj), count(*),
-      |       CAST(coalesce(sum(CAST('0x' || substr(h, 1, 8) AS BIGINT)), 0) AS BIGINT),
-      |       CAST(coalesce(sum(CAST('0x' || substr(h, 9, 8) AS BIGINT)), 0) AS BIGINT)
+      |       $h1, $h2
       |FROM cu
       |ORDER BY table_name""".stripMargin
+  }
 
   /** SCD2 validity-interval lint — the dimension-loader data-quality gate:
     * given a versioned dimension's [valid_from, valid_to) intervals, find
@@ -1225,7 +1217,7 @@ object Governance extends QueryPack {
     val kRel = acts.agg(count(lit(1)).as("k"))
     ev
       .withColumn("h",
-        expr("conv(substring(md5(CAST(user_id AS STRING)), 1, 8), 16, 10)").cast("long"))
+        Portable.md5Int(col("user_id").cast("string")))
       .crossJoin(broadcast(kRel))
       .join(broadcast(acts.select(col("event_type").as("tgt_action"), col("idx"))),
         col("h") % col("k") === col("idx"))
@@ -1243,14 +1235,14 @@ object Governance extends QueryPack {
   }
 
   private val opeIpsSql =
-    """WITH acts AS (
+    s"""WITH acts AS (
       |  SELECT event_type, row_number() OVER (ORDER BY event_type) - 1 AS idx
       |  FROM (SELECT DISTINCT event_type FROM events)),
       |kk AS (SELECT count(*) AS k FROM acts),
       |ev AS (
       |  SELECT user_id, event_type,
       |         CAST(coalesce(floor(value * 1000), 0) AS BIGINT) AS r_m,
-      |         CAST('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8) AS BIGINT) AS h
+      |         ${Portable.md5IntSql("CAST(user_id AS VARCHAR)")} AS h
       |  FROM events),
       |tg AS (
       |  SELECT ev.event_type, ev.r_m, a.event_type AS tgt_action, kk.k
@@ -1347,9 +1339,8 @@ object Governance extends QueryPack {
       .join(ut, Seq("user_id", "event_type"), "left")
       .select(col("user_id"), col("event_type"),
         coalesce(col("has"), lit(0L)).as("b"))
-    val coin = conv(substring(md5(concat(
-        lit("rr|"), col("event_type"), lit("|"), col("user_id").cast("string"))),
-      1, 8), 16, 10).cast("long") % 4
+    val coin = Portable.md5Int(concat(
+      lit("rr|"), col("event_type"), lit("|"), col("user_id").cast("string"))) % 4
     truth
       .withColumn("r", when(coin === 0, lit(1L) - col("b")).otherwise(col("b")))
       .groupBy("event_type")
@@ -1362,14 +1353,13 @@ object Governance extends QueryPack {
   }
 
   private val rrPrivateCountSql =
-    """WITH u AS (SELECT DISTINCT user_id FROM events),
+    s"""WITH u AS (SELECT DISTINCT user_id FROM events),
       |ty AS (SELECT DISTINCT event_type FROM events),
       |ut AS (SELECT DISTINCT user_id, event_type FROM events),
       |truth AS (
       |  SELECT univ.user_id, univ.event_type,
       |         CASE WHEN ut.user_id IS NULL THEN 0 ELSE 1 END AS b,
-      |         CAST('0x' || substr(md5('rr|' || univ.event_type || '|'
-      |           || CAST(univ.user_id AS VARCHAR)), 1, 8) AS BIGINT) % 4 AS coin
+      |         ${Portable.md5IntSql("'rr|' || univ.event_type || '|' || CAST(univ.user_id AS VARCHAR)")} % 4 AS coin
       |  FROM (SELECT user_id, event_type FROM u CROSS JOIN ty) univ
       |  LEFT JOIN ut ON univ.user_id = ut.user_id
       |              AND univ.event_type = ut.event_type),

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -115,25 +115,9 @@ object Similarity extends QueryPack {
   val Tables_ = 4  // L independent hash tables
   val Planes  = 8  // bits per table → 256 buckets/table
 
-  /** Driver-side twin of the engine-portable unit-interval hash: first 8 hex
-    * chars of md5(key) as a 32-bit int, scaled by the exact power-of-two
-    * division h/2^31 − 1 ∈ [−1, 1). Both steps are single correctly-rounded
-    * double ops, so DuckDB's
-    * `CAST('0x'||substr(md5(key),1,8) AS BIGINT) / 2147483648 - 1`
-    * reproduces every value bit-for-bit.
-    */
-  private def md5Unit(key: String): Double = {
-    val md  = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(key.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex, 16).toDouble / 2147483648.0 - 1.0
-  }
-
   /** Hyperplane matrix [table][plane][dim], components uniform in [-1, 1),
-    * derived deterministically from the indices via a PORTABLE hash:
-    * the first 8 hex chars of md5("plane:t:p:d") as a 32-bit integer,
-    * scaled by the exact power-of-two division h/2^31 − 1 (both steps are
-    * single correctly-rounded double ops, so DuckDB's
-    * `CAST('0x'||substr(md5(...),1,8) AS BIGINT) / 2147483648 - 1`
+    * derived deterministically from the indices via the PORTABLE hash
+    * `Portable.md5Unit("plane:t:p:d")` (DuckDB's `Portable.md5UnitSql`
     * reproduces every component bit-for-bit — which is what lets
     * [[lshTopK]] and [[embCosDedup]] be hash-gated end to end instead of
     * recall-pinned). Built ONCE on the driver and shipped in the UDF
@@ -143,7 +127,7 @@ object Similarity extends QueryPack {
     * functions — 13× slower than brute force).
     */
   private lazy val planes: Array[Array[Array[Double]]] =
-    Array.tabulate(Tables_, Planes, Dim) { (t, p, d) => md5Unit(s"plane:$t:$p:$d") }
+    Array.tabulate(Tables_, Planes, Dim) { (t, p, d) => Portable.md5Unit(s"plane:$t:$p:$d") }
 
   /** DuckDB CTEs reproducing [[planes]] and [[bucketsUdf]]: `pl` is one row
     * per (t, p) carrying the 64-weight plane as an ordered list; `keys` is
@@ -154,7 +138,7 @@ object Similarity extends QueryPack {
   private def bucketCtes: String =
     s"""pl AS (
       |  SELECT t, p,
-      |         [CAST('0x' || substr(md5('plane:' || CAST(t AS VARCHAR) || ':' || CAST(p AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)), 1, 8) AS BIGINT) / 2147483648 - 1
+      |         [${Portable.md5UnitSql("'plane:' || CAST(t AS VARCHAR) || ':' || CAST(p AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")}
       |          for i in range(1, $Dim + 1)] AS w
       |  FROM range($Tables_) tt(t), range($Planes) pp(p)),
       |sgn AS (
@@ -474,7 +458,7 @@ object Similarity extends QueryPack {
     * matrix, which is what lets [[ivfTopK]] be hash-gated end to end.
     */
   private lazy val seedMatrix: Array[Double] =
-    Array.tabulate(NumCells * Dim) { i => md5Unit(s"ivf:${i / Dim}:${i % Dim}") }
+    Array.tabulate(NumCells * Dim) { i => Portable.md5Unit(s"ivf:${i / Dim}:${i % Dim}") }
 
   /** seed-pass cell assignment against the closure matrix (no cmat column) */
   private val seedCellUdf = udf { (emb: Seq[Float]) =>
@@ -573,7 +557,7 @@ object Similarity extends QueryPack {
   private def ivfCoarseCtes: String =
     s"""sm AS (
       |  SELECT c,
-      |         [CAST('0x' || substr(md5('ivf:' || CAST(c AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)), 1, 8) AS BIGINT) / 2147483648 - 1
+      |         [${Portable.md5UnitSql("'ivf:' || CAST(c AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")}
       |          for i in range(1, $Dim + 1)] AS w
       |  FROM range($NumCells) cc(c)),
       |seedcos AS (
@@ -1594,18 +1578,14 @@ object Similarity extends QueryPack {
     * Integer entries are the point: against [[quantAt]]-integerized vectors
     * the entire projection and every distance below is 64-bit-exact.
     */
-  private lazy val rpMatrix: Array[Array[Long]] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+  private lazy val rpMatrix: Array[Array[Long]] =
     Array.tabulate(RpK, Dim) { (k, d) =>
-      val hex = md.digest(s"rp:$k:$d".getBytes("UTF-8"))
-        .take(4).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hex, 16) % 6 match {
+      Portable.md5Int(s"rp:$k:$d") % 6 match {
         case 0 => 1L
         case 1 => -1L
         case _ => 0L
       }
     }
-  }
 
   private val rpProjectUdf = udf { x: Seq[Long] =>
     val out = new Array[Long](RpK)
@@ -1666,7 +1646,7 @@ object Similarity extends QueryPack {
       |  FROM embeddings),
       |m AS (
       |  SELECT k,
-      |         [CASE CAST('0x' || substr(md5('rp:' || CAST(k AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)), 1, 8) AS BIGINT) % 6
+      |         [CASE ${Portable.md5IntSql("'rp:' || CAST(k AS VARCHAR) || ':' || CAST(i - 1 AS VARCHAR)")} % 6
       |            WHEN 0 THEN 1 WHEN 1 THEN -1 ELSE 0 END
       |          for i in range(1, $Dim + 1)] AS row
       |  FROM range($RpK) kk(k)),

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -801,7 +801,7 @@ object TextStats extends QueryPack {
     // one (r, cell) pair per hash row per occurrence
     val cells = toks
       .select(col("lang"), posexplode(array((0 until CmsDepth).map(r =>
-        conv(substring(col("h"), 1 + 8 * r, 8), 16, 10).cast("long") % CmsWidth): _*))
+        Portable.hexInt(col("h"), 1 + 8 * r) % CmsWidth): _*))
         .as(Seq("r", "cell")))
       .groupBy("lang", "r", "cell").agg(count(lit(1)).as("n"))
     // probe the sketch for the stopword set in every language stratum
@@ -811,7 +811,7 @@ object TextStats extends QueryPack {
           explode(array(stopwords.map(lit): _*)).as("token")))
       .withColumn("h", md5(col("token").cast("binary")))
       .select(col("lang"), col("token"), posexplode(array((0 until CmsDepth).map(r =>
-        conv(substring(col("h"), 1 + 8 * r, 8), 16, 10).cast("long") % CmsWidth): _*))
+        Portable.hexInt(col("h"), 1 + 8 * r) % CmsWidth): _*))
         .as(Seq("r", "cell")))
     val est = probes
       .join(cells, Seq("lang", "r", "cell"), "left")
@@ -829,13 +829,13 @@ object TextStats extends QueryPack {
       |  SELECT lang, unnest($tokensSql) AS token FROM documents),
       |h AS (SELECT lang, token, md5(token) AS h FROM t),
       |cells AS (
-      |  SELECT lang, r, CAST('0x' || substr(h, 1 + 8 * r, 8) AS BIGINT) % $CmsWidth AS cell,
+      |  SELECT lang, r, ${Portable.hexIntSql("h", "1 + 8 * r")} % $CmsWidth AS cell,
       |         count(*) AS n
       |  FROM h, range(0, $CmsDepth) rr(r)
       |  GROUP BY 1, 2, 3),
       |probes AS (
       |  SELECT lang, token, r,
-      |         CAST('0x' || substr(md5(token), 1 + 8 * r, 8) AS BIGINT) % $CmsWidth AS cell
+      |         ${Portable.hexIntSql("md5(token)", "1 + 8 * r")} % $CmsWidth AS cell
       |  FROM (SELECT DISTINCT lang FROM documents),
       |       (SELECT unnest($stopwordsSqlList) AS token),
       |       range(0, $CmsDepth) rr(r)),
@@ -1203,7 +1203,7 @@ object TextStats extends QueryPack {
       .select(col("w"), bpeApplyUdf(merges)(col("w")).as("sym"))
       .select(col("w"),
         symCountUdf(col("sym")).as("wsyms"),
-        conv(substring(md5(col("sym")), 1, 8), 16, 10).cast("long").as("wfp"))
+        Portable.md5Int(col("sym")).as("wfp"))
     docWords.join(broadcast(vocab), "w")
       .groupBy("doc_id")
       .agg(sum(col("tf")).as("n_words"),
@@ -1220,7 +1220,7 @@ object TextStats extends QueryPack {
       |v AS (
       |  SELECT w,
       |         len(list_filter(string_split(sym, '@@'), x -> x <> '')) AS wsyms,
-      |         CAST('0x' || substr(md5(sym), 1, 8) AS BIGINT) AS wfp
+      |         ${Portable.md5IntSql("sym")} AS wfp
       |  FROM s$BpeRounds)
       |SELECT doc_id,
       |       CAST(sum(tf) AS BIGINT) AS n_words,

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.charset.StandardCharsets
@@ -1037,14 +1037,8 @@ object TableLog extends QueryPack {
     * hex chars as an integer), computed identically driver-side here and
     * executor-side in [[buildBloomIndex]]'s Spark expression.
     */
-  private[graft] def bloomPositions(column: String, value: String): Seq[Int] = {
-    (0 until BloomK).map { j =>
-      val hex = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"$column:$j:$value".getBytes(StandardCharsets.UTF_8))
-        .take(4).map(b => f"${b & 0xff}%02x").mkString
-      (java.lang.Long.parseLong(hex, 16) % BloomBits).toInt
-    }
-  }
+  private[graft] def bloomPositions(column: String, value: String): Seq[Int] =
+    (0 until BloomK).map(j => (Portable.md5Int(s"$column:$j:$value") % BloomBits).toInt)
 
   /** Build (incrementally) the per-file Bloom index for `column`: every
     * LIVE file not yet indexed gets one `relpath|hexbits` line appended to
@@ -1076,8 +1070,8 @@ object TableLog extends QueryPack {
     if (missing.isEmpty) return 0
     val abs = missing.map(f => Paths.get(table).resolve(f).toString)
     val posCols = (0 until BloomK).map { j =>
-      (conv(substring(md5(concat(lit(s"$column:$j:"), col(column).cast("string"))),
-        1, 8), 16, 10).cast("long") % BloomBits).cast("int")
+      (Portable.md5Int(concat(lit(s"$column:$j:"), col(column).cast("string"))) % BloomBits)
+        .cast("int")
     }
     val rows = spark.read.parquet(abs: _*)
       .where(col(column).isNotNull)
@@ -1657,8 +1651,8 @@ object TableLog extends QueryPack {
     val r = df.select(
       count(lit(1)).as("n"),
       coalesce(sum(
-        conv(substring(md5(to_json(struct(df.columns.map(col): _*))), 1, 8), 16, 10)
-          .cast("long")), lit(0L)).as("cs")).collect()(0)
+        Portable.md5Int(to_json(struct(df.columns.map(col): _*)))), lit(0L)).as("cs"))
+      .collect()(0)
     (r.getLong(0), r.getLong(1))
   }
 
@@ -2021,11 +2015,6 @@ object TableLog extends QueryPack {
   // Bitemporal as-of (transaction time × valid time)
   // -------------------------------------------------------------------------
 
-  /** 32-bit md5 integer of a salted key (portable randomness recipe) */
-  private def md5i(salt: String, key: org.apache.spark.sql.Column) =
-    conv(substring(md5(concat(lit(salt), key.cast("string"))), 1, 8), 16, 10)
-      .cast("long")
-
   /** memoized two-version bitemporal state table: SCD2 validity intervals
     * of each user's value stream, committed TWICE — tx-version 0 sees only
     * the events that had ARRIVED on time (md5 picks a deterministic 20% as
@@ -2046,7 +2035,8 @@ object TableLog extends QueryPack {
           .select(col("user_id"), col("cents"),
             col("us").as("vt_from"), col("vt_to"))
       }
-      commitOverwrite(scd2(ev.where(md5i("bt:late:", col("event_id")) % 5 =!= 0)), table)
+      val onTime = Portable.md5Int(concat(lit("bt:late:"), col("event_id").cast("string"))) % 5 =!= 0
+      commitOverwrite(scd2(ev.where(onTime)), table)
       commitOverwrite(scd2(ev), table)
       table
     }
@@ -2083,7 +2073,8 @@ object TableLog extends QueryPack {
       df.agg(
         count(lit(1)).as("n_users"),
         coalesce(sum(col("cents")), lit(0L)).as("cents_sum"),
-        coalesce(sum(md5i("bt:", concat_ws(":", col("user_id"), col("cents")))), lit(0L))
+        coalesce(sum(Portable.md5Int(concat(lit("bt:"), concat_ws(":", col("user_id"), col("cents"))))),
+          lit(0L))
           .as("hash_sum"))
         .select(lit(label).as("snapshot"), col("n_users"), col("cents_sum"),
           col("hash_sum"))
@@ -2094,8 +2085,11 @@ object TableLog extends QueryPack {
       acct(changed, "restated"), acct(added, "late_added")).reduce(_.union(_))
   }
 
-  private val bitemporalAsOfSql =
-    """WITH e AS (
+  private val bitemporalAsOfSql = {
+    val hashSum = "CAST(coalesce(sum(" +
+      Portable.md5IntSql("'bt:' || CAST(user_id AS VARCHAR) || ':' || CAST(cents AS VARCHAR)") +
+      "), 0) AS BIGINT)"
+    s"""WITH e AS (
       |  SELECT event_id, user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
       |         CAST(floor(value * 100) AS BIGINT) AS cents
       |  FROM events),
@@ -2108,7 +2102,7 @@ object TableLog extends QueryPack {
       |           row_number() OVER (PARTITION BY user_id ORDER BY us DESC, event_id DESC) AS rn
       |    FROM e, mid
       |    WHERE us <= v
-      |      AND CAST('0x' || substr(md5('bt:late:' || CAST(event_id AS VARCHAR)), 1, 8) AS BIGINT) % 5 <> 0)
+      |      AND ${Portable.md5IntSql("'bt:late:' || CAST(event_id AS VARCHAR)")} % 5 <> 0)
       |  WHERE rn = 1),
       |b1 AS (
       |  SELECT user_id, cents FROM (
@@ -2124,20 +2118,21 @@ object TableLog extends QueryPack {
       |  WHERE user_id NOT IN (SELECT user_id FROM b0))
       |SELECT 'tx0' AS snapshot, count(*) AS n_users,
       |       CAST(coalesce(sum(cents), 0) AS BIGINT) AS cents_sum,
-      |       CAST(coalesce(sum(CAST('0x' || substr(md5('bt:' || CAST(user_id AS VARCHAR) || ':' || CAST(cents AS VARCHAR)), 1, 8) AS BIGINT)), 0) AS BIGINT) AS hash_sum
+      |       $hashSum AS hash_sum
       |FROM b0
       |UNION ALL
       |SELECT 'tx1', count(*), CAST(coalesce(sum(cents), 0) AS BIGINT),
-      |       CAST(coalesce(sum(CAST('0x' || substr(md5('bt:' || CAST(user_id AS VARCHAR) || ':' || CAST(cents AS VARCHAR)), 1, 8) AS BIGINT)), 0) AS BIGINT)
+      |       $hashSum
       |FROM b1
       |UNION ALL
       |SELECT 'restated', count(*), CAST(coalesce(sum(cents), 0) AS BIGINT),
-      |       CAST(coalesce(sum(CAST('0x' || substr(md5('bt:' || CAST(user_id AS VARCHAR) || ':' || CAST(cents AS VARCHAR)), 1, 8) AS BIGINT)), 0) AS BIGINT)
+      |       $hashSum
       |FROM ch
       |UNION ALL
       |SELECT 'late_added', count(*), CAST(coalesce(sum(cents), 0) AS BIGINT),
-      |       CAST(coalesce(sum(CAST('0x' || substr(md5('bt:' || CAST(user_id AS VARCHAR) || ':' || CAST(cents AS VARCHAR)), 1, 8) AS BIGINT)), 0) AS BIGINT)
+      |       $hashSum
       |FROM ad""".stripMargin
+  }
 
   private val dvBuilt = graft.Scratch.fixture[String]("graft_tlog", "orders_dv")
 

@@ -565,7 +565,7 @@ object StreamIngest {
           var sk = st.sketch
           var n = st.n_rows
           it.foreach { r =>
-            sk = PortableSketch.MinKAgg.reduce(sk, PortableSketch.h52Of(r.key))
+            sk = PortableSketch.MinKAgg.reduce(sk, graft.Portable.md5Int(r.key, PortableSketch.HexLen))
             n += 1
           }
           state.update(KmvStreamState(sk, n))

@@ -762,7 +762,7 @@ class StreamingSpec extends SparkSpec {
     assert(last.nonEmpty, "second trigger must see cumulative n_rows = 450")
     val got = last.head
     // batch twin over the full distinct history
-    val batch = all.map(k => graft.analytics.PortableSketch.h52Of(k.key))
+    val batch = all.map(k => Portable.md5Int(k.key, graft.analytics.PortableSketch.HexLen))
       .foldLeft(graft.analytics.PortableSketch.MinKAgg.zero)(
         graft.analytics.PortableSketch.MinKAgg.reduce)
     assert(got.sketch_n == batch.length.toLong)
