@@ -37,6 +37,10 @@ object Main {
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
+      // static conf read only by the thrift server (`serve`): beeline then
+      // uses unqualified view names; the global_temp.* registrations in
+      // Serve work regardless
+      .config("spark.sql.hive.thriftServer.singleSession", "true")
       // native expressions reachable from SQL text (`sql` subcommand)
       .withExtensions(new org.apache.spark.sql.graftx.GraftExtensions)
       .getOrCreate()
@@ -138,19 +142,7 @@ object Main {
       // JDBC child sessions via the context conf in registerViews)
       val mviews = rest.drop(3).headOption
         .map(_.split(',').toSeq.filter(_.nonEmpty)).getOrElse(Nil)
-      // dedicated builder: singleSession is a static conf (must be set at
-      // session creation) and lets beeline use unqualified view names; the
-      // global_temp.* registrations in Serve work regardless
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-        .config("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.hive.thriftServer.singleSession", "true")
-        .withExtensions(new org.apache.spark.sql.graftx.GraftExtensions)
-        .getOrCreate()
-      org.apache.spark.sql.graftx.GraftExtensions.register(spark)
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = session()
       Tables.All.foreach { t =>
         if (new java.io.File(s"$dir/$t.parquet").exists())
           Tables.load(spark, dir, t).createOrReplaceTempView(t)

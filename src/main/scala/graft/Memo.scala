@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
+import scala.util.control.NonFatal
 
 /** Per-dir memoization of session-cached base relations (the shared-base
   * discipline: one fact scan feeds many registered queries). The wrinkle
@@ -48,9 +49,40 @@ object Memo {
     registry.forEach { map =>
       map.values.forEach { df =>
         try df.unpersist(blocking = true)
-        catch { case scala.util.control.NonFatal(_) => () } // a stopped session has no blocks
+        catch { case NonFatal(_) => () } // a stopped session has no blocks
       }
       map.clear()
     }
+  }
+}
+
+/** The one localize-and-release step of a query that caches its own
+  * subplans: collect `result` (every caller's result is small — top-K cuts,
+  * per-group counts, a census row), release each frame in `release`
+  * (blocking), and return the rows as a local DataFrame. Callers keep the
+  * lazy-DataFrame contract and the session keeps none of the query's cache
+  * entries once it returns.
+  *
+  * The release runs in a `finally`, so a failed collect still unpins the
+  * caches; its exception reaches the caller, with any release error
+  * attached as suppressed. BLOCKING: non-blocking eviction let dead blocks
+  * pile up across a long-lived JVM's runs (the round-12 kcore drift); the
+  * wait is milliseconds against a query that just ran seconds.
+  *
+  * A cache that the result scans more than once is materialized (`count()`)
+  * by the caller before this runs: the collect would otherwise compute an
+  * unmaterialized entry once per concurrent leg.
+  */
+object Localize {
+  def apply(result: DataFrame, release: DataFrame*): DataFrame = {
+    var failure: Throwable = null
+    val rows =
+      try result.collect()
+      catch { case t: Throwable => failure = t; throw t } // recorded, rethrown
+      finally release.foreach { df =>
+        try df.unpersist(blocking = true)
+        catch { case NonFatal(e) if failure != null => failure.addSuppressed(e) }
+      }
+    result.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
   }
 }

@@ -8,10 +8,11 @@ import scala.util.control.NonFatal
   * `<outDir>/<query>_<tag>.txt` — the evidence files the optimization
   * rounds commit under `plans/rNN/`.
   *
-  * For queries that end in a localized collect (the Graph pack pattern),
-  * the final DataFrame is a LocalRelation and its own plan is vacuous —
-  * the meaningful shape is in the logs/code — but the file still records
-  * that fact plus the plan as seen by the driver contract.
+  * For queries that end in [[Localize]] (collect, release the caches,
+  * return the rows), the final DataFrame is a LocalRelation and its own
+  * plan is vacuous — the meaningful shape is in the logs/code — but the
+  * file still records that fact plus the plan as seen by the driver
+  * contract.
   *
   * Usage: tools/run_main.sh graft.PlanDump <outDir> <tag> <query...>
   */

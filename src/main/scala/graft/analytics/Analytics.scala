@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Localize, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1416,9 +1416,7 @@ object Analytics extends QueryPack {
       min(col("stick_ppm")).as("min_stick_ppm"),
       min_by(col("anchor"), struct(-col("stick_ppm"), col("anchor"))).as("max_day_num"),
       max(col("stick_ppm")).as("max_stick_ppm"))
-    val rows = out.collect()
-    pairs.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, pairs)
   }
 
   private val userStickinessSql =
@@ -2275,9 +2273,7 @@ object Analytics extends QueryPack {
         col("cum_spend_mc"),
         expr("cum_spend_mc div n_users").as("ltv_per_user_mc"))
       .orderBy(col("cohort"), col("age_m"))
-    val rows = out.collect()
-    cohorts.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, cohorts)
   }
 
   private val cohortLtvSql =
@@ -2343,9 +2339,7 @@ object Analytics extends QueryPack {
       .select(col("n_depth1"), col("n_depth2"), col("n_depth3"),
         expr("n_depth2 * 1000000 div n_depth1").as("conv2_ppm"),
         expr("n_depth3 * 1000000 div n_depth1").as("conv3_ppm"))
-    val rows = out.collect()
-    views.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, views)
   }
 
   private val windowFunnelSql =
@@ -2690,9 +2684,7 @@ object Analytics extends QueryPack {
     */
   def graphInfluence(s: SparkSession, dir: String): DataFrame = {
     val (out, caches) = graphInfluenceInner(s, dir)
-    val rows = out.collect()
-    caches.foreach(_.unpersist(blocking = true))
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, caches: _*)
   }
 
   private val graphInfluenceSql =
@@ -2961,11 +2953,7 @@ object Analytics extends QueryPack {
         col("q90_resid_cents"), col("n_fit_covered"))
     // localize + release all three caches (daily previously leaked for the
     // JVM's life; the output is (user, month)-sized)
-    val rows = out.collect()
-    width.unpersist(blocking = true)
-    fit.unpersist(blocking = true)
-    daily.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, width, fit, daily)
   }
 
   private val conformalIntervalsSql =

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Localize, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -41,23 +41,6 @@ import org.apache.spark.sql.graftx.Rebase
   * triangle census.
   */
 object Graph extends QueryPack {
-
-  /** Evaluate `result` (≤ a few dozen rows for every query in this pack —
-    * top-20 cuts, per-hop counts, a 1-row census), release every cache the
-    * build pinned, and return the rows as a local DataFrame. Callers keep
-    * the lazy-DataFrame contract; the session keeps ZERO graph-sized cache
-    * entries once the query returns (previously each run left the edge/
-    * degree/frontier caches pinned until session end).
-    */
-  private def localized(result: DataFrame, caches: Seq[DataFrame]): DataFrame = {
-    val rows = result.collect()
-    // BLOCKING: non-blocking eviction let dead blocks accumulate across a
-    // long-lived JVM's bench runs (the round-12 kcore drift); the wait is
-    // milliseconds against a query that just ran seconds.
-    caches.foreach(_.unpersist(blocking = true))
-    result.sparkSession.createDataFrame(
-      java.util.Arrays.asList(rows: _*), result.schema)
-  }
 
   /** power-iteration rounds (fixed — the oracle replays each round) */
   val PrIters = 5
@@ -213,13 +196,13 @@ object Graph extends QueryPack {
     }
     val top = p.orderBy(col("pr").desc, col("node")).limit(20)
     val w   = Window.orderBy(col("pr").desc, col("node"))
-    localized(
+    Localize(
       top.select(
         when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier")).as("kind"),
         expr("node div 2").as("key"),
         col("pr"),
         row_number().over(w).cast("long").as("rank")),
-      Seq(deg, pCache))
+      deg, pCache)
   }
 
   /** seed cohort for personalized PageRank: customers with custkey < this */
@@ -264,12 +247,12 @@ object Graph extends QueryPack {
     val top = p.where(col("node") % 2 === 1 && col("pr") > 0)
       .orderBy(col("pr").desc, col("node")).limit(20)
     val w = Window.orderBy(col("pr").desc, col("node"))
-    localized(
+    Localize(
       top.select(
         expr("node div 2").as("s_suppkey"),
         col("pr"),
         row_number().over(w).cast("long").as("rank")),
-      Seq(deg, seeded, pCache))
+      deg, seeded, pCache)
   }
 
   private val pprRecsSql = {
@@ -345,9 +328,9 @@ object Graph extends QueryPack {
       acquired ::= nextC
       frontier = next.select("node")
     }
-    localized(
+    Localize(
       visited.groupBy("hop").agg(count(lit(1)).as("n_nodes")),
-      acquired)
+      acquired: _*)
   }
 
   private val reachSql =
@@ -401,14 +384,14 @@ object Graph extends QueryPack {
       acquired ::= nextC
       frontier = next.select("seed", "node")
     }
-    localized(
+    Localize(
       visited.where(col("hop") > 0)
         .groupBy("seed")
         .agg(
           count(lit(1)).as("n_reached"),
           sum(expr("1000000 div hop")).as("harmonic_ppm"),
           max(col("hop")).as("ecc_capped")),
-      acquired)
+      acquired: _*)
   }
 
   private val harmonicSql =
@@ -463,7 +446,7 @@ object Graph extends QueryPack {
                |             * sqrt(CAST(n_dir_edges * syy - sy * sy AS DOUBLE)))
                |          * 1000000) AS BIGINT)
                |     END""".stripMargin).as("r_e6"))
-    localized(out, Seq(und))
+    Localize(out, und)
   }
 
   private val assortativitySql =
@@ -542,12 +525,12 @@ object Graph extends QueryPack {
       .agg(
         max("n_nodes").as("n_nodes"), max("n_edges").as("n_edges"),
         max("n_wedges").as("n_wedges"), max("n_triangles").as("n_triangles"))
-    localized(
+    Localize(
       st.select(
         col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),
         when(col("n_wedges") === 0, lit(0L))
           .otherwise(expr("(3000000 * n_triangles) div n_wedges")).as("clustering_ppm")),
-      Seq(deg))
+      deg)
   }
 
   private val trianglesSql =
@@ -606,7 +589,7 @@ object Graph extends QueryPack {
       acquired ::= nextC
       dist = Rebase(nextC)
     }
-    localized(dist.groupBy("dist").agg(count(lit(1)).as("n_nodes")), we :: acquired)
+    Localize(dist.groupBy("dist").agg(count(lit(1)).as("n_nodes")), we :: acquired: _*)
   }
 
   private val ssspSql =
@@ -783,7 +766,7 @@ object Graph extends QueryPack {
       .limit(LpaTopK)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("n_members").desc, col("community"))).cast("long"))
-    localized(out, acquired)
+    Localize(out, acquired: _*)
   }
 
   private val lpaSql = {
@@ -860,7 +843,7 @@ object Graph extends QueryPack {
       .limit(LpK)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("ra_e6").desc, col("p_a"), col("p_b"))).cast("long"))
-    localized(out, Seq.empty)
+    Localize(out)
   }
 
   private val linkPredictionSql =
@@ -921,8 +904,7 @@ object Graph extends QueryPack {
         col("n_nodes"), col("n_halfedges"),
         expr("max_deg * 1000000 div n_halfedges").as("max_deg_share_ppm"))
       .orderBy(col("rank"))
-    val rows = out.collect()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out)
   }
 
   private val degreeProfileSql =

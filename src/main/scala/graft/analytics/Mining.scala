@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.{Q, QueryPack, Tables}
+import graft.{Localize, Q, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -90,12 +90,8 @@ object Mining extends QueryPack {
       .orderBy(col("lift_ppm").desc, col("conf_ppm").desc, col("ante"), col("conseq"))
       .limit(RuleK)
     // materialize the <= RuleK-row cut, then release the basket cache so the
-    // query leaves no fact-scale cache entry behind (Graph pack's localize
-    // pattern)
-    val rows = out.collect()
-    pairs.unpersist(blocking = true)
-    baskets.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    // query leaves no fact-scale cache entry behind
+    Localize(out, pairs, baskets)
   }
 
   val assocRulesSql: String =
@@ -177,9 +173,7 @@ object Mining extends QueryPack {
     val out = scored
       .orderBy(col("lift3_milli").desc, col("ia"), col("ib"), col("ic"))
       .limit(TripleK)
-    val rows = out.collect()
-    baskets.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, baskets)
   }
 
   private val assocTriplesSql =
@@ -475,11 +469,7 @@ object Mining extends QueryPack {
     // union) and an unmaterialized cache entry is computed by BOTH legs'
     // concurrent tasks — the count pins it once (the Graph-loop discipline)
     st.pairs.count()
-    val rows = st.out.collect()
-    st.pairs.unpersist(blocking = true)
-    st.up.unpersist(blocking = true)
-    st.up0.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), st.out.schema)
+    Localize(st.out, st.pairs, st.up, st.up0)
   }
 
   val cfItemRecsSql: String =
@@ -621,9 +611,7 @@ object Mining extends QueryPack {
           floor(col("serr").cast("double") / col("n_days")).cast("long").as("bias_floor_c"),
           col("max_abs_err_c"))
     }.reduce(_ unionAll _)
-    val rows = out.collect()
-    ser.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, ser)
   }
 
   val tsBacktestSql: String = {
@@ -686,8 +674,7 @@ object Mining extends QueryPack {
         .select(lit(label).as("q"), col("n_days"), col("pinball10_c"),
           expr("n_covered * 1000000 div n_days").as("coverage_ppm"))
     }.reduce(_ unionAll _)
-    val rows = out.collect()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out)
   }
 
   val tsPinballSql: String = {
@@ -968,9 +955,7 @@ object Mining extends QueryPack {
       .select(lit(-1L).as("cluster_id"), col("n_cells"), col("n_points"),
         col("min_cx"), col("max_cx"), col("min_cy"), col("max_cy"))
     val out = clustered.unionAll(noise).orderBy(col("cluster_id"))
-    val rows = out.collect()
-    cells.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, cells)
   }
 
   private val clusterGridDensitySql =
@@ -1153,9 +1138,7 @@ object Mining extends QueryPack {
     // which is why it must be the cached view and never a plain CTE.
     val edges = Graph.purchaseEdges(s, dir).select(col("u"), col("v"))
     edges.createOrReplaceTempView("edges_rec")
-    val df = s.sql(reachSqlFor("edges_rec"))
-    val rows = df.collect()
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+    Localize(s.sql(reachSqlFor("edges_rec")))
   }
 
   /** Bounded-state EXACT distinct via a roaring-style bitmap aggregate
@@ -1498,9 +1481,7 @@ object Mining extends QueryPack {
       .unionAll(nodeRow(left, "left", "p_size", qL, sL))
       .unionAll(nodeRow(right, "right", "p_size", qR, sR))
       .orderBy(col("node"))
-    val rows = out.collect()
-    base.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, base)
   }
 
   private val treeDepth2Sql = {
@@ -2015,9 +1996,7 @@ object Mining extends QueryPack {
     // three times, and an unmaterialized entry is computed by every leg's
     // concurrent tasks (the cfItemRecs discipline)
     pairs.count()
-    val rows = out.collect()
-    pairs.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, pairs)
   }
 
   private val tsMatrixProfileSql =

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.{Portable, Q, QueryPack, Tables}
+import graft.{Localize, Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
@@ -193,11 +193,8 @@ object PortableSketch extends QueryPack {
         ((col("n_both").cast("double") / col("nu").cast("double")) *
           estCol(col("nu"), col("ku"))).as("est_inter"))
     // localize the 1-row result and release the four cache entries so the
-    // query leaves no session state behind (same discipline as the graph
-    // pack's `localized`)
-    val rows = result.collect()
-    Seq(va, vb, ska, skb).foreach(_.unpersist(blocking = true))
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
+    // query leaves no session state behind
+    Localize(result, va, vb, ska, skb)
   }
 
   private val kmvSetOpsSql: String = {

@@ -1,6 +1,6 @@
 package graft.analytics
 
-import graft.{Portable, Q, QueryPack, Tables}
+import graft.{Localize, Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1458,9 +1458,7 @@ object Relational extends QueryPack {
         col("mad").as("mad_cents"), col("n_outliers"))
     // localize (group-count rows) and release the histogram cache — the
     // r13 shape returned lazily and pinned `hist` for the JVM's life
-    val rows = out.collect()
-    hist.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, hist)
   }
 
   private val madOutliersSql =
@@ -2098,9 +2096,7 @@ object Relational extends QueryPack {
         sum(when(col("cents") < col("p01"), col("cnt")).otherwise(0L)).as("n_clip_low"),
         sum(when(col("cents") > col("p99"), col("cnt")).otherwise(0L)).as("n_clip_high"))
     // localize (group-count rows) so the histogram cache is released
-    val rows = out.collect()
-    hist.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, hist)
   }
 
   private val winsorizedStatsSql =

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Portable, Q, QueryPack, Tables}
+import graft.{Localize, Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1276,9 +1276,7 @@ object Curation extends QueryPack {
         (col("tokens_kept") - col("t_budget")).as("surplus_tokens"),
         expr("t_budget * 1000000 div tokens_kept").as("utilization_ppm"))
       .orderBy(col("source"))
-    val rows = out.collect()
-    d.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, d)
   }
 
   private val tokenBudgetPlanSql =

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Portable, Q, QueryPack, Tables}
+import graft.{Localize, Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -167,9 +167,7 @@ object Features extends QueryPack {
       .withColumn("mse_h", expr("sse_h div n_test"))
       .orderBy(col("fold"))
     // materialize the K-row result, then release the fold-stats cache
-    val rows = out.collect()
-    foldStats.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, foldStats)
   }
 
   private val cvKfoldOlsSql = {

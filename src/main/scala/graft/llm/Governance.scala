@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Portable, Q, QueryPack, Tables}
+import graft.{Localize, Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -352,17 +352,23 @@ object Governance extends QueryPack {
     * Rounds are driver-sequenced like Lloyd iterations; nothing vertex- or
     * vocabulary-sized ever shuffles.
     */
-  /** the perceptron's 4-feature design matrix over documents */
+  /** the perceptron's 4-feature design matrix over documents — a shared
+    * memo: every perceptron round, the calibration and the AUC read it
+    */
   private def ptFeatures(s: SparkSession, dir: String): DataFrame =
-    Tables.loadSpread(s, dir, "documents")
-      .select(
-        when(col("lang") === "en", 1L).otherwise(-1L).as("y"),
-        lit(1L).as("x1"),
-        size(TextStats.tokensCol).cast("long").as("x2"),
-        expr("n_chars div 10").as("x3"),
-        size(filter(TextStats.tokensCol, t => t.isInCollection(TextStats.stopwords)))
-          .cast("long").as("x4"))
-      .cache()
+    graft.Memo.cached(ptFeaturesCache, dir) { d =>
+      Tables.loadSpread(s, d, "documents")
+        .select(
+          when(col("lang") === "en", 1L).otherwise(-1L).as("y"),
+          lit(1L).as("x1"),
+          size(TextStats.tokensCol).cast("long").as("x2"),
+          expr("n_chars div 10").as("x3"),
+          size(filter(TextStats.tokensCol, t => t.isInCollection(TextStats.stopwords)))
+            .cast("long").as("x4"))
+    }
+
+  private val ptFeaturesCache =
+    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
   /** [[PtRounds]] epochs of the integer batch perceptron: per-round
     * (misclassified count, post-update weights). Shared by
@@ -954,9 +960,7 @@ object Governance extends QueryPack {
       expr("n_pos * 1000000 div n").as("raw_ppm"),
       floor(col("fit") * 1000000).cast("long").as("iso_ppm"))
       .orderBy(col("bin"))
-    val rows = out.collect()
-    bins.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, bins)
   }
 
   private lazy val isotonicCalibrationSql =

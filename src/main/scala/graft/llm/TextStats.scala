@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Portable, Q, QueryPack, Tables}
+import graft.{Localize, Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1271,9 +1271,7 @@ object TextStats extends QueryPack {
           .orderBy(col("lift_ppm").desc, col("token"))).cast("long"))
       .where(col("rank") <= SigK)
       .orderBy(col("source"), col("rank"))
-    val rows = out.collect()
-    st.unpersist(blocking = true)
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, st)
   }
 
   private val sourceSignatureTermsSql =
@@ -1398,9 +1396,7 @@ object TextStats extends QueryPack {
       .where(col("rank") <= PrfK)
       .select(col("query_id"), col("rank"), col("doc_id"), col("score_e6"))
       .orderBy(col("query_id"), col("rank"))
-    val rows = out.collect()
-    caches.foreach(_.unpersist(blocking = true))
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, caches: _*)
   }
 
   /** IR-metrics audit of the PRF pipeline — did expansion actually help?
@@ -1437,9 +1433,7 @@ object TextStats extends QueryPack {
           expr(s"hits * 1000000 div $PrfK").as(s"prec_${tag}_ppm"))
     val out = eval(r1, "bm25").join(eval(r2, "prf"), "query_id")
       .orderBy(col("query_id"))
-    val rows = out.collect()
-    caches.foreach(_.unpersist(blocking = true))
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), out.schema)
+    Localize(out, caches: _*)
   }
 
   /** shared PRF oracle CTE chain through both rankings (r1 = BM25-only,

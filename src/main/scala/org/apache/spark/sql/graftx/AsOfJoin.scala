@@ -277,10 +277,8 @@ object AsOf {
     val cl = left.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
     val cr = right.asInstanceOf[classic.Dataset[org.apache.spark.sql.Row]]
     val spark = cl.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    GraftExtensions.appendOnce(spark.experimental.extraStrategies, AsOfJoinStrategy)(
+      spark.experimental.extraStrategies = _)
     val lPlan = cl.queryExecution.analyzed
     // Self-join hygiene: when both inputs derive from the same source the
     // analyzed plans SHARE attribute ids — the joined output would then carry

@@ -83,17 +83,16 @@ object GraftExtensions {
     Seq(cosineSimilarity, rollingHash, intDot).foreach { case (ident, info, builder) =>
       spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
     }
-    if (!spark.experimental.extraOptimizations.contains(RangeJoinRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ RangeJoinRewrite
-    if (!spark.experimental.extraOptimizations.contains(graft.sources.MatViewRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.sources.MatViewRewrite
-    if (!spark.experimental.extraOptimizations.contains(graft.sources.StatsBroadcastRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.sources.StatsBroadcastRewrite
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
+    val ex = spark.experimental
+    Seq(RangeJoinRewrite, graft.sources.MatViewRewrite, graft.sources.StatsBroadcastRewrite)
+      .foreach(rule => appendOnce(ex.extraOptimizations, rule)(ex.extraOptimizations = _))
+    appendOnce(ex.extraStrategies, AsOfJoinStrategy)(ex.extraStrategies = _)
   }
+
+  /** Append `hook` to a planner hook list unless it is already there — the
+    * idempotent check-then-add every post-hoc registration goes through; an
+    * append keeps the registration order.
+    */
+  private[graftx] def appendOnce[T](hooks: Seq[T], hook: T)(set: Seq[T] => Unit): Unit =
+    if (!hooks.contains(hook)) set(hooks :+ hook)
 }

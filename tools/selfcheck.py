@@ -2,13 +2,15 @@
 """Dev-only self-check mirroring the driver's correctness gate:
 runs each oracle SQL in DuckDB over the testdata parquet tables and
 compares (rows / schema / exact values) against the Verify.scala parquet
-dumps. Not part of the Scala library.
+dumps. Not part of the Scala library. Before the final tally it prints
+the five oracles whose DuckDB run took longest, with their seconds.
 
 Usage: python3 tools/selfcheck.py <sfDir> <verifyOutDir>
 """
 import json
 import os
 import sys
+import time
 
 import duckdb
 import pandas as pd
@@ -57,6 +59,7 @@ def main(sf_dir: str, out_dir: str) -> int:
         oracles = json.load(f)
 
     n_pass = n_fail = 0
+    oracle_s = {}  # query -> seconds of its DuckDB run
     for name in sorted(os.listdir(out_dir)):
         qdir = os.path.join(out_dir, name)
         if not os.path.isdir(qdir):
@@ -68,9 +71,11 @@ def main(sf_dir: str, out_dir: str) -> int:
         else:
             try:
                 con = connect(sf_dir)
+                t0 = time.perf_counter()
                 try:
                     theirs = canon(con.execute(oracles[name]).df())
                 finally:
+                    oracle_s[name] = time.perf_counter() - t0
                     con.close()
             except Exception as e:
                 print(f"FAIL {name}: oracle SQL error: {e}")
@@ -83,6 +88,11 @@ def main(sf_dir: str, out_dir: str) -> int:
         else:
             n_fail += 1
             print(f"FAIL {name}: {status}")
+    slowest = sorted(oracle_s.items(), key=lambda kv: -kv[1])[:5]
+    if slowest:
+        print("\nslowest oracles (DuckDB seconds):")
+        for name, sec in slowest:
+            print(f"  {sec:8.2f}  {name}")
     print(f"\n{n_pass} pass, {n_fail} fail")
     return 1 if n_fail else 0
 
