@@ -1,49 +1,23 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
-/** Benchmark main: runs every registered query against
-  * sys.env("SPARK_GRAFT_SF_DIR") and prints ONE JSON line
+/** Benchmark main: times every registered query with [[Harness.timed]] in a
+  * [[Harness.session]] at [[Harness.sfDir]] and prints ONE JSON line
   * {"metric":"total","value":N,"unit":"sec","queries":{...},"sf":...}.
   * Failed queries are reported explicitly under "errors" (never folded
   * into a timing — a failed query must not look like a fast one).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // bench parquet files are a few MB: default 128m splits would serialize
-      // every scan onto 1-2 cores. 1m splits ≈ one split per core at sf0.1 —
-      // the local-mode analogue of sizing splits to the cluster (the conf a
-      // real deployment tunes per table size).
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.sql.files.openCostInBytes", "256k")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // untimed warmup: JVM/codegen/broadcast machinery + parquet footers, so
-    // the alphabetically-first query doesn't absorb session startup cost
-    try SparkEntry.entry(spark).write.mode("overwrite").format("noop").save()
-    catch { case NonFatal(_) => () }
+    val sfDir = Harness.sfDir
+    val spark = Harness.session()
 
     val timings = scala.collection.mutable.LinkedHashMap[String, Double]()
     val errors  = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        timings(name) = (System.nanoTime() - t0) / 1e9
-      } catch {
-        case NonFatal(e) =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-      }
+      try timings(name) = Harness.timed(fn(spark, sfDir))
+      catch { case NonFatal(e) => errors(name) = Harness.reason(e).take(200) }
     }
     // millisecond precision keeps the line compact (139 queries at full
     // double precision overflowed the driver's fixed-size log-tail capture

@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
+import scala.util.control.NonFatal
 
 /** User-facing CLI (SURVEY.md §7.1): `ingest | query | list | bench`.
   *
@@ -27,6 +31,10 @@ import org.apache.spark.sql.SparkSession
   *     clustered by the Morton interleave of two numeric columns and write
   *     its min/max skipping manifest (see [[sources.Layout]])
   *   list                  — list registered query names
+  *   perf <query...> | audit <query...> | plans <outDir> <tag> <query...> —
+  *     measurement verbs, all in the one [[Harness.session]] at
+  *     `SPARK_GRAFT_SF_DIR`: cold/warm timings, executed-plan feature
+  *     dossiers, formatted plan files
   *   bench                 — delegate to [[Bench]] (one JSON line)
   */
 object Main {
@@ -49,6 +57,90 @@ object Main {
     org.apache.spark.sql.graftx.GraftExtensions.register(spark)
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  private def known(names: Seq[String]): Boolean =
+    names.nonEmpty && names.forall(SparkEntry.queries.contains)
+
+  /** a measurement verb's body, run in the one [[Harness.session]] */
+  private def measured(body: SparkSession => Unit): Unit = {
+    val spark = Harness.session()
+    body(spark)
+    spark.stop()
+  }
+
+  /** One cold and three warm [[Harness.timed]] runs per query, printed as
+    * PERF.md rows between two loadavg lines (append with `>> PERF.md`).
+    * For a columnar A/B pass `-Dspark.graft.columnar.enabled=false` (and
+    * the `.dv.`/`.nested.` keys) to `tools/run_main.sh`.
+    */
+  private def perf(spark: SparkSession, names: Seq[String]): Unit = {
+    def loadavg: String =
+      scala.util.Try(Files.readString(Paths.get("/proc/loadavg")).trim).getOrElse("n/a")
+    println(s"Loadavg before `$loadavg`, sf dir `${Harness.sfDir}`, local[${Harness.cpus}].\n")
+    println("| query | cold s | warm median s | warm runs |\n|---|---|---|---|")
+    names.foreach { n =>
+      val cold = Harness.timed(spark, n)
+      val warm = Seq.fill(3)(Harness.timed(spark, n)).sorted
+      println(f"| $n | $cold%.2f | ${warm(1)}%.2f | ${warm.map(w => f"$w%.2f").mkString(" ")} |")
+    }
+    println(s"\nLoadavg after `$loadavg`.")
+  }
+
+  /** [[PlanAudit.features]] per query: one line each, and the JSON dossier
+    * at `SPARK_GRAFT_PLAN_OUT` (default `/tmp/graft_planaudit.json`)
+    */
+  private def audit(spark: SparkSession, names: Seq[String]): Unit = {
+    val rows = names.flatMap { n =>
+      try {
+        val f = PlanAudit.features(SparkEntry.queries(n)(spark, Harness.sfDir))
+        println(f"$n%-24s " + PlanAudit.Keys.map(k => s"$k=${f(k)}").mkString(" "))
+        Some(s""""$n":""" + PlanAudit.Keys.map(k => s""""$k":${f(k)}""").mkString("{", ",", "}"))
+      } catch { case NonFatal(e) =>
+        println(s"$n ERROR ${Harness.reason(e).take(80)}"); None
+      }
+    }
+    val out = sys.env.getOrElse("SPARK_GRAFT_PLAN_OUT", "/tmp/graft_planaudit.json")
+    Files.write(Paths.get(out),
+      rows.mkString("{", ",", "}\n").getBytes(StandardCharsets.UTF_8))
+    println(s"[planaudit] wrote ${rows.size} query dossiers to $out")
+  }
+
+  /** `explain("formatted")` of each query to `<outDir>/<query>_<tag>.txt` —
+    * the evidence files the optimization rounds commit under `plans/rNN/`.
+    *
+    * A query that ends in [[Localize]] returns a LocalRelation, so its own
+    * plan is vacuous: the inner lazy frame of the three such queries with a
+    * plan seam goes to `<query>_inner_<tag>.txt`, and each round of an
+    * iterative graph query to `<query>_round<t>_<tag>.txt` (the executed
+    * plan of the just-materialized round frame, via `Graph.roundAudit`).
+    */
+  private def plans(spark: SparkSession, outDir: String, tag: String, names: Seq[String]): Unit = {
+    new java.io.File(outDir).mkdirs()
+    def write(file: String, plan: String): Unit =
+      Files.write(Paths.get(s"$outDir/$file"), plan.getBytes(StandardCharsets.UTF_8))
+    analytics.Graph.roundAudit = (q, t, df) => {
+      val p = df.queryExecution.executedPlan.toString
+      write(s"${q}_round${t}_$tag.txt", p)
+      println(s"[plandump] $q round $t plan: ${p.length} chars")
+    }
+    val inner: Map[String, (SparkSession, String) => DataFrame] = Map(
+      "cf_item_recs" -> ((s, d) => analytics.Mining.cfStages(s, d).out),
+      "graph_influence" -> ((s, d) => analytics.Analytics.graphInfluenceInner(s, d)._1),
+      "ts_matrix_profile" -> ((s, d) => analytics.Mining.tsMatrixProfileInner(s, d)._1))
+    def dump(label: String, file: String, fn: (SparkSession, String) => DataFrame): Unit =
+      try {
+        val plan = fn(spark, Harness.sfDir).queryExecution
+          .explainString(ExplainMode.fromString("formatted"))
+        write(file, plan)
+        println(s"[plandump] $label -> $outDir/$file (${plan.length} chars)")
+      } catch { case NonFatal(e) =>
+        println(s"[plandump] $label FAILED: ${Harness.reason(e).take(120)}")
+      }
+    names.foreach { n =>
+      inner.get(n).foreach(dump(s"$n (inner)", s"${n}_inner_$tag.txt", _))
+      dump(n, s"${n}_$tag.txt", SparkEntry.queries(n))
+    }
   }
 
   def main(args: Array[String]): Unit = args.toList match {
@@ -83,16 +175,12 @@ object Main {
       spark.stop()
     case "explain" :: name :: _ =>
       System.err.println(s"unknown query '$name' — see `list`"); sys.exit(1)
-    case "audit" :: name :: rest if SparkEntry.queries.contains(name) =>
-      // executed-plan feature dossier (broadcasts/exchanges/codegen spans/
-      // pushed scans) — the machine-checkable cost report `explain` isn't
-      val spark = session()
-      val dir = rest.headOption.getOrElse("/root/testdata/sf0.01")
-      val f = PlanAudit.features(SparkEntry.queries(name)(spark, dir))
-      f.toSeq.sortBy(_._1).foreach { case (k, v) => println(f"$k%-14s $v") }
-      spark.stop()
-    case "audit" :: name :: _ =>
-      System.err.println(s"unknown query '$name' — see `list`"); sys.exit(1)
+    case "perf" :: names if known(names) => measured(perf(_, names))
+    case "audit" :: names if known(names) => measured(audit(_, names))
+    case "plans" :: outDir :: tag :: names if known(names) =>
+      measured(plans(_, outDir, tag, names))
+    case ("perf" | "audit" | "plans") :: rest if rest.nonEmpty =>
+      System.err.println(s"unknown query in '${rest.mkString(" ")}' — see `list`"); sys.exit(1)
     case "sql" :: statement :: rest =>
       val spark = session()
       val dir = rest.headOption.getOrElse("/root/testdata/sf0.01")
@@ -310,7 +398,9 @@ object Main {
           "       graft stream <srcDir> <tablesDir> <ckptDir> [follow]\n" +
           "       graft query <name> [sfDir]\n" +
           "       graft explain <name> [sfDir]\n" +
-          "       graft audit <name> [sfDir]           — executed-plan feature dossier\n" +
+          "       graft perf <query...>                — cold + 3 warm timings, PERF.md rows\n" +
+          "       graft audit <query...>               — executed-plan feature dossiers\n" +
+          "       graft plans <outDir> <tag> <query...> — formatted plan files\n" +
           "       graft sql <statement> [sfDir] [tableLogRoot] — raw tables + graft catalog\n" +
           "       graft pipe <srcTableLog> <dstTableLog> <ckptDir> — change-feed -> log sink\n" +
           "       graft serve [sfDir] [port] [tableLogRoot] [matviewDir,...] — resident JDBC endpoint\n" +

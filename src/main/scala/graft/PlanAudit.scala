@@ -1,14 +1,13 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.util.control.NonFatal
+import org.apache.spark.sql.DataFrame
 
 /** Plan audit over registered queries — counts the plan features that
   * matter at 100 TB (pushed filters, broadcast joins, exchanges, codegen
   * spans, cartesian products) so a regression is visible without reading
   * plans. The extraction is a library function ([[features]]) so PlanSpec
-  * pins flagship queries' exact numbers in CI; the main emits the full
-  * per-query dossier as machine-checkable JSON (sidecar + stdout lines).
+  * pins flagship queries' exact numbers in CI; `graft.Main audit` emits the
+  * full per-query dossier as machine-checkable JSON (sidecar + stdout lines).
   */
 object PlanAudit {
 
@@ -76,33 +75,7 @@ object PlanAudit {
     liveJoinCount(firstCache(top).map(_.relation.cachedPlan).getOrElse(top))
   }
 
-  /** stable key order for the JSON rendering */
-  private val Keys = Seq("bcast_join", "smj", "shj", "cartesian", "bcast_nl",
+  /** stable key order of [[features]] for the `audit` verb's lines and JSON */
+  val Keys = Seq("bcast_join", "smj", "shj", "cartesian", "bcast_nl",
     "exchange", "codegen_spans", "pushed_scans")
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val names = if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val rows = scala.collection.mutable.LinkedHashMap[String, String]()
-    names.foreach { n =>
-      try {
-        val f = features(SparkEntry.queries(n)(spark, sfDir))
-        rows(n) = Keys.map(k => s""""$k":${f(k)}""").mkString("{", ",", "}")
-        println(f"$n%-24s " + Keys.map(k => s"$k=${f(k)}").mkString(" "))
-      } catch { case NonFatal(e) =>
-        println(s"$n ERROR ${Option(e.getMessage).getOrElse(e.getClass.getName).take(80)}")
-      }
-    }
-    val json = rows.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}\n")
-    val out = sys.env.getOrElse("SPARK_GRAFT_PLAN_OUT", "/tmp/graft_planaudit.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    println(s"[planaudit] wrote ${rows.size} query dossiers to $out")
-    spark.stop()
-  }
 }

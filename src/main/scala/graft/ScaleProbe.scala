@@ -349,13 +349,7 @@ object ScaleProbe {
     // appends its section to SCALEPROBE.md without re-running the full sweep
     if (args.headOption.contains("columnar")) {
       val rows = args.lift(1).map(_.toLong).getOrElse(5000000L)
-      val spark = SparkSession.builder()
-        .master(s"local[${math.min(32, Runtime.getRuntime.availableProcessors)}]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = Harness.session()
       val section = probeColumnarScan(spark, rows)
       java.nio.file.Files.write(java.nio.file.Paths.get("SCALEPROBE.md"),
         section.getBytes(java.nio.charset.StandardCharsets.UTF_8),
@@ -371,17 +365,9 @@ object ScaleProbe {
       // r9 verdict item 5: the rest of the bench top-10, previously unprobed
       "graph_ppr_recs", "recursive_sql_reach", "contrastive_hard_negatives",
       "ann_ivfpq_topk", "ingest_grid_candles")
-    val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val src = Harness.sfDir
+    val cpus = Harness.cpus
+    val spark = Harness.session()
 
     val base = "/tmp/graft_scaleprobe"
     println(s"[scaleprobe] generating 1x and ${factor}x datasets from $src")

@@ -2635,7 +2635,7 @@ object Analytics extends QueryPack {
     */
   /** lazy inner build — (top-20 frame, caches to release); the test/plan
     * seam for the localized [[graphInfluence]] (AnalyticsSpec pins the
-    * non-broadcast mode's plan off this frame, PlanDump archives it)
+    * non-broadcast mode's plan off this frame, the `plans` verb archives it)
     */
   private[graft] def graphInfluenceInner(
       s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {

@@ -1922,7 +1922,7 @@ object Mining extends QueryPack {
     * scheme; the per-instrument partitioning is unchanged.
     */
   /** lazy inner build — (result frame, pair cache); the plan seam for the
-    * localized [[tsMatrixProfile]] (PlanDump archives this frame's plan)
+    * localized [[tsMatrixProfile]] (the `plans` verb archives this frame's plan)
     */
   private[graft] def tsMatrixProfileInner(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {

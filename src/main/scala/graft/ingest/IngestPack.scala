@@ -548,9 +548,9 @@ object IngestPack extends QueryPack {
     * same projection, window assignment and range from lineitem directly.
     */
   /** one materialized grid table per data dir per JVM: query CONSTRUCTION
-    * must be read-only (PlanAudit/Perf/tests build plans repeatedly without
-    * running them), so the wipe + ingest side effects run once behind this
-    * memo and every later call just reads the written table.
+    * must be read-only (the `audit`/`perf` verbs and tests build plans
+    * repeatedly without running them), so the wipe + ingest side effects run
+    * once behind this memo and every later call just reads the written table.
     */
   private val gridIngested = graft.Scratch.fixture[String]("graft_grid", "candles")
 

@@ -1124,7 +1124,10 @@ object TextStats extends QueryPack {
   /** WITH-body replaying the whole training run: `wf` (corpus vocab with
     * frequencies), `s0` (initial symbols) … `s{BpeRounds}` (fully-merged
     * vocab), `b{r}`/`n{r}` (per-round learned merge / corpus symbol count) —
-    * shared by the `bpe_train` and `bpe_encode` oracles
+    * shared by the `bpe_train` and `bpe_encode` oracles. Every `s{r}` (read
+    * by `p{r+1}`, `s{r+1}` and `n{r}`) and every `b{r}` (read by `s{r}` and
+    * the final select) is `AS MATERIALIZED`: DuckDB otherwise re-inlines the
+    * whole chain per reference, and the oracle took minutes at sf0.01.
     */
   private val bpeCtes = {
     def round(r: Int) =
@@ -1134,8 +1137,8 @@ object TextStats extends QueryPack {
         |    FROM (SELECT cnt, list_filter(string_split(sym, '@@'), x -> x <> '') AS l
         |          FROM s${r - 1}))
         |  GROUP BY pair),
-        |b$r AS (SELECT pair, c FROM p$r ORDER BY c DESC, pair LIMIT 1),
-        |s$r AS (
+        |b$r AS MATERIALIZED (SELECT pair, c FROM p$r ORDER BY c DESC, pair LIMIT 1),
+        |s$r AS MATERIALIZED (
         |  SELECT w, cnt,
         |         replace(sym,
         |                 '@' || split_part(pair, ' ', 1) || '@@' || split_part(pair, ' ', 2) || '@',
@@ -1148,7 +1151,7 @@ object TextStats extends QueryPack {
       |  SELECT w, count(*) AS cnt FROM (
       |    SELECT unnest($tokensSql) AS w FROM documents)
       |  WHERE regexp_matches(w, '^[a-z]+${"$"}') GROUP BY w),
-      |s0 AS (
+      |s0 AS MATERIALIZED (
       |  SELECT w, cnt,
       |         '@@' || array_to_string(string_split(w, ''), '@@') || '@@' AS sym
       |  FROM wf),

@@ -10,7 +10,7 @@ import scala.util.Using
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxRows, SupportsAdmissionControl}
+import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -176,7 +176,7 @@ private[sources] class SeedRateStream(
       * (from_parser_to_rabbitmq.py:69-77), generalized. None = fixed cap.
       */
     targetBatchMs: Option[Long] = None)
-    extends MicroBatchStream with SupportsAdmissionControl {
+    extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
   require(rowsPerBatch > 0, "rowsPerBatch must be positive")
   require(targetBatchMs.forall(_ > 0), "targetBatchMs must be positive")
 
@@ -188,8 +188,16 @@ private[sources] class SeedRateStream(
   private val admittedAtNs =
     new java.util.concurrent.ConcurrentHashMap[Long, java.lang.Long]()
 
-  // driver-side: only the COUNT is held; frames stay upstream for executors
+  // driver-side: only the COUNT is held; frames stay upstream for executors.
+  // It is the head both `latestOffset`s clamp to, fixed at first use.
   private lazy val total: Long = upstream.total()
+
+  /** Trigger.AvailableNow: freeze the head at query start, so the engine
+    * drains to it in admission-capped batches and terminates. Without this
+    * interface Spark's fallback wrapper admits everything in ONE batch,
+    * bypassing `latestOffset(start, limit)` (see [[TableChangeStream]]).
+    */
+  override def prepareForTriggerAvailableNow(): Unit = { val _ = total }
 
   override def initialOffset(): Offset = SeedOffset(0L)
   override def deserializeOffset(json: String): Offset = SeedOffset(json.toLong)

@@ -57,6 +57,31 @@ class SeedRateSourceSpec extends SparkSpec {
     assert(out.map(_._2.size).sum == before, "restart re-admitted committed rows")
   }
 
+  test("AvailableNow drains N frames in ceil(N / rowsPerBatch) capped batches, then stops") {
+    Scratch.wipe(s"$base/now")
+    Files.createDirectories(Paths.get(s"$base/now"))
+    val seed = s"$base/now/seed.jsonl"
+    Files.writeString(Paths.get(seed), (0 until 10).map(i => s"n-$i").mkString("\n"))
+    val out = collection.mutable.ArrayBuffer.empty[Seq[String]]
+    val q = spark.readStream
+      .format("graft.sources.SeedRateSource")
+      .option("path", seed)
+      .option("rowsPerBatch", "3")
+      .load()
+      .writeStream
+      .option("checkpointLocation", s"$base/now/ckpt")
+      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+        out += df.as[String].collect().toSeq
+        ()
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(120000), "an AvailableNow query must stop once drained")
+    assert(out.map(_.size) == Seq(3, 3, 3, 1), s"batch sizes under the 3-row cap: ${out.map(_.size)}")
+    assert(out.flatten.sorted == (0 until 10).map(i => s"n-$i").sorted,
+      "every seed frame delivered exactly once")
+  }
+
   test("adaptive admission: an over-target batch halves row admission, then recovers") {
     Scratch.wipe(s"$base/adapt")
     Files.createDirectories(Paths.get(s"$base/adapt"))

@@ -8,7 +8,7 @@ times, and flags only queries whose new time exceeds the pinned best by more
 than THRESHOLD (default 1.5x) — the repo's own "best-of-quiet-runs" rule,
 executable. Host contention inflates runs up to 3x run-to-run, so a single
 inflated reading is NOT a regression; the flag list is the set of queries to
-RE-RUN on a quiet host (graft.Perf <query>) before believing anything.
+RE-RUN on a quiet host (graft.Main perf <query>) before believing anything.
 
 Usage:
   python3 tools/bench_compare.py [NEW_RECORD] [--threshold X] [--update]

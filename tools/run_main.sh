@@ -1,7 +1,11 @@
 #!/bin/bash
-# Direct `java` runner for graft mains (Bench/Perf/PlanAudit/Verify…):
+# Direct `java` runner for graft mains (Bench/Verify/Main…):
 # same JVM flags as build.sbt's forked run, no sbt startup. Usage:
 #   tools/run_main.sh graft.Bench [args…]
+#   tools/run_main.sh graft.Main perf <query…>      (also: audit, plans)
+#   tools/run_main.sh -Dspark.graft.columnar.enabled=false graft.Main perf <query…>
+# JVM options (`-D…`) go before the class name; `spark.*` system properties
+# reach the session conf.
 # Requires a prior `sbt compile Compile/copyResources` (plain `compile`
 # does NOT copy src/main/resources — after a clean build the classes dir
 # lacks META-INF/services/…DataSourceRegister and mains touching
