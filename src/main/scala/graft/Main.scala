@@ -110,36 +110,29 @@ object Main {
     * the evidence files the optimization rounds commit under `plans/rNN/`.
     *
     * A query that ends in [[Localize]] returns a LocalRelation, so its own
-    * plan is vacuous: the inner lazy frame of the three such queries with a
-    * plan seam goes to `<query>_inner_<tag>.txt`, and each round of an
-    * iterative graph query to `<query>_round<t>_<tag>.txt` (the executed
-    * plan of the just-materialized round frame, via `Graph.roundAudit`).
+    * plan is vacuous: the scope's observer hands over the frame it collects,
+    * written to `<query>_inner_<tag>.txt`, and each round step's
+    * just-materialized frame, whose executed plan goes to
+    * `<query>_round<t>_<tag>.txt`.
     */
   private def plans(spark: SparkSession, outDir: String, tag: String, names: Seq[String]): Unit = {
     new java.io.File(outDir).mkdirs()
-    def write(file: String, plan: String): Unit =
+    def write(label: String, file: String, plan: String): Unit = {
       Files.write(Paths.get(s"$outDir/$file"), plan.getBytes(StandardCharsets.UTF_8))
-    analytics.Graph.roundAudit = (q, t, df) => {
-      val p = df.queryExecution.executedPlan.toString
-      write(s"${q}_round${t}_$tag.txt", p)
-      println(s"[plandump] $q round $t plan: ${p.length} chars")
+      println(s"[plandump] $label -> $outDir/$file (${plan.length} chars)")
     }
-    val inner: Map[String, (SparkSession, String) => DataFrame] = Map(
-      "cf_item_recs" -> ((s, d) => analytics.Mining.cfStages(s, d).out),
-      "graph_influence" -> ((s, d) => analytics.Analytics.graphInfluenceInner(s, d)._1),
-      "ts_matrix_profile" -> ((s, d) => analytics.Mining.tsMatrixProfileInner(s, d)._1))
-    def dump(label: String, file: String, fn: (SparkSession, String) => DataFrame): Unit =
-      try {
-        val plan = fn(spark, Harness.sfDir).queryExecution
-          .explainString(ExplainMode.fromString("formatted"))
-        write(file, plan)
-        println(s"[plandump] $label -> $outDir/$file (${plan.length} chars)")
-      } catch { case NonFatal(e) =>
-        println(s"[plandump] $label FAILED: ${Harness.reason(e).take(120)}")
-      }
+    def formatted(df: DataFrame) =
+      df.queryExecution.explainString(ExplainMode.fromString("formatted"))
     names.foreach { n =>
-      inner.get(n).foreach(dump(s"$n (inner)", s"${n}_inner_$tag.txt", _))
-      dump(n, s"${n}_$tag.txt", SparkEntry.queries(n))
+      try Localize.observing {
+        case (Some(t), df) =>
+          write(s"$n round $t", s"${n}_round${t}_$tag.txt", df.queryExecution.executedPlan.toString)
+        case (None, df) => write(s"$n (inner)", s"${n}_inner_$tag.txt", formatted(df))
+      } {
+        write(n, s"${n}_$tag.txt", formatted(SparkEntry.queries(n)(spark, Harness.sfDir)))
+      } catch { case NonFatal(e) =>
+        println(s"[plandump] $n FAILED: ${Harness.reason(e).take(120)}")
+      }
     }
   }
 

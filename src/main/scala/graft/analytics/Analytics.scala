@@ -615,20 +615,18 @@ object Analytics extends QueryPack {
     * event stream (broadcast of the per-user stage-1 row). Output is the
     * 1-row stage-count summary.
     */
-  def funnel(s: SparkSession, dir: String): DataFrame = {
+  def funnel(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_type"))
     // the per-user stage frames each feed TWO consumers (next stage's join +
-    // the final count) — cache() them or the events scan and per-user aggs
+    // the final count) — keep them or the events scan and per-user aggs
     // re-run once per consumer (measured: 12 parquet scans uncached)
-    val firstView = ev.groupBy("user_id")
+    val firstView = keep(ev.groupBy("user_id")
       .agg(min(when(col("event_type") === "view", col("ts"))).as("first_view"))
-      .where(col("first_view").isNotNull)
-      .cache()
-    val firstClick = ev.join(broadcast(firstView), "user_id")
+      .where(col("first_view").isNotNull))
+    val firstClick = keep(ev.join(broadcast(firstView), "user_id")
       .where(col("event_type") === "click" && col("ts") > col("first_view"))
-      .groupBy("user_id").agg(min(col("ts")).as("first_click"))
-      .cache()
+      .groupBy("user_id").agg(min(col("ts")).as("first_click")))
     val purchased = ev.join(broadcast(firstClick), "user_id")
       .where(col("event_type") === "purchase" && col("ts") > col("first_click"))
       .select("user_id").distinct()
@@ -661,12 +659,12 @@ object Analytics extends QueryPack {
     * assignment (broadcast back into the stream) and the (cohort, offset)
     * distinct-user matrix.
     */
-  def cohortRetention(s: SparkSession, dir: String): DataFrame = {
+  def cohortRetention(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), to_date(col("ts")).as("day"))
     // cache: the per-user cohort frame is consumed by the join AND its
     // build re-reads the same events scan the probe side uses
-    val cohorts = ev.groupBy("user_id").agg(min(col("day")).as("cohort_day")).cache()
+    val cohorts = keep(ev.groupBy("user_id").agg(min(col("day")).as("cohort_day")))
     ev.join(broadcast(cohorts), "user_id")
       .groupBy(
         date_format(col("cohort_day"), "yyyy-MM-dd").as("cohort"),
@@ -1392,12 +1390,11 @@ object Analytics extends QueryPack {
     * near 1e6/7 ≈ 143k ppm × 7; broadcast-joined day relations — nothing
     * beyond the user×day grain ever shuffles.
     */
-  def userStickiness(s: SparkSession, dir: String): DataFrame = {
-    val pairs = Tables.load(s, dir, "events")
+  def userStickiness(s: SparkSession, dir: String): DataFrame = Localize { keep =>
+    val pairs = keep(Tables.load(s, dir, "events")
       .select(col("user_id"),
         datediff(to_date(col("ts")), lit("1970-01-01")).cast("long").as("day_num"))
-      .distinct()
-      .cache()
+      .distinct())
     val grid = pairs.select(col("day_num").as("anchor")).distinct()
     val dau = pairs.groupBy(col("day_num").as("anchor"))
       .agg(countDistinct(col("user_id")).as("dau"))
@@ -1416,7 +1413,7 @@ object Analytics extends QueryPack {
       min(col("stick_ppm")).as("min_stick_ppm"),
       min_by(col("anchor"), struct(-col("stick_ppm"), col("anchor"))).as("max_day_num"),
       max(col("stick_ppm")).as("max_stick_ppm"))
-    Localize(out, pairs)
+    out
   }
 
   private val userStickinessSql =
@@ -2252,12 +2249,11 @@ object Analytics extends QueryPack {
     * (cohort, age) aggregate, then windows over the months×cohorts-bounded
     * curve relation.
     */
-  def cohortLtv(s: SparkSession, dir: String): DataFrame = {
+  def cohortLtv(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val ev = Tables.load(s, dir, "events")
       .select(col("user_id"), date_format(col("ts"), "yyyy-MM").as("ym"),
         col("event_type"), col("value"))
-    val cohorts = ev.groupBy(col("user_id")).agg(min(col("ym")).as("cohort"))
-      .cache()
+    val cohorts = keep(ev.groupBy(col("user_id")).agg(min(col("ym")).as("cohort")))
     val sizes = cohorts.groupBy(col("cohort")).agg(count(lit(1)).as("n_users"))
     val curve = ev.filter(col("event_type") === "purchase")
       .join(broadcast(cohorts), "user_id")
@@ -2273,7 +2269,7 @@ object Analytics extends QueryPack {
         col("cum_spend_mc"),
         expr("cum_spend_mc div n_users").as("ltv_per_user_mc"))
       .orderBy(col("cohort"), col("age_m"))
-    Localize(out, cohorts)
+    out
   }
 
   private val cohortLtvSql =
@@ -2314,11 +2310,11 @@ object Analytics extends QueryPack {
     * counts); depth classification is one aggregate. At cluster scale the
     * same plan runs per user-id partition with no global state.
     */
-  def windowFunnel(s: SparkSession, dir: String): DataFrame = {
+  def windowFunnel(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val ev = Tables.load(s, dir, "events")
     def step(t: String) = ev.filter(col("event_type") === t)
       .select(col("user_id").as(s"u_$t"), col("ts").as(s"ts_$t"))
-    val views = step("view").cache()
+    val views = keep(step("view"))
     // depth 2: a click strictly after the view, within the window of the view
     val d2 = views.join(step("click"),
         col("u_view") === col("u_click") &&
@@ -2339,7 +2335,7 @@ object Analytics extends QueryPack {
       .select(col("n_depth1"), col("n_depth2"), col("n_depth3"),
         expr("n_depth2 * 1000000 div n_depth1").as("conv2_ppm"),
         expr("n_depth3 * 1000000 div n_depth1").as("conv3_ppm"))
-    Localize(out, views)
+    out
   }
 
   private val windowFunnelSql =
@@ -2632,19 +2628,18 @@ object Analytics extends QueryPack {
     * quadratic in the table). The unbounded-iteration twin with convergence
     * handling is [[graft.llm.Dedup.components]]; this is the fixed-round
     * scored variant.
+    *
+    * The top-20 is localized so the edge cache is released before
+    * returning — a lazy return pinned the edge-sized relation for the JVM's
+    * lifetime (guide §5 / the r12 kcore lesson; r13 verdict item 7).
     */
-  /** lazy inner build — (top-20 frame, caches to release); the test/plan
-    * seam for the localized [[graphInfluence]] (AnalyticsSpec pins the
-    * non-broadcast mode's plan off this frame, the `plans` verb archives it)
-    */
-  private[graft] def graphInfluenceInner(
-      s: SparkSession, dir: String): (DataFrame, Seq[DataFrame]) = {
+  def graphInfluence(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     // pair base = the Graph pack's memoized UNCUT co-purchase pairs (one
     // order-part self-join shared with the coPartEdges family — guide §2.4;
     // the r13 shape re-ran its own collect_set + pair-kernel shuffle over
     // the fact per call). Same set: distinct (u < v) parts co-occurring in
     // ≥ 1 order. Lives in the session memo, so only the per-query `e`
-    // cache below is released at the end.
+    // cache below is kept by the scope.
     val pairs = Graph.coPartPairsAll(s, dir).select(col("x").as("u"), col("y").as("v"))
     val edges = pairs.unionByName(pairs.select(col("v").as("u"), col("u").as("v")))
     val deg = edges.groupBy("u").agg(count(lit(1)).as("deg"))
@@ -2664,7 +2659,7 @@ object Analytics extends QueryPack {
     val eRaw =
       if (bcastVerts) edges.join(deg, "u")
       else edges.join(deg.hint("shuffle_hash"), "u")
-    val e = (if (bcastVerts) eRaw else eRaw.repartition(col("u"))).cache()
+    val e = keep(if (bcastVerts) eRaw else eRaw.repartition(col("u")))
     val s0 = deg.select(col("u").as("node"), lit(1000000L).as("score"))
     val s2 = (1 to 2).foldLeft(s0) { (score, _) =>
       val scoreSide = if (bcastVerts) broadcast(score) else score.hint("shuffle_hash")
@@ -2675,16 +2670,7 @@ object Analytics extends QueryPack {
         .select(col("v").as("node"),
           (lit(150000L) + expr("85 * sfl div 100")).as("score"))
     }
-    (s2.orderBy(col("score").desc, col("node")).limit(20), Seq(e))
-  }
-
-  /** localize the top-20 so BOTH caches are released before returning — a
-    * lazy return pinned the edge-sized relations for the JVM's lifetime
-    * (guide §5 / the r12 kcore lesson; r13 verdict item 7)
-    */
-  def graphInfluence(s: SparkSession, dir: String): DataFrame = {
-    val (out, caches) = graphInfluenceInner(s, dir)
-    Localize(out, caches: _*)
+    s2.orderBy(col("score").desc, col("node")).limit(20)
   }
 
   private val graphInfluenceSql =
@@ -2899,15 +2885,16 @@ object Analytics extends QueryPack {
     * aggregate per split, a broadcast-sized model join back, and a per-group
     * rank window over calibration days (calendar-bounded).
     */
-  def conformalIntervals(s: SparkSession, dir: String): DataFrame = {
+  def conformalIntervals(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val ev = Tables.load(s, dir, "events")
-    val daily = ev.groupBy(
+    // kept: three consumers (fit agg, calibration, audit) — one scan
+    val daily = keep(ev.groupBy(
         col("user_id"),
         date_format(col("ts"), "yyyy-MM").as("month"),
         dayofmonth(col("ts")).cast("long").as("x"))
-      .agg(sum(floor(col("value") * 100).cast("long")).as("y"))
-      .cache() // three consumers (fit agg, calibration, audit) — one scan
-    val fit = daily.where(col("x") % 2 === 1)
+      .agg(sum(floor(col("value") * 100).cast("long")).as("y")))
+    // kept: two consumers (calibration join + audit join)
+    val fit = keep(daily.where(col("x") % 2 === 1)
       .groupBy("user_id", "month").agg(
         count(lit(1)).as("nf"),
         sum(col("x")).as("sx"), sum(col("y")).as("sy"),
@@ -2921,21 +2908,20 @@ object Analytics extends QueryPack {
       .withColumn("icept",
         (col("sy").cast("double") - col("slope") * col("sx").cast("double")) /
           col("nf").cast("double"))
-      .select("user_id", "month", "nf", "slope", "icept")
-      .cache() // two consumers (calibration join + audit join)
+      .select("user_id", "month", "nf", "slope", "icept"))
     def resid = floor(abs(col("y").cast("double") -
       (col("slope") * col("x").cast("double") + col("icept")))).cast("long")
     val cal = daily.where(col("x") % 2 === 0)
       .join(fit, Seq("user_id", "month"))
       .select(col("user_id"), col("month"), col("nf"), resid.as("r"))
     val w = Window.partitionBy("user_id", "month")
-    val width = cal
+    // kept: two consumers (audit join + final join)
+    val width = keep(cal
       .withColumn("nc", count(lit(1)).over(w))
       .withColumn("rn", row_number().over(w.orderBy(col("r"))))
       .where(col("rn") === greatest(ceil(lit(9) / lit(10) * col("nc")).cast("long"), lit(1L)))
       .select(col("user_id"), col("month"), col("nc").as("n_cal"),
-        col("r").as("q90_resid_cents"))
-      .cache() // two consumers (audit join + final join)
+        col("r").as("q90_resid_cents")))
     // materialize width (pulls fit + daily through their caches) so the
     // final tree's two width scans and two fit scans all read caches —
     // uncached, the whole cal→window chain evaluated twice per action
@@ -2951,9 +2937,8 @@ object Analytics extends QueryPack {
     val out = width.join(audit, Seq("user_id", "month"))
       .select(col("user_id"), col("month"), col("n_fit"), col("n_cal"),
         col("q90_resid_cents"), col("n_fit_covered"))
-    // localize + release all three caches (daily previously leaked for the
-    // JVM's life; the output is (user, month)-sized)
-    Localize(out, width, fit, daily)
+    // the output is (user, month)-sized: collected by the scope
+    out
   }
 
   private val conformalIntervalsSql =

@@ -45,14 +45,6 @@ object Graph extends QueryPack {
   /** power-iteration rounds (fixed — the oracle replays each round) */
   val PrIters = 5
 
-  /** test seam: iterative queries invoke this with (queryName, round,
-    * materializedRoundFrame) right after the round's count(), so PlanSpec
-    * can pin the PER-ROUND join count — the regression class r7 hit (an
-    * extra out-degree join sneaking into every pagerank round) is invisible
-    * to whole-query plan audits because each round is its own job.
-    */
-  private[graft] var roundAudit: (String, Int, DataFrame) => Unit = (_, _, _) => ()
-
   /** fixed-point scale: every node starts with this much integer mass */
   val PrInit = 1000000000L
 
@@ -73,19 +65,16 @@ object Graph extends QueryPack {
     * discipline): five bipartite-graph queries share one purchase-edge
     * build and four co-purchase queries share one order-part self-join —
     * the priciest base in the whole graph family. Entries are edge-sized
-    * (MBs at test scale) and deliberately live for the session; queries
-    * unpersist only their own per-round derived caches. The purchase edges
-    * are repartitioned by source vertex before caching: every power-
-    * iteration/BFS round joins on `u`, so the graph-sized relation shuffles
+    * (MBs at test scale) and deliberately live for the session; a query's
+    * [[Localize]] scope releases only its own per-round caches. The
+    * purchase edges are repartitioned by source vertex before caching: every
+    * power-iteration/BFS round joins on `u`, so the graph-sized relation shuffles
     * ONCE at build and never again — only node-sized rank/frontier
     * relations move per round.
     */
-  private val purchaseEdgesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val custSuppPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val coPartEdgesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val purchaseEdgesCache = graft.Memo.base()
+  private val custSuppPairsCache = graft.Memo.base()
+  private val coPartEdgesCache = graft.Memo.base()
 
   /** weighted customer–supplier pair base `(c, s, n = shared orders)` —
     * ONE orders⋈lineitem pass memoized for BOTH the unweighted purchase
@@ -94,7 +83,7 @@ object Graph extends QueryPack {
     * its own (guide §2.4: share the expensive base once)
     */
   private def custSuppPairs(s: SparkSession, dir: String): DataFrame =
-    graft.Memo.cached(custSuppPairsCache, dir) { d =>
+    custSuppPairsCache(dir) { d =>
       val li = Tables.load(s, d, "lineitem").select(col("l_orderkey"), col("l_suppkey"))
       val od = Tables.load(s, d, "orders").select(col("o_orderkey"), col("o_custkey"))
       od.join(li, col("o_orderkey") === col("l_orderkey"))
@@ -104,15 +93,14 @@ object Graph extends QueryPack {
     }
 
   private[analytics] def purchaseEdges(s: SparkSession, dir: String): DataFrame =
-    graft.Memo.cached(purchaseEdgesCache, dir) { d =>
+    purchaseEdgesCache(dir) { d =>
       val cs = custSuppPairs(s, d)
         .select((col("c") * 2).as("u"), (col("s") * 2 + 1).as("v"))
       cs.unionAll(cs.select(col("v").as("u"), col("u").as("v")))
         .repartition(col("u"))
     }
 
-  private val coPartPairsAllCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val coPartPairsAllCache = graft.Memo.base()
 
   /** UNCUT weighted co-purchase pairs (x < y, w = co-order count ≥ 1) — the
     * one order-part self-join both co-purchase bases derive from:
@@ -123,7 +111,7 @@ object Graph extends QueryPack {
     * consumers).
     */
   private[analytics] def coPartPairsAll(s: SparkSession, dir: String): DataFrame =
-    graft.Memo.cached(coPartPairsAllCache, dir) { d =>
+    coPartPairsAllCache(dir) { d =>
       val op = Tables.load(s, d, "lineitem")
         .select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
       op.as("a").hint("shuffle_hash")
@@ -137,7 +125,7 @@ object Graph extends QueryPack {
     * the shared base of assortativity/triangles/kcore/link-prediction
     */
   private def coPartEdges(s: SparkSession, dir: String): DataFrame =
-    graft.Memo.cached(coPartEdgesCache, dir) { d =>
+    coPartEdgesCache(dir) { d =>
       coPartPairsAll(s, d).where(col("w") >= MinCoOrders)
     }
 
@@ -160,49 +148,38 @@ object Graph extends QueryPack {
     * `u`) joins the node-sized rank relation — one exchange of ranks in,
     * one exchange of per-target partial sums out, both node-sized; the
     * graph itself never re-shuffles. Each round is MATERIALIZED into its
-    * cache (the count() action) before the previous round is dropped, so
-    * lineage really is one round deep at any PrIters (an unmaterialized
+    * cache (the scope's round step) before the previous round is dropped,
+    * so lineage really is one round deep at any PrIters (an unmaterialized
     * cache would silently rebuild the full join tree at the final action).
     * The final top-20 is a TakeOrdered cut, never a global sort, and is
-    * localized so every cache can be released before returning.
+    * localized so every cache is released before returning.
     */
-  def pagerank(s: SparkSession, dir: String): DataFrame = {
+  def pagerank(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val edges = purchaseEdges(s, dir)
-    val deg = edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("outdeg")).cache()
+    val deg = keep(edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("outdeg")))
     // outdeg rides INSIDE the rank relation: the per-round contribution
     // needs (pr, outdeg) together, and carrying both in one node-sized row
     // drops a p⋈deg join from every round (PrIters joins per query saved)
     var p = deg.select(col("node"), col("outdeg"), lit(PrInit).as("pr"))
-    var pCache: DataFrame = null
     for (t <- 1 to PrIters) {
       val contrib = edges
         .join(p.select(col("node").as("u"),
           expr("(85 * pr) div (100 * outdeg)").as("contrib")), "u")
         .groupBy(col("v").as("node")).agg(sum("contrib").as("c"))
-      val next = deg
+      val next = keep.round(t, deg
         .join(contrib, Seq("node"), "left")
         .select(col("node"), col("outdeg"),
-          (lit(PrBase) + coalesce(col("c"), lit(0L))).as("pr"))
-        .cache()
-      next.count()
-      roundAudit("graph_pagerank", t, next)
-      if (pCache != null) pCache.unpersist(blocking = true)
-      pCache = next
-      // lineage-flat handle: round t+1's LOGICAL plan must wrap one scan
-      // node, not the whole round history — the driver re-analyzes the full
-      // tree per action otherwise (guide §1.2 step 1; measured on the kcore
-      // peel: 10.2 s nested vs 1.5 s flat for the same 4 rounds at sf0.1)
-      p = Rebase(next)
+          (lit(PrBase) + coalesce(col("c"), lit(0L))).as("pr")))
+      keep.drop(p)
+      p = next
     }
     val top = p.orderBy(col("pr").desc, col("node")).limit(20)
     val w   = Window.orderBy(col("pr").desc, col("node"))
-    Localize(
-      top.select(
-        when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier")).as("kind"),
-        expr("node div 2").as("key"),
-        col("pr"),
-        row_number().over(w).cast("long").as("rank")),
-      deg, pCache)
+    top.select(
+      when(col("node") % 2 === 0, lit("customer")).otherwise(lit("supplier")).as("kind"),
+      expr("node div 2").as("key"),
+      col("pr"),
+      row_number().over(w).cast("long").as("rank"))
   }
 
   /** seed cohort for personalized PageRank: customers with custkey < this */
@@ -218,41 +195,34 @@ object Graph extends QueryPack {
     * [[pagerank]] (only the base term differs: seeds get [[PrBase]], every
     * other node 0), so the chained-CTE oracle replays it exactly.
     */
-  def pprRecs(s: SparkSession, dir: String): DataFrame = {
+  def pprRecs(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val edges = purchaseEdges(s, dir)
-    val deg = edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("outdeg")).cache()
-    val seeded = deg
-      .withColumn("seed", col("node") % 2 === 0 && col("node") < lit(2L * PprSeedMax))
-      .cache()
+    val deg = keep(edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("outdeg")))
+    val seeded = keep(deg
+      .withColumn("seed", col("node") % 2 === 0 && col("node") < lit(2L * PprSeedMax)))
     // same outdeg-in-rank-relation fold as [[pagerank]]: one join per round
     var p = seeded.select(col("node"), col("outdeg"),
       when(col("seed"), lit(PrInit)).otherwise(lit(0L)).as("pr"))
-    var pCache: DataFrame = null
-    for (_ <- 1 to PrIters) {
+    for (t <- 1 to PrIters) {
       val contrib = edges
         .join(p.select(col("node").as("u"),
           expr("(85 * pr) div (100 * outdeg)").as("contrib")), "u")
         .groupBy(col("v").as("node")).agg(sum("contrib").as("c"))
-      val next = seeded
+      val next = keep.round(t, seeded
         .join(contrib, Seq("node"), "left")
         .select(col("node"), col("outdeg"),
           (when(col("seed"), lit(PrBase)).otherwise(lit(0L)) +
-            coalesce(col("c"), lit(0L))).as("pr"))
-        .cache()
-      next.count()
-      if (pCache != null) pCache.unpersist(blocking = true)
-      pCache = next
-      p = Rebase(next) // lineage-flat: see [[pagerank]]'s round comment
+            coalesce(col("c"), lit(0L))).as("pr")))
+      keep.drop(p)
+      p = next
     }
     val top = p.where(col("node") % 2 === 1 && col("pr") > 0)
       .orderBy(col("pr").desc, col("node")).limit(20)
     val w = Window.orderBy(col("pr").desc, col("node"))
-    Localize(
-      top.select(
-        expr("node div 2").as("s_suppkey"),
-        col("pr"),
-        row_number().over(w).cast("long").as("rank")),
-      deg, seeded, pCache)
+    top.select(
+      expr("node div 2").as("s_suppkey"),
+      col("pr"),
+      row_number().over(w).cast("long").as("rank"))
   }
 
   private val pprRecsSql = {
@@ -309,28 +279,22 @@ object Graph extends QueryPack {
     * the driver. The DuckDB twin is the textbook recursive CTE with a
     * min(hop) reduction.
     */
-  def reach(s: SparkSession, dir: String): DataFrame = {
+  def reach(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val edges = purchaseEdges(s, dir)
-    var acquired = List.empty[DataFrame]
-    val seeds = edges.select("u").where(col("u") % 2 === 0 && col("u") < 20)
-      .distinct().select(col("u").as("node"), lit(0L).as("hop")).cache()
-    acquired ::= seeds
-    var visited = Rebase(seeds) // lineage-flat: see [[pagerank]]'s round comment
+    val seeds = keep(edges.select("u").where(col("u") % 2 === 0 && col("u") < 20)
+      .distinct().select(col("u").as("node"), lit(0L).as("hop")))
+    var visited = Rebase(seeds) // lineage-flat: see [[Localize.Scope.round]]
     var frontier = visited.select("node")
     for (h <- 1 to ReachHops) {
-      val nextC = frontier.join(edges, frontier("node") === edges("u"))
+      // materialized round: the anti-join chain must not rebuild
+      val next = keep.round(h, frontier.join(edges, frontier("node") === edges("u"))
         .select(col("v").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
-        .select(col("node"), lit(h.toLong).as("hop")).cache()
-      nextC.count() // materialize: the anti-join chain must not rebuild
-      val next = Rebase(nextC)
+        .select(col("node"), lit(h.toLong).as("hop")))
       visited = visited.unionAll(next)
-      acquired ::= nextC
       frontier = next.select("node")
     }
-    Localize(
-      visited.groupBy("hop").agg(count(lit(1)).as("n_nodes")),
-      acquired: _*)
+    visited.groupBy("hop").agg(count(lit(1)).as("n_nodes"))
   }
 
   private val reachSql =
@@ -363,35 +327,28 @@ object Graph extends QueryPack {
     * scales the frontier linearly — a full-graph centrality run batches
     * seeds to bound frontier memory, same loop.
     */
-  def harmonic(s: SparkSession, dir: String): DataFrame = {
+  def harmonic(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val edges = purchaseEdges(s, dir)
-    var acquired = List.empty[DataFrame]
-    val seeds = edges.select("u").where(col("u") % 2 === 0 && col("u") < 20)
+    val seeds = keep(edges.select("u").where(col("u") % 2 === 0 && col("u") < 20)
       .distinct()
-      .select(col("u").as("seed"), col("u").as("node"), lit(0L).as("hop")).cache()
-    acquired ::= seeds
-    var visited = Rebase(seeds) // lineage-flat: see [[pagerank]]'s round comment
+      .select(col("u").as("seed"), col("u").as("node"), lit(0L).as("hop")))
+    var visited = Rebase(seeds) // lineage-flat: see [[Localize.Scope.round]]
     var frontier = visited.select("seed", "node")
     for (h <- 1 to ReachHops) {
-      val nextC = frontier.join(edges, frontier("node") === edges("u"))
+      // materialized round: the anti-join chain must not rebuild
+      val next = keep.round(h, frontier.join(edges, frontier("node") === edges("u"))
         .select(col("seed"), col("v").as("node")).distinct()
         .join(visited.select("seed", "node"), Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(h.toLong).as("hop")).cache()
-      nextC.count() // materialize: the anti-join chain must not rebuild
-      roundAudit("graph_harmonic", h, nextC)
-      val next = Rebase(nextC)
+        .select(col("seed"), col("node"), lit(h.toLong).as("hop")))
       visited = visited.unionAll(next)
-      acquired ::= nextC
       frontier = next.select("seed", "node")
     }
-    Localize(
-      visited.where(col("hop") > 0)
-        .groupBy("seed")
-        .agg(
-          count(lit(1)).as("n_reached"),
-          sum(expr("1000000 div hop")).as("harmonic_ppm"),
-          max(col("hop")).as("ecc_capped")),
-      acquired: _*)
+    visited.where(col("hop") > 0)
+      .groupBy("seed")
+      .agg(
+        count(lit(1)).as("n_reached"),
+        sum(expr("1000000 div hop")).as("harmonic_ppm"),
+        max(col("hop")).as("ecc_capped"))
   }
 
   private val harmonicSql =
@@ -425,14 +382,14 @@ object Graph extends QueryPack {
     * the edge's endpoints (both shuffle-hash, key-partitioned); the final
     * reduce is one row. Nothing quadratic, nothing driver-side.
     */
-  def assortativity(s: SparkSession, dir: String): DataFrame = {
+  def assortativity(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val e = coPartEdges(s, dir).select("x", "y")
-    val und = e.unionAll(e.select(col("y").as("x"), col("x").as("y"))).cache()
+    val und = keep(e.unionAll(e.select(col("y").as("x"), col("x").as("y"))))
     val deg = und.groupBy(col("x").as("node")).agg(count(lit(1)).as("d"))
     val dxy = und
       .join(deg.select(col("node").as("x"), col("d").as("dx")), "x")
       .join(deg.select(col("node").as("y"), col("d").as("dy")), "y")
-    val out = dxy.agg(
+    dxy.agg(
         count(lit(1)).as("n_dir_edges"),
         sum(col("dx")).as("sx"), sum(col("dy")).as("sy"),
         sum(col("dx") * col("dy")).as("sxy"),
@@ -446,7 +403,6 @@ object Graph extends QueryPack {
                |             * sqrt(CAST(n_dir_edges * syy - sy * sy AS DOUBLE)))
                |          * 1000000) AS BIGINT)
                |     END""".stripMargin).as("r_e6"))
-    Localize(out, und)
   }
 
   private val assortativitySql =
@@ -492,10 +448,10 @@ object Graph extends QueryPack {
     * orientation-invariant, which is what lets the DuckDB oracle use the
     * naive id-ordered formulation and still match exactly.
     */
-  def triangles(s: SparkSession, dir: String): DataFrame = {
+  def triangles(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val e = coPartEdges(s, dir).select("x", "y")
     val und = e.unionAll(e.select(col("y").as("x"), col("x").as("y")))
-    val deg = und.groupBy(col("x").as("node")).agg(count(lit(1)).as("d")).cache()
+    val deg = keep(und.groupBy(col("x").as("node")).agg(count(lit(1)).as("d")))
 
     val withDeg = e
       .join(deg.select(col("node").as("x"), col("d").as("dx")), "x")
@@ -525,12 +481,10 @@ object Graph extends QueryPack {
       .agg(
         max("n_nodes").as("n_nodes"), max("n_edges").as("n_edges"),
         max("n_wedges").as("n_wedges"), max("n_triangles").as("n_triangles"))
-    Localize(
-      st.select(
-        col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),
-        when(col("n_wedges") === 0, lit(0L))
-          .otherwise(expr("(3000000 * n_triangles) div n_wedges")).as("clustering_ppm")),
-      deg)
+    st.select(
+      col("n_nodes"), col("n_edges"), col("n_wedges"), col("n_triangles"),
+      when(col("n_wedges") === 0, lit(0L))
+        .otherwise(expr("(3000000 * n_triangles) div n_wedges")).as("clustering_ppm"))
   }
 
   private val trianglesSql =
@@ -569,27 +523,22 @@ object Graph extends QueryPack {
     * histogram; the DuckDB oracle replays it with a hop-bounded recursive
     * walk + per-node MIN, a completely independent formulation.
     */
-  def sssp(s: SparkSession, dir: String): DataFrame = {
+  def sssp(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val fwd = custSuppPairs(s, dir)
       .select((col("c") * 2).as("u"), (col("s") * 2 + 1).as("v"),
         greatest(lit(1L), lit(10L) - col("n")).as("w"))
-    val we = fwd.unionAll(fwd.select(col("v").as("u"), col("u").as("v"), col("w")))
-      .repartition(col("u")).cache()
-    var acquired = List.empty[DataFrame]
-    val seeds = we.select("u").where(col("u") % 2 === 0 && col("u") < 20)
-      .distinct().select(col("u").as("node"), lit(0L).as("dist")).cache()
-    acquired ::= seeds
-    var dist = Rebase(seeds) // lineage-flat: see [[pagerank]]'s round comment
-    for (_ <- 1 to SsspHops) {
+    val we = keep(fwd.unionAll(fwd.select(col("v").as("u"), col("u").as("v"), col("w")))
+      .repartition(col("u")))
+    val seeds = keep(we.select("u").where(col("u") % 2 === 0 && col("u") < 20)
+      .distinct().select(col("u").as("node"), lit(0L).as("dist")))
+    var dist = Rebase(seeds) // lineage-flat: see [[Localize.Scope.round]]
+    for (t <- 1 to SsspHops) {
       val cand = dist.join(we, dist("node") === we("u"))
         .select(col("v").as("node"), (col("dist") + col("w")).as("d"))
-      val nextC = dist.select(col("node"), col("dist").as("d")).unionAll(cand)
-        .groupBy("node").agg(min(col("d")).as("dist")).cache()
-      nextC.count() // materialize before the predecessor is dropped
-      acquired ::= nextC
-      dist = Rebase(nextC)
+      dist = keep.round(t, dist.select(col("node"), col("dist").as("d")).unionAll(cand)
+        .groupBy("node").agg(min(col("d")).as("dist")))
     }
-    Localize(dist.groupBy("dist").agg(count(lit(1)).as("n_nodes")), we :: acquired: _*)
+    dist.groupBy("dist").agg(count(lit(1)).as("n_nodes"))
   }
 
   private val ssspSql =
@@ -635,43 +584,37 @@ object Graph extends QueryPack {
     * pre-partitioned on `x`); each round is two semi-joins against the
     * node-sized survivor set plus a degree aggregate, and the edge relation
     * only ever SHRINKS — monotone peeling, no fan-out anywhere. Each round
-    * materializes before its predecessor unpersists (lineage one round
+    * materializes before its predecessor is dropped (lineage one round
     * deep), and the ≤ rounds-sized stats rows are assembled driver-side —
     * nothing graph-sized collects.
     */
-  def kcore(s: SparkSession, dir: String): DataFrame = {
+  def kcore(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val e = coPartEdges(s, dir).select("x", "y")
-    var curCache = e.unionAll(e.select(col("y").as("x"), col("x").as("y")))
-      .repartition(col("x")).cache()
+    // lineage-flat handle per round: kcore references its predecessor 3×
+    // per round (degree agg + two semi-joins), so nested lineage grows the
+    // logical tree EXPONENTIALLY — measured 10.2 s → 1.5 s for the same 4
+    // rounds at sf0.1
+    var cur = keep.round(0, e.unionAll(e.select(col("y").as("x"), col("x").as("y")))
+      .repartition(col("x")))
     val stats = scala.collection.mutable.ListBuffer(
-      (0L, curCache.select("x").distinct().count(), curCache.count() / 2))
-    // lineage-flat handle per round (see [[pagerank]]'s round comment):
-    // kcore references its predecessor 3× per round (degree agg + two
-    // semi-joins), so nested lineage grows the logical tree EXPONENTIALLY —
-    // measured 10.2 s → 1.5 s for the same 4 rounds at sf0.1
-    var cur = Rebase(curCache)
+      (0L, cur.select("x").distinct().count(), cur.count() / 2))
     for (t <- 1 to KcoreRounds) {
-      val surv = cur.groupBy(col("x")).agg(count(lit(1)).as("d"))
-        .where(col("d") >= KcoreK).select(col("x").as("node")).cache()
-      val next = cur
+      val surv = keep(cur.groupBy(col("x")).agg(count(lit(1)).as("d"))
+        .where(col("d") >= KcoreK).select(col("x").as("node")))
+      val next = keep.round(t, cur
         .join(surv.select(col("node").as("x")), Seq("x"), "left_semi")
-        .join(surv.select(col("node").as("y")), Seq("y"), "left_semi")
-        .cache()
-      val nNodes = surv.count()
-      val nEdges = next.count() / 2 // materializes next before cur drops
-      stats += ((t.toLong, nNodes, nEdges))
+        .join(surv.select(col("node").as("y")), Seq("y"), "left_semi"))
+      stats += ((t.toLong, surv.count(), next.count() / 2))
       // per-round BLOCKING eviction: the predecessor edge relation and this
       // round's survivor set are dead once `next` is materialized. The old
       // accumulate-then-unpersist(blocking=false) sweep let dead blocks pile
       // up across bench runs in a long-lived JVM (round-12 PERF series climbed
-      // 8.7→13.4 s same-JVM); blocking here keeps the storage footprint at
+      // 8.7→13.4 s same-JVM); dropping here keeps the storage footprint at
       // exactly one live edge relation between rounds.
-      curCache.unpersist(blocking = true)
-      surv.unpersist(blocking = true)
-      curCache = next
-      cur = Rebase(next)
+      keep.drop(cur)
+      keep.drop(surv)
+      cur = next
     }
-    curCache.unpersist(blocking = true)
     import s.implicits._
     stats.toSeq.toDF("round", "n_nodes", "n_edges")
   }
@@ -732,33 +675,27 @@ object Graph extends QueryPack {
     * co-partitioned edge⋈label join (labels are node-sized), a map-side
     * partially-aggregated (x, lbl) count, and a node-sized argmin — no
     * fan-out, no global sort (top-K is a TakeOrdered cut). Rounds
-    * materialize before their predecessor unpersists (lineage one round
-    * deep), and the roundAudit seam lets PlanSpec pin the per-round join
-    * count like pagerank's.
+    * materialize before the next one reads them (lineage one round deep),
+    * and the scope's observer lets PlanSpec pin the per-round join count
+    * like pagerank's.
     */
-  def lpa(s: SparkSession, dir: String): DataFrame = {
+  def lpa(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val e = coPartEdges(s, dir).select("x", "y")
-    val und = e.unionAll(e.select(col("y").as("x"), col("x").as("y")))
-      .repartition(col("y")).cache()
-    val seedLabels = und.select(col("x").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl")).cache()
+    val und = keep(e.unionAll(e.select(col("y").as("x"), col("x").as("y")))
+      .repartition(col("y")))
+    val seedLabels = keep(und.select(col("x").as("node")).distinct()
+      .select(col("node"), col("node").as("lbl")))
     seedLabels.count()
-    var labels = Rebase(seedLabels) // lineage-flat: see [[pagerank]]'s comment
-    var acquired = List[DataFrame](und, seedLabels)
+    var labels = Rebase(seedLabels) // lineage-flat: see [[Localize.Scope.round]]
     for (t <- 1 to LpaRounds) {
-      val nextC = und
+      labels = keep.round(t, und
         .join(labels.select(col("node").as("y"), col("lbl")), "y")
         .groupBy(col("x"), col("lbl"))
         .agg(count(lit(1)).as("c"))
         .groupBy(col("x").as("node"))
-        .agg(min_by(col("lbl"), struct((-col("c")).as("nc"), col("lbl"))).as("lbl"))
-        .cache()
-      nextC.count() // materialize: keep lineage one round deep
-      roundAudit("graph_lpa", t, nextC)
-      acquired = nextC :: acquired
-      labels = Rebase(nextC)
+        .agg(min_by(col("lbl"), struct((-col("c")).as("nc"), col("lbl"))).as("lbl")))
     }
-    val out = labels.groupBy(col("lbl").as("community"))
+    labels.groupBy(col("lbl").as("community"))
       .agg(count(lit(1)).as("n_members"),
         sum(col("node")).as("member_key_sum"),
         min(col("node")).as("min_member"))
@@ -766,7 +703,6 @@ object Graph extends QueryPack {
       .limit(LpaTopK)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("n_members").desc, col("community"))).cast("long"))
-    Localize(out, acquired: _*)
   }
 
   private val lpaSql = {
@@ -822,7 +758,7 @@ object Graph extends QueryPack {
     * the graph sparse; existing edges drop via one anti-join; the top-K is
     * a TakeOrdered cut, never a global sort.
     */
-  def linkPrediction(s: SparkSession, dir: String): DataFrame = {
+  def linkPrediction(s: SparkSession, dir: String): DataFrame = Localize { _ =>
     val e = coPartEdges(s, dir).select("x", "y")
     val und = e.unionAll(e.select(col("y").as("x"), col("x").as("y")))
     val deg = und.groupBy(col("x").as("z")).agg(count(lit(1)).as("d"))
@@ -838,12 +774,11 @@ object Graph extends QueryPack {
       .groupBy(col("u").as("p_a"), col("v").as("p_b"))
       .agg(count(lit(1)).as("n_common"),
         sum(expr("1000000 div d")).as("ra_e6"))
-    val out = scored
+    scored
       .orderBy(col("ra_e6").desc, col("p_a"), col("p_b"))
       .limit(LpK)
       .withColumn("rank", row_number().over(
         Window.orderBy(col("ra_e6").desc, col("p_a"), col("p_b"))).cast("long"))
-    Localize(out)
   }
 
   private val linkPredictionSql =
@@ -879,7 +814,7 @@ object Graph extends QueryPack {
     * All integer; one edge aggregate, then rank windows over the
     * node-sized degree relation.
     */
-  def degreeProfile(s: SparkSession, dir: String): DataFrame = {
+  def degreeProfile(s: SparkSession, dir: String): DataFrame = Localize { _ =>
     val edges = purchaseEdges(s, dir)
     val deg = edges.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     val tot = deg.agg(
@@ -896,7 +831,7 @@ object Graph extends QueryPack {
     val probes = ranked.where(expr("r IN (1, 2, 4, 8, 16, 32, 64, 128)"))
       .select(col("r"), col("deg"))
     val doubled = probes.select((col("r") * 2).as("r"), col("deg").as("deg2"))
-    val out = probes.join(doubled, Seq("r"), "left")
+    probes.join(doubled, Seq("r"), "left")
       .crossJoin(broadcast(tot))
       .select(col("r").as("rank"), col("deg"),
         expr("CASE WHEN deg2 IS NOT NULL THEN deg * 1000000 div deg2 END")
@@ -904,7 +839,6 @@ object Graph extends QueryPack {
         col("n_nodes"), col("n_halfedges"),
         expr("max_deg * 1000000 div n_halfedges").as("max_deg_share_ppm"))
       .orderBy(col("rank"))
-    Localize(out)
   }
 
   private val degreeProfileSql =

@@ -45,12 +45,12 @@ object Indicators extends QueryPack {
     * `ordersVersioned` memoization discipline). Both are tiny [[Memo]]
     * entries: re-cached after a `clearCache()`, dropped by `releaseAll`.
     */
-  private val closesCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val barsCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val closesCache = Memo.base()
+  private val barsCache = Memo.base()
 
   /** trades → per-(company, day) close (cents, max_by total order) + volume */
   private def dailyCloses(s: SparkSession, dir: String): DataFrame =
-    Memo.cached(closesCache, dir)(_ => buildDailyCloses(s, dir))
+    closesCache(dir)(_ => buildDailyCloses(s, dir))
 
   private def buildDailyCloses(s: SparkSession, dir: String): DataFrame = {
     // loadSpread, not load: the per-row projection (timestampadd +
@@ -359,7 +359,7 @@ object Indicators extends QueryPack {
     * (memoized + cached per dir like [[dailyCloses]])
     */
   private def dailyBars(s: SparkSession, dir: String): DataFrame =
-    Memo.cached(barsCache, dir)(_ => buildDailyBars(s, dir))
+    barsCache(dir)(_ => buildDailyBars(s, dir))
 
   private def buildDailyBars(s: SparkSession, dir: String): DataFrame = {
     // loadSpread: same per-row-expensive projection as [[buildDailyCloses]]

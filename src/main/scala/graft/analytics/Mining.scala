@@ -44,15 +44,14 @@ object Mining extends QueryPack {
     * the exploded basket relation on basket id: two fact-scale shuffles and
     * 6.4 s at sf0.1 vs ~2 s for this shape.)
     */
-  def assocRules(s: SparkSession, dir: String): DataFrame = {
+  def assocRules(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     // spread: the broadcast join probe + collect_set partial aggregate are
     // per-row work inside the one-row-group scan's single task otherwise
     val li = Tables.loadSpread(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
     val pt = Tables.load(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-    val baskets = li.join(broadcast(pt), col("l_partkey") === col("p_partkey"))
+    val baskets = keep(li.join(broadcast(pt), col("l_partkey") === col("p_partkey"))
       .groupBy(col("l_orderkey").as("ok"))
-      .agg(sort_array(collect_set(col("p_brand"))).as("items"))
-      .cache()
+      .agg(sort_array(collect_set(col("p_brand"))).as("items")))
     val tot = baskets.agg(count(lit(1)).as("n_baskets"))
     val sup = baskets.select(explode(col("items")).as("item"))
       .groupBy(col("item")).agg(count(lit(1)).as("sup"))
@@ -62,18 +61,17 @@ object Mining extends QueryPack {
     // frequent-item prune applied to the basket ARRAYS via a broadcast 1-row
     // array — no re-shuffle, no driver collect
     val freqArr = broadcast(sup.agg(sort_array(collect_list(col("item"))).as("freq")))
-    val pairs = baskets.crossJoin(freqArr)
+    // kept + materialized: `directed` unions pairs with its own flip, so
+    // without the pin one action runs the basket pair expansion TWICE
+    // (guide §2.4; the relation is brand-pair-sized — a few hundred rows)
+    val pairs = keep(baskets.crossJoin(freqArr)
       .select(expr("filter(items, x -> array_contains(freq, x))").as("fi"))
       .select(explode(expr(
         """flatten(transform(fi, (x, i) ->
           |  transform(slice(fi, i + 2, greatest(size(fi) - i - 1, 0)),
           |            y -> struct(x AS ia, y AS ib))))""".stripMargin)).as("p"))
       .groupBy(col("p.ia").as("ia"), col("p.ib").as("ib"))
-      .agg(count(lit(1)).as("co"))
-      // cache + materialize: `directed` unions pairs with its own flip, so
-      // without the pin one action runs the basket pair expansion TWICE
-      // (guide §2.4; the relation is brand-pair-sized — a few hundred rows)
-      .cache()
+      .agg(count(lit(1)).as("co")))
     pairs.count()
     val directed = pairs.select(col("ia").as("ante"), col("ib").as("conseq"), col("co"))
       .unionAll(pairs.select(col("ib").as("ante"), col("ia").as("conseq"), col("co")))
@@ -86,12 +84,9 @@ object Mining extends QueryPack {
         expr("co * 1000000 div sup_a").as("conf_ppm"),
         expr("co * n_baskets * 1000000 div (sup_a * sup_b)").as("lift_ppm"))
       .filter(col("lift_ppm") > 1000000)
-    val out = scored
+    scored
       .orderBy(col("lift_ppm").desc, col("conf_ppm").desc, col("ante"), col("conseq"))
       .limit(RuleK)
-    // materialize the <= RuleK-row cut, then release the basket cache so the
-    // query leaves no fact-scale cache entry behind
-    Localize(out, pairs, baskets)
   }
 
   val assocRulesSql: String =
@@ -138,13 +133,12 @@ object Mining extends QueryPack {
     * exact in double, fixed op order, floor-milli. Emits the [[TripleK]]
     * most positively-associated triples.
     */
-  def assocTriples(s: SparkSession, dir: String): DataFrame = {
+  def assocTriples(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val li = Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
     val pt = Tables.load(s, dir, "part").select(col("p_partkey"), col("p_brand"))
-    val baskets = li.join(broadcast(pt), col("l_partkey") === col("p_partkey"))
+    val baskets = keep(li.join(broadcast(pt), col("l_partkey") === col("p_partkey"))
       .groupBy(col("l_orderkey").as("ok"))
-      .agg(sort_array(collect_set(col("p_brand"))).as("items"))
-      .cache()
+      .agg(sort_array(collect_set(col("p_brand"))).as("items")))
     val tot = baskets.agg(count(lit(1)).as("n_baskets"))
     val sup = baskets.select(explode(col("items")).as("item"))
       .groupBy(col("item")).agg(count(lit(1)).as("sup"))
@@ -173,7 +167,7 @@ object Mining extends QueryPack {
     val out = scored
       .orderBy(col("lift3_milli").desc, col("ia"), col("ib"), col("ic"))
       .limit(TripleK)
-    Localize(out, baskets)
+    out
   }
 
   private val assocTriplesSql =
@@ -366,7 +360,7 @@ object Mining extends QueryPack {
       up0: DataFrame, up: DataFrame, pairsRaw: DataFrame, pairs: DataFrame,
       sim: DataFrame, nb: DataFrame, cand: DataFrame, out: DataFrame)
 
-  private[graft] def cfStages(s: SparkSession, dir: String): CfStages = {
+  private[graft] def cfStages(keep: Localize.Scope, s: SparkSession, dir: String): CfStages = {
     val od = Tables.load(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
     val li = Tables.load(s, dir, "lineitem").select(col("l_orderkey"), col("l_partkey"))
     // shuffle_hash: both sides are fact-scale (no broadcast at 100 TB) and
@@ -377,30 +371,28 @@ object Mining extends QueryPack {
     // window (partitionBy u) and history groupBy(u) reuse the cached
     // partitioning — ONE exchange where a (u,it)-keyed distinct would
     // force a second, window-keyed one (guide §2.4: share one exchange)
-    val up0 = od.hint("shuffle_hash").join(li, col("o_orderkey") === col("l_orderkey"))
+    // kept: consumed twice, by the capped-history build AND the
+    // full-ownership exclusion anti-join — uncached it re-runs the fact
+    // join+distinct per consumer
+    val up0 = keep(od.hint("shuffle_hash").join(li, col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("u"), col("l_partkey").as("it"))
-      .repartition(col("u")).distinct()
-      .cache() // consumed twice: the capped-history build AND the
-               // full-ownership exclusion anti-join — uncached it re-runs
-               // the fact join+distinct per consumer
-    val up = up0
+      .repartition(col("u")).distinct())
+    val up = keep(up0
       .withColumn("rk", row_number().over(Window.partitionBy(col("u"))
         .orderBy(md5(concat(col("u"), lit(":"), col("it"))), col("it"))))
-      .where(col("rk") <= CfHistCap).drop("rk")
-      .cache()
+      .where(col("rk") <= CfHistCap).drop("rk"))
     val sup = up.groupBy(col("it")).agg(count(lit(1)).as("n"))
     val pairsRaw = up.groupBy(col("u")).agg(sort_array(collect_list(col("it"))).as("items"))
       .select(explode(pairUdf(col("items"))).as("p"))
-    // cache: `sym` unions pairs with its own flip, so WITHOUT the cache one
+    // kept: `sym` unions pairs with its own flip, so WITHOUT the cache one
     // action evaluates the whole pair expansion (explode + 5.9M-row shuffle
     // + aggregate) TWICE (guide §2.4: share one exchange). Post-MinCo the
     // relation is pair-sized (85k rows at sf0.1), not fact-sized.
-    // cfItemRecs materializes it before the final action and releases it.
-    val pairs = pairsRaw
+    // cfItemRecs materializes it before the final action.
+    val pairs = keep(pairsRaw
       .groupBy(col("p._1").as("ia"), col("p._2").as("ib"))
       .agg(count(lit(1)).as("co"))
-      .where(col("co") >= CfMinCo)
-      .cache()
+      .where(col("co") >= CfMinCo))
     val sym = pairs.unionAll(
       pairs.select(col("ib").as("ia"), col("ia").as("ib"), col("co")))
     val sim = sym
@@ -439,17 +431,17 @@ object Mining extends QueryPack {
     * cached bases (each count is its own job), so comparing a stage's time
     * across scales still isolates which JOB grows superlinearly even when
     * row counts grow exactly linearly (the r9 probe's unanswered question).
-    * Counts release the stage caches before returning.
+    * The stage caches are released before returning.
     */
   private[graft] def cfStageRows(
-      s: SparkSession, dir: String): Seq[(String, Long, Double)] = {
-    val st = cfStages(s, dir)
+      s: SparkSession, dir: String): Seq[(String, Long, Double)] = Localize.scope { keep =>
+    val st = cfStages(keep, s, dir)
     def timed(name: String, df: org.apache.spark.sql.DataFrame): (String, Long, Double) = {
       val t0 = System.nanoTime()
       val n = df.count()
       (name, n, (System.nanoTime() - t0) / 1e9)
     }
-    val rows = Seq(
+    Seq(
       timed("up0_ownership", st.up0),
       timed("up_capped", st.up),
       timed("pairs_raw", st.pairsRaw),
@@ -457,19 +449,15 @@ object Mining extends QueryPack {
       timed("sim_edges", st.sim),
       timed("nb_truncated", st.nb),
       timed("cand_scored", st.cand))
-    st.pairs.unpersist(blocking = true)
-    st.up.unpersist(blocking = true)
-    st.up0.unpersist(blocking = true)
-    rows
   }
 
-  def cfItemRecs(s: SparkSession, dir: String): DataFrame = {
-    val st = cfStages(s, dir)
+  def cfItemRecs(s: SparkSession, dir: String): DataFrame = Localize { keep =>
+    val st = cfStages(keep, s, dir)
     // materialize the pair cache FIRST: the final tree scans it twice (sym
     // union) and an unmaterialized cache entry is computed by BOTH legs'
     // concurrent tasks — the count pins it once (the Graph-loop discipline)
     st.pairs.count()
-    Localize(st.out, st.pairs, st.up, st.up0)
+    st.out
   }
 
   val cfItemRecsSql: String =
@@ -587,13 +575,12 @@ object Mining extends QueryPack {
     * released before return); each model is a day-keyed self-join of that
     * tiny relation. Nothing fact-scale is joined or windowed.
     */
-  def tsBacktest(s: SparkSession, dir: String): DataFrame = {
+  def tsBacktest(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val li = Tables.load(s, dir, "lineitem")
-    val ser = li.groupBy(
+    val ser = keep(li.groupBy(
         datediff(to_date(col("l_shipdate")), lit("1970-01-01")).cast("long").as("d"))
       .agg(sum(floor(col("l_extendedprice") * (lit(1) - col("l_discount")) * 100)
-        .cast("long")).as("v"))
-      .cache()
+        .cast("long")).as("v")))
     val out = Seq(("naive1", 1L), ("seasonal7", 7L)).map { case (name, lagD) =>
       val f = ser.select((col("d") + lagD).as("d"), col("v").as("fc"))
       ser.join(f, "d")
@@ -611,7 +598,7 @@ object Mining extends QueryPack {
           floor(col("serr").cast("double") / col("n_days")).cast("long").as("bias_floor_c"),
           col("max_abs_err_c"))
     }.reduce(_ unionAll _)
-    Localize(out, ser)
+    out
   }
 
   val tsBacktestSql: String = {
@@ -649,7 +636,7 @@ object Mining extends QueryPack {
     * first; the sliding sorted-window pick and both metrics run on that
     * tiny relation under the constant-pid single-partition idiom.
     */
-  def tsPinball(s: SparkSession, dir: String): DataFrame = {
+  def tsPinball(s: SparkSession, dir: String): DataFrame = Localize { _ =>
     val li = Tables.load(s, dir, "lineitem")
     val ser = li.groupBy(
         datediff(to_date(col("l_shipdate")), lit("1970-01-01")).cast("long").as("d"))
@@ -674,7 +661,7 @@ object Mining extends QueryPack {
         .select(lit(label).as("q"), col("n_days"), col("pinball10_c"),
           expr("n_covered * 1000000 div n_days").as("coverage_ppm"))
     }.reduce(_ unionAll _)
-    Localize(out)
+    out
   }
 
   val tsPinballSql: String = {
@@ -913,13 +900,12 @@ object Mining extends QueryPack {
     * cell counts; everything after is cell-scale. The per-cluster stats
     * join is a broadcast of the cell→cluster map.
     */
-  def clusterGridDensity(s: SparkSession, dir: String): DataFrame = {
-    val cells = Tables.load(s, dir, "part")
+  def clusterGridDensity(s: SparkSession, dir: String): DataFrame = Localize { keep =>
+    val cells = keep(Tables.load(s, dir, "part")
       .select(floor(col("p_retailprice") * 100).cast("long").as("cents"),
         col("p_size").cast("long").as("cy"))
       .select(expr("cents div 1000").as("cx"), col("cy"))
-      .groupBy(col("cx"), col("cy")).agg(count(lit(1)).as("n"))
-      .cache()
+      .groupBy(col("cx"), col("cy")).agg(count(lit(1)).as("n")))
     val dense = cells.filter(col("n") >= DbMinPts)
     val local = dense.select("cx", "cy").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
@@ -955,7 +941,7 @@ object Mining extends QueryPack {
       .select(lit(-1L).as("cluster_id"), col("n_cells"), col("n_points"),
         col("min_cx"), col("max_cx"), col("min_cy"), col("max_cy"))
     val out = clustered.unionAll(noise).orderBy(col("cluster_id"))
-    Localize(out, cells)
+    out
   }
 
   private val clusterGridDensitySql =
@@ -1128,7 +1114,7 @@ object Mining extends QueryPack {
     * cost as the hand-rolled BFS; recursion state is frontier-bounded by
     * the per-level DISTINCT.
     */
-  def recursiveSqlReach(s: SparkSession, dir: String): DataFrame = {
+  def recursiveSqlReach(s: SparkSession, dir: String): DataFrame = Localize { _ =>
     // bind the recursion's edge relation to the Graph pack's MEMOIZED
     // session-cached purchase edges — the exact same bipartite relation
     // ([[edgeSqlFor]] ≡ Graph.purchaseEdges row for row), shared with the
@@ -1138,7 +1124,7 @@ object Mining extends QueryPack {
     // which is why it must be the cached view and never a plain CTE.
     val edges = Graph.purchaseEdges(s, dir).select(col("u"), col("v"))
     edges.createOrReplaceTempView("edges_rec")
-    Localize(s.sql(reachSqlFor("edges_rec")))
+    s.sql(reachSqlFor("edges_rec"))
   }
 
   /** Bounded-state EXACT distinct via a roaring-style bitmap aggregate
@@ -1427,13 +1413,12 @@ object Mining extends QueryPack {
     * end-to-end under the hash gate. Output: one row per node with its
     * split, sizes, class histogram, and purity gain.
     */
-  def treeDepth2(s: SparkSession, dir: String): DataFrame = {
+  def treeDepth2(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val li = Tables.load(s, dir, "lineitem")
     val pt = Tables.load(s, dir, "part").select(col("p_partkey"), col("p_size"))
-    val base = li.join(broadcast(pt), col("l_partkey") === col("p_partkey"))
+    val base = keep(li.join(broadcast(pt), col("l_partkey") === col("p_partkey"))
       .select(col("l_quantity").cast("long").as("x1"),
-        col("p_size").cast("long").as("x2"), col("l_returnflag").as("y"))
-      .cache()
+        col("p_size").cast("long").as("x2"), col("l_returnflag").as("y")))
 
     def bestSplit(df: DataFrame, feat: String): (Long, Double) = {
       val byV = df.groupBy(col(feat).as("q"))
@@ -1481,7 +1466,7 @@ object Mining extends QueryPack {
       .unionAll(nodeRow(left, "left", "p_size", qL, sL))
       .unionAll(nodeRow(right, "right", "p_size", qR, sR))
       .orderBy(col("node"))
-    Localize(out, base)
+    out
   }
 
   private val treeDepth2Sql = {
@@ -1919,13 +1904,11 @@ object Mining extends QueryPack {
     * INSTRUMENT (weeks²/2 pairs each, ~65k at 7 years of weeks), carrying
     * only [[MpWin]]-long arrays — domain-bounded, never data-scaled. A
     * longer series upgrades to the published STOMP/SCAMP diagonal-batch
-    * scheme; the per-instrument partitioning is unchanged.
+    * scheme; the per-instrument partitioning is unchanged. The result is
+    * localized (instrument-count rows) so the pair cache is RELEASED — a
+    * lazy return would pin it for the JVM's life (the r12 kcore lesson).
     */
-  /** lazy inner build — (result frame, pair cache); the plan seam for the
-    * localized [[tsMatrixProfile]] (the `plans` verb archives this frame's plan)
-    */
-  private[graft] def tsMatrixProfileInner(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  def tsMatrixProfile(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     // spread: the tick projection (concat + timestampadd + decimal mult per
     // row) otherwise runs inside the one-row-group scan's single task
     val li = Tables.loadSpread(s, dir, "lineitem")
@@ -1966,10 +1949,13 @@ object Mining extends QueryPack {
     val d2Expr = (1 to MpWin)
       .map(k => s"(element_at(cwa, $k) - element_at(cwb, $k)) * (element_at(cwa, $k) - element_at(cwb, $k))")
       .mkString(" + ")
-    val pairs = a.join(b, Seq("tik"))
+    val pairs = keep(a.join(b, Seq("tik"))
       .where(col("ib") >= col("ia") + lit(MpExcl))
-      .select(col("tik"), col("ia"), col("ib"), expr(d2Expr).as("d2"))
-      .cache()
+      .select(col("tik"), col("ia"), col("ib"), expr(d2Expr).as("d2")))
+    // materialize the pair cache FIRST: motif and the profile union scan it
+    // three times, and an unmaterialized entry is computed by every leg's
+    // concurrent tasks (the cfItemRecs discipline)
+    pairs.count()
     val motif = pairs.groupBy("tik").agg(
       min_by(struct(col("ia"), col("ib")), struct(col("d2"), col("ia"), col("ib"))).as("m"),
       min(col("d2")).as("motif_d2"),
@@ -1984,19 +1970,7 @@ object Mining extends QueryPack {
     val discord = prof.groupBy("tik").agg(
       min_by(col("idx"), struct(-col("pd"), col("idx"))).cast("long").as("discord_i"),
       max(col("pd")).as("discord_d2"))
-    (motif.join(discord, "tik"), pairs)
-  }
-
-  /** localize (instrument-count rows) so the pair cache can be RELEASED —
-    * a lazy return would pin it for the JVM's life (the r12 kcore lesson)
-    */
-  def tsMatrixProfile(s: SparkSession, dir: String): DataFrame = {
-    val (out, pairs) = tsMatrixProfileInner(s, dir)
-    // materialize the pair cache FIRST: motif and the profile union scan it
-    // three times, and an unmaterialized entry is computed by every leg's
-    // concurrent tasks (the cfItemRecs discipline)
-    pairs.count()
-    Localize(out, pairs)
+    motif.join(discord, "tik")
   }
 
   private val tsMatrixProfileSql =

@@ -160,7 +160,7 @@ object PortableSketch extends QueryPack {
     * alongside for the error reading. Everything after the two value-
     * distinct legs operates on ≤ [[K]]-row relations.
     */
-  def kmvSetOps(s: SparkSession, dir: String): DataFrame = {
+  def kmvSetOps(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val li = Tables.load(s, dir, "lineitem")
     def vals(flag: String) =
       li.where(col("l_returnflag") === flag)
@@ -170,9 +170,9 @@ object PortableSketch extends QueryPack {
     // each side feeds its sketch chain AND three exact-companion legs —
     // cache the distinct-value relations so lineitem is scanned once per
     // side (canonical-plan dedup keeps one entry per dataset)
-    val (va, vb) = (vals("R").cache(), vals("A").cache())
+    val (va, vb) = (keep(vals("R")), keep(vals("A")))
     val (ha, hb) = (hashes(va), hashes(vb))
-    val (ska, skb) = (sketch(ha).cache(), sketch(hb).cache())
+    val (ska, skb) = (keep(sketch(ha)), keep(sketch(hb)))
     val mu = sketch(ska.union(skb).distinct())
     def stats(sk: DataFrame, n: String, k: String) =
       sk.agg(count(lit(1)).as(n), max(col("h")).as(k))
@@ -181,7 +181,7 @@ object PortableSketch extends QueryPack {
       .crossJoin(va.join(vb, "v").agg(count(lit(1)).as("exact_inter")))
       .crossJoin(va.agg(count(lit(1)).as("exact_a")))
       .crossJoin(vb.agg(count(lit(1)).as("exact_b")))
-    val result = stats(ska, "na", "ka").crossJoin(stats(skb, "nb", "kb"))
+    stats(ska, "na", "ka").crossJoin(stats(skb, "nb", "kb"))
       .crossJoin(stats(mu, "nu", "ku"))
       .crossJoin(inter).crossJoin(exact)
       .select(
@@ -192,9 +192,6 @@ object PortableSketch extends QueryPack {
         (col("n_both").cast("double") / col("nu").cast("double")).as("jaccard"),
         ((col("n_both").cast("double") / col("nu").cast("double")) *
           estCol(col("nu"), col("ku"))).as("est_inter"))
-    // localize the 1-row result and release the four cache entries so the
-    // query leaves no session state behind
-    Localize(result, va, vb, ska, skb)
   }
 
   private val kmvSetOpsSql: String = {

@@ -802,9 +802,9 @@ object Relational extends QueryPack {
     * by size cardinality, never key cardinality. The hottest key is a
     * TakeOrdered over the counts relation, not a global sort.
     */
-  def skewProfile(s: SparkSession, dir: String): DataFrame = {
+  def skewProfile(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val li = Tables.load(s, dir, "lineitem")
-    val sizes = li.groupBy(col("l_partkey").as("k")).agg(count(lit(1)).as("sz")).cache()
+    val sizes = keep(li.groupBy(col("l_partkey").as("k")).agg(count(lit(1)).as("sz")))
     val q = sizes.groupBy("sz").agg(count(lit(1)).as("cnt"))
       .agg(array_sort(collect_list(struct(col("sz").cast("double").as("v"), col("cnt")))).as("h"))
       .select(
@@ -1424,16 +1424,15 @@ object Relational extends QueryPack {
     * count never touch the fact again. The earlier formulation re-scanned
     * and re-shuffled the fact three times for the same answer.
     */
-  def madOutliers(s: SparkSession, dir: String): DataFrame = {
+  def madOutliers(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     import graft.operators.ExactQuantile
     // loadSpread: the value histogram barely reduces (cents are near-unique
     // per flag), so the single-task partial aggregate pays the full hash
     // build — spreading parallelizes it for one narrow exchange
-    val hist = Tables.loadSpread(s, dir, "lineitem")
+    val hist = keep(Tables.loadSpread(s, dir, "lineitem")
       .select(col("l_returnflag"),
         (dec2(col("l_extendedprice")) * 100).cast("long").as("cents"))
-      .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt"))
-      .cache()
+      .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt")))
     val med = ExactQuantile
       .groupQuantilesDiscWeighted(hist, Seq("l_returnflag"), "cents", "cnt", Seq(0.5))
       .select(col("l_returnflag"), col("cents_q0").as("med"), col("n"))
@@ -1456,9 +1455,7 @@ object Relational extends QueryPack {
         .as("n_outliers"))
       .select(col("l_returnflag"), col("n"), col("med").as("med_cents"),
         col("mad").as("mad_cents"), col("n_outliers"))
-    // localize (group-count rows) and release the histogram cache — the
-    // r13 shape returned lazily and pinned `hist` for the JVM's life
-    Localize(out, hist)
+    out
   }
 
   private val madOutliersSql =
@@ -2070,19 +2067,18 @@ object Relational extends QueryPack {
     * share the scan), clipping is a codegen `least/greatest`, and everything
     * stays in integer cents.
     */
-  def winsorizedStats(s: SparkSession, dir: String): DataFrame = {
+  def winsorizedStats(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     // ONE fact scan: both the quantile cuts AND the clipped aggregate fold
     // from the same (flag, cents) histogram — the r13 shape scanned the
     // fact twice (once inside groupQuantilesDisc, once to clip raw rows).
     // Weighted sums over the histogram are the identical exact longs, just
     // grouped before multiplying by the count. Spread: near-unique cents
     // mean the partial aggregate barely reduces (mad_outliers rationale).
-    val hist = Tables.loadSpread(s, dir, "lineitem")
+    val hist = keep(Tables.loadSpread(s, dir, "lineitem")
       .select(col("l_returnflag"),
         (dec2(col("l_extendedprice")) * 100).cast("long").as("cents"))
       .where(col("cents").isNotNull)
-      .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt"))
-      .cache()
+      .groupBy("l_returnflag", "cents").agg(count(lit(1)).as("cnt")))
     val cuts = graft.operators.ExactQuantile
       .groupQuantilesDiscWeighted(hist, Seq("l_returnflag"), "cents", "cnt",
         Seq(0.01, 0.99))
@@ -2095,8 +2091,7 @@ object Relational extends QueryPack {
           .as("sum_clipped"),
         sum(when(col("cents") < col("p01"), col("cnt")).otherwise(0L)).as("n_clip_low"),
         sum(when(col("cents") > col("p99"), col("cnt")).otherwise(0L)).as("n_clip_high"))
-    // localize (group-count rows) so the histogram cache is released
-    Localize(out, hist)
+    out
   }
 
   private val winsorizedStatsSql =

@@ -473,10 +473,10 @@ object TpchShapes extends QueryPack {
   // memoized-per-dir and session-cached (the Indicators-pack discipline):
   // five TPC-H shapes start from this one fact aggregate, so the first
   // pays the lineitem scan and the rest reuse the partsupp-sized relation
-  private val psCache = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val psCache = graft.Memo.base()
 
   private def partsupp(s: SparkSession, dir: String): DataFrame =
-    graft.Memo.cached(psCache, dir) { d =>
+    psCache(dir) { d =>
       Tables.load(s, d, "lineitem")
         .groupBy(col("l_partkey").as("ps_partkey"), col("l_suppkey").as("ps_suppkey"))
         .agg(

@@ -85,11 +85,10 @@ object IngestPack extends QueryPack {
     * entry; a long-lived JVM exercising many dirs releases it (and every
     * other memo) through [[graft.Memo.releaseAll]].
     */
-  private val allMessagesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val allMessagesCache = graft.Memo.base()
 
   private[graft] def allMessages(s: SparkSession, dir: String): DataFrame =
-    graft.Memo.cached(allMessagesCache, dir) { d =>
+    allMessagesCache(dir) { d =>
       Seq(candleMessages(s, d), tradeMessages(s, d), bookMessages(s, d),
         companyMessages(s, d), unknownMessages(s, d)).reduce(_ union _)
     }

@@ -376,6 +376,8 @@ object Curation extends QueryPack {
     }
   }
 
+  private val chunksCache = graft.Memo.base()
+
   /** Content-defined chunking + cross-document chunk dedup — the FastCDC/
     * rolling-boundary discipline of dedup storage applied to token streams:
     * chunk boundaries depend only on LOCAL window content, so an insertion
@@ -391,13 +393,16 @@ object Curation extends QueryPack {
     * left-semi join. Empty docs have no chunks and are absent by definition.
     */
   def chunkCdc(s: SparkSession, dir: String): DataFrame = {
-    // cache(): three consumers (dup detection, per-doc totals, dup counts)
-    // would otherwise re-run the tokenize+chunk+hash pass 3×; a 100 TB run
-    // materializes this relation to a table instead (same plan shape)
-    val ch = Tables.loadSpread(s, dir, "documents")
-      .select(col("doc_id"), explode(cdcChunksUdf(TextStats.tokensCol)).as("c"))
-      .select(col("doc_id"), col("c._1").as("h"), col("c._2").cast("long").as("len"))
-      .cache()
+    // memoized per dir: three consumers (dup detection, per-doc totals, dup
+    // counts) would otherwise re-run the tokenize+chunk+hash pass 3×, and
+    // the per-doc result is lazy, so no query scope can own the cache; a
+    // 100 TB run materializes this relation to a table instead (same plan
+    // shape)
+    val ch = chunksCache(dir) { d =>
+      Tables.loadSpread(s, d, "documents")
+        .select(col("doc_id"), explode(cdcChunksUdf(TextStats.tokensCol)).as("c"))
+        .select(col("doc_id"), col("c._1").as("h"), col("c._2").cast("long").as("len"))
+    }
     val dupH = ch.groupBy("h").agg(countDistinct(col("doc_id")).as("nd"))
       .where(col("nd") >= 2).select("h")
     val dups = ch.join(dupH, Seq("h"), "left_semi")
@@ -1081,12 +1086,11 @@ object Curation extends QueryPack {
     * median runs on the token-count histogram (value-domain-bounded), and
     * the final card is a handful of 1-row reduces unioned metadata-side.
     */
-  def datasetCard(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.loadSpread(s, dir, "documents")
+  def datasetCard(s: SparkSession, dir: String): DataFrame = Localize { keep =>
+    val d = keep(Tables.loadSpread(s, dir, "documents")
       .select(col("doc_id"), col("source"), col("lang"), col("n_chars"),
         size(TextStats.tokensCol).cast("long").as("n_tok"),
-        md5(col("text").cast("binary")).as("h"))
-      .cache()
+        md5(col("text").cast("binary")).as("h")))
     val base = d.agg(
       count(lit(1)).as("n_docs"),
       countDistinct(col("source")).as("n_sources"),
@@ -1257,14 +1261,13 @@ object Curation extends QueryPack {
     * dedup membership is a (hash → min id) aggregate; the budget is a
     * broadcast 1-row reduce.
     */
-  def tokenBudgetPlan(s: SparkSession, dir: String): DataFrame = {
-    val d = Tables.loadSpread(s, dir, "documents")
+  def tokenBudgetPlan(s: SparkSession, dir: String): DataFrame = Localize { keep =>
+    val d = keep(Tables.loadSpread(s, dir, "documents")
       .select(col("doc_id"), col("source"),
         size(TextStats.tokensCol).cast("long").as("n_tok"),
-        md5(col("text").cast("binary")).as("h"))
-      .cache()
-    val keep = d.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
-    val kept = d.join(keep, Seq("h", "doc_id"))
+        md5(col("text").cast("binary")).as("h")))
+    val firsts = d.groupBy(col("h")).agg(min(col("doc_id")).as("doc_id"))
+    val kept = d.join(firsts, Seq("h", "doc_id"))
       .groupBy(col("source")).agg(sum(col("n_tok")).as("tokens_kept"))
     val raw = d.groupBy(col("source")).agg(sum(col("n_tok")).as("tokens_raw"))
     val budget = kept.agg(min(col("tokens_kept")).as("t_budget"))
@@ -1276,7 +1279,7 @@ object Curation extends QueryPack {
         (col("tokens_kept") - col("t_budget")).as("surplus_tokens"),
         expr("t_budget * 1000000 div tokens_kept").as("utilization_ppm"))
       .orderBy(col("source"))
-    Localize(out, d)
+    out
   }
 
   private val tokenBudgetPlanSql =

@@ -129,11 +129,10 @@ object Dedup extends QueryPack {
     * with the other memos. A production deployment would persist the index
     * as a shingle-bucketed table — this is the local-mode analogue.
     */
-  private val invIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val invIndexCache = graft.Memo.base()
 
   private[graft] def invIndex(s: SparkSession, dir: String): DataFrame =
-    graft.Memo.cached(invIndexCache, dir) { d =>
+    invIndexCache(dir) { d =>
       withShingles(Tables.loadSpread(s, d, "documents"))
         .select(col("doc_id"), explode(col("sh")).as("shingle"))
         .withColumn("df", count(lit(1)).over(Window.partitionBy("shingle")))
@@ -159,19 +158,17 @@ object Dedup extends QueryPack {
     * timed a cache scan of its own answer). jaccard and containment now
     * each still time their own size joins + threshold filter.
     */
-  private val sharedPairsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-  private val docSizesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val sharedPairsCache = graft.Memo.base()
+  private val docSizesCache = graft.Memo.base()
 
   private def sizedPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val inv = invIndex(s, dir)
     // sizes memoized too (doc-count-sized): jaccard runs per consumer now,
     // so its per-call cost must be the tiny joins, not an index re-aggregate
-    val sizes = graft.Memo.cached(docSizesCache, dir) { _ =>
+    val sizes = docSizesCache(dir) { _ =>
       inv.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     }
-    val pairs = graft.Memo.cached(sharedPairsCache, dir) { _ =>
+    val pairs = sharedPairsCache(dir) { _ =>
       inv.as("a").hint("shuffle_hash")
         .join(inv.as("b").hint("shuffle_hash"),
           col("a.shingle") === col("b.shingle") && col("a.doc_id") < col("b.doc_id"))
@@ -443,25 +440,28 @@ object Dedup extends QueryPack {
   }
   private val minSig = udaf(MinSigAgg)
 
+  private val docSketchCache = graft.Memo.base()
+
   /** doc_id → (minhash signature, retained shingle set, set size) in ONE
     * aggregation: the signature UDAF and the verification-side shingle
     * arrays consume the same inverted index, so computing them in one
-    * `groupBy(doc_id)` halves the index's shuffle passes. cache()'d — three
-    * consumers (band explode + both sides of the candidate join).
+    * `groupBy(doc_id)` halves the index's shuffle passes. Memoized per dir
+    * — three consumers (band explode + both sides of the candidate join)
+    * of a lazy per-pair result.
     */
-  private[llm] def docSketch(inv: DataFrame): DataFrame = {
-    val h = md5(col("shingle").cast("binary"))
-    inv.select(
-      col("doc_id"), col("shingle"),
-      (Portable.hexInt(h) % HashMod).as("h1"),
-      (Portable.hexInt(h, 9) % HashMod).as("h2"))
-      .groupBy("doc_id")
-      .agg(
-        minSig(col("h1"), col("h2")).as("sig"),
-        collect_list(col("shingle")).as("sh"),
-        count(lit(1)).as("n_sh"))
-      .cache()
-  }
+  private def docSketch(s: SparkSession, dir: String): DataFrame =
+    docSketchCache(dir) { d =>
+      val h = md5(col("shingle").cast("binary"))
+      invIndex(s, d).select(
+        col("doc_id"), col("shingle"),
+        (Portable.hexInt(h) % HashMod).as("h1"),
+        (Portable.hexInt(h, 9) % HashMod).as("h2"))
+        .groupBy("doc_id")
+        .agg(
+          minSig(col("h1"), col("h2")).as("sig"),
+          collect_list(col("shingle")).as("sh"),
+          count(lit(1)).as("n_sh"))
+    }
 
   /** LSH band keys off a `sig` array column: band key = band_idx·2^47 +
     * Horner-31 fold of the band's [[Rows]] signature values (< 2^47, see
@@ -494,8 +494,7 @@ object Dedup extends QueryPack {
     * pair join for ALL co-shingled pairs, defeating the bucketing).
     */
   def minhash(s: SparkSession, dir: String): DataFrame = {
-    val inv  = invIndex(s, dir)
-    val sigs = docSketch(inv)
+    val sigs = docSketch(s, dir)
     // bands as ONE exploded band-key relation → a single self-join;
     // per-band joins would recompute the signature aggregation once per band
     // per side. Band key = band_idx·2^47 + Horner-31 fold of the band's Rows
@@ -1389,6 +1388,8 @@ object Dedup extends QueryPack {
     }
   }
 
+  private val spansCache = graft.Memo.base()
+
   /** Exact-substring duplication accounting — the token-window form of
     * suffix-array substring dedup (the "duplicated 50-token span" method of
     * the published training-data dedup literature, at window [[SpanW]]):
@@ -1407,12 +1408,14 @@ object Dedup extends QueryPack {
     * and are absent by definition (keeps the ppm division total).
     */
   def spanDedup(s: SparkSession, dir: String): DataFrame = {
-    // cache(): three consumers (dup detection, totals, per-doc dup counts)
-    // would otherwise re-run the tokenize+hash pass 3×; a 100 TB run
-    // materializes this relation to a table instead (same plan shape)
-    val spans = Tables.loadSpread(s, dir, "documents")
-      .select(col("doc_id"), explode(spanHashUdf(TextStats.tokensCol)).as("h"))
-      .cache()
+    // memoized per dir: three consumers (dup detection, totals, per-doc dup
+    // counts) would otherwise re-run the tokenize+hash pass 3×, and the
+    // per-doc result is lazy, so no query scope can own the cache; a 100 TB
+    // run materializes this relation to a table instead (same plan shape)
+    val spans = spansCache(dir) { d =>
+      Tables.loadSpread(s, d, "documents")
+        .select(col("doc_id"), explode(spanHashUdf(TextStats.tokensCol)).as("h"))
+    }
     val dupH = spans.groupBy("h").agg(countDistinct(col("doc_id")).as("nd"))
       .where(col("nd") >= 2).select("h")
     val totals = spans.groupBy("doc_id").agg(count(lit(1)).as("n_spans"))

@@ -126,17 +126,16 @@ object Features extends QueryPack {
     * back by fold key (broadcast); residual integerization is map-side and
     * the final per-fold SSE is a partial-aggregated K-row reduce.
     */
-  def cvKfoldOls(s: SparkSession, dir: String): DataFrame = {
+  def cvKfoldOls(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     // loadSpread: the per-row md5 fold hash dominates the one-row-group
     // single-task scan, and BOTH passes (fold stats + residuals) pay it
     val li = Tables.loadSpread(s, dir, "lineitem").select(
       (Portable.md5Int(concat_ws(":", col("l_orderkey"), col("l_linenumber"))) % CvK).as("fold"),
       col("l_quantity").cast("long").as("x"),
       floor(col("l_extendedprice") * 100).cast("long").as("y_c"))
-    val foldStats = li.groupBy(col("fold")).agg(
+    val foldStats = keep(li.groupBy(col("fold")).agg(
       count(lit(1)).as("n"), sum(col("x")).as("sx"), sum(col("y_c")).as("sy"),
-      sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y_c")).as("sxy"))
-      .cache()
+      sum(col("x") * col("x")).as("sxx"), sum(col("x") * col("y_c")).as("sxy")))
     val tot = foldStats.agg(
       sum(col("n")).as("tn"), sum(col("sx")).as("tsx"), sum(col("sy")).as("tsy"),
       sum(col("sxx")).as("tsxx"), sum(col("sxy")).as("tsxy"))
@@ -166,8 +165,7 @@ object Features extends QueryPack {
         sum(col("sq")).as("sse_h"))
       .withColumn("mse_h", expr("sse_h div n_test"))
       .orderBy(col("fold"))
-    // materialize the K-row result, then release the fold-stats cache
-    Localize(out, foldStats)
+    out
   }
 
   private val cvKfoldOlsSql = {

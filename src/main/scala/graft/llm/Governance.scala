@@ -356,7 +356,7 @@ object Governance extends QueryPack {
     * memo: every perceptron round, the calibration and the AUC read it
     */
   private def ptFeatures(s: SparkSession, dir: String): DataFrame =
-    graft.Memo.cached(ptFeaturesCache, dir) { d =>
+    ptFeaturesCache(dir) { d =>
       Tables.loadSpread(s, d, "documents")
         .select(
           when(col("lang") === "en", 1L).otherwise(-1L).as("y"),
@@ -367,8 +367,7 @@ object Governance extends QueryPack {
             .cast("long").as("x4"))
     }
 
-  private val ptFeaturesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val ptFeaturesCache = graft.Memo.base()
 
   /** [[PtRounds]] epochs of the integer batch perceptron: per-round
     * (misclassified count, post-update weights). Shared by
@@ -686,18 +685,17 @@ object Governance extends QueryPack {
     * one (type, epoch) hash aggregate; everything after runs on a ≤10-row
     * relation with broadcast totals.
     */
-  def driftChi2(s: SparkSession, dir: String): DataFrame = {
+  def driftChi2(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val ev = Tables.load(s, dir, "events")
       .select(col("event_type"), unix_micros(col("ts")).as("us"))
     val mid = ev.agg(((min(col("us")) + max(col("us"))) / lit(2L)).cast("long").as("mid"))
-    // cache() the ≤(types×2)-row contingency table: five consumers (row /
+    // keep the ≤(types×2)-row contingency table: five consumers (row /
     // column / grand totals, the scored join, the final agg) would each
     // otherwise replay the full event scan — at 100 TB that is the whole
     // query cost ×5. Canonical-plan dedup keeps this one entry per dataset.
-    val cells = ev.crossJoin(broadcast(mid))
+    val cells = keep(ev.crossJoin(broadcast(mid))
       .groupBy(col("event_type"), (col("us") < col("mid")).as("early"))
-      .agg(count(lit(1)).as("o"))
-      .cache()
+      .agg(count(lit(1)).as("o")))
     val rt = cells.groupBy("event_type").agg(sum(col("o")).as("rt"))
     val ct = cells.groupBy("early").agg(sum(col("o")).as("ct"))
     val nn = cells.agg(sum(col("o")).as("nn"))
@@ -930,8 +928,8 @@ object Governance extends QueryPack {
     * bin-count-scale (the cubic triple-join is over [[CalBins]] rows —
     * constant); the histogram itself is the modelCalibration shape.
     */
-  def isotonicCalibration(s: SparkSession, dir: String): DataFrame = {
-    val bins = modelCalibration(s, dir)
+  def isotonicCalibration(s: SparkSession, dir: String): DataFrame = Localize { keep =>
+    val bins = keep(modelCalibration(s, dir)
       .select(col("bin"), col("n"), col("n_pos"))
       .repartition(1)
       .withColumn("pid", spark_partition_id())
@@ -941,8 +939,7 @@ object Governance extends QueryPack {
         org.apache.spark.sql.expressions.Window.partitionBy("pid").orderBy("bin")))
       .select(col("bin"), col("n"), col("n_pos"),
         (col("cn") - col("n")).as("cbn"), (col("cp") - col("n_pos")).as("cbp"),
-        col("cn"), col("cp"))
-      .cache()
+        col("cn"), col("cp")))
     val i = bins.select(col("bin").as("i"), col("n"), col("n_pos"))
     val j = bins.select(col("bin").as("j"), col("cbn"), col("cbp"))
     val k = bins.select(col("bin").as("k"), col("cn"), col("cp"))
@@ -960,7 +957,7 @@ object Governance extends QueryPack {
       expr("n_pos * 1000000 div n").as("raw_ppm"),
       floor(col("fit") * 1000000).cast("long").as("iso_ppm"))
       .orderBy(col("bin"))
-    Localize(out, bins)
+    out
   }
 
   private lazy val isotonicCalibrationSql =

@@ -1,6 +1,6 @@
 package graft.llm
 
-import graft.{Portable, Q, QueryPack, Tables}
+import graft.{Localize, Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -512,16 +512,14 @@ object Similarity extends QueryPack {
     * twin [[annIvfTrainedTopK]]; the ScalaTest additionally pins recall
     * against brute force on planted clusters.
     */
-  def ivfTopK(s: SparkSession, dir: String): DataFrame = {
+  def ivfTopK(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     val emb = Tables.load(s, dir, "embeddings")
-    // cache() the one-row index: Catalyst does not share the index DAG
-    // across the corpus-assignment and probe branches, and CacheManager
-    // keys entries by CANONICAL plan — repeated ivfTopK calls reuse ONE
-    // cache entry per dataset (no per-invocation leak, unlike
-    // localCheckpoint) and the entry recomputes after executor loss. A
-    // production deployment persists the index to a table instead.
+    // keep the one-row index: Catalyst does not share the index DAG across
+    // the corpus-assignment and probe branches. The top-K result is
+    // collected and the entry released on return; a production deployment
+    // persists the index to a table instead.
     val spread = Tables.loadSpread(s, dir, "embeddings")
-    val centsRow = ivfIndex(spread).cache()
+    val centsRow = keep(ivfIndex(spread))
     val corpus = spread.crossJoin(broadcast(centsRow))
       .select(col("vec_id"), col("embedding"),
         bestCellUdf(col("embedding"), col("cmat")).as("cell"))
@@ -750,9 +748,12 @@ object Similarity extends QueryPack {
     */
   def writeIvfPqIndex(emb: DataFrame, path: String): Unit = {
     ivfIndex(emb).write.mode("overwrite").parquet(s"$path/centroids")
-    val (sub, c1, _) = pqStateOf(emb)
+    // the codebook training scans the sub-vectors twice (seeds + assign);
+    // blocking release: a non-blocking one leaves dead blocks behind in a
+    // long-lived JVM (the round-12 kcore drift)
+    val sub = subVecs(emb).cache()
+    val c1 = try pqStateOf(sub)._1 finally sub.unpersist(blocking = true)
     c1.write.mode("overwrite").parquet(s"$path/codebooks")
-    sub.unpersist(); c1.unpersist()
     appendIvfPqIndex(emb, path, overwrite = true)
   }
 
@@ -1096,17 +1097,22 @@ object Similarity extends QueryPack {
   def kmeansTrain(s: SparkSession, dir: String): DataFrame =
     kmeansCore(s, dir, KmIters)
 
+  private val quantizedCache = graft.Memo.base()
+
   /** trained k-means state: (quantized corpus, trained centroid relation,
-    * assignment function) — shared by the training gate and the trained-IVF
-    * search. Both corpus and centroids are cache()'d (multiple consumers,
-    * canonical-plan-deduped).
+    * assignment function) — shared by the training gate, the trained-IVF
+    * search and semantic dedup. The quantized corpus is a per-dir memo
+    * (multiple consumers); the [[KmK]] trained centroids are O(1) MODEL
+    * state, collected once and re-entered as a local relation (the
+    * perceptron / PCA discipline), so no query holds a cache for them.
     */
   private[graft] def kmeansState(
       s: SparkSession, dir: String, iters: Int)
       : (DataFrame, DataFrame, DataFrame => DataFrame) = {
-    val xq = Tables.loadSpread(s, dir, "embeddings")
-      .select(col("vec_id"), quantUdf(col("embedding")).as("x"))
-      .cache()
+    val xq = quantizedCache(dir) { d =>
+      Tables.loadSpread(s, d, "embeddings")
+        .select(col("vec_id"), quantUdf(col("embedding")).as("x"))
+    }
     val c0 = xq.where(col("vec_id") < KmK)
       .select((col("vec_id") + 1).as("cell"), col("x").as("c"))
     def assign(cents: DataFrame): DataFrame =
@@ -1115,10 +1121,12 @@ object Similarity extends QueryPack {
           nearestCellUdf(col("x"), col("keys"), col("cmatq")).as("a"))
         .select(col("vec_id"), col("x"),
           col("a._1").as("cell"), col("a._2").as("d"))
-    val trained = (1 to iters).foldLeft(c0) { (cents, _) =>
-      assign(cents).groupBy("cell").agg(qVecMean(col("x")).as("c"))
+    val trained = Localize { _ =>
+      (1 to iters).foldLeft(c0) { (cents, _) =>
+        assign(cents).groupBy("cell").agg(qVecMean(col("x")).as("c"))
+      }
     }
-    (xq, if (iters > 0) trained.cache() else trained, assign)
+    (xq, trained, assign)
   }
 
   /** iteration-parameterized core (KmeansSpec pins that training does not
@@ -1384,15 +1392,24 @@ object Similarity extends QueryPack {
     * no per-subspace jobs).
     */
   private[graft] def pqState(
-      s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame => DataFrame) =
-    pqStateOf(Tables.loadSpread(s, dir, "embeddings"))
+      s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame => DataFrame) = {
+    val sub = subVecsCache(dir)(d => subVecs(Tables.loadSpread(s, d, "embeddings")))
+    val (c1, assign) = pqStateOf(sub)
+    (sub, c1, assign)
+  }
 
-  private[graft] def pqStateOf(
-      emb: DataFrame): (DataFrame, DataFrame, DataFrame => DataFrame) = {
-    val sub = emb
-      .select(col("vec_id"),
-        posexplode(subVecsUdf(quantUdf(col("embedding")))).as(Seq("m", "xs")))
-      .cache()
+  private val subVecsCache = graft.Memo.base()
+
+  /** (vec_id, m, xs): each vector's [[PqM]] quantized sub-vectors */
+  private def subVecs(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"),
+      posexplode(subVecsUdf(quantUdf(col("embedding")))).as(Seq("m", "xs")))
+
+  /** (trained codebooks, assignment function) over the sub-vector relation
+    * `sub`, which the caller caches: the [[PqM]]×[[PqK]] codebooks are O(1)
+    * MODEL state, collected once and re-entered as a local relation
+    */
+  private def pqStateOf(sub: DataFrame): (DataFrame, DataFrame => DataFrame) = {
     val c0 = sub.where(col("vec_id") < PqK)
       .select(col("m"), (col("vec_id") + 1).as("cell"), col("xs").as("c"))
     def assign(cents: DataFrame): DataFrame =
@@ -1401,8 +1418,8 @@ object Similarity extends QueryPack {
           nearestSubUdf(col("xs"), col("keys"), col("cmatq")).as("a"))
         .select(col("vec_id"), col("m"), col("xs"),
           col("a._1").as("cell"), col("a._2").as("d"))
-    val c1 = assign(c0).groupBy("m", "cell").agg(pqMean(col("xs")).as("c")).cache()
-    (sub, c1, assign)
+    val c1 = Localize(_ => assign(c0).groupBy("m", "cell").agg(pqMean(col("xs")).as("c")))
+    (c1, assign)
   }
 
   /** PQ codebook training audit: per (subspace, cell) member count, inertia
@@ -1701,6 +1718,8 @@ object Similarity extends QueryPack {
     math.floor(dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble)) * 1e6).toLong
   }
 
+  private val cellCosCache = graft.Memo.base()
+
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic dedup by
     * clustering then within-cluster pruning — k-means the corpus, and inside
     * each cluster drop any member that has a LOWER-centroid-similarity
@@ -1721,12 +1740,15 @@ object Similarity extends QueryPack {
     * cluster→prune pipeline bit-for-bit.
     */
   def semDedup(s: SparkSession, dir: String): DataFrame = {
-    val (_, trained, assign) = kmeansState(s, dir, KmIters)
-    val wc = assign(trained)
-      .join(broadcast(trained), "cell")
-      .select(col("vec_id"), col("cell"), col("x"),
-        intCosE6Udf(col("x"), col("c")).as("cent_e6"))
-      .cache()
+    // memoized per dir: both sides of the self-join and the final join read
+    // it, and the per-vector result is lazy, so no query scope can own it
+    val wc = cellCosCache(dir) { d =>
+      val (_, trained, assign) = kmeansState(s, d, KmIters)
+      assign(trained)
+        .join(broadcast(trained), "cell")
+        .select(col("vec_id"), col("cell"), col("x"),
+          intCosE6Udf(col("x"), col("c")).as("cent_e6"))
+    }
     val dom = wc.as("a")
       .join(wc.as("b"),
         col("a.cell") === col("b.cell") &&
@@ -1901,7 +1923,7 @@ object Similarity extends QueryPack {
     * every iteration touches Dim²=4096 rows. A wider corpus changes the
     * Gram sums' magnitude, never the plan.
     */
-  def embPcaPower(s: SparkSession, dir: String): DataFrame = {
+  def embPcaPower(s: SparkSession, dir: String): DataFrame = Localize { keep =>
     object GramAgg
         extends org.apache.spark.sql.expressions.Aggregator[Seq[Long], GramBuf, Seq[Long]] {
       def zero: GramBuf = GramBuf(Array.fill(Dim * Dim)(0L))
@@ -1927,13 +1949,12 @@ object Similarity extends QueryPack {
         org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
     }
     val gram = udaf(GramAgg)
-    val cm = Tables.loadSpread(s, dir, "embeddings")
+    val cm = keep(Tables.loadSpread(s, dir, "embeddings")
       .select(quantAt(1e3)(col("embedding")).as("x"))
       .agg(gram(col("x")).as("g"))
       .select(posexplode(col("g")))
       .select(expr("CAST(pos div 64 AS BIGINT)").as("i"),
-        expr("CAST(pos % 64 AS BIGINT)").as("j"), col("col").as("cij"))
-      .cache()
+        expr("CAST(pos % 64 AS BIGINT)").as("j"), col("col").as("cij")))
     // The round state is Dim longs (O(1) MODEL state, the bpe-train /
     // perceptron discipline): collect it per round and re-enter the next
     // round as a LocalRelation. The previous formulation referenced `w`
@@ -1956,7 +1977,6 @@ object Similarity extends QueryPack {
         .map { case (i, wi) => (i, math.floor(wi.toDouble / m * PcaScale).toLong) }
       lastScale = m
     }
-    cm.unpersist(blocking = true)
     v.map { case (j, vf) => (j, vf, lastScale) }
       .toDF("dim", "v_fp", "last_scale")
   }

@@ -742,9 +742,9 @@ object TextStats extends QueryPack {
     * coverage pass is one map-side membership probe + a low-cardinality
     * aggregate. The token relation is cached across the two passes.
     */
-  def tokenizerCoverage(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.loadSpread(s, dir, "documents")
-      .select(col("source"), explode(tokensCol).as("token")).cache()
+  def tokenizerCoverage(s: SparkSession, dir: String): DataFrame = Localize { keep =>
+    val toks = keep(Tables.loadSpread(s, dir, "documents")
+      .select(col("source"), explode(tokensCol).as("token")))
     val vocab = toks.groupBy("token").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("token")).limit(CoverageVocabK)
       .select(col("token"), lit(1).as("in_vocab"))
@@ -1087,7 +1087,7 @@ object TextStats extends QueryPack {
     * state, exactly what a production job would persist and reload)
     */
   private def bpeMergeRows(s: SparkSession, dir: String): Seq[(Long, String, Long, Long)] =
-    bpeTrained.computeIfAbsent(dir, { d =>
+    bpeTrained.computeIfAbsent(dir, d => Localize.scope { keep =>
       import org.apache.spark.sql.Row
       // '@' is the symbol delimiter; guard the (alphabetic) vocab in both engines
       val words = Tables.loadSpread(s, d, "documents")
@@ -1095,12 +1095,10 @@ object TextStats extends QueryPack {
         .where(col("w").rlike("^[a-z]+$"))
         .groupBy("w").agg(count(lit(1)).as("cnt"))
         .select(col("w"), col("cnt"), initSymUdf(col("w")).as("sym"))
-      var curCache = words.cache()
-      curCache.count()
-      // lineage-flat handle per round (the Graph-pack Rebase discipline):
+      // lineage-flat handle per round (the Graph-pack round discipline):
       // each round's two actions otherwise re-analyze a logical tree that
       // deepens by one merge-apply per round
-      var cur = org.apache.spark.sql.graftx.Rebase(curCache)
+      var cur = keep.round(0, words)
       val rows = Seq.newBuilder[(Long, String, Long, Long)]
       for (r <- 1 to BpeRounds) {
         val Row(pair: String, c: Long) = cur
@@ -1108,16 +1106,13 @@ object TextStats extends QueryPack {
           .groupBy("pair").agg(sum(col("cnt")).as("c"))
           .orderBy(col("c").desc, col("pair")).limit(1)
           .collect()(0)
-        val next = cur
-          .select(col("w"), col("cnt"), applyMergeUdf(col("sym"), lit(pair)).as("sym"))
-          .cache()
-        val nAfter = next.agg(sum(col("cnt") * symCountUdf(col("sym")))).collect()(0).getLong(0)
-        curCache.unpersist(blocking = true)
-        curCache = next
-        cur = org.apache.spark.sql.graftx.Rebase(next)
+        val next = keep.round(r,
+          cur.select(col("w"), col("cnt"), applyMergeUdf(col("sym"), lit(pair)).as("sym")))
+        keep.drop(cur)
+        cur = next
+        val nAfter = cur.agg(sum(col("cnt") * symCountUdf(col("sym")))).collect()(0).getLong(0)
         rows += ((r.toLong, pair, c, nAfter))
       }
-      curCache.unpersist(blocking = true)
       rows.result()
     })
 
@@ -1250,11 +1245,10 @@ object TextStats extends QueryPack {
     * derive from that vocabulary-sized relation; the final rank windows are
     * source-partitioned over the post-cut vocabulary.
     */
-  def sourceSignatureTerms(s: SparkSession, dir: String): DataFrame = {
-    val st = Tables.loadSpread(s, dir, "documents")
+  def sourceSignatureTerms(s: SparkSession, dir: String): DataFrame = Localize { keep =>
+    val st = keep(Tables.loadSpread(s, dir, "documents")
       .select(col("source"), explode(tokensCol).as("token"))
-      .groupBy(col("source"), col("token")).agg(count(lit(1)).as("tf"))
-      .cache()
+      .groupBy(col("source"), col("token")).agg(count(lit(1)).as("tf")))
     val srcTot = st.groupBy("source").agg(sum(col("tf")).as("tok_s"))
     val tokTot = st.groupBy("token").agg(sum(col("tf")).as("tf_c"))
     val tot = st.agg(sum(col("tf")).as("tot_c"))
@@ -1274,7 +1268,7 @@ object TextStats extends QueryPack {
           .orderBy(col("lift_ppm").desc, col("token"))).cast("long"))
       .where(col("rank") <= SigK)
       .orderBy(col("source"), col("rank"))
-    Localize(out, st)
+    out
   }
 
   private val sourceSignatureTermsSql =
@@ -1331,11 +1325,10 @@ object TextStats extends QueryPack {
     * `retrieval_mrr_eval` each previously built + cached + dropped their
     * own copy; guide §2.4: one expensive base, many consumers)
     */
-  private val prfPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val prfPairCache = graft.Memo.base()
 
   private def prfPair(s: SparkSession, dir: String): DataFrame =
-    graft.Memo.cached(prfPairCache, dir) { d =>
+    prfPairCache(dir) { d =>
       val docs = Tables.loadSpread(s, d, "documents")
       val toks = docs.select(col("doc_id"), explode(tokensCol).as("term"))
       val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
@@ -1350,32 +1343,30 @@ object TextStats extends QueryPack {
           floor(score * lit(1000000)).cast("long").as("s_e6"))
     }
 
-  /** shared PRF pipeline: (per-call caches to release, round-1 ranking,
-    * round-2 ranking). The posting relation is the session memo above; the
-    * query-term and round-1 relations are CACHED per call (query-count- and
+  /** shared PRF pipeline: (round-1 ranking, round-2 ranking). The posting
+    * relation is the session memo above; the query-term and round-1
+    * relations are kept in the caller's scope (query-count- and
     * candidate-sized) because the downstream tree consumes each more than
     * once (qterms: r1 + the expansion anti-join + allTerms; r1: the
     * feedback cut + retrievalMrrEval's round-1 eval leg) — uncached, each
-    * consumer re-ran the posting join + aggregate (guide §2.4). Callers
-    * collect their bounded result then release the returned caches.
+    * consumer re-ran the posting join + aggregate (guide §2.4).
     */
-  private def prfPipeline(s: SparkSession, dir: String):
-      (Seq[DataFrame], DataFrame, DataFrame) = {
+  private def prfPipeline(
+      keep: Localize.Scope, s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val docs = Tables.loadSpread(s, dir, "documents")
     val pair = prfPair(s, dir)
     val qids = docs.orderBy("doc_id").limit(PrfQueries)
       .select(col("doc_id").as("query_id"))
     val wq = Window.partitionBy("query_id").orderBy(col("s_e6").desc, col("term"))
-    val qterms = pair.join(broadcast(qids), col("doc_id") === col("query_id"))
+    val qterms = keep(pair.join(broadcast(qids), col("doc_id") === col("query_id"))
       .withColumn("r", row_number().over(wq)).where(col("r") <= PrfQTerms)
-      .select(col("query_id"), col("term"))
-      .cache()
+      .select(col("query_id"), col("term")))
     def scoreWith(terms: DataFrame): DataFrame =
       pair.join(broadcast(terms), "term")
         .where(col("doc_id") =!= col("query_id"))
         .groupBy(col("query_id"), col("doc_id"))
         .agg(sum(col("s_e6") * col("w")).as("score_e6"))
-    val r1 = scoreWith(qterms.withColumn("w", lit(2L))).cache()
+    val r1 = keep(scoreWith(qterms.withColumn("w", lit(2L))))
     val wr = Window.partitionBy("query_id").orderBy(col("score_e6").desc, col("doc_id"))
     val fb = r1.withColumn("r", row_number().over(wr)).where(col("r") <= PrfFb)
       .select(col("query_id"), col("doc_id"))
@@ -1387,19 +1378,17 @@ object TextStats extends QueryPack {
       .select(col("query_id"), col("term"))
     val allTerms = qterms.withColumn("w", lit(2L))
       .unionByName(exp.withColumn("w", lit(1L)))
-    val r2 = scoreWith(allTerms)
-    (Seq(qterms, r1), r1, r2)
+    (r1, scoreWith(allTerms))
   }
 
-  def prfSearch(s: SparkSession, dir: String): DataFrame = {
-    val (caches, _, r2) = prfPipeline(s, dir)
+  def prfSearch(s: SparkSession, dir: String): DataFrame = Localize { keep =>
+    val (_, r2) = prfPipeline(keep, s, dir)
     val wr = Window.partitionBy("query_id").orderBy(col("score_e6").desc, col("doc_id"))
-    val out = r2
+    r2
       .withColumn("rank", row_number().over(wr).cast("long"))
       .where(col("rank") <= PrfK)
       .select(col("query_id"), col("rank"), col("doc_id"), col("score_e6"))
       .orderBy(col("query_id"), col("rank"))
-    Localize(out, caches: _*)
   }
 
   /** IR-metrics audit of the PRF pipeline — did expansion actually help?
@@ -1411,8 +1400,8 @@ object TextStats extends QueryPack {
     * `1e6 div rank` (0 when no relevant doc enters the cut), precision as
     * hits·1e6 div k — so the eval hash-gates like [[Similarity.annRecallEval]].
     */
-  def retrievalMrrEval(s: SparkSession, dir: String): DataFrame = {
-    val (caches, r1, r2) = prfPipeline(s, dir)
+  def retrievalMrrEval(s: SparkSession, dir: String): DataFrame = Localize { keep =>
+    val (r1, r2) = prfPipeline(keep, s, dir)
     // materialize r1 BEFORE the final action: the eval tree scans it twice
     // (round-1 leg + round-2's feedback broadcast) and an unmaterialized
     // cache is computed by both consumers' concurrent tasks
@@ -1434,9 +1423,8 @@ object TextStats extends QueryPack {
           when(col("first_rel") > 0, expr("1000000 div first_rel")).otherwise(0L)
             .as(s"rr_${tag}_e6"),
           expr(s"hits * 1000000 div $PrfK").as(s"prec_${tag}_ppm"))
-    val out = eval(r1, "bm25").join(eval(r2, "prf"), "query_id")
+    eval(r1, "bm25").join(eval(r2, "prf"), "query_id")
       .orderBy(col("query_id"))
-    Localize(out, caches: _*)
   }
 
   /** shared PRF oracle CTE chain through both rankings (r1 = BM25-only,

@@ -34,6 +34,19 @@ import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStag
   * depend on the cache surviving; unpersist still goes through the
   * ORIGINAL cached DataFrame handle.
   *
+  * A query's loop does not call it directly: the round step of its
+  * [[graft.Localize]] scope caches, materializes and rebases each round,
+  * and the scope releases the cache behind a handle (`drop` for a dead
+  * predecessor, everything else on exit):
+  *
+  * {{{
+  *   Localize { keep =>
+  *     var cur = keep.round(0, seed)
+  *     for (t <- rounds) { val next = keep.round(t, f(cur)); keep.drop(cur); cur = next }
+  *     result(cur)
+  *   }
+  * }}}
+  *
   * PARTITIONING CARRY (r14): `LogicalRDD.fromDataset` reads
   * `executedPlan.outputPartitioning`, but under AQE the executed plan is
   * an [[AdaptiveSparkPlanExec]] whose partitioning reports

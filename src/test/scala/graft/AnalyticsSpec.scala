@@ -656,14 +656,15 @@ class AnalyticsSpec extends SparkSpec {
     val (rows, plan) =
       try {
         // the registered query localizes (collect + cache release), so the
-        // plan is pinned off the INNER lazy frame (the plan seam)
-        val (df, caches) = Analytics.graphInfluenceInner(spark, sfDir)
-        // collect BEFORE reading the plan: same QueryExecution, AQE final
+        // plan is pinned off the frame it collects (the scope's observer)
+        var inner: org.apache.spark.sql.DataFrame = null
+        val r = Localize.observing {
+          case (None, df) => inner = df
+          case _          => ()
+        }(Analytics.graphInfluence(spark, sfDir).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+        // read the plan AFTER the collect: same QueryExecution, AQE final
         // plan (CLAUDE.md plan rules)
-        val r = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-        val p = df.queryExecution.executedPlan.toString
-        caches.foreach(_.unpersist(blocking = true))
-        (r, p)
+        (r, inner.queryExecution.executedPlan.toString)
       } finally spark.conf.unset("spark.graft.graph.broadcastVertices")
     assert(!plan.contains("BroadcastHashJoin") && !plan.contains("BroadcastExchange"),
       s"broadcast survived non-broadcast mode:\n$plan")

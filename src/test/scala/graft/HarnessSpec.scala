@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 
-/** The shared run loop of Bench and the `perf` verb ([[Harness.timed]]). */
+/** The shared run loop of Bench and the `perf` verb ([[Harness.timed]]),
+  * and Bench's headline.
+  */
 class HarnessSpec extends SparkSpec {
 
   test("timed returns a positive duration for a registered query") {
@@ -14,5 +16,10 @@ class HarnessSpec extends SparkSpec {
       .select(when(col("id") === 7, raise_error(lit("boom"))).otherwise(col("id")).as("x"))
     val e = intercept[Exception](Harness.timed(failing))
     assert(Harness.reason(e).contains("boom"), Harness.reason(e))
+  }
+
+  test("Bench's headline names only registered queries") {
+    val unknown = Bench.Headline.filterNot(SparkEntry.queries.contains)
+    assert(unknown.isEmpty, s"headline names unregistered queries: ${unknown.mkString(", ")}")
   }
 }

@@ -194,7 +194,7 @@ class PlanSpec extends SparkSpec {
     // the r7 regression (an out-degree re-join inside every pagerank round)
     // was invisible to whole-query plan audits — each round is a separate
     // job whose plan closes over the PREVIOUS round as a cached scan. The
-    // roundAudit seam hands every materialized round frame to the spec, and
+    // Localize observer hands every materialized round frame to the spec, and
     // the pin is the LIVE join count (liveJoinCount stops at cache
     // boundaries; plan toString prints cached build plans recursively, so a
     // string count would charge round h with all rounds < h too):
@@ -202,15 +202,12 @@ class PlanSpec extends SparkSpec {
     // visited anti-join. Anything third fails.
     spark.sqlContext.clearCache()
     val rounds = scala.collection.mutable.ArrayBuffer[(String, Int, Int)]()
-    graft.analytics.Graph.roundAudit = (q, t, df) => {
-      rounds += ((q, t, PlanAudit.roundJoinCount(df)))
-      ()
+    Seq("graph_pagerank", "graph_harmonic", "graph_lpa").foreach { q =>
+      Localize.observing {
+        case (Some(t), df) => rounds += ((q, t, PlanAudit.roundJoinCount(df))); ()
+        case (None, _)     => ()
+      }(SparkEntry.queries(q)(spark, sfDir).collect())
     }
-    try {
-      SparkEntry.queries("graph_pagerank")(spark, sfDir).collect()
-      SparkEntry.queries("graph_harmonic")(spark, sfDir).collect()
-      SparkEntry.queries("graph_lpa")(spark, sfDir).collect()
-    } finally graft.analytics.Graph.roundAudit = (_, _, _) => ()
     val pr = rounds.filter(_._1 == "graph_pagerank")
     assert(pr.size == graft.analytics.Graph.PrIters, s"expected every round audited, got $pr")
     pr.foreach { case (_, t, j) =>

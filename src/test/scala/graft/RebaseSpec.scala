@@ -8,7 +8,7 @@ import org.apache.spark.storage.StorageLevel
   * (r13 advice item 2): row equality, preserved outputPartitioning (no
   * re-shuffle in a downstream key-join), and replay after the origin
   * cache is unpersisted. Also pins the [[Memo]] lifecycle seam and the
-  * [[Localize]] release.
+  * [[Localize]] scope's release.
   */
 class RebaseSpec extends SparkSpec {
 
@@ -51,9 +51,9 @@ class RebaseSpec extends SparkSpec {
   }
 
   test("memo releaseAll unpersists and forgets; next access rebuilds") {
-    val map = new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
+    val base = Memo.base()
     var builds = 0
-    def get() = Memo.cached(map, "k") { _ =>
+    def get() = base("k") { _ =>
       builds += 1
       import spark.implicits._
       (1 to 10).toDF("x")
@@ -65,16 +65,15 @@ class RebaseSpec extends SparkSpec {
     Memo.releaseAll()
     assert(a.storageLevel == StorageLevel.NONE,
       "releaseAll must unpersist the entry")
-    assert(map.isEmpty, "releaseAll must clear the memo map")
+    assert(base.isEmpty, "releaseAll must clear the memo map")
     val b = get()
     assert(builds == 2 && b.count() == 10, "next access must rebuild + re-memoize")
   }
 
   test("memo releaseAll leaves no dedup cache pinned, the shingle index included") {
-    // start with an empty registered memo map: a fresh map must still
-    // register although it equals that one by content
-    Memo.cached(new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame](),
-      "k")(_ => spark.range(1).toDF())
+    // start with an empty registered memo base: a fresh base must still
+    // register beside it
+    Memo.base()("k")(_ => spark.range(1).toDF())
     Memo.releaseAll()
     spark.catalog.clearCache()
     assert(llm.Dedup.jaccard(spark, sfDir).collect().nonEmpty)
@@ -93,21 +92,8 @@ class RebaseSpec extends SparkSpec {
       "an indicator base outlived Memo.releaseAll")
   }
 
-  // every query that ends in Localize
-  private val localizedQueries = Seq(
-    "cv_kfold_ols", "token_budget_plan", "isotonic_calibration",
-    "source_signature_terms", "text_prf_search", "retrieval_mrr_eval",
-    "user_stickiness", "cohort_ltv", "window_funnel", "graph_influence",
-    "a17_conformal", "mad_outliers", "winsorized_stats",
-    "assoc_rules", "assoc_triples", "cf_item_recs", "ts_backtest", "ts_pinball",
-    "cluster_grid_density", "recursive_sql_reach", "tree_depth2",
-    "ts_matrix_profile", "graph_degree_profile", "kmv_set_ops",
-    "graph_pagerank", "graph_ppr_recs", "graph_reach", "graph_harmonic",
-    "graph_assortativity", "graph_triangles", "graph_sssp", "graph_lpa",
-    "graph_link_prediction")
-
-  test("memo releaseAll leaves no cache pinned after a localized query") {
-    val pinning = localizedQueries.filterNot { name =>
+  test("memo releaseAll leaves no cache pinned after any registered query") {
+    val pinning = SparkEntry.queries.keys.toSeq.sorted.filterNot { name =>
       Memo.releaseAll()
       spark.catalog.clearCache()
       SparkEntry.queries(name)(spark, sfDir).collect()
@@ -119,18 +105,45 @@ class RebaseSpec extends SparkSpec {
   }
 
   test("Localize returns the rows and releases; a failed collect still releases") {
-    def pinned() = { val c = spark.range(10).toDF().cache(); c.count(); c }
-    val kept = pinned()
-    assert(kept.storageLevel != StorageLevel.NONE)
-    assert(Localize(spark.range(3).toDF(), kept).collect().map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L))
+    def pinned(keep: Localize.Scope) = { val c = keep(spark.range(10).toDF()); c.count(); c }
+    var kept: org.apache.spark.sql.DataFrame = null
+    val rows = Localize { keep =>
+      kept = pinned(keep)
+      assert(kept.storageLevel != StorageLevel.NONE)
+      spark.range(3).toDF()
+    }
+    assert(rows.collect().map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L))
     assert(kept.storageLevel == StorageLevel.NONE, "Localize must release its caches")
 
-    val failed = pinned()
-    val e = intercept[Exception](
-      Localize(spark.range(3).select(raise_error(lit("localize-collect-failed"))), failed))
+    var failed: org.apache.spark.sql.DataFrame = null
+    val e = intercept[Exception](Localize { keep =>
+      failed = pinned(keep)
+      spark.range(3).select(raise_error(lit("localize-collect-failed")))
+    })
     assert(e.getMessage.contains("localize-collect-failed"),
       s"the collect's own error must reach the caller, got: $e")
     assert(failed.storageLevel == StorageLevel.NONE,
       "a failed collect left its cache pinned")
+  }
+
+  test("a scope's round is observed and rebased, and drop releases it at once") {
+    val seen = scala.collection.mutable.ArrayBuffer[Option[Int]]()
+    var first, second: org.apache.spark.sql.DataFrame = null
+    val rows = Localize.observing((t, _) => seen += t) {
+      Localize { keep =>
+        first = hashPartitioned()
+        val h1 = keep.round(1, first)
+        assert(first.storageLevel != StorageLevel.NONE, "a round must stay cached")
+        second = h1.groupBy("k").agg(sum("v").as("v"))
+        val h2 = keep.round(2, second)
+        keep.drop(h1)
+        assert(first.storageLevel == StorageLevel.NONE,
+          "drop must release the dead round before the query ends")
+        h2.agg(count(lit(1)).as("n"), sum("v").as("total"))
+      }.collect().toSeq
+    }
+    assert(rows.map(r => (r.getLong(0), r.getLong(1))) == Seq((37L, 500500L)))
+    assert(seen == Seq(Some(1), Some(2), None), s"observer saw $seen")
+    assert(second.storageLevel == StorageLevel.NONE, "the scope must release the last round")
   }
 }
