@@ -2315,6 +2315,7 @@ object Analytics extends QueryPack {
     def step(t: String) = ev.filter(col("event_type") === t)
       .select(col("user_id").as(s"u_$t"), col("ts").as(s"ts_$t"))
     val views = keep(step("view"))
+    views.count() // scanned by u1 and both join legs: materialize once
     // depth 2: a click strictly after the view, within the window of the view
     val d2 = views.join(step("click"),
         col("u_view") === col("u_click") &&

@@ -173,6 +173,8 @@ object PortableSketch extends QueryPack {
     val (va, vb) = (keep(vals("R")), keep(vals("A")))
     val (ha, hb) = (hashes(va), hashes(vb))
     val (ska, skb) = (keep(sketch(ha)), keep(sketch(hb)))
+    // every kept frame feeds several concurrent legs: materialize each once
+    Seq(va, vb, ska, skb).foreach(_.count())
     val mu = sketch(ska.union(skb).distinct())
     def stats(sk: DataFrame, n: String, k: String) =
       sk.agg(count(lit(1)).as(n), max(col("h")).as(k))

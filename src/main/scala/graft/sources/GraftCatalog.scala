@@ -18,6 +18,8 @@ import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterF
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructField, StructType, TimestampType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
+import TableLog.Stats.Utf8
 
 /** DSv2 `TableCatalog` over a directory of [[TableLog]] tables — the SQL
   * face of the engine's own storage, completing the serving story (the
@@ -842,10 +844,8 @@ private[sources] class GraftLogWriteBuilder(path: String)
         // bucket KEY stats ride along when the type is sidecar-indexable:
         // within a bucket files sort by key, so point lookups skip too
         val statCols = (clusterStatCols ++ bucket.toSeq.map(_._1).filter(c =>
-          data.schema.find(_.name.equalsIgnoreCase(c)).exists(_.dataType match {
-            case LongType | IntegerType | StringType => true
-            case _ => false
-          }))).distinct
+          data.schema.find(_.name.equalsIgnoreCase(c))
+            .exists(f => TableLog.Stats.indexable(f.dataType)))).distinct
         if (overwrite) TableLog.commitOverwrite(clustered, path, statCols, bucket)
         else TableLog.commitAppend(clustered, path, statCols, bucket)
         ()
@@ -984,12 +984,8 @@ private[sources] class GraftLogScanBuilder(path: String, v: Long, full: StructTy
     // unbounded on that side
     val rgStrRanges =
       scala.collection.mutable.Map.empty[String, (Option[String], Option[String])]
-    def utf8Max(a: String, b: String): String =
-      if (TableLog.cmpUtf8(a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) >= 0) a else b
-    def utf8Min(a: String, b: String): String =
-      if (TableLog.cmpUtf8(a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-        b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) <= 0) a else b
+    def utf8Max(a: String, b: String): String = if (Utf8.gteq(Utf8(a), Utf8(b))) a else b
+    def utf8Min(a: String, b: String): String = if (Utf8.lteq(Utf8(a), Utf8(b))) a else b
     def noteStrRange(c: String, lo: Option[String], hi: Option[String]): Unit =
       if (full.fieldNames.exists(_.equalsIgnoreCase(c))) {
         val (cl, ch) = rgStrRanges.getOrElse(c, (None: Option[String], None: Option[String]))
@@ -1016,8 +1012,9 @@ private[sources] class GraftLogScanBuilder(path: String, v: Long, full: StructTy
       case s: String => Some(s)
       case other => longOf(other).map(_.toString)
     }
-    def statRange(c: String, lo: Long, hi: Long): Boolean =
-      TableLog.hasStatsFor(path, v, c) && {
+    def statRange[T](c: String, lo: Option[T], hi: Option[T])(
+        implicit kind: TableLog.Stats.Kind[T]): Boolean =
+      TableLog.hasStatsFor(path, v, c, kind) && {
         kept = kept.intersect(
           TableLog.prunedFiles(path, c, lo, hi, Some(v))._1.toSet)
         true
@@ -1028,12 +1025,8 @@ private[sources] class GraftLogScanBuilder(path: String, v: Long, full: StructTy
       case s: String => Some(s)
       case _ => None
     }
-    def statRangeStr(c: String, lo: Option[String], hi: Option[String]): Boolean =
-      TableLog.hasStatsForStr(path, v, c) && {
-        kept = kept.intersect(
-          TableLog.prunedFilesStr(path, c, lo, hi, Some(v))._1.toSet)
-        true
-      }
+    def strRange(c: String, lo: Option[String], hi: Option[String]): Boolean =
+      statRange(c, lo.map(Utf8(_)), hi.map(Utf8(_)))
     def bloomEq(c: String, s: String): Boolean =
       TableLog.hasBloomFor(path, c) && {
         kept = kept.intersect(
@@ -1101,29 +1094,29 @@ private[sources] class GraftLogScanBuilder(path: String, v: Long, full: StructTy
       }
       val usable = f match {
         case EqualTo(c, x) =>
-          val st = longOf(x).exists(n => statRange(c, n, n)) ||
-            strOnly(x).exists(s => statRangeStr(c, Some(s), Some(s)))
+          val st = longOf(x).exists(n => statRange(c, Some(n), Some(n))) ||
+            strOnly(x).exists(s => strRange(c, Some(s), Some(s)))
           val bl = strOf(x).exists(s => bloomEq(c, s))
           val bk = bucketEq(c, Seq(x)) // eager: applies beside stats/bloom
           st || bl || bk
         case GreaterThan(c, x) =>
-          longOf(x).exists(n => statRange(c, n, Long.MaxValue)) ||
-            strOnly(x).exists(s => statRangeStr(c, Some(s), None))
+          longOf(x).exists(n => statRange(c, Some(n), None)) ||
+            strOnly(x).exists(s => strRange(c, Some(s), None))
         case GreaterThanOrEqual(c, x) =>
-          longOf(x).exists(n => statRange(c, n, Long.MaxValue)) ||
-            strOnly(x).exists(s => statRangeStr(c, Some(s), None))
+          longOf(x).exists(n => statRange(c, Some(n), None)) ||
+            strOnly(x).exists(s => strRange(c, Some(s), None))
         case LessThan(c, x) =>
-          longOf(x).exists(n => statRange(c, Long.MinValue, n)) ||
-            strOnly(x).exists(s => statRangeStr(c, None, Some(s)))
+          longOf(x).exists(n => statRange(c, None, Some(n))) ||
+            strOnly(x).exists(s => strRange(c, None, Some(s)))
         case LessThanOrEqual(c, x) =>
-          longOf(x).exists(n => statRange(c, Long.MinValue, n)) ||
-            strOnly(x).exists(s => statRangeStr(c, None, Some(s)))
+          longOf(x).exists(n => statRange(c, None, Some(n))) ||
+            strOnly(x).exists(s => strRange(c, None, Some(s)))
         case In(c, xs) if xs.nonEmpty =>
           val ns = xs.flatMap(longOf)
-          val st = ns.length == xs.length && statRange(c, ns.min, ns.max)
+          val st = ns.length == xs.length && statRange(c, Some(ns.min), Some(ns.max))
           val ss0 = xs.flatMap(strOnly)
           val sst = ss0.length == xs.length &&
-            statRangeStr(c, Some(ss0.reduce(utf8Min)), Some(ss0.reduce(utf8Max)))
+            strRange(c, Some(ss0.reduce(utf8Min)), Some(ss0.reduce(utf8Max)))
           val bk = bucketEq(c, xs.toSeq) // per-value bucket union
           val ss = xs.flatMap(strOf)
           val bl = ss.length == xs.length && TableLog.hasBloomFor(path, c) && {
@@ -1135,7 +1128,7 @@ private[sources] class GraftLogScanBuilder(path: String, v: Long, full: StructTy
           }
           st || sst || bl || bk
         case StringStartsWith(c, p) if p.nonEmpty =>
-          statRangeStr(c, Some(p), TableLog.prefixUpper(p))
+          strRange(c, Some(p), TableLog.prefixUpper(p))
         case _ => false
       }
       if (usable) used += f
@@ -1177,32 +1170,22 @@ private[sources] class GraftLogScanBuilder(path: String, v: Long, full: StructTy
       case org.apache.spark.sql.types.ByteType => Some(x.toByte)
       case _ => None // stats are long-valued; other types never indexed
     }
+    // a STRING column's extremes are already Spark's string values
+    def extremes(f: StructField): Option[(Any, Any)] = f.dataType match {
+      case StringType => TableLog.statBounds[UTF8String](path, v, f.name)
+      case t => TableLog.statBounds[Long](path, v, f.name).flatMap { case (lo, hi) =>
+        for (a <- narrowed(lo, t); b <- narrowed(hi, t)) yield (a, b) }
+    }
     val cols = agg.aggregateExpressions.toSeq.map {
       case _: CountStar =>
         TableLog.metadataCount(path, Some(v))
           .map(n => (StructField("count(*)", LongType, nullable = false), n: Any))
       case m: org.apache.spark.sql.connector.expressions.aggregate.Min =>
-        colOf(m.column).flatMap { f =>
-          f.dataType match {
-            case StringType => TableLog.statBoundsStr(path, v, f.name).map(b =>
-              (StructField(s"min(${f.name})", StringType, nullable = true),
-                org.apache.spark.unsafe.types.UTF8String.fromString(b._1): Any))
-            case _ => TableLog.statBounds(path, v, f.name).flatMap(b =>
-              narrowed(b._1, f.dataType).map(x =>
-                (StructField(s"min(${f.name})", f.dataType, nullable = true), x)))
-          }
-        }
+        colOf(m.column).flatMap(f => extremes(f).map(b =>
+          (StructField(s"min(${f.name})", f.dataType, nullable = true), b._1)))
       case m: org.apache.spark.sql.connector.expressions.aggregate.Max =>
-        colOf(m.column).flatMap { f =>
-          f.dataType match {
-            case StringType => TableLog.statBoundsStr(path, v, f.name).map(b =>
-              (StructField(s"max(${f.name})", StringType, nullable = true),
-                org.apache.spark.unsafe.types.UTF8String.fromString(b._2): Any))
-            case _ => TableLog.statBounds(path, v, f.name).flatMap(b =>
-              narrowed(b._2, f.dataType).map(x =>
-                (StructField(s"max(${f.name})", f.dataType, nullable = true), x)))
-          }
-        }
+        colOf(m.column).flatMap(f => extremes(f).map(b =>
+          (StructField(s"max(${f.name})", f.dataType, nullable = true), b._2)))
       case _ => None
     }
     if (cols.exists(_.isEmpty)) None
@@ -1398,32 +1381,19 @@ private[sources] class GraftLogScan(path: String, v: Long, required: StructType,
       }
     }
     def keepForEvidence(c: String, vals: Seq[Any]): Option[Set[String]] = {
-      val longs = vals.flatMap(longOf(_))
-      if (longs.length == vals.length && TableLog.hasStatsFor(path, v, c)) {
-        // per-value point ranges for small sets; one [min, max] envelope
-        // for huge IN lists (driver-side lookups must stay bounded)
-        val kept =
-          if (longs.length > 64)
-            TableLog.prunedFiles(path, c, longs.min, longs.max, Some(v))._1.toSet
-          else longs.toSet.flatMap((n: Long) =>
-            TableLog.prunedFiles(path, c, n, n, Some(v))._1.toSet)
-        Some(kept)
-      } else {
-        val raw = vals.collect { case s: org.apache.spark.unsafe.types.UTF8String => s.toString }
-        if (raw.length == vals.length && TableLog.hasStatsForStr(path, v, c)) {
-          // string STAT ranges: per-value point lookups for small build
-          // sets, one [min, max] envelope (UTF-8 byte order) for huge ones
-          val kept =
-            if (raw.length > 64) {
-              // hex is order-preserving, so sorting by it sorts in UTF-8
-              // byte order — the sidecar's collation
-              val sorted = raw.sortBy(TableLog.hexUtf8)
-              TableLog.prunedFilesStr(
-                path, c, Some(sorted.head), Some(sorted.last), Some(v))._1.toSet
-            } else raw.toSet.flatMap((s: String) =>
-              TableLog.prunedFilesStr(path, c, Some(s), Some(s), Some(v))._1.toSet)
-          Some(kept)
-        } else {
+      // STAT ranges in the values' own kind: per-value point ranges for
+      // small sets, one [min, max] envelope for huge IN lists (driver-side
+      // lookups must stay bounded)
+      def byStats[T](ps: Seq[T])(implicit kind: TableLog.Stats.Kind[T]): Option[Set[String]] =
+        if (ps.length == vals.length && TableLog.hasStatsFor(path, v, c, kind)) Some(
+          if (ps.length > 64)
+            TableLog.prunedFiles(path, c, Some(ps.min(kind)), Some(ps.max(kind)), Some(v))._1.toSet
+          else ps.toSet.flatMap((p: T) =>
+            TableLog.prunedFiles(path, c, Some(p), Some(p), Some(v))._1))
+        else None
+      byStats(vals.flatMap(longOf(_)))
+        .orElse(byStats(vals.collect { case s: UTF8String => s }))
+        .orElse {
           val strs = vals.flatMap(strOf(_))
           // one sidecar read tests every value (bloomFilesForAny), so the
           // cap only bounds the driver-side md5 hashing of the key set
@@ -1432,7 +1402,6 @@ private[sources] class GraftLogScan(path: String, v: Long, required: StructType,
             Some(TableLog.bloomFilesForAny(path, c, strs.distinct, Some(v)).toSet)
           else None
         }
-      }
     }
     val keeps = predicates.flatMap { p =>
       val vals = p.children().collect { case l: Literal[_] => l.value(): Any }

@@ -23,6 +23,7 @@ import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroB
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import TableLog.Stats.Utf8
 
 /** Structured-streaming CHANGE DATA FEED source over a [[TableLog]] table —
   * `spark.readStream.format("graft.sources.TableChangeSource")
@@ -510,15 +511,13 @@ private[sources] class ChangeFileReader(
   private val fileRanges: Array[(String, Long, Long)] =
     if (p.only != null) Array.empty
     else p.ranges.map { case (c, lo, hi) => (fileFieldName(c).getOrElse(""), lo, hi) }
-  /** string ranges resolved to file-side names, bounds decoded to UTF-8
-    * bytes once (None = unbounded side)
+  /** string ranges resolved to file-side names, bounds encoded to UTF-8
+    * once (None = unbounded side)
     */
-  private val fileStrRanges: Array[(String, Option[Array[Byte]], Option[Array[Byte]])] =
+  private val fileStrRanges: Array[(String, Option[UTF8String], Option[UTF8String])] =
     if (p.only != null) Array.empty
     else p.strRanges.map { case (c, lo, hi) =>
-      (fileFieldName(c).getOrElse(""),
-        lo.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
-        hi.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      (fileFieldName(c).getOrElse(""), lo.map(Utf8(_)), hi.map(Utf8(_)))
     }
 
   private def blockMayMatch(b: org.apache.parquet.hadoop.metadata.BlockMetaData): Boolean =
@@ -553,10 +552,9 @@ private[sources] class ChangeFileReader(
             case s: org.apache.parquet.column.statistics.BinaryStatistics =>
               // unsigned-lex binary order == UTF8String order; truncated
               // bounds (writer opt-in) only WIDEN, so keep/skip stays sound
-              val mn = s.genericGetMin.getBytes
-              val mx = s.genericGetMax.getBytes
-              lo.forall(l => TableLog.cmpUtf8(mx, l) >= 0) &&
-                hi.forall(h => TableLog.cmpUtf8(mn, h) <= 0)
+              val mn = UTF8String.fromBytes(s.genericGetMin.getBytes)
+              val mx = UTF8String.fromBytes(s.genericGetMax.getBytes)
+              lo.forall(Utf8.gteq(mx, _)) && hi.forall(Utf8.lteq(mn, _))
             case _ => true // non-binary stats under a string range: keep
           }
         }

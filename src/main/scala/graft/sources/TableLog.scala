@@ -3,6 +3,8 @@ package graft.sources
 import graft.{Portable, Q, QueryPack, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
@@ -273,12 +275,7 @@ object TableLog extends QueryPack {
       cluster.foreach(c => require(df.schema.fieldNames.exists(_.equalsIgnoreCase(c)),
         s"$ClusterByProp column $c not in write schema ${df.schema.fieldNames.mkString(",")}"))
       val statCols = cluster.filter { c =>
-        df.schema.find(_.name.equalsIgnoreCase(c)).exists(_.dataType match {
-          case org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.StringType => true
-          case _ => false
-        })
+        df.schema.find(_.name.equalsIgnoreCase(c)).exists(f => Stats.indexable(f.dataType))
       }
       val ranged = tableProps(table).get(ClusterFilesProp).map(_.trim.toInt) match {
         case Some(n) => df.repartitionByRange(n, cluster.map(col): _*)
@@ -450,7 +447,7 @@ object TableLog extends QueryPack {
     * the link wins version `v`: a pre-publish sidecar could clobber a
     * concurrent winner's, and a crash in between just leaves a statless
     * version, which [[readPruned]] keeps whole and later commits heal
-    * ([[latestStatsLines]]).
+    * ([[latestStats]]).
     *
     * OPTIMISTIC CONCURRENCY: on Linux, rename() silently REPLACES an
     * existing target — two writers that both computed v = n+1 would have
@@ -469,7 +466,7 @@ object TableLog extends QueryPack {
 
   private[graft] def publish(
       table: String, v: Long, files: Seq[String], txn: Option[String] = None,
-      dvs: Seq[String] = Nil, stats: Seq[String] = Nil): Long = {
+      dvs: Seq[String] = Nil, stats: Seq[Stats.Stat[_]] = Nil): Long = {
     Files.createDirectories(logDir(table))
     val tmp = logDir(table).resolve(s".v$v.${java.util.UUID.randomUUID()}.tmp")
     val lines = txn.map(t => s"#txn:$t").toSeq ++ dvs.map(d => s"#dv:$d") ++ files
@@ -480,26 +477,24 @@ object TableLog extends QueryPack {
       throw new CommitConflict(table, v)
     }
     Files.deleteIfExists(tmp)
-    if (stats.nonEmpty) {
-      Files.write(statsFile(table, v), stats.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    }
+    writeStats(table, v, stats)
     v
   }
 
   /** what version `v` hands to the next commit: its live files (less
     * `drop`), its DVs, and the stats lines of exactly those files, taken
-    * from the newest ancestor that has a sidecar ([[latestStatsLines]]) so
+    * from the newest ancestor that has a sidecar ([[latestStats]]) so
     * a statless version never erases the index and dead-file stats never
     * carry forward
     */
-  private final case class Carried(files: Seq[String], dvs: Seq[String], stats: Seq[String])
+  private final case class Carried(files: Seq[String], dvs: Seq[String], stats: Seq[Stats.Stat[_]])
   private val NothingCarried = Carried(Nil, Nil, Nil)
 
   private def carried(table: String, v: Long, drop: Set[String] = Set.empty): Carried = {
     val files = liveFiles(table, v).filterNot(drop)
     val live = files.toSet
     Carried(files, dvFiles(table, v),
-      latestStatsLines(table, v).filter(l => live(l.takeWhile(_ != '|'))))
+      latestStats(table, v).filter(s => live(s.file)))
   }
 
   /** Publish data files written EXECUTOR-SIDE (a DSv2 `DataWriter` fleet —
@@ -631,9 +626,10 @@ object TableLog extends QueryPack {
       bucketBy: Option[(String, Int)] = None): Option[Long] =
     if (txn.exists(committedTxns(table).contains)) None
     else {
+      val kinds = statKinds(df.schema, statCols)
       val moved = writeConstrained(df, table, bucketBy)
       commitFiles(table, moved, overwrite, txn,
-        gatherStats(df.sparkSession, table, moved, statCols))
+        gatherStats(df.sparkSession, table, moved, kinds))
     }
 
   /** The one commit body: publish ALREADY-WRITTEN `moved` files (plus their
@@ -648,7 +644,7 @@ object TableLog extends QueryPack {
     */
   private[sources] def commitFiles(
       table: String, moved: Seq[String], overwrite: Boolean,
-      txn: Option[String] = None, stats: Seq[String] = Nil): Option[Long] = {
+      txn: Option[String] = None, stats: Seq[Stats.Stat[_]] = Nil): Option[Long] = {
     val r = withRetry(table) { v =>
       if (txn.exists(committedTxns(table).contains)) AlreadyCommitted
       else {
@@ -679,15 +675,6 @@ object TableLog extends QueryPack {
   private[sources] def fileRowCounts(table: String): Map[String, Long] =
     rowCounts(table)
 
-  /** Global [min, max] of `col` at version `v` from the stats sidecar
-    * alone — defined ONLY when every live file carries a stat line for the
-    * column (an uncovered file might hold the true extreme; all-null files
-    * are indistinguishable from never-indexed ones, so they also block)
-    * AND the version carries no deletion vectors (a DV might have deleted
-    * the extreme row). Per-file stats are over non-null values, exactly
-    * SQL min/max semantics. This is what answers `SELECT min(c), max(c)`
-    * without opening a data file.
-    */
   /** live files that can CONTRIBUTE an extreme: a file RECORDED as zero-row
     * (CREATE TABLE's schema-bearing empty v0 file, an evolution commit's
     * widening file) holds no values, so full-coverage checks exempt it —
@@ -699,88 +686,136 @@ object TableLog extends QueryPack {
     liveFiles(table, v).filterNot(f => counts.get(f).contains(0L))
   }
 
-  private[sources] def statBounds(table: String, v: Long, col: String): Option[(Long, Long)] = {
-    if (dvFiles(table, v).nonEmpty) return None
-    val live = liveNonEmpty(table, v)
-    if (live.isEmpty) return None
-    val perFile = latestStatsLines(table, v).flatMap { l =>
-      l.split('|') match {
-        case Array(f, c, lo, hi) if c == col => Some(f -> (lo.toLong, hi.toLong))
-        case _ => None
-      }
-    }.toMap
-    if (!live.forall(perFile.contains)) None
-    else {
-      val bs = live.map(perFile)
-      Some((bs.map(_._1).min, bs.map(_._2).max))
-    }
-  }
-
-  /** [[statBounds]] for STRING-valued stat columns — global [min, max] from
-    * the sidecar alone, under the same soundness conditions (full per-file
-    * coverage, zero DVs). Comparison is unsigned UTF-8 byte order, which IS
-    * Spark's string min/max order, so the answer equals `SELECT min(c),
-    * max(c)` exactly.
+  /** Global [min, max] of `col` at version `v` from the stats sidecar
+    * alone, in the probe's kind — defined ONLY when every live file carries
+    * a stat line of that kind for the column (an uncovered file might hold
+    * the true extreme; all-null files are indistinguishable from
+    * never-indexed ones, so they also block) AND the version carries no
+    * deletion vectors (a DV might have deleted the extreme row). Per-file
+    * stats are over non-null values and each kind orders as Spark's
+    * min/max does, so the answer equals `SELECT min(c), max(c)` exactly,
+    * without opening a data file.
     */
-  private[sources] def statBoundsStr(table: String, v: Long, col: String): Option[(String, String)] = {
+  private[sources] def statBounds[T](table: String, v: Long, col: String)(
+      implicit kind: Stats.Kind[T]): Option[(T, T)] = {
     if (dvFiles(table, v).nonEmpty) return None
     val live = liveNonEmpty(table, v)
     if (live.isEmpty) return None
-    val perFile = latestStatsLines(table, v).flatMap { l =>
-      l.split('|') match {
-        case Array(f, c, "S", lo, hi) if c == col =>
-          Some(f -> (unhexBytes(lo), unhexBytes(hi)))
-        case _ => None
-      }
-    }.toMap
+    val perFile = Stats.ranges(latestStats(table, v), col, kind)
     if (!live.forall(perFile.contains)) None
     else {
       val bs = live.map(perFile)
-      val mn = bs.map(_._1).reduce((a, b) => if (cmpUtf8(a, b) <= 0) a else b)
-      val mx = bs.map(_._2).reduce((a, b) => if (cmpUtf8(a, b) >= 0) a else b)
-      Some((new String(mn, StandardCharsets.UTF_8),
-        new String(mx, StandardCharsets.UTF_8)))
+      Some((bs.map(_._1).min(kind), bs.map(_._2).max(kind)))
     }
   }
 
-  /** per-version stats sidecar: one `relpath|col|min|max` line per (file,
-    * stat column) for LONG-valued columns, and one `relpath|col|S|hexmin|
-    * hexmax` line for STRING-valued ones (bounds hex-encode the UTF-8
-    * bytes — sidecar-safe against '|'/newlines, and ORDER-PRESERVING:
-    * unsigned byte-wise comparison of UTF-8 equals Spark's `UTF8String`
-    * ordering AND parquet's unsigned lexicographic binary order, so the
-    * sidecar, the engine, and the footers all compare in one collation).
-    * Written by [[publish]] AFTER the manifest link wins (a pre-publish
-    * write could clobber a concurrent winner's sidecar), so a crash in
-    * that window yields a STATLESS version — sound (readPruned keeps all
-    * files) and self-healing: later commits recover stats from the newest
-    * ancestor that has a sidecar ([[latestStatsLines]]).
+  /** The per-file [min, max] stats sidecar — the table's skip index — and
+    * the one owner of its line format: how a file's column range is
+    * written ([[render]]), read ([[parse]]) and compared ([[Kind]]). One
+    * line per (file, stat column): `relpath|col|min|max` for LONG-valued
+    * columns, and `relpath|col|S|hexmin|hexmax` for STRING-valued ones
+    * (bounds hex-encode the UTF-8 bytes — sidecar-safe against
+    * '|'/newlines, and ORDER-PRESERVING: unsigned byte-wise comparison of
+    * UTF-8 equals Spark's `UTF8String` ordering AND parquet's unsigned
+    * lexicographic binary order, so the sidecar, the engine, and the
+    * footers all compare in one collation). Every reader takes a typed
+    * probe, so a probe of one kind never reads a line of the other — a
+    * number rendered as text would compare in the wrong collation.
+    */
+  object Stats {
+    /** a bound's kind: how its values render in a sidecar line, and their order */
+    sealed abstract class Kind[T] extends Ordering[T] {
+      private[Stats] def show(t: T): String
+      private[Stats] def read(s: String): T
+      /** a min/max value Spark returned for a column of this kind */
+      private[Stats] def of(x: Any): T
+      /** `file`'s range of `col` from the min/max values Spark returned */
+      private[sources] def stat(file: String, col: String, lo: Any, hi: Any): Stat[T] =
+        Stat(file, col, this, of(lo), of(hi))
+    }
+    /** LONG and INT (widened) columns */
+    case object Int64 extends Kind[Long] {
+      def compare(a: Long, b: Long): Int = java.lang.Long.compare(a, b)
+      private[Stats] def show(t: Long): String = t.toString
+      private[Stats] def read(s: String): Long = s.toLong
+      private[Stats] def of(x: Any): Long = x.asInstanceOf[Number].longValue
+    }
+    /** STRING columns, ordered as unsigned UTF-8 bytes */
+    case object Utf8 extends Kind[UTF8String] {
+      def apply(s: String): UTF8String = UTF8String.fromString(s)
+      def compare(a: UTF8String, b: UTF8String): Int = a.binaryCompare(b)
+      private[Stats] def show(t: UTF8String): String =
+        t.getBytes.map(b => f"${b & 0xff}%02x").mkString
+      private[Stats] def read(s: String): UTF8String =
+        UTF8String.fromBytes(s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray)
+      private[Stats] def of(x: Any): UTF8String = Utf8(x.asInstanceOf[String])
+    }
+    object Kind {
+      implicit val int64: Kind[Long] = Int64
+      implicit val utf8: Kind[UTF8String] = Utf8
+    }
+
+    /** the kind a column of Spark type `t` is indexed as; None = not indexable */
+    def kindOf(t: DataType): Option[Kind[_]] = t match {
+      case LongType | IntegerType => Some(Int64)
+      case StringType => Some(Utf8)
+      case _ => None
+    }
+    def indexable(t: DataType): Boolean = kindOf(t).isDefined
+
+    /** `file`'s recorded [lo, hi] of column `col` */
+    final case class Stat[T](file: String, col: String, kind: Kind[T], lo: T, hi: T)
+
+    def render[T](s: Stat[T]): String = {
+      val tag = if (s.kind == Utf8) "S|" else ""
+      s"${s.file}|${s.col}|$tag${s.kind.show(s.lo)}|${s.kind.show(s.hi)}"
+    }
+
+    /** the stat one sidecar line records; None for a malformed line. The
+      * split keeps trailing empty fields: a string range whose bounds are
+      * both empty renders as `rel|col|S||`.
+      */
+    def parse(line: String): Option[Stat[_]] =
+      scala.util.Try(line.split("\\|", -1) match {
+        case Array(f, c, lo, hi) => Some(Stat(f, c, Int64, Int64.read(lo), Int64.read(hi)))
+        case Array(f, c, "S", lo, hi) => Some(Stat(f, c, Utf8, Utf8.read(lo), Utf8.read(hi)))
+        case _ => None
+      }).toOption.flatten
+
+    /** per-file [lo, hi] of `col` among `stats`, from lines of `kind` only */
+    def ranges[T](stats: Seq[Stat[_]], col: String, kind: Kind[T]): Map[String, (T, T)] =
+      stats.filter(s => s.kind == kind && s.col == col).map { s =>
+        val t = s.asInstanceOf[Stat[T]] // sound: its kind is `kind`
+        t.file -> ((t.lo, t.hi))
+      }.toMap
+  }
+
+  /** Version `v`'s stats sidecar. Written by [[publish]] AFTER the
+    * manifest link wins (a pre-publish write could clobber a concurrent
+    * winner's sidecar), so a crash in that window yields a STATLESS
+    * version — sound (readPruned keeps all files) and self-healing: later
+    * commits recover stats from the newest ancestor that has a sidecar
+    * ([[latestStats]]).
     */
   private def statsFile(table: String, v: Long): Path =
     logDir(table).resolve(s"s$v.txt")
 
-  /** hex of the UTF-8 bytes — the sidecar rendering of string bounds */
-  private[sources] def hexUtf8(s: String): String =
-    s.getBytes(StandardCharsets.UTF_8).map(b => f"${b & 0xff}%02x").mkString
-  private[sources] def unhexBytes(h: String): Array[Byte] =
-    h.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-  /** unsigned lexicographic byte comparison — UTF8String/parquet order */
-  private[sources] def cmpUtf8(a: Array[Byte], b: Array[Byte]): Int = {
-    var i = 0
-    val n = math.min(a.length, b.length)
-    while (i < n) {
-      val d = (a(i) & 0xff) - (b(i) & 0xff)
-      if (d != 0) return d
-      i += 1
+  private def writeStats(table: String, v: Long, stats: Seq[Stats.Stat[_]]): Unit =
+    if (stats.nonEmpty) {
+      Files.createDirectories(logDir(table))
+      Files.write(statsFile(table, v),
+        stats.map(Stats.render(_)).mkString("\n").getBytes(StandardCharsets.UTF_8))
     }
-    a.length - b.length
-  }
 
   private def statsLines(table: String, v: Long): Seq[String] = {
     val p = statsFile(table, v)
     if (!Files.exists(p)) Seq.empty
     else Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
   }
+
+  /** the stats recorded in version `v`'s own sidecar */
+  private def statsAt(table: String, v: Long): Seq[Stats.Stat[_]] =
+    statsLines(table, v).flatMap(Stats.parse)
 
   /** stats of the newest version ≤ `upTo` that HAS a sidecar. Data files are
     * immutable and uniquely named, so a per-file stat line stays valid for
@@ -789,12 +824,24 @@ object TableLog extends QueryPack {
     * Without this fallback, one crash between publish and the sidecar write
     * would carry sidecar emptiness forward through every later append.
     */
-  private def latestStatsLines(table: String, upTo: Long): Seq[String] =
+  private def latestStats(table: String, upTo: Long): Seq[Stats.Stat[_]] =
     versions(table).filter(_ <= upTo).sorted.reverseIterator
       .map(statsLines(table, _)).find(_.nonEmpty).getOrElse(Seq.empty)
+      .flatMap(Stats.parse)
 
-  /** per-file `relpath|col|min|max` lines for freshly-written files — the
-    * shared gather behind [[commitAppend]] and [[commitOverwrite]]: ONE
+  /** the kind of each of `statCols` in `schema` — checked BEFORE any data
+    * file is written, so a stat column that is absent or not
+    * [[Stats.indexable]] fails the commit without leaving files behind
+    */
+  private def statKinds(schema: StructType, statCols: Seq[String]): Seq[(String, Stats.Kind[_])] =
+    statCols.map { c =>
+      val t = schema.find(_.name.equalsIgnoreCase(c)).map(_.dataType)
+      c -> t.flatMap(Stats.kindOf).getOrElse(throw new IllegalArgumentException(
+        s"stat column $c must be integral- or string-typed; got ${t.getOrElse("no such column")}"))
+    }
+
+  /** per-file stats of `statCols` for freshly-written files — the shared
+    * gather behind [[commitAppend]] and [[commitOverwrite]]: ONE
     * footer-light aggregate over the new files grouped by
     * `input_file_name()`. A file whose stat column is entirely null is
     * SKIPPED (unboxing the null would fabricate a spurious `0|0` range);
@@ -805,12 +852,12 @@ object TableLog extends QueryPack {
       spark: SparkSession,
       table: String,
       moved: Seq[String],
-      statCols: Seq[String]): Seq[String] =
+      statCols: Seq[(String, Stats.Kind[_])]): Seq[Stats.Stat[_]] =
     if (statCols.isEmpty || moved.isEmpty) Seq.empty
     else {
       val abs = moved.map(f => Paths.get(table).resolve(f).toString)
-      val aggs = statCols.flatMap(c =>
-        Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
+      val aggs = statCols.flatMap { case (c, _) =>
+        Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")) }
       spark.read.parquet(abs: _*)
         .groupBy(input_file_name().as("f"))
         .agg(aggs.head, aggs.tail: _*)
@@ -818,87 +865,43 @@ object TableLog extends QueryPack {
         .flatMap { row =>
           val uri = row.getString(0)
           val rel = "data/" + uri.substring(uri.lastIndexOf('/') + 1)
-          statCols.flatMap { c =>
+          statCols.flatMap { case (c, kind) =>
             val (mi, ma) = (row.fieldIndex(s"min_$c"), row.fieldIndex(s"max_$c"))
             if (row.isNullAt(mi) || row.isNullAt(ma)) None
-            else (row.get(mi), row.get(ma)) match {
-              case (lo: java.lang.Long, hi: java.lang.Long) =>
-                Some(s"$rel|$c|$lo|$hi")
-              case (lo: java.lang.Integer, hi: java.lang.Integer) =>
-                Some(s"$rel|$c|${lo.longValue()}|${hi.longValue()}") // widen: ranges are long-valued
-              case (lo: String, hi: String) =>
-                Some(s"$rel|$c|S|${hexUtf8(lo)}|${hexUtf8(hi)}")
-              case (lo, _) => throw new IllegalArgumentException(
-                s"stat column $c must be integral- or string-typed; got ${lo.getClass.getName}")
-            }
+            else Some(kind.stat(rel, c, row.get(mi), row.get(ma)))
           }
         }.toSeq
     }
 
   /** live files at a version whose `[min, max]` of `statCol` can intersect
-    * `[lo, hi]` — files WITHOUT recorded stats are always kept (pruning is
-    * sound, never speculative). Returns (kept, total live).
+    * `[lo, hi]` (inclusive; `None` = unbounded, the shape one-sided `<`/`>`
+    * predicates push), compared in the probe's kind — files WITHOUT a
+    * recorded range of that kind are always kept (pruning is sound, never
+    * speculative). Returns (kept, total live).
     */
-  private[graft] def prunedFiles(
+  private[graft] def prunedFiles[T](
       table: String,
       statCol: String,
-      lo: Long,
-      hi: Long,
-      asOf: Option[Long] = None): (Seq[String], Int) = {
+      lo: Option[T],
+      hi: Option[T],
+      asOf: Option[Long] = None)(implicit kind: Stats.Kind[T]): (Seq[String], Int) = {
     val vs = versions(table)
     require(vs.nonEmpty, s"no committed versions under $table")
     val v = asOf.getOrElse(vs.last)
     val files = liveFiles(table, v)
-    val ranges = statsLines(table, v).flatMap { line =>
-      line.split('|') match {
-        case Array(f, c, mn, mx) if c == statCol => Some(f -> (mn.toLong, mx.toLong))
-        case _ => None
-      }
-    }.toMap
-    val kept = files.filter(f =>
-      ranges.get(f).forall { case (mn, mx) => mx >= lo && mn <= hi })
-    (kept, files.size)
-  }
-
-  /** does version `v`'s stats sidecar carry ranges for `statCol`? (what the
-    * SQL catalog consults before counting a filter as skip-usable)
-    */
-  private[sources] def hasStatsFor(table: String, v: Long, statCol: String): Boolean =
-    statsLines(table, v).exists(_.split('|') match {
-      case Array(_, c, _, _) => c == statCol
-      case _ => false
-    })
-
-  /** [[prunedFiles]] for STRING-valued stat columns: keep files whose
-    * recorded [min, max] may intersect `[lo, hi]` (either bound optional —
-    * `None` = unbounded, the shape one-sided `<`/`>` predicates push).
-    * Bounds compare as unsigned UTF-8 bytes — the one collation the
-    * sidecar, Spark, and parquet share (see [[statsFile]]).
-    */
-  private[graft] def prunedFilesStr(
-      table: String,
-      statCol: String,
-      lo: Option[String],
-      hi: Option[String],
-      asOf: Option[Long] = None): (Seq[String], Int) = {
-    val vs = versions(table)
-    require(vs.nonEmpty, s"no committed versions under $table")
-    val v = asOf.getOrElse(vs.last)
-    val files = liveFiles(table, v)
-    val loB = lo.map(_.getBytes(StandardCharsets.UTF_8))
-    val hiB = hi.map(_.getBytes(StandardCharsets.UTF_8))
-    val ranges = statsLines(table, v).flatMap { line =>
-      line.split('|') match {
-        case Array(f, c, "S", mn, mx) if c == statCol =>
-          Some(f -> (unhexBytes(mn), unhexBytes(mx)))
-        case _ => None
-      }
-    }.toMap
+    val ranges = Stats.ranges(statsAt(table, v), statCol, kind)
     val kept = files.filter(f => ranges.get(f).forall { case (mn, mx) =>
-      hiB.forall(h => cmpUtf8(mn, h) <= 0) && loB.forall(l => cmpUtf8(mx, l) >= 0)
+      hi.forall(kind.lteq(mn, _)) && lo.forall(kind.gteq(mx, _))
     })
     (kept, files.size)
   }
+
+  /** does version `v`'s stats sidecar carry `kind` ranges for `statCol`?
+    * (what the SQL catalog consults before counting a filter as skip-usable)
+    */
+  private[sources] def hasStatsFor(table: String, v: Long, statCol: String,
+      kind: Stats.Kind[_]): Boolean =
+    statsAt(table, v).exists(s => s.col == statCol && s.kind == kind)
 
   /** The exclusive upper bound of all strings starting with `p`, as a VALID
     * string: drop the last code point and append its successor (skipping
@@ -917,31 +920,6 @@ object TableLog extends QueryPack {
       else last + 1
     val head = p.substring(0, p.length - Character.charCount(last))
     Some(head + new String(Character.toChars(next)))
-  }
-
-  /** does version `v`'s stats sidecar carry STRING ranges for `statCol`? */
-  private[sources] def hasStatsForStr(table: String, v: Long, statCol: String): Boolean =
-    statsLines(table, v).exists(_.split('|') match {
-      case Array(_, c, "S", _, _) => c == statCol
-      case _ => false
-    })
-
-  /** [[readPruned]]'s string twin: snapshot read restricted to files whose
-    * `statCol` string range intersects `[lo, hi]` (inclusive; either side
-    * optional). The caller still applies the exact row filter.
-    */
-  def readPrunedStr(
-      spark: SparkSession,
-      table: String,
-      statCol: String,
-      lo: Option[String],
-      hi: Option[String],
-      asOf: Option[Long] = None): DataFrame = {
-    val (kept, _) = prunedFilesStr(table, statCol, lo, hi, asOf)
-    if (kept.isEmpty) read(spark, table, asOf).limit(0)
-    else applyDv(spark, table, asOf.getOrElse(versions(table).last),
-      spark.read.parquet(
-        kept.map(f => Paths.get(table).resolve(f).toString): _*))
   }
 
   /** does `column` have a Bloom sidecar? */
@@ -979,11 +957,7 @@ object TableLog extends QueryPack {
     * [[GraftLogScan.filterAttributes]] advertises to dynamic pruning
     */
   private[sources] def runtimeFilterableCols(table: String, v: Long): Seq[String] = {
-    val statCols = statsLines(table, v).flatMap(_.split('|') match {
-      case Array(_, c, _, _) => Some(c)
-      case Array(_, c, "S", _, _) => Some(c)
-      case _ => None
-    }).distinct
+    val statCols = statsAt(table, v).map(_.col).distinct
     val bloomCols = listDir(logDir(table)).map(_.getFileName.toString)
       .collect { case s if s.startsWith("bloom_") && s.endsWith(".txt") =>
         s.stripPrefix("bloom_").stripSuffix(".txt") }
@@ -994,19 +968,20 @@ object TableLog extends QueryPack {
   }
 
   /** Snapshot read restricted to files whose `statCol` range intersects
-    * `[lo, hi]` (inclusive): a metadata-only lookup decides what to scan, so
-    * a selective predicate over a range-clustered table touches O(matching
-    * files), not O(table). The caller still applies the exact row filter —
-    * skipping is sound by range intersection, not a row-level guarantee.
-    * Composes with [[Layout]]'s Z-order clustering (cluster on write →
-    * narrow per-file ranges → effective skipping).
+    * `[lo, hi]` (inclusive; either side optional) in the probe's kind: a
+    * metadata-only lookup decides what to scan, so a selective predicate
+    * over a range-clustered table touches O(matching files), not O(table).
+    * The caller still applies the exact row filter — skipping is sound by
+    * range intersection, not a row-level guarantee. Composes with
+    * [[Layout]]'s Z-order clustering (cluster on write → narrow per-file
+    * ranges → effective skipping).
     */
-  def readPruned(
+  def readPruned[T: Stats.Kind](
       spark: SparkSession,
       table: String,
       statCol: String,
-      lo: Long,
-      hi: Long,
+      lo: Option[T],
+      hi: Option[T],
       asOf: Option[Long] = None): DataFrame = {
     val (kept, _) = prunedFiles(table, statCol, lo, hi, asOf)
     if (kept.isEmpty) read(spark, table, asOf).limit(0)
@@ -1312,8 +1287,9 @@ object TableLog extends QueryPack {
       require(vs.nonEmpty, s"no committed versions under $table")
       val head = vs.last
       val (snapshot, statCols) = snapshotAt(head)
+      val kinds = statKinds(snapshot.schema, statCols)
       val moved = writeConstrained(snapshot, table)
-      val stats = gatherStats(spark, table, moved, statCols)
+      val stats = gatherStats(spark, table, moved, kinds)
       testBeforeCompactPublish()
       try return publish(table, head + 1, moved, stats = stats)
       catch {
@@ -1333,9 +1309,9 @@ object TableLog extends QueryPack {
       // min/max file index (readPruned would degrade to keep-all): recover
       // the indexed columns from the NEWEST ANCESTOR sidecar (the head
       // itself may be statless after a crash between publish and sidecar
-      // write — statsLines(head) alone would permanently drop the index,
+      // write — statsAt(head) alone would permanently drop the index,
       // the exact degradation commitAppend/deleteWhere already heal)
-      val statCols = latestStatsLines(table, head).map(_.split('|')(1)).distinct
+      val statCols = latestStats(table, head).map(_.col).distinct
       (read(spark, table, Some(head)).coalesce(nFiles), statCols)
     }
   }
@@ -1358,8 +1334,8 @@ object TableLog extends QueryPack {
       nFiles: Int = 8): Long = {
     require(nFiles > 0, "nFiles must be positive")
     compactRetry(spark, table) { head =>
-      // latestStatsLines, not statsLines: survive a statless head (see optimize)
-      val prevStatCols = latestStatsLines(table, head).map(_.split('|')(1)).distinct
+      // latestStats, not statsAt: survive a statless head (see optimize)
+      val prevStatCols = latestStats(table, head).map(_.col).distinct
       val snap = read(spark, table, Some(head))
       val Seq(za, zb) = zDims(snap, Seq(colA, colB), Layout.ZBits)
       val clustered = snap
@@ -1466,7 +1442,7 @@ object TableLog extends QueryPack {
     require(cols.size >= 2 && cols.size <= 6,
       s"optimizeZOrderN takes 2..6 columns, got ${cols.size}")
     compactRetry(spark, table) { head =>
-      val prevStatCols = latestStatsLines(table, head).map(_.split('|')(1)).distinct
+      val prevStatCols = latestStats(table, head).map(_.col).distinct
       val snap = read(spark, table, Some(head))
       val clustered = snap
         .withColumn("_z", Layout.zValueN(zDims(snap, cols, 62 / cols.size)))
@@ -1762,7 +1738,7 @@ object TableLog extends QueryPack {
       val footer = parquetFooter(Paths.get(table).resolve(rel).toString)
       val blocks = footer.getBlocks.asScala.toSeq
       columns.flatMap { c =>
-        val ranges: Seq[Either[(Long, Long), (Array[Byte], Array[Byte])]] =
+        val ranges: Seq[Either[(Long, Long), (UTF8String, UTF8String)]] =
           blocks.flatMap { b =>
             b.getColumns.asScala.find(cc =>
               cc.getPath.toDotString.equalsIgnoreCase(wanted(c))).flatMap { cc =>
@@ -1780,41 +1756,29 @@ object TableLog extends QueryPack {
                   // EXACT under default settings (truncation is opt-in, and
                   // every file this engine writes goes through Spark's
                   // default writer)
-                  Some(Right((
-                    st.genericGetMin.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes,
-                    st.genericGetMax.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)))
+                  def utf8(x: Any) = UTF8String.fromBytes(
+                    x.asInstanceOf[org.apache.parquet.io.api.Binary].getBytes)
+                  Some(Right((utf8(st.genericGetMin), utf8(st.genericGetMax))))
                 case _ => None
               }
             }
           }
         val longs = ranges.collect { case Left(r) => r }
         val strs = ranges.collect { case Right(r) => r }
-        def hex(bs: Array[Byte]) = bs.map(x => f"${x & 0xff}%02x").mkString
         // every block must carry stats, else the file-level range would be
         // speculative — skip the line (keep-always is the sound direction)
         if (longs.size == blocks.size && longs.nonEmpty)
-          Some(s"$rel|$c|${longs.map(_._1).min}|${longs.map(_._2).max}")
-        else if (strs.size == blocks.size && strs.nonEmpty) {
-          val mn = strs.map(_._1).reduce((a, b) => if (cmpUtf8(a, b) <= 0) a else b)
-          val mx = strs.map(_._2).reduce((a, b) => if (cmpUtf8(a, b) >= 0) a else b)
-          Some(s"$rel|$c|S|${hex(mn)}|${hex(mx)}")
-        } else None
+          Some(Stats.Stat(rel, c, Stats.Int64, longs.map(_._1).min, longs.map(_._2).max))
+        else if (strs.size == blocks.size && strs.nonEmpty)
+          Some(Stats.Stat(rel, c, Stats.Utf8,
+            strs.map(_._1).min(Stats.Utf8), strs.map(_._2).max(Stats.Utf8)))
+        else None
       }
     }
+    // malformed lines never parse, so they drop here too
     val colsLower = columns.map(_.toLowerCase).toSet
-    val keep = latestStatsLines(table, head).filterNot { l =>
-      l.split('|') match {
-        case Array(_, c, _, _) => colsLower(c.toLowerCase)
-        case Array(_, c, "S", _, _) => colsLower(c.toLowerCase)
-        case _ => true // malformed: drop
-      }
-    }
-    val all = keep ++ fresh
-    if (all.nonEmpty) {
-      Files.createDirectories(logDir(table))
-      Files.write(statsFile(table, head),
-        all.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    }
+    val keep = latestStats(table, head).filterNot(s => colsLower(s.col.toLowerCase))
+    writeStats(table, head, keep ++ fresh)
     fresh.size
   }
 
@@ -2251,7 +2215,7 @@ object TableLog extends QueryPack {
       require(n > 0, s"footer ANALYZE recorded nothing for $table")
       table
     }
-    readPruned(s, t, "k", 1000L, 5000L)
+    readPruned(s, t, "k", Some(1000L), Some(5000L))
       .where(col("k") >= 1000L && col("k") <= 5000L)
       .groupBy(col("status"))
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("cents"))
@@ -2268,7 +2232,7 @@ object TableLog extends QueryPack {
   /** STRING-stats pruned read, hash-gated for SOUNDNESS: orders committed
     * range-clustered on (priority, key) with a per-file STRING stats index
     * on the priority column, then a banded read goes through
-    * [[readPrunedStr]]'s file skipping (bounds compare as unsigned UTF-8
+    * [[readPruned]]'s file skipping (bounds compare as unsigned UTF-8
     * bytes — the collation the sidecar, Spark, and parquet share). A wrong
     * string range silently DROPS rows — exactly what the hash gate
     * catches; TableLogSpec's twin pins that files actually skip.
@@ -2285,7 +2249,7 @@ object TableLog extends QueryPack {
         table, statCols = Seq("pri"))
       table
     }
-    readPrunedStr(s, t, "pri", Some("2-HIGH"), Some("3-MEDIUM"))
+    readPruned(s, t, "pri", Some(Stats.Utf8("2-HIGH")), Some(Stats.Utf8("3-MEDIUM")))
       .where(col("pri") >= "2-HIGH" && col("pri") <= "3-MEDIUM")
       .groupBy(col("pri"))
       .agg(count(lit(1)).as("n_rows"), sum(col("cents")).as("cents"))
@@ -2405,7 +2369,7 @@ object TableLog extends QueryPack {
       |GROUP BY 1""".stripMargin
 
   /** Ungrouped min/max over a STRING column answered from METADATA alone —
-    * [[statBoundsStr]] under full per-file coverage (the clustered insert
+    * [[statBounds]] under full per-file coverage (the clustered insert
     * recorded stats for every data file; CREATE TABLE's zero-row v0 file
     * is coverage-exempt) and zero DVs. One row mixing count(*), string
     * extremes, and long extremes — all metadata; hash-gated vs the raw

@@ -1,6 +1,7 @@
 package graft
 
 import graft.sources.TableLog
+import graft.sources.TableLog.Stats.Utf8
 import org.apache.spark.sql.functions._
 
 /** Pins the metadata-log contract: append/overwrite versioning, snapshot
@@ -180,9 +181,9 @@ class TableLogSpec extends SparkSpec {
     val rows = (0L until 400L).map(k => (k, k % 7)).toDF("k", "payload")
       .repartitionByRange(4, col("k"))
     TableLog.commitAppend(rows, t, statCols = Seq("k"))
-    val (kept, total) = TableLog.prunedFiles(t, "k", lo = 120L, hi = 140L)
+    val (kept, total) = TableLog.prunedFiles(t, "k", lo = Some(120L), hi = Some(140L))
     assert(total == 4 && kept.size < total, s"no pruning: $kept of $total")
-    val pruned = TableLog.readPruned(spark, t, "k", 120L, 140L)
+    val pruned = TableLog.readPruned(spark, t, "k", Some(120L), Some(140L))
       .where(col("k").between(120L, 140L))
       .collect().map(r => (r.getAs[Long]("k"), r.getAs[Long]("payload"))).toSet
     val full = TableLog.read(spark, t)
@@ -193,10 +194,10 @@ class TableLogSpec extends SparkSpec {
     TableLog.commitAppend(
       (1000L until 1100L).map(k => (k, k % 7)).toDF("k", "payload"), t,
       statCols = Seq("k"))
-    val (kept2, total2) = TableLog.prunedFiles(t, "k", 120L, 140L)
+    val (kept2, total2) = TableLog.prunedFiles(t, "k", Some(120L), Some(140L))
     assert(total2 > total && kept2 == kept, "carried-forward stats must keep pruning")
     // a box missing every file reads empty but keeps the schema
-    assert(TableLog.readPruned(spark, t, "k", 5000L, 6000L).count() == 0L)
+    assert(TableLog.readPruned(spark, t, "k", Some(5000L), Some(6000L)).count() == 0L)
   }
 
   test("STRING stats prune files in UTF-8 byte order; retrofit ANALYZE indexes them too") {
@@ -206,14 +207,14 @@ class TableLogSpec extends SparkSpec {
     val rows = (0L until 400L).map(k => (f"key$k%04d", k)).toDF("sk", "payload")
       .repartitionByRange(4, col("sk"))
     TableLog.commitAppend(rows, t, statCols = Seq("sk"))
-    val (kept, total) = TableLog.prunedFilesStr(t, "sk", Some("key0120"), Some("key0140"))
+    val (kept, total) = TableLog.prunedFiles(t, "sk", Some(Utf8("key0120")), Some(Utf8("key0140")))
     assert(total == 4 && kept.size < total, s"no string pruning: $kept of $total")
-    val pruned = TableLog.readPrunedStr(spark, t, "sk", Some("key0120"), Some("key0140"))
+    val pruned = TableLog.readPruned(spark, t, "sk", Some(Utf8("key0120")), Some(Utf8("key0140")))
       .where(col("sk") >= "key0120" && col("sk") <= "key0140")
       .collect().map(_.getAs[Long]("payload")).toSet
     assert(pruned == (120L to 140L).toSet)
     // one-sided bounds: unbounded lo keeps the low files, skips the high tail
-    val (keptLe, _) = TableLog.prunedFilesStr(t, "sk", None, Some("key0050"))
+    val (keptLe, _) = TableLog.prunedFiles(t, "sk", None, Some(Utf8("key0050")))
     assert(keptLe.size < total && keptLe.nonEmpty)
     // non-ASCII round-trip: multi-byte UTF-8 bounds survive the hex sidecar
     // and compare in byte order (é = 0xC3 0xA9 sorts above all ASCII)
@@ -224,25 +225,77 @@ class TableLogSpec extends SparkSpec {
     TableLog.commitAppend(
       Seq(("émile", 3L), ("été", 4L)).toDF("sk", "payload").coalesce(1), t2,
       statCols = Seq("sk"))
-    val (keptU, totalU) = TableLog.prunedFilesStr(t2, "sk", Some("é"), None)
+    val (keptU, totalU) = TableLog.prunedFiles(t2, "sk", Some(Utf8("é")), None)
     assert(totalU == 2 && keptU.size == 1,
       s"multi-byte lower bound must skip the ASCII file: kept $keptU of $totalU")
-    assert(TableLog.readPrunedStr(spark, t2, "sk", Some("é"), None)
+    assert(TableLog.readPruned(spark, t2, "sk", Some(Utf8("é")), None)
       .where(col("sk") >= "é").collect().map(_.getAs[Long]("payload")).toSet ==
       Set(3L, 4L))
     // retrofit: a statless clustered table gains a string index from FOOTERS
     val t3 = s"$root/t4r"
     TableLog.commitAppend(rows, t3) // NO statCols
-    assert(TableLog.prunedFilesStr(t3, "sk", Some("key0120"), Some("key0140"))._1.size == 4,
+    assert(TableLog.prunedFiles(t3, "sk", Some(Utf8("key0120")), Some(Utf8("key0140")))._1.size == 4,
       "statless table must keep every file")
     val n = TableLog.buildStatsIndex(t3, Seq("sk"))
     assert(n == 4, s"footer ANALYZE should index 4 files, got $n")
-    val (keptR, _) = TableLog.prunedFilesStr(t3, "sk", Some("key0120"), Some("key0140"))
+    val (keptR, _) = TableLog.prunedFiles(t3, "sk", Some(Utf8("key0120")), Some(Utf8("key0140")))
     assert(keptR.size < 4 && keptR.nonEmpty)
     // footer-derived ranges must be read-identical to write-time stats
-    assert(TableLog.readPrunedStr(spark, t3, "sk", Some("key0120"), Some("key0140"))
+    assert(TableLog.readPruned(spark, t3, "sk", Some(Utf8("key0120")), Some(Utf8("key0140")))
       .where(col("sk") >= "key0120" && col("sk") <= "key0140")
       .collect().map(_.getAs[Long]("payload")).toSet == (120L to 140L).toSet)
+  }
+
+  test("stats sidecar bytes: one line format, carried byte-identical, same line from footers") {
+    Scratch.wipe(s"$root/fmt")
+    val t = s"$root/fmt/t"
+    def sidecar(v: Long) = new String(
+      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(t, "_log", s"s$v.txt")),
+      java.nio.charset.StandardCharsets.UTF_8)
+    // a long, an int (widened to a long range) and a string column whose
+    // values hold the line separator '|' and a character outside the BMP
+    TableLog.commitAppend(
+      Seq((5L, -3, "a|b"), (-7L, 9, "z\uD83D\uDE00")).toDF("l", "i", "s").coalesce(1), t,
+      statCols = Seq("l", "i", "s"))
+    def dataFiles = new java.io.File(s"$t/data").listFiles().map(_.getName).toSet
+    val Seq(f) = dataFiles.toSeq
+    val (lLine, sLine) = (s"data/$f|l|-7|5", s"data/$f|s|S|617c62|7af09f9880")
+    assert(sidecar(0L) == Seq(lLine, s"data/$f|i|-3|9", sLine).mkString("\n"))
+    // a probe of one kind never reads a line of the other kind
+    assert(TableLog.prunedFiles(t, "s", Some(-100L), Some(-50L))._1.size == 1)
+    assert(TableLog.prunedFiles(t, "l", Some(Utf8("zz")), None)._1.size == 1)
+    // a statless append carries the lines forward byte-identical
+    TableLog.commitAppend(Seq((100L, 1, "q")).toDF("l", "i", "s").coalesce(1), t)
+    assert(sidecar(1L) == sidecar(0L))
+    // footer ANALYZE renders the same line the write-time gather did
+    assert(TableLog.buildStatsIndex(t, Seq("l", "s")) == 4)
+    val rebuilt = sidecar(1L).split("\n").toSet
+    assert(Set(lLine, s"data/$f|i|-3|9", sLine).subsetOf(rebuilt), rebuilt)
+    // a string range whose bounds are both empty ends in empty fields: it
+    // parses, prunes and carries forward like any other line
+    val seen = dataFiles
+    TableLog.commitAppend(Seq((0L, 0, "")).toDF("l", "i", "s").coalesce(1), t,
+      statCols = Seq("s"))
+    val Seq(e) = (dataFiles -- seen).toSeq
+    assert(sidecar(2L).split("\n").contains(s"data/$e|s|S||"), sidecar(2L))
+    assert(TableLog.prunedFiles(t, "s", None, Some(Utf8("")))._1 == Seq(s"data/$e"))
+    TableLog.commitAppend(Seq((1L, 1, "q")).toDF("l", "i", "s").coalesce(1), t)
+    assert(sidecar(3L) == sidecar(2L))
+  }
+
+  test("a stat column that is absent or not indexable fails before any file is written") {
+    Scratch.wipe(s"$root/badstat")
+    val t = s"$root/badstat/t"
+    TableLog.commitAppend(Seq((1L, 1.5)).toDF("k", "x"), t)
+    def dataFiles = new java.io.File(s"$t/data").listFiles().map(_.getName).toSet
+    val before = dataFiles
+    intercept[IllegalArgumentException](
+      TableLog.commitAppend(Seq((2L, 2.5)).toDF("k", "x"), t, statCols = Seq("x")))
+    assert(dataFiles == before, "a double-typed stat column left data files behind")
+    intercept[IllegalArgumentException](
+      TableLog.commitAppend(Seq((3L, 3.5)).toDF("k", "x"), t, statCols = Seq("nope")))
+    assert(dataFiles == before, "an absent stat column left data files behind")
+    assert(TableLog.versions(t) == Seq(0L))
   }
 
   test("optimize re-gathers stats: compacted table keeps skipping files") {
@@ -258,12 +311,12 @@ class TableLogSpec extends SparkSpec {
     // files iff the compacted version has stats — the keep-all fallback
     // (stats silently dropped) would keep all 4. In-range pruning depends on
     // how coalesce grouped the inputs, so it is not asserted here.
-    val (kept, total) = TableLog.prunedFiles(t, "k", lo = 5000L, hi = 6000L)
+    val (kept, total) = TableLog.prunedFiles(t, "k", lo = Some(5000L), hi = Some(6000L))
     assert(total == 4, s"expected 4 compacted files, saw $total")
     assert(kept.isEmpty, s"OPTIMIZE dropped the stats index: kept $kept of $total")
     // and the compacted data still reads back exactly
     assert(TableLog.read(spark, t).count() == 400L)
-    val pruned = TableLog.readPruned(spark, t, "k", 10L, 40L)
+    val pruned = TableLog.readPruned(spark, t, "k", Some(10L), Some(40L))
       .where(col("k").between(10L, 40L)).count()
     assert(pruned == 31L)
   }
@@ -276,15 +329,15 @@ class TableLogSpec extends SparkSpec {
       .repartition(8)
     TableLog.commitAppend(rows, t, statCols = Seq("a"))
     TableLog.optimizeZOrder(spark, t, "a", "b", nFiles = 16)
-    val (keptA, total) = TableLog.prunedFiles(t, "a", lo = 0L, hi = 4L)
+    val (keptA, total) = TableLog.prunedFiles(t, "a", lo = Some(0L), hi = Some(4L))
     assert(total == 16, s"expected 16 z-ordered files, saw $total")
     assert(keptA.size < total, s"a-dim box kept all $total files")
     // the previously UNINDEXED dimension prunes too — the point of Z-order
-    val (keptB, _) = TableLog.prunedFiles(t, "b", lo = 0L, hi = 4L)
+    val (keptB, _) = TableLog.prunedFiles(t, "b", lo = Some(0L), hi = Some(4L))
     assert(keptB.size < total, s"b-dim box kept all $total files")
     // identity: clustered snapshot reads back exactly, pruned == full
     assert(TableLog.read(spark, t).count() == 1600L)
-    val box = TableLog.readPruned(spark, t, "b", 0L, 4L)
+    val box = TableLog.readPruned(spark, t, "b", Some(0L), Some(4L))
       .where(col("b").between(0L, 4L)).count()
     assert(box == 200L)
   }
@@ -512,7 +565,7 @@ class TableLogSpec extends SparkSpec {
         .repartitionByRange(4, col("k")), t, statCols = Seq("k"))      // v0
     TableLog.deleteWhere(spark, t, "k = 130")                          // v1
     val dvs = TableLog.dvFiles(t, 1L)
-    val (kept, total) = TableLog.prunedFiles(t, "k", 120L, 140L)
+    val (kept, total) = TableLog.prunedFiles(t, "k", Some(120L), Some(140L))
     assert(dvs.nonEmpty && total == 4 && kept.size < total)
 
     def batch = (1000L until 1100L).map(k => (k, k % 7)).toDF("k", "payload").coalesce(1)
@@ -522,8 +575,8 @@ class TableLogSpec extends SparkSpec {
     assert(TableLog.committedTxns(t).contains("batch-7"))
     // old files keep their stats (the new range skips all four of them) and
     // the new file has stats (the old range skips it)
-    assert(TableLog.prunedFiles(t, "k", 120L, 140L) == ((kept, 5)))
-    assert(TableLog.prunedFiles(t, "k", 1000L, 1099L)._1.size == 1)
+    assert(TableLog.prunedFiles(t, "k", Some(120L), Some(140L)) == ((kept, 5)))
+    assert(TableLog.prunedFiles(t, "k", Some(1000L), Some(1099L))._1.size == 1)
     assert(TableLog.read(spark, t).count() == 499L)
 
     // a replay of the same txn is a no-op: no version, no rows
@@ -536,7 +589,7 @@ class TableLogSpec extends SparkSpec {
       Seq(graft.sources.Txn.Write(Seq((5000L, 1L)).toDF("k", "payload"), t)))
     assert(landed.values.toSeq == Seq(3L))
     assert(TableLog.dvFiles(t, 3L) == dvs)
-    val (kept3, total3) = TableLog.prunedFiles(t, "k", 120L, 140L)
+    val (kept3, total3) = TableLog.prunedFiles(t, "k", Some(120L), Some(140L))
     assert(total3 == 6 && kept3.size == kept.size + 1,
       s"statless txn file is kept, indexed old files still skip: $kept3")
     assert(TableLog.read(spark, t).count() == 500L)
@@ -690,7 +743,7 @@ class TableLogSpec extends SparkSpec {
     // pruning on k must still skip v0's file for an out-of-range probe
     TableLog.commitAppend(
       Seq((100L, 1L)).toDF("k", "v").coalesce(1), t, statCols = Seq("k"))
-    val (kept, total) = TableLog.prunedFiles(t, "k", 90L, 200L)
+    val (kept, total) = TableLog.prunedFiles(t, "k", Some(90L), Some(200L))
     assert(total == 3)
     // v0's file [1,2] is skipped thanks to the healed index; v1's file (3)
     // is statless → kept (sound), v2's file (100) matches → kept
@@ -710,13 +763,13 @@ class TableLogSpec extends SparkSpec {
     // the compacted version must have re-gathered k stats (recovered from
     // v0's surviving sidecar, not silently dropped): an out-of-range probe
     // still skips the low-key file
-    val (kept, total) = TableLog.prunedFiles(t, "k", 90L, 200L)
+    val (kept, total) = TableLog.prunedFiles(t, "k", Some(90L), Some(200L))
     assert(total == 2 && kept.size == 1,
       s"compacted index must skip 1 of 2 files, kept $kept")
     // plain optimize through the same window also keeps the index alive
     java.nio.file.Files.delete(java.nio.file.Paths.get(t, "_log", "s2.txt"))
     TableLog.optimize(spark, t, nFiles = 1)
-    assert(TableLog.prunedFiles(t, "k", 500L, 900L)._1.isEmpty,
+    assert(TableLog.prunedFiles(t, "k", Some(500L), Some(900L))._1.isEmpty,
       "recovered stats must prune an impossible range to zero files")
   }
 
@@ -734,7 +787,7 @@ class TableLogSpec extends SparkSpec {
     // nothing was erased: the bad commit still time-travels
     assert(TableLog.read(spark, t, Some(2L)).select("k").as[Long].collect().toSeq == Seq(99L))
     // the stats index survived the round trip (v0's file [1,2] prunable)
-    assert(TableLog.prunedFiles(t, "k", 100L, 200L)._1.isEmpty,
+    assert(TableLog.prunedFiles(t, "k", Some(100L), Some(200L))._1.isEmpty,
       "restored head must keep pruning on the carried-forward stats")
     // metadata-only count still answers through the restored DVs
     assert(TableLog.metadataCount(t).contains(1L))
@@ -1022,7 +1075,7 @@ class TableLogSpec extends SparkSpec {
     // head = 1000 (v0) + 100 (v2 append) - 100 (v1 DV) rows
     assert(TableLog.metadataCount(dst).contains(1000L),
       s"cloned row counts + DVs must serve metadataCount, got ${TableLog.metadataCount(dst)}")
-    val (kept, total) = TableLog.prunedFiles(dst, "k", 0L, 10L)
+    val (kept, total) = TableLog.prunedFiles(dst, "k", Some(0L), Some(10L))
     assert(total >= 4 && kept.size < total,
       s"cloned stats must prune ($kept of $total kept)")
 
@@ -1053,18 +1106,18 @@ class TableLogSpec extends SparkSpec {
     TableLog.commitAppend(
       spark.range(0, 4000).selectExpr("id AS k", "id % 7 AS v", "'x' AS s")
         .repartitionByRange(8, col("k")), t)
-    assert(TableLog.prunedFiles(t, "k", 0L, 10L)._1.size == 8,
+    assert(TableLog.prunedFiles(t, "k", Some(0L), Some(10L))._1.size == 8,
       "without stats every file is kept")
     val n = TableLog.buildStatsIndex(t, Seq("k", "v", "s"))
     // k and v are INT64, s is BINARY-UTF8 — since round 13 ALL THREE index
     // (string footer stats emit 'S' sidecar lines)
     assert(n == 24, s"expected 8 files x 3 columns, got $n")
-    val (kept, total) = TableLog.prunedFiles(t, "k", 0L, 10L)
+    val (kept, total) = TableLog.prunedFiles(t, "k", Some(0L), Some(10L))
     assert(total == 8 && kept.size == 1,
       s"footer stats must prune range-clustered files ($kept)")
     // the constant string column's range is the point ['x', 'x']
-    assert(TableLog.prunedFilesStr(t, "s", Some("x"), Some("x"))._1.size == 8)
-    assert(TableLog.prunedFilesStr(t, "s", Some("y"), None)._1.isEmpty)
+    assert(TableLog.prunedFiles(t, "s", Some(Utf8("x")), Some(Utf8("x")))._1.size == 8)
+    assert(TableLog.prunedFiles(t, "s", Some(Utf8("y")), None)._1.isEmpty)
     // the index reflects PHYSICAL ranges — correct data, re-run idempotent
     assert(TableLog.buildStatsIndex(t, Seq("k", "v", "s")) == 24)
     assert(TableLog.read(spark, t).count() == 4000L)
@@ -1108,13 +1161,13 @@ class TableLogSpec extends SparkSpec {
     assert(v == 1L && TableLog.liveFileCount(t) == 8)
     // every dimension's per-file range is tight enough to prune a point band
     for (d <- Seq("a", "b", "c")) {
-      val (kept, total) = TableLog.prunedFiles(t, d, 0L, 1L)
+      val (kept, total) = TableLog.prunedFiles(t, d, Some(0L), Some(1L))
       assert(total == 8 && kept.size < total,
         s"dimension $d must prune after 3-way z-order ($kept of $total kept)")
     }
     // pruned reads stay exact on each dimension
     for (d <- Seq("a", "b", "c")) {
-      val got = TableLog.readPruned(spark, t, d, 0L, 1L)
+      val got = TableLog.readPruned(spark, t, d, Some(0L), Some(1L))
         .where(col(d) <= 1L).count()
       assert(got == 512L, s"dimension $d pruned read must keep 2 of 16 values, got $got")
     }
@@ -1135,15 +1188,15 @@ class TableLogSpec extends SparkSpec {
     val v = TableLog.optimizeZOrderN(spark, t, Seq("brand", "k"), nFiles = 16)
     assert(v == 1L && TableLog.liveFileCount(t) == 16)
     // the STRING dimension prunes via its 'S' sidecar lines
-    val (keptS, totalS) = TableLog.prunedFilesStr(
-      t, "brand", Some("brand03"), Some("brand04"))
+    val (keptS, totalS) = TableLog.prunedFiles(
+      t, "brand", Some(Utf8("brand03")), Some(Utf8("brand04")))
     assert(totalS == 16 && keptS.size < totalS,
       s"string dim must prune after z-order ($keptS of $totalS kept)")
     // ... and the LONG dimension prunes too
-    val (keptK, _) = TableLog.prunedFiles(t, "k", 0L, 20L)
+    val (keptK, _) = TableLog.prunedFiles(t, "k", Some(0L), Some(20L))
     assert(keptK.size < 16, s"long dim must prune after z-order (${keptK.size} of 16)")
     // pruned reads stay exact on the string band
-    val got = TableLog.readPrunedStr(spark, t, "brand", Some("brand03"), Some("brand04"))
+    val got = TableLog.readPruned(spark, t, "brand", Some(Utf8("brand03")), Some(Utf8("brand04")))
       .where(col("brand") >= "brand03" && col("brand") <= "brand04").count()
     assert(got == 400L, s"expected 2 of 20 brands (400 rows), got $got")
   }
