@@ -1,8 +1,10 @@
 package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 /** Consumer-side pipeline (E2, SURVEY.md §2.3): raw JSON wire frames → four
   * validated, typed tables, with the reference's drop-on-invalid semantics
@@ -26,7 +28,10 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * sf0.1), and the earlier workarounds (session-wide
   * `enableJsonExpressionOptimization=false` + a typed-Row filter barrier)
   * mutated global conf and deserialized every row. The Generate barrier needs
-  * neither: one parse per frame, plain Column filters, no conf side effects.
+  * neither: one parse per frame per plan, plain Column filters, no conf side
+  * effects. Across plans, [[demux]] and [[quarantine]] of one batch share its
+  * materialized classification ([[shared]]): one parse per frame per batch,
+  * however many outputs a trigger commits.
   *
   * Late/duplicate handling is intentionally NOT added here: the reference is
   * at-least-once and keeps duplicates (`:172-173`); dedup is opt-in via
@@ -86,105 +91,126 @@ object Ingest {
     else parsed
   }
 
+  /** every table's wire fields, one entry per name (the four schemas agree
+    * on the type of each field they share)
+    */
+  private val wireFields: Seq[StructField] =
+    Schemas.msgSchema.values.flatMap(_.fields).toSeq.distinctBy(_.name)
+
   /** all-string superset of every table's wire fields: presence-faithful
     * (routing + required-field validation are presence checks in the
-    * reference) and parseable ONCE for all routes.
+    * reference, `'open' in message`, `from_rabbitmq_to_clickhouse.py:148-159,
+    * 122-140`) and parseable ONCE for all routes — a typed superset would
+    * null the whole row on one type-mismatched field and mis-route it.
     */
-  private val supersetStr = StructType(
-    Schemas.msgSchema.values.flatMap(_.fields).toSeq.distinctBy(_.name)
-      .map(f => StructField(f.name, StringType)))
+  private val supersetStr =
+    StructType(wireFields.map(f => StructField(f.name, StringType)))
+
+  /** one wire field of the superset parse `m`, typed. `try_cast`, NOT cast:
+    * ANSI mode (Spark 4 default) makes a plain cast THROW on malformed
+    * numerics, and drop-on-invalid requires null — a failed cast nulls the
+    * field and the required-field gate drops the frame, the same outcome as
+    * a typed parse failure (a cast of an extracted string is ~free next to
+    * a second Jackson pass). `timestamp` is parsed: malformed → null (F3).
+    */
+  private def typed(f: StructField): Column = {
+    val wire = col("m").getField(f.name)
+    if (f.name == "timestamp") try_to_timestamp(wire, lit(Schemas.TsFormat))
+    else wire.try_cast(f.dataType)
+  }
+
+  /** THE gates, the one definition every entry point reads: the first gate
+    * a frame fails, in the consumer's check order
+    * (`from_rabbitmq_to_clickhouse.py:148-170`) like the reference's early
+    * returns — `unknown_type` (F1), then `missing_required` (F2: a required
+    * field absent, or failing its typed cast), then `bad_timestamp` (F3);
+    * null when the frame is kept. Reads `route`, the typed fields and the
+    * wire timestamp `m.timestamp` (present but unparseable is F3, not F2).
+    */
+  private val reason: Column =
+    Schemas.msgSchema.keys.foldLeft(when(col("route") === "unknown", lit("unknown_type"))) {
+      (acc, t) =>
+        val present = Schemas.required(t)
+          .map(f => (if (f == "timestamp") col("m.timestamp") else col(f)).isNotNull)
+          .reduce(_ && _)
+        val gated = acc.when(col("route") === t && !present, lit("missing_required"))
+        if (Schemas.timestamped(t))
+          gated.when(col("route") === t && col("timestamp").isNull, lit("bad_timestamp"))
+        else gated
+    } // no otherwise: a kept frame gets null
+
+  /** One row per frame, from ONE JSON parse: its `route`, its `reason` (the
+    * first failed gate, null when kept), every wire field typed, and its
+    * `value` only where `reason` is set, so the rows stay narrow.
+    */
+  private def classified(raw: DataFrame): DataFrame =
+    parsedOnce(raw.select("value"), supersetStr, "m")
+      .select(Seq(col("value"), col("m"), routeFrom("m").as("route")) ++
+        wireFields.map(f => typed(f).as(f.name)): _*)
+      .withColumn("reason", reason)
+      .select(Seq(when(col("reason").isNotNull, col("value")).as("value"),
+        col("route"), col("reason")) ++ wireFields.map(f => col(f.name)): _*)
+
+  private val Classified = TreeNodeTag[DataFrame]("graft.ingest.classified")
+
+  /** [[classified]] `raw`, materialized once for every output read from the
+    * same `raw`: a lazy DISK_ONLY local checkpoint that the first output's
+    * job fills and later outputs read, so each frame of a batch is read,
+    * parsed and gated once however many tables are committed. No job runs
+    * here, and nothing enters the CacheManager or the heap. The checkpoint
+    * hangs off `raw`'s plan as a tag, so it lives exactly as long as the
+    * frames: nothing global holds it, and Spark's ContextCleaner drops its
+    * blocks once `raw` is unreachable. `raw` is a batch frame (a streaming
+    * query demuxes inside `foreachBatch`).
+    */
+  private def shared(raw: DataFrame): DataFrame = {
+    val plan = raw.queryExecution.logical
+    plan.synchronized {
+      plan.getTagValue(Classified).getOrElse {
+        val c = classified(raw).localCheckpoint(eager = false, StorageLevel.DISK_ONLY)
+        plan.setTagValue(Classified, c)
+        c
+      }
+    }
+  }
 
   /** Full consumer demux: one mixed frame stream → Map(table → typed rows),
-    * with ONE JSON parse per frame total: the all-string superset parse
-    * drives routing AND field extraction, and each route's slice re-types
-    * via per-field CASTs (a cast of an already-extracted string is ~free
-    * next to a second Jackson pass; a failed numeric cast nulls the field →
-    * the required-fields gate drops the row, same outcome as a typed parse
-    * failure). Each table's plan reads only its own route slice; at 100 TB
+    * each table the kept frames of its route, projected to its columns. All
+    * tables (and [[quarantine]]) of one `raw` read its [[shared]]
+    * classification, and each table follows `raw`'s partitioning. At 100 TB
     * this is the `foreachBatch` fan-out body (see
     * [[graft.streaming.StreamIngest]]).
     */
   def demux(raw: DataFrame): Map[String, DataFrame] = {
-    val parsed = parsedOnce(raw, supersetStr, "m").withColumn("route", routeFrom("m"))
+    val kept = shared(raw).where(col("reason").isNull)
     Schemas.msgSchema.map { case (t, schema) =>
-      val typed = parsed.where(col("route") === t)
-        .select(schema.fields.map(f =>
-          // try_cast, NOT cast: ANSI mode (Spark 4 default) makes a plain
-          // cast THROW on malformed numerics — drop-on-invalid requires null
-          col("m").getField(f.name).try_cast(f.dataType).as(f.name)): _*)
-      val required = Schemas.required(t).map(col(_).isNotNull).reduce(_ && _)
-      val validated = typed.where(required)
-      t -> (if (Schemas.timestamped(t))
-        validated
-          .withColumn("timestamp",
-            expr(s"try_to_timestamp(timestamp, '${Schemas.TsFormat}')"))
-          .where(col("timestamp").isNotNull)
-      else validated)
+      t -> kept.where(col("route") === t).select(schema.fieldNames.toSeq.map(col): _*)
     }
   }
 
+  /** Quarantine relation: the raw frames the demux would DROP, each with its
+    * route and the first failed gate ([[reason]]). The reference
+    * logs-and-drops; a production pipeline lands these in a side table for
+    * replay after a parser fix — the complement of [[demux]] over the same
+    * [[shared]] classification.
+    */
+  def quarantine(raw: DataFrame): DataFrame =
+    shared(raw).where(col("reason").isNotNull).select("value", "route", "reason")
+
   /** Drop accounting: how many frames landed per route vs survived all three
     * gates — ONE scan of the frame stream, ONE JSON parse per frame, the
-    * keep-predicate evaluated inline per route, one tiny shuffle on the
-    * 5-valued route key. (The naive formulation — re-running [[demux]] per
-    * table and unioning — rescans the stream 5×; at 100 TB that is 5 queue
-    * replays.)
-    *
-    * The single parse uses an ALL-STRING superset of every table's fields:
-    * routing and required-field validation are PRESENCE checks in the
-    * reference (`'open' in message`, `from_rabbitmq_to_clickhouse.py:148-159,
-    * 122-140`), and string-typed fields make `from_json` presence-faithful —
-    * a typed superset would null the whole row on one type-mismatched field
-    * and mis-route it. Timestamp validity still parses for real (F3).
+    * gates of [[reason]] evaluated inline, one tiny shuffle on the 5-valued
+    * route key. The classification is aggregated, never materialized. (The
+    * naive formulation — re-running [[demux]] per table and unioning —
+    * rescans the stream 5×; at 100 TB that is 5 queue replays.)
     */
-  /** Quarantine relation: the raw frames the demux would DROP, each with its
-    * route and the first failed gate — `unknown_type` (F1), then
-    * `missing_required` (F2, which also covers type-mismatched required
-    * fields — the try_cast discipline), then `bad_timestamp` (F3); gate
-    * order matches the consumer's check order
-    * (`from_rabbitmq_to_clickhouse.py:148-170`), so a frame failing several
-    * gates reports the FIRST one, like the reference's early returns. The
-    * reference logs-and-drops; a production pipeline lands these in a side
-    * table for replay after a parser fix — same single-parse plan as
-    * [[dropStats]], opposite polarity.
-    */
-  def quarantine(raw: DataFrame): DataFrame = {
-    val parsed = parsedOnce(raw, supersetStr, "m").withColumn("route", routeFrom("m"))
-    val tsParsed = try_to_timestamp(col("m").getField("timestamp"), lit(Schemas.TsFormat))
-    val reason = Schemas.msgSchema.foldLeft(
-      when(col("route") === "unknown", lit("unknown_type"))) {
-      case (acc, (t, schema)) =>
-        val req = Schemas.required(t).map { f =>
-          col("m").getField(f).try_cast(schema(f).dataType).isNotNull
-        }.reduce(_ && _)
-        val tsOk = if (Schemas.timestamped(t)) tsParsed.isNotNull else lit(true)
-        acc.when(col("route") === t && !req, lit("missing_required"))
-          .when(col("route") === t && !tsOk, lit("bad_timestamp"))
-    } // no otherwise: surviving frames get null → filtered out
-    parsed.withColumn("reason", reason)
-      .where(col("reason").isNotNull)
-      .select(col("value"), col("route"), col("reason"))
-  }
-
   def dropStats(raw: DataFrame): DataFrame = {
-    val parsed = parsedOnce(raw, supersetStr, "m").withColumn("route", routeFrom("m"))
-    val tsParsed = try_to_timestamp(col("m").getField("timestamp"), lit(Schemas.TsFormat))
-    // keep == exactly what demux would emit: required fields must survive the
-    // cast to their TYPED schema (presence alone would overcount — a frame
-    // with open="abc" routes to candles but demux's cast nulls it out)
-    val keep = Schemas.msgSchema.foldLeft(when(lit(false), lit(false))) {
-      case (acc, (t, schema)) =>
-        val req = Schemas.required(t).map { f =>
-          col("m").getField(f).try_cast(schema(f).dataType).isNotNull
-        }.reduce(_ && _)
-        val tsOk = if (Schemas.timestamped(t)) tsParsed.isNotNull else lit(true)
-        acc.when(col("route") === t, req && tsOk)
-    }.otherwise(lit(false))
-    parsed
+    val kept = col("reason").isNull.cast("long")
+    classified(raw)
       .groupBy("route")
       .agg(
         count(lit(1)).as("n_received"),
-        sum(keep.cast("long")).as("n_kept"),
-        (count(lit(1)) - sum(keep.cast("long"))).as("n_dropped"))
+        sum(kept).as("n_kept"),
+        (count(lit(1)) - sum(kept)).as("n_dropped"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
+import java.nio.charset.MalformedInputException
 import java.nio.file.{Files, Paths}
 import java.util.{Map => JMap}
 
@@ -42,7 +42,12 @@ trait FrameUpstream extends Serializable {
 /** one open slice of upstream frames — an iterator the reader must close
   * (releases the file handle / HTTP connection / page buffer)
   */
-trait FrameSlice extends Iterator[String] with java.io.Closeable
+trait FrameSlice extends Iterator[String] with java.io.Closeable {
+  /** the next frame as the UTF-8 the reader serves; a slice that holds
+    * frame bytes overrides it to skip the String round trip
+    */
+  def nextUtf8(): UTF8String = UTF8String.fromString(next())
+}
 
 object FrameUpstream {
   /** Resolve the upstream from DSv2 options: `upstream` names a
@@ -66,23 +71,90 @@ object FrameUpstream {
     }
 }
 
-/** default upstream: a seed file of wire frames, one per line. Slices are
-  * executor-read via `Files.lines(skip/limit)`; every opened stream is
-  * closed (the count through `Using`, the slice through [[FrameSlice.close]])
-  * — leaking one descriptor per slice per micro-batch until GC was the
-  * round-5 advisor finding.
+/** default upstream: a seed file of wire frames, one per line. Lines end at
+  * `\n`, `\r` or `\r\n`, as `Files.lines` reads them, but slices never
+  * decode: a slice skips to `lo` at the byte level (its cost no longer grows
+  * with the offset) and serves each line's bytes as they are. A served line
+  * that is not valid UTF-8 fails its slice. Every opened file is closed (the
+  * count through `Using`, the slice through [[FrameSlice.close]]) — leaking
+  * one descriptor per slice per micro-batch until GC was the round-5
+  * advisor finding.
   */
 final class SeedFileUpstream(path: String) extends FrameUpstream {
-  override def total(): Long =
-    Using.resource(Files.lines(Paths.get(path), StandardCharsets.UTF_8))(_.count())
-  override def open(lo: Long, hi: Long): FrameSlice = new FrameSlice {
-    private val stream = Files.lines(Paths.get(path), StandardCharsets.UTF_8)
-      .skip(lo).limit(hi - lo)
-    private val it = stream.iterator()
-    override def hasNext: Boolean = it.hasNext
-    override def next(): String = it.next()
-    override def close(): Unit = stream.close()
+  override def total(): Long = Using.resource(new SeedLines(path)) { lines =>
+    var n = 0L
+    while (lines.advance(keep = false)) n += 1
+    n
   }
+  override def open(lo: Long, hi: Long): FrameSlice = new FrameSlice {
+    private val lines = new SeedLines(path)
+    private var index = 0L    // lines passed
+    private var ready = false // a line is held in `lines`, not yet served
+    override def hasNext: Boolean = {
+      while (index < lo && lines.advance(keep = false)) index += 1
+      if (!ready && index >= lo && index < hi) ready = lines.advance(keep = true)
+      ready
+    }
+    override def nextUtf8(): UTF8String = {
+      if (!hasNext) throw new NoSuchElementException(s"$path: slice [$lo, $hi) is drained")
+      val frame = lines.utf8()
+      if (!frame.isValid) throw new java.io.UncheckedIOException(
+        s"$path: line $index is not valid UTF-8", new MalformedInputException(1))
+      ready = false
+      index += 1
+      frame
+    }
+    override def next(): String = nextUtf8().toString
+    override def close(): Unit = lines.close()
+  }
+}
+
+/** a seed file's lines as bytes: `\n`, `\r` and `\r\n` end a line, and a
+  * last line needs no terminator (`BufferedReader.readLine`'s rule)
+  */
+private[sources] final class SeedLines(path: String) extends java.io.Closeable {
+  private val in = Files.newInputStream(Paths.get(path))
+  private val chunk = new Array[Byte](1 << 16)
+  private var pos = 0
+  private var end = 0
+  private var afterCr = false // the last line ended at '\r': a next '\n' is its rest
+  private var line = new Array[Byte](1 << 10)
+  private var len = 0
+
+  private def fill(): Boolean = {
+    if (pos == end) { end = math.max(in.read(chunk), 0); pos = 0 }
+    end > 0
+  }
+
+  /** move past the next line, holding its bytes for [[utf8]] when `keep`;
+    * false at end of file
+    */
+  def advance(keep: Boolean): Boolean = {
+    if (afterCr && fill() && chunk(pos) == '\n') pos += 1
+    afterCr = false
+    len = 0
+    val more = fill()
+    var ended = false
+    while (!ended && fill()) {
+      var i = pos
+      while (i < end && chunk(i) != '\n' && chunk(i) != '\r') i += 1
+      if (keep) {
+        if (len + i - pos > line.length)
+          line = java.util.Arrays.copyOf(line, math.max(line.length * 2, len + i - pos))
+        System.arraycopy(chunk, pos, line, len, i - pos)
+        len += i - pos
+      }
+      ended = i < end
+      if (ended) afterCr = chunk(i) == '\r'
+      pos = if (ended) i + 1 else i
+    }
+    more
+  }
+
+  /** the bytes of the line the last `advance(keep = true)` passed */
+  def utf8(): UTF8String = UTF8String.fromBytes(java.util.Arrays.copyOf(line, len))
+
+  override def close(): Unit = in.close()
 }
 
 /** Custom DataSourceV2 streaming connector: replay an upstream of wire
@@ -259,11 +331,10 @@ private[sources] class SeedRateStream(
         val slice = partition.asInstanceOf[SeedSlice]
         new PartitionReader[InternalRow] {
           private val frames = slice.upstream.open(slice.lo, slice.hi)
-          private var current: String = _
+          private var current: UTF8String = _
           override def next(): Boolean =
-            if (frames.hasNext) { current = frames.next(); true } else false
-          override def get(): InternalRow =
-            InternalRow(UTF8String.fromString(current))
+            if (frames.hasNext) { current = frames.nextUtf8(); true } else false
+          override def get(): InternalRow = InternalRow(current)
           override def close(): Unit = frames.close()
         }
       }

@@ -1,8 +1,9 @@
 package graft
 
 import graft.ingest.{Ingest, Normalize, Quotation, Schemas}
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 /** Pins the reference consumer's drop-on-invalid semantics
   * (`from_rabbitmq_to_clickhouse.py:142-177`) and the producer projections
@@ -25,6 +26,17 @@ class IngestSpec extends SparkSpec {
     """{"company_id":"FIGI2","timestamp":"2024-03-01 10:00:01","price":99.5,"volume":3,"side":"buy"}"""
 
   private def raw(msgs: String*) = msgs.toSeq.toDF("value")
+
+  /** one frame of every kind: a valid frame per route, then one per gate */
+  private val mixed = Seq(
+    validCandle, validTrade,
+    """{"company_id":"F","timestamp":"2024-01-01 00:00:00","bid_price":1.0,"bid_volume":1,"ask_price":2.0,"ask_volume":1}""",
+    """{"company_id":"F","name":"n","ticker":"t","sector":"s"}""",
+    malformedJson, unknownShape, missingField,
+    """{"company_id":"FIGI2","timestamp":"2024-03-01 10:00:02","price":99.5,"volume":"abc","side":"sell"}""",
+    badTimestamp)
+
+  private def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
 
   test("F1 classify routes by field-sniffing; malformed/unknown → unknown") {
     val routed = Ingest.classify(
@@ -65,6 +77,59 @@ class IngestSpec extends SparkSpec {
     assert(stats("candles") == ((3L, 1L, 2L))) // valid + missing-field + bad-ts
     assert(stats("trades") == ((1L, 1L, 0L)))
     assert(stats("unknown") == ((2L, 0L, 2L))) // malformed + unknown shape
+  }
+
+  test("every frame lands exactly once: in its table or in quarantine") {
+    val frames = raw(mixed: _*)
+    val out = Ingest.demux(frames) + ("quarantine" -> Ingest.quarantine(frames))
+    assert(out.values.map(_.count()).sum == mixed.size)
+    Schemas.msgSchema.keys.foreach { t =>
+      assert(rows(out(t)) == rows(Ingest.parseTable(frames, t)), s"$t rows")
+      assert(out(t).schema.map(_.dataType) == Ingest.parseTable(frames, t).schema.map(_.dataType))
+    }
+    val reasons = out("quarantine").select("route", "reason").as[(String, String)].collect()
+    assert(reasons.sorted.toSeq == Seq(
+      "candles" -> "bad_timestamp", "candles" -> "missing_required",
+      "trades" -> "missing_required", "unknown" -> "unknown_type", "unknown" -> "unknown_type"))
+  }
+
+  test("one batch is read once: every output of a trigger shares one source read") {
+    val dir = "/tmp/graft_test_ingest_once"
+    Scratch.wipe(dir)
+    CountingUpstream.frames = mixed
+    CountingUpstream.served.set(0)
+    val q = spark.readStream
+      .format("graft.sources.SeedRateSource")
+      .option("upstream", classOf[CountingUpstream].getName)
+      .option("rowsPerBatch", "1000")
+      .load()
+      .writeStream
+      .option("checkpointLocation", s"$dir/ckpt")
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val out = Ingest.demux(batch) + ("quarantine" -> Ingest.quarantine(batch))
+        out.foreach { case (t, df) => df.write.mode("append").parquet(s"$dir/$t") }
+      }
+      .trigger(Trigger.AvailableNow())
+      .start()
+    assert(q.awaitTermination(120000), "an AvailableNow query must stop once drained")
+    assert(CountingUpstream.served.get() == mixed.size,
+      s"${CountingUpstream.served.get()} frames served for ${mixed.size}")
+    val landed = (Schemas.msgSchema.keys.toSeq :+ "quarantine")
+      .map(t => spark.read.parquet(s"$dir/$t").count()).sum
+    assert(landed == mixed.size)
+  }
+
+  test("the shared base holds no heap: a trigger's classification lives on disk") {
+    val dir = "/tmp/graft_test_ingest_disk"
+    Scratch.wipe(dir)
+    val before = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    val frames = raw(mixed: _*)
+    val out = Ingest.demux(frames) + ("quarantine" -> Ingest.quarantine(frames))
+    out.foreach { case (t, df) => df.write.parquet(s"$dir/$t") }
+    val fresh = spark.sparkContext.getRDDStorageInfo.filterNot(i => before(i.id))
+    assert(fresh.map(_.memSize).sum == 0, fresh.mkString(", "))
+    assert(fresh.map(_.diskSize).sum > 0, "the classification was not materialized once")
+    assert(out.size == 5)
   }
 
   test("P2 quotation fold: positive, negative (sign on both), nano edge cases") {
@@ -175,4 +240,24 @@ class IngestSpec extends SparkSpec {
     val r = out.collect().head
     assert(r.getString(0) == "FIGI2" && r.getDouble(2) == 99.5 && r.getString(4) == "buy")
   }
+}
+
+/** A [[graft.sources.FrameUpstream]] that counts the frames it serves: the
+  * number of source reads an ingest trigger makes. Serves
+  * [[CountingUpstream.frames]] (local-mode executors share the JVM).
+  */
+class CountingUpstream(opts: Map[String, String]) extends graft.sources.FrameUpstream {
+  override def total(): Long = CountingUpstream.frames.size.toLong
+  override def open(lo: Long, hi: Long): graft.sources.FrameSlice =
+    new graft.sources.FrameSlice {
+      private val it = CountingUpstream.frames.slice(lo.toInt, hi.toInt).iterator
+      override def hasNext: Boolean = it.hasNext
+      override def next(): String = { CountingUpstream.served.incrementAndGet(); it.next() }
+      override def close(): Unit = ()
+    }
+}
+
+object CountingUpstream {
+  @volatile var frames: Seq[String] = Nil
+  val served = new java.util.concurrent.atomic.AtomicLong
 }

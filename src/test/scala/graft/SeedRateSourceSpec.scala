@@ -1,7 +1,12 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import graft.sources.SeedFileUpstream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -151,6 +156,38 @@ class SeedRateSourceSpec extends SparkSpec {
     assert(PagedFrameUpstream.opens.get() == PagedFrameUpstream.closes.get(),
       s"slice leak: ${PagedFrameUpstream.opens.get()} opens vs ${PagedFrameUpstream.closes.get()} closes")
     assert(PagedFrameUpstream.opens.get() > 0)
+  }
+
+  test("seed-file slices equal Files.lines' slices across every line terminator") {
+    Scratch.wipe(s"$base/bytes")
+    Files.createDirectories(Paths.get(s"$base/bytes"))
+    val seed = Paths.get(s"$base/bytes/seed.jsonl")
+    // \n, \r\n and \r; empty lines; 2-, 3- and 4-byte characters; no final terminator
+    Files.write(seed, "α-0\nβ-1\r\n\r\nдва\r€ 4\n\n日本-6\r\r\n𝄞-8".getBytes(UTF_8))
+    val want = Using.resource(Files.lines(seed, UTF_8))(_.iterator().asScala.toVector)
+    val upstream = new SeedFileUpstream(seed.toString)
+    assert(upstream.total() == want.size)
+    for (lo <- 0 to want.size; hi <- lo to want.size + 1) {
+      val got = Using.resource(upstream.open(lo, hi))(_.toVector)
+      assert(got == want.slice(lo, hi), s"slice [$lo, $hi)")
+    }
+  }
+
+  test("a seed-file line that is not valid UTF-8 fails only the slice serving it") {
+    Scratch.wipe(s"$base/malformed")
+    Files.createDirectories(Paths.get(s"$base/malformed"))
+    // a bad continuation byte, an overlong '/', an encoded surrogate
+    Seq(Array(0xc3, 0x28), Array(0xc0, 0xaf), Array(0xed, 0xa0, 0x80)).zipWithIndex.foreach {
+      case (bad, i) =>
+        val seed = Paths.get(s"$base/malformed/seed$i.jsonl")
+        Files.write(seed, "ok-0\n".getBytes(UTF_8) ++ bad.map(_.toByte) ++ "\nok-2".getBytes(UTF_8))
+        intercept[java.io.UncheckedIOException](
+          Using.resource(Files.lines(seed, UTF_8))(_.count()))
+        val upstream = new SeedFileUpstream(seed.toString)
+        assert(Using.resource(upstream.open(0, 1))(_.toVector) == Vector("ok-0"))
+        assert(Using.resource(upstream.open(2, 3))(_.toVector) == Vector("ok-2"))
+        intercept[java.io.UncheckedIOException](Using.resource(upstream.open(1, 2))(_.toVector))
+    }
   }
 
   test("seed-rate frames flow through the ingest demux unchanged") {
