@@ -17,7 +17,9 @@ object Schemas {
 
   // -------------------------------------------------------------------------
   // Message (wire) schemas: what from_json parses off the queue. Timestamps
-  // are still strings here; Ingest.parseTable converts + validates them.
+  // are still strings here; Ingest's shared classification converts them
+  // (`typed`) and validates them (`reason`); `Ingest.parseTable` is the
+  // per-table reference the tests compare it against.
   // -------------------------------------------------------------------------
 
   val candlesMsg: StructType = StructType(Seq(

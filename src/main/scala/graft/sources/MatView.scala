@@ -10,9 +10,7 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, Data
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, IntegerType, LongType, ShortType}
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Path, Paths}
 
 /** Materialized aggregate views over [[TableLog]] tables, maintained
   * incrementally from the change feed and — the point — ROUTED TO by the
@@ -73,9 +71,9 @@ object MatView extends QueryPack {
 
   /** the registry entry a view directory carries (None: not a view) */
   def meta(viewDir: String): Option[Meta] = {
-    val p = metaFile(viewDir)
-    if (!Files.exists(p)) return None
-    val kv = Files.readAllLines(p).asScala.filter(_.contains("="))
+    val ls = LogText.lines(metaFile(viewDir))
+    if (ls.isEmpty) return None
+    val kv = ls.filter(_.contains("="))
       .map(l => l.splitAt(l.indexOf('='))).map { case (k, v) => (k, v.drop(1)) }
     val m = kv.filterNot(_._1 == "agg").toMap
     val aggs = kv.collect { case ("agg", s) =>
@@ -93,13 +91,7 @@ object MatView extends QueryPack {
         s"groups=${m.groups.mkString(",")}", s"nonce=${m.nonce}",
         s"viewVersion=${m.viewVersion}") ++
         m.aggs.map(a => s"agg=${a.func}:${a.col}")
-    val p = metaFile(m.viewDir)
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(s".${p.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
+    LogText.replace(metaFile(m.viewDir), lines)
   }
 
   private def integral(t: DataType): Boolean =

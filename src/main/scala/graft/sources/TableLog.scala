@@ -5,8 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Minimal table-format metadata log — versioned commits, snapshot-isolated
@@ -58,9 +57,19 @@ object TableLog extends QueryPack {
       .sorted
   }
 
+  /** one manifest's sections: its live data files, its `#dv:`
+    * deletion-vector files and its `#txn:` tags — the one reader of `v<N>.txt`
+    */
+  private final case class Manifest(files: Seq[String], dvs: Seq[String], txns: Seq[String])
+
+  private def manifest(table: String, v: Long): Manifest = {
+    val ls = LogText.read(versionFile(table, v))
+    def headed(h: String) = ls.collect { case l if l.startsWith(h) => l.stripPrefix(h) }
+    Manifest(ls.filterNot(_.startsWith("#")), headed("#dv:"), headed("#txn:"))
+  }
+
   private[sources] def liveFiles(table: String, v: Long): Seq[String] =
-    Files.readAllLines(versionFile(table, v)).asScala.toSeq
-      .filter(_.nonEmpty).filterNot(_.startsWith("#"))
+    manifest(table, v).files
 
   /** manifest publish instant of version `v` in MICROseconds — what the
     * catalog's `TIMESTAMP AS OF` resolves against (the link that
@@ -80,8 +89,7 @@ object TableLog extends QueryPack {
     * lines so pre-DV readers of the manifest format ignore them.
     */
   private[graft] def dvFiles(table: String, v: Long): Seq[String] =
-    Files.readAllLines(versionFile(table, v)).asScala.toSeq
-      .filter(_.startsWith("#dv:")).map(_.stripPrefix("#dv:"))
+    manifest(table, v).dvs
 
   // -------------------------------------------------------------------------
   // CHECK constraints — validated DURING the commit write via df.observe
@@ -102,31 +110,20 @@ object TableLog extends QueryPack {
   def addCheckConstraint(table: String, name: String, sqlExpr: String): Unit = {
     require(!name.contains("|") && !sqlExpr.contains("\n"),
       "constraint name must be |-free and the expression single-line")
-    Files.createDirectories(logDir(table))
-    val prior = checkConstraints(table).filterNot(_._1 == name)
-    Files.write(constraintsFile(table),
-      (prior :+ (name -> sqlExpr)).map { case (n, e) => s"$n|$e" }
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    writeConstraints(table, checkConstraints(table).filterNot(_._1 == name) :+ (name -> sqlExpr))
   }
 
   def dropCheckConstraint(table: String, name: String): Unit = {
-    val prior = checkConstraints(table).filterNot(_._1 == name)
-    if (Files.exists(constraintsFile(table))) {
-      Files.write(constraintsFile(table),
-        prior.map { case (n, e) => s"$n|$e" }
-          .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    }
+    val cur = checkConstraints(table)
+    if (cur.exists(_._1 == name)) writeConstraints(table, cur.filterNot(_._1 == name))
   }
 
   /** declared CHECK constraints, in declaration order */
-  def checkConstraints(table: String): Seq[(String, String)] = {
-    val p = constraintsFile(table)
-    if (!Files.exists(p)) Seq.empty
-    else Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty).map { l =>
-      val i = l.indexOf('|')
-      l.substring(0, i) -> l.substring(i + 1)
-    }
-  }
+  def checkConstraints(table: String): Seq[(String, String)] =
+    LogText.pairs(LogText.lines(constraintsFile(table)))
+
+  private def writeConstraints(table: String, cs: Seq[(String, String)]): Unit =
+    LogText.replace(constraintsFile(table), cs.map { case (n, e) => s"$n|$e" })
 
   /** violated-commit abort signal (table state untouched) */
   final class CheckViolation(val table: String, val constraint: String, val rows: Long)
@@ -182,15 +179,9 @@ object TableLog extends QueryPack {
     * compaction) simply drops the table out of the reported partitioning
     * until an INSERT OVERWRITE re-buckets — degrading is always sound.
     */
-  private[graft] def fileBuckets(table: String): Map[String, Int] = {
-    val p = bucketsFile(table)
-    if (!Files.exists(p)) Map.empty
-    else Files.readAllLines(p).asScala.filter(_.nonEmpty).flatMap { l =>
-      val i = l.indexOf('|')
-      if (i <= 0) None
-      else scala.util.Try(l.substring(0, i) -> l.substring(i + 1).trim.toInt).toOption
-    }.toMap
-  }
+  private[graft] def fileBuckets(table: String): Map[String, Int] =
+    LogText.pairs(LogText.appended(bucketsFile(table)))
+      .flatMap { case (f, b) => b.trim.toIntOption.map(f -> _) }.toMap
 
   /** driver-side twin of the write path's `pmod(hash(col), n)` (and of
     * [[GraftBucketFunction]]): the bucket id a value lands in — what lets a
@@ -213,15 +204,8 @@ object TableLog extends QueryPack {
     h.map { hh => val m = hh % n; if (m < 0) m + n else m }
   }
 
-  private def recordBuckets(table: String, entries: Seq[(String, Int)]): Unit = {
-    if (entries.isEmpty) return
-    Files.createDirectories(logDir(table))
-    Files.write(bucketsFile(table),
-      entries.map { case (f, b) => s"$f|$b" }.mkString("", "\n", "\n")
-        .getBytes(StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE,
-      java.nio.file.StandardOpenOption.APPEND)
-  }
+  private def recordBuckets(table: String, entries: Seq[(String, Int)]): Unit =
+    LogText.append(bucketsFile(table), entries.map { case (f, b) => s"$f|$b" })
 
   private def propsFile(table: String): Path =
     logDir(table).resolve("props.txt")
@@ -231,34 +215,23 @@ object TableLog extends QueryPack {
     * NDV indexes: properties steer FUTURE writes and maintenance, never the
     * meaning of committed data, so time travel doesn't apply to them.
     */
-  def tableProps(table: String): Map[String, String] = {
-    val p = propsFile(table)
-    if (!Files.exists(p)) Map.empty
-    else Files.readAllLines(p).asScala.filter(_.nonEmpty).map { l =>
-      val i = l.indexOf('|')
-      l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
-  }
+  def tableProps(table: String): Map[String, String] =
+    LogText.pairs(LogText.lines(propsFile(table))).toMap
 
   def setTableProp(table: String, key: String, value: String): Unit = {
     require(!key.contains('|') && !key.contains('\n') &&
       !value.contains('|') && !value.contains('\n'),
       "property keys/values must be |-free and single-line")
-    Files.createDirectories(logDir(table))
-    val all = tableProps(table) + (key -> value)
-    Files.write(propsFile(table),
-      all.toSeq.sortBy(_._1).map { case (k, v) => s"$k|$v" }
-        .mkString("\n").getBytes(StandardCharsets.UTF_8))
+    writeProps(table, tableProps(table) + (key -> value))
   }
 
   def unsetTableProp(table: String, key: String): Unit = {
-    val all = tableProps(table) - key
-    if (Files.exists(propsFile(table))) {
-      Files.write(propsFile(table),
-        all.toSeq.sortBy(_._1).map { case (k, v) => s"$k|$v" }
-          .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    }
+    val cur = tableProps(table)
+    if (cur.contains(key)) writeProps(table, cur - key)
   }
+
+  private def writeProps(table: String, props: Map[String, String]): Unit =
+    LogText.replace(propsFile(table), props.toSeq.sortBy(_._1).map { case (k, v) => s"$k|$v" })
 
   /** Cluster `df` per the table's [[ClusterByProp]] and return it with the
     * stat columns to index — identity when the property is unset. Range
@@ -385,13 +358,9 @@ object TableLog extends QueryPack {
     * concurrent committers from clobbering each other's lines — each commit
     * appends only its own freshly-written files, never rewrites).
     */
-  private def rowCounts(table: String): Map[String, Long] = {
-    val p = rowCountsFile(table)
-    if (!Files.exists(p)) Map.empty
-    else Files.readAllLines(p).asScala.filter(_.nonEmpty).map { l =>
-      val i = l.indexOf('|'); l.substring(0, i) -> l.substring(i + 1).toLong
-    }.toMap
-  }
+  private def rowCounts(table: String): Map[String, Long] =
+    LogText.pairs(LogText.appended(rowCountsFile(table)))
+      .flatMap { case (f, n) => n.toLongOption.map(f -> _) }.toMap
 
   /** footer of one parquet file — a driver-side KB-sized metadata read
     * (the file tail), never a data scan or a Spark job
@@ -404,20 +373,15 @@ object TableLog extends QueryPack {
     try r.getFooter finally r.close()
   }
 
-  private def recordRowCounts(table: String, moved: Seq[String]): Unit = {
-    if (moved.isEmpty) return
-    // row counts come from the freshly written files' parquet FOOTERS (the
-    // block metadata already stores them) — metadata-sized driver reads, so
-    // the write path never pays a second scan of the data it just wrote
-    val lines = moved.map { f =>
+  // row counts come from the freshly written files' parquet FOOTERS (the
+  // block metadata already stores them) — metadata-sized driver reads, so
+  // the write path never pays a second scan of the data it just wrote
+  private def recordRowCounts(table: String, moved: Seq[String]): Unit =
+    LogText.append(rowCountsFile(table), moved.map { f =>
       val n = parquetFooter(Paths.get(table).resolve(f).toString)
         .getBlocks.asScala.map(_.getRowCount).sum
       s"$f|$n"
-    }.mkString("", "\n", "\n")
-    Files.createDirectories(logDir(table))
-    Files.write(rowCountsFile(table), lines.getBytes(StandardCharsets.UTF_8),
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.APPEND)
-  }
+    })
 
   /** `SELECT count(*)` at a version answered ENTIRELY from metadata: the
     * sum of the live files' recorded row counts minus the version's
@@ -432,10 +396,9 @@ object TableLog extends QueryPack {
     require(vs.nonEmpty, s"no committed versions under $table")
     val v = asOf.getOrElse(vs.last)
     val counts = rowCounts(table)
-    val files = liveFiles(table, v)
-    val dvs = dvFiles(table, v)
-    if ((files ++ dvs).forall(counts.contains))
-      Some(files.map(counts).sum - dvs.map(counts).sum)
+    val m = manifest(table, v)
+    if ((m.files ++ m.dvs).forall(counts.contains))
+      Some(m.files.map(counts).sum - m.dvs.map(counts).sum)
     else None
   }
 
@@ -453,7 +416,7 @@ object TableLog extends QueryPack {
     * existing target — two writers that both computed v = n+1 would have
     * the second clobber the first's manifest (its data files survive but
     * become invisible: a lost commit). The manifest is therefore published
-    * with `link(2)` (`Files.createLink`): the fully-written temp file is
+    * with `link(2)` ([[LogText.create]]): the fully-written temp file is
     * hard-linked to the version path — PUT-IF-ABSENT (link fails atomically
     * if the target exists), and because the link shares the temp's inode a
     * reader can never observe a partial or empty manifest. A loser throws
@@ -467,16 +430,8 @@ object TableLog extends QueryPack {
   private[graft] def publish(
       table: String, v: Long, files: Seq[String], txn: Option[String] = None,
       dvs: Seq[String] = Nil, stats: Seq[Stats.Stat[_]] = Nil): Long = {
-    Files.createDirectories(logDir(table))
-    val tmp = logDir(table).resolve(s".v$v.${java.util.UUID.randomUUID()}.tmp")
     val lines = txn.map(t => s"#txn:$t").toSeq ++ dvs.map(d => s"#dv:$d") ++ files
-    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    try Files.createLink(versionFile(table, v), tmp) // atomic put-if-absent
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      Files.deleteIfExists(tmp)
-      throw new CommitConflict(table, v)
-    }
-    Files.deleteIfExists(tmp)
+    if (!LogText.create(versionFile(table, v), lines)) throw new CommitConflict(table, v)
     writeStats(table, v, stats)
     v
   }
@@ -491,10 +446,10 @@ object TableLog extends QueryPack {
   private val NothingCarried = Carried(Nil, Nil, Nil)
 
   private def carried(table: String, v: Long, drop: Set[String] = Set.empty): Carried = {
-    val files = liveFiles(table, v).filterNot(drop)
+    val m = manifest(table, v)
+    val files = m.files.filterNot(drop)
     val live = files.toSet
-    Carried(files, dvFiles(table, v),
-      latestStats(table, v).filter(s => live(s.file)))
+    Carried(files, m.dvs, latestStats(table, v).filter(s => live(s.file)))
   }
 
   /** Publish data files written EXECUTOR-SIDE (a DSv2 `DataWriter` fleet —
@@ -568,10 +523,7 @@ object TableLog extends QueryPack {
 
   /** txn ids recorded by committed versions (empty for untagged commits). */
   def committedTxns(table: String): Set[String] =
-    versions(table).flatMap { v =>
-      Files.readAllLines(versionFile(table, v)).asScala
-        .filter(_.startsWith("#txn:")).map(_.stripPrefix("#txn:"))
-    }.toSet
+    versions(table).flatMap(txnsAt(table, _)).toSet
 
   /** Append commit: new version = previous live files (with their DVs and
     * stats) + the new ones. `statCols` (long- or string-valued columns)
@@ -666,8 +618,7 @@ object TableLog extends QueryPack {
     * lookup and the split detector behind consistent snapshots)
     */
   private[sources] def txnsAt(table: String, v: Long): Seq[String] =
-    Files.readAllLines(versionFile(table, v)).asScala.toSeq
-      .filter(_.startsWith("#txn:")).map(_.stripPrefix("#txn:"))
+    manifest(table, v).txns
 
   /** the per-file recorded row counts (the `$files` metadata table's
     * `rows` column; files written before row-count recording report None)
@@ -801,17 +752,10 @@ object TableLog extends QueryPack {
     logDir(table).resolve(s"s$v.txt")
 
   private def writeStats(table: String, v: Long, stats: Seq[Stats.Stat[_]]): Unit =
-    if (stats.nonEmpty) {
-      Files.createDirectories(logDir(table))
-      Files.write(statsFile(table, v),
-        stats.map(Stats.render(_)).mkString("\n").getBytes(StandardCharsets.UTF_8))
-    }
+    if (stats.nonEmpty) LogText.replace(statsFile(table, v), stats.map(Stats.render(_)))
 
-  private def statsLines(table: String, v: Long): Seq[String] = {
-    val p = statsFile(table, v)
-    if (!Files.exists(p)) Seq.empty
-    else Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
-  }
+  private def statsLines(table: String, v: Long): Seq[String] =
+    LogText.lines(statsFile(table, v))
 
   /** the stats recorded in version `v`'s own sidecar */
   private def statsAt(table: String, v: Long): Seq[Stats.Stat[_]] =
@@ -937,9 +881,7 @@ object TableLog extends QueryPack {
     val vs = versions(table)
     require(vs.nonEmpty, s"no committed versions under $table")
     val files = liveFiles(table, asOf.getOrElse(vs.last))
-    val blooms = bloomLines(table, column).map { l =>
-      val i = l.indexOf('|'); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
+    val blooms = bloomsOf(table, column)
     val pss = values.map(bloomPositions(column, _))
     files.filter { f =>
       blooms.get(f).forall { hex =>
@@ -1002,11 +944,12 @@ object TableLog extends QueryPack {
   private def bloomFile(table: String, column: String): Path =
     logDir(table).resolve(s"bloom_$column.txt")
 
-  private def bloomLines(table: String, column: String): Seq[String] = {
-    val p = bloomFile(table, column)
-    if (!Files.exists(p)) Seq.empty
-    else Files.readAllLines(p).asScala.toSeq.filter(_.nonEmpty)
-  }
+  private def bloomLines(table: String, column: String): Seq[String] =
+    LogText.lines(bloomFile(table, column))
+
+  /** relpath → hex bits of `column`'s Bloom sidecar */
+  private def bloomsOf(table: String, column: String): Map[String, String] =
+    LogText.pairs(bloomLines(table, column)).toMap
 
   /** Bloom bit positions of one value — the portable md5 recipe (first 8
     * hex chars as an integer), computed identically driver-side here and
@@ -1031,7 +974,7 @@ object TableLog extends QueryPack {
   def buildBloomIndex(spark: SparkSession, table: String, column: String): Int = {
     val vs = versions(table)
     require(vs.nonEmpty, s"no committed versions under $table")
-    val have = bloomLines(table, column).map(_.takeWhile(_ != '|')).toSet
+    val have = bloomsOf(table, column).keySet
     // files lacking the column (pre-evolution) are skipped — the lookup
     // keeps bloomless files, so skipping stays sound. Presence comes from
     // each candidate's parquet FOOTER (driver-side metadata read), not a
@@ -1062,10 +1005,7 @@ object TableLog extends QueryPack {
       val words = bits.toLongArray.padTo(BloomBits / 64, 0L)
       s"$rel|${words.map(w => f"$w%016x").mkString}"
     }
-    val prior = bloomLines(table, column)
-    Files.createDirectories(logDir(table))
-    Files.write(bloomFile(table, column),
-      (prior ++ lines).mkString("\n").getBytes(StandardCharsets.UTF_8))
+    LogText.replace(bloomFile(table, column), bloomLines(table, column) ++ lines)
     missing.size
   }
 
@@ -1088,30 +1028,19 @@ object TableLog extends QueryPack {
     val aggs = columns.map(c => approx_count_distinct(col(c), 0.02).as(c))
     val row = df.agg(aggs.head, aggs.tail: _*).collect().head
     val fresh = columns.map(c => s"$head|$c|${row.getAs[Long](c)}")
-    val keep = {
-      val p = ndvFile(table)
-      if (!Files.exists(p)) Seq.empty
-      else Files.readAllLines(p).asScala.toSeq
-        // malformed lines (truncated/corrupt sidecar) are DROPPED, mirroring
-        // ndvFor's tolerant collectFirst — a raw split()(1) would crash here
-        .filter(l => l.nonEmpty && l.split('|').length == 3)
-        .filterNot(l => columns.exists(c => l.split('|')(1).equalsIgnoreCase(c)))
-    }
-    Files.createDirectories(logDir(table))
-    Files.write(ndvFile(table),
-      (keep ++ fresh).mkString("\n").getBytes(StandardCharsets.UTF_8))
-    ()
+    val keep = LogText.lines(ndvFile(table))
+      // malformed lines (truncated/corrupt sidecar) are DROPPED, mirroring
+      // ndvFor's tolerant collectFirst — a raw split()(1) would crash here
+      .filter(_.split('|').length == 3)
+      .filterNot(l => columns.exists(c => l.split('|')(1).equalsIgnoreCase(c)))
+    LogText.replace(ndvFile(table), keep ++ fresh)
   }
 
   /** the recorded NDV estimate for `column` (measured-at version, ndv) */
-  private[sources] def ndvFor(table: String, column: String): Option[(Long, Long)] = {
-    val p = ndvFile(table)
-    if (!Files.exists(p)) None
-    else Files.readAllLines(p).asScala.filter(_.nonEmpty)
-      .map(_.split('|'))
+  private[sources] def ndvFor(table: String, column: String): Option[(Long, Long)] =
+    LogText.lines(ndvFile(table)).map(_.split('|'))
       .collectFirst { case Array(v, c, n) if c.equalsIgnoreCase(column) =>
         (v.toLong, n.toLong) }
-  }
 
   /** live data bytes at a version — metadata-only (manifest + file sizes) */
   private[sources] def liveBytes(table: String, v: Long): Long =
@@ -1127,9 +1056,7 @@ object TableLog extends QueryPack {
     val vs = versions(table)
     require(vs.nonEmpty, s"no committed versions under $table")
     val files = liveFiles(table, asOf.getOrElse(vs.last))
-    val blooms = bloomLines(table, column).map { l =>
-      val i = l.indexOf('|'); l.substring(0, i) -> l.substring(i + 1)
-    }.toMap
+    val blooms = bloomsOf(table, column)
     val ps = bloomPositions(column, value)
     val kept = files.filter { f =>
       blooms.get(f).forall { hex =>
@@ -1481,9 +1408,6 @@ object TableLog extends QueryPack {
     liveFiles(table, asOf.getOrElse(vs.last)).size
   }
 
-  /** Drop manifests older than the last `keepVersions` and delete data files
-    * no kept manifest references. Returns (versions dropped, files deleted).
-    */
   // -------------------------------------------------------------------------
   // Named version refs (TAGS) — Iceberg/Delta-style named snapshots
   // -------------------------------------------------------------------------
@@ -1493,27 +1417,15 @@ object TableLog extends QueryPack {
   private val TagOk = "[A-Za-z][A-Za-z0-9_.-]*".r
 
   /** all named refs: tag → version (empty when none recorded) */
-  def refs(table: String): Map[String, Long] = {
-    val p = refsFile(table)
-    if (!Files.exists(p)) Map.empty
-    else Files.readAllLines(p).asScala.filter(_.contains("|")).map { l =>
-      val i = l.indexOf('|'); l.substring(0, i) -> l.substring(i + 1).toLong
-    }.toMap
-  }
+  def refs(table: String): Map[String, Long] =
+    LogText.pairs(LogText.lines(refsFile(table)))
+      .flatMap { case (t, v) => v.toLongOption.map(t -> _) }.toMap
 
   /** the version a tag names (None: no such tag) */
   def refVersion(table: String, tag: String): Option[Long] = refs(table).get(tag)
 
-  private def writeRefs(table: String, m: Map[String, Long]): Unit = {
-    Files.createDirectories(logDir(table))
-    val p = refsFile(table)
-    val tmp = p.resolveSibling(s".${p.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-    Files.write(tmp, m.toSeq.sortBy(_._1).map { case (t, v) => s"$t|$v" }
-      .mkString("\n").getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  private def writeRefs(table: String, m: Map[String, Long]): Unit =
+    LogText.replace(refsFile(table), m.toSeq.sortBy(_._1).map { case (t, v) => s"$t|$v" })
 
   /** TAG a committed version with an immutable name: `VERSION AS OF
     * '<tag>'` through the catalog resolves it, and [[vacuum]] PROTECTS it —
@@ -1548,22 +1460,11 @@ object TableLog extends QueryPack {
     else { writeRefs(table, cur - tag); true }
   }
 
+  /** Drop manifests older than the last `keepVersions` and delete data files
+    * no kept manifest references. Returns (versions dropped, files deleted).
+    */
   def vacuum(table: String, keepVersions: Int = 1): (Seq[Long], Int) = {
-    require(keepVersions >= 1, "must keep at least the latest version")
-    val vs = versions(table)
-    // tagged versions are PINNED, and retention never crosses the OLDEST
-    // tag: vacuum drops a contiguous untagged PREFIX only, because every
-    // delta-chain consumer (stepDiff, change feed, history classification)
-    // reads version v-1's manifest — a vacuumed MIDDLE version would turn
-    // their exact deltas into crashes or, worse, wrong inserts
-    val tagged = refs(table).values.toSet
-    val (dropCand, keepTail) = vs.splitAt((vs.size - keepVersions).max(0))
-    val drop = dropCand.takeWhile(v => !tagged(v))
-    val keep = keepTail ++ dropCand.drop(drop.size)
-    val referenced =
-      keep.flatMap(v => liveFiles(table, v) ++ dvFiles(table, v)).toSet
-    val doomed =
-      drop.flatMap(v => liveFiles(table, v) ++ dvFiles(table, v)).toSet -- referenced
+    val (drop, doomed) = retention(table, keepVersions)
     doomed.foreach(f => Files.deleteIfExists(Paths.get(table).resolve(f)))
     drop.foreach { v =>
       Files.delete(versionFile(table, v))
@@ -1580,21 +1481,36 @@ object TableLog extends QueryPack {
     * exactly this plan.
     */
   def vacuumPlan(table: String, keepVersions: Int = 1): (Seq[Long], Int, Long) = {
-    require(keepVersions >= 1, "must keep at least the latest version")
-    val vs = versions(table)
-    val tagged = refs(table).values.toSet
-    val (dropCand, keepTail) = vs.splitAt((vs.size - keepVersions).max(0))
-    val drop = dropCand.takeWhile(v => !tagged(v))
-    val keep = keepTail ++ dropCand.drop(drop.size)
-    val referenced =
-      keep.flatMap(v => liveFiles(table, v) ++ dvFiles(table, v)).toSet
-    val doomed =
-      drop.flatMap(v => liveFiles(table, v) ++ dvFiles(table, v)).toSet -- referenced
+    val (drop, doomed) = retention(table, keepVersions)
     val bytes = doomed.toSeq.map { f =>
       val p = Paths.get(table).resolve(f)
       if (Files.exists(p)) Files.size(p) else 0L
     }.sum
     (drop, doomed.size, bytes)
+  }
+
+  /** the versions a `keepVersions` retention drops, and the files only
+    * they reference — the plan [[vacuum]] executes and [[vacuumPlan]] reports
+    */
+  private def retention(table: String, keepVersions: Int): (Seq[Long], Set[String]) = {
+    require(keepVersions >= 1, "must keep at least the latest version")
+    val vs = versions(table)
+    // tagged versions are PINNED, and retention never crosses the OLDEST
+    // tag: vacuum drops a contiguous untagged PREFIX only, because every
+    // delta-chain consumer (stepDiff, change feed, history classification)
+    // reads version v-1's manifest — a vacuumed MIDDLE version would turn
+    // their exact deltas into crashes or, worse, wrong inserts
+    val tagged = refs(table).values.toSet
+    val (dropCand, keepTail) = vs.splitAt((vs.size - keepVersions).max(0))
+    val drop = dropCand.takeWhile(v => !tagged(v))
+    val keep = keepTail ++ dropCand.drop(drop.size)
+    (drop, drop.flatMap(referencedAt(table, _)).toSet -- keep.flatMap(referencedAt(table, _)))
+  }
+
+  /** every file version `v`'s manifest references: data files and DVs */
+  private def referencedAt(table: String, v: Long): Seq[String] = {
+    val m = manifest(table, v)
+    m.files ++ m.dvs
   }
 
   /** Remove ORPHANED data files — written by a crashed commit but never
@@ -1606,7 +1522,7 @@ object TableLog extends QueryPack {
     */
   def gcOrphans(table: String): Int = {
     val referenced = versions(table)
-      .flatMap(v => liveFiles(table, v) ++ dvFiles(table, v))
+      .flatMap(referencedAt(table, _))
       .map(rel => Paths.get(table).resolve(rel).normalize()).toSet
     val stray = listDir(dataDir(table)).filterNot(p => referenced(p.normalize()))
     stray.foreach(Files.deleteIfExists(_))
@@ -1645,9 +1561,7 @@ object TableLog extends QueryPack {
     read(spark, table, asOf = Some(v))
       .write.mode("overwrite").parquet(destDir + "/data")
     val (n, cs) = contentChecksum(spark.read.parquet(destDir + "/data"))
-    Files.createDirectories(Paths.get(destDir))
-    Files.write(Paths.get(destDir, "MANIFEST"),
-      s"$v\n$n\n$cs\n".getBytes(StandardCharsets.UTF_8))
+    LogText.replace(Paths.get(destDir, "MANIFEST"), Seq(v, n, cs).map(_.toString))
     v
   }
 
@@ -1657,8 +1571,11 @@ object TableLog extends QueryPack {
     * new log's first version. Returns the committed version id.
     */
   def restore(spark: SparkSession, backupDir: String, newTable: String): Long = {
-    val lines = Files.readAllLines(Paths.get(backupDir, "MANIFEST"))
-    val (n0, cs0) = (lines.get(1).toLong, lines.get(2).toLong)
+    // MANIFEST lines: version, row count, checksum — a short or garbled
+    // one fails the integrity check like any other tampered backup
+    val recorded = LogText.lines(Paths.get(backupDir, "MANIFEST")).slice(1, 3).flatMap(_.toLongOption)
+    require(recorded.size == 2, s"backup integrity check failed: MANIFEST lacks rows and checksum")
+    val Seq(n0, cs0) = recorded
     val df = spark.read.parquet(backupDir + "/data")
     val (n, cs) = contentChecksum(df)
     require(n == n0 && cs == cs0,
@@ -1702,14 +1619,7 @@ object TableLog extends QueryPack {
     // to the cloned live set and re-key nothing
     val liveSet = (snap.files ++ snap.dvs).toSet
     val counts = rowCounts(src).filter { case (f, _) => liveSet(f) }
-    Files.createDirectories(logDir(dst))
-    if (counts.nonEmpty) {
-      Files.write(rowCountsFile(dst),
-        counts.map { case (f, n) => s"$f|$n" }.mkString("", "\n", "\n")
-          .getBytes(StandardCharsets.UTF_8),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.APPEND)
-    }
+    LogText.append(rowCountsFile(dst), counts.map { case (f, n) => s"$f|$n" }.toSeq)
     checkConstraints(src).foreach { case (n, e) => addCheckConstraint(dst, n, e) }
     publish(dst, 0L, snap.files, dvs = snap.dvs, stats = snap.stats)
   }
@@ -2526,15 +2436,13 @@ object TableLog extends QueryPack {
       persisting: Seq[String], prevDv: Seq[String], curDv: Seq[String])
 
   private[sources] def stepDiff(table: String, v: Long, vs: Seq[Long]): StepDiff = {
-    val prev = if (v == vs.head) Seq.empty else liveFiles(table, v - 1)
-    val cur = liveFiles(table, v)
-    val prevDv = if (v == vs.head) Seq.empty[String] else dvFiles(table, v - 1)
-    val curDv = dvFiles(table, v)
+    val prev = if (v == vs.head) Manifest(Nil, Nil, Nil) else manifest(table, v - 1)
+    val cur = manifest(table, v)
     StepDiff(v,
-      added = cur.filterNot(prev.toSet),
-      removed = prev.filterNot(cur.toSet),
-      persisting = (prev.toSet & cur.toSet).toSeq,
-      prevDv = prevDv, curDv = curDv)
+      added = cur.files.filterNot(prev.files.toSet),
+      removed = prev.files.filterNot(cur.files.toSet),
+      persisting = (prev.files.toSet & cur.files.toSet).toSeq,
+      prevDv = prev.dvs, curDv = cur.dvs)
   }
 
   /** DV positions newly dead at this step on PERSISTING files (alive at
@@ -2866,8 +2774,7 @@ object TableLog extends QueryPack {
       feed: (Long, Long) => DataFrame)(
       f: (DataFrame, Long, Long) => Unit): Option[(Long, Long)] = {
     val cp = Paths.get(cursorFile)
-    val cursor =
-      if (Files.exists(cp)) Files.readString(cp).trim.toLong else -1L
+    val cursor = LogText.lines(cp).headOption.fold(-1L)(_.trim.toLong)
     val vs = versions(table)
     val head = vs.lastOption.getOrElse(-1L)
     // cursor AHEAD of the head is a lineage break (log truncated or
@@ -2881,11 +2788,7 @@ object TableLog extends QueryPack {
     if (head <= last) None
     else {
       f(feed(last, head), last, head)
-      Files.createDirectories(cp.toAbsolutePath.getParent)
-      val tmp = cp.resolveSibling(s".${cp.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-      Files.write(tmp, head.toString.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, cp, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
+      LogText.replace(cp, Seq(head.toString))
       Some((last, head))
     }
   }

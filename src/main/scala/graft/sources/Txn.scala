@@ -4,8 +4,7 @@ import graft.{Q, QueryPack, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Cross-table ATOMIC transactions over [[TableLog]] tables — the
@@ -52,24 +51,14 @@ object Txn extends QueryPack {
 
   private def tag(id: String): String = s"xt_$id"
 
-  private def writeAtomic(p: Path, lines: Seq[String]): Unit = {
-    Files.createDirectories(p.getParent)
-    val tmp = p.resolveSibling(s".${p.getFileName}.${java.util.UUID.randomUUID()}.tmp")
-    Files.write(tmp, lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
   /** intent entries: (table, overwrite, staged relative files) */
   private def readIntent(root: String, id: String): Seq[(String, Boolean, Seq[String])] =
-    Files.readAllLines(intentFile(root, id)).asScala.toSeq.filter(_.nonEmpty)
-      .map { l =>
-        // limit -1: an empty staged-file list (empty DataFrame with zero
-        // partitions) must still parse as three fields
-        val Array(t, ow, fs) = l.split("\\|", -1)
-        (t, ow.toBoolean, fs.split(',').toSeq.filter(_.nonEmpty))
-      }
+    LogText.lines(intentFile(root, id)).map { l =>
+      // limit -1: an empty staged-file list (empty DataFrame with zero
+      // partitions) must still parse as three fields
+      val Array(t, ow, fs) = l.split("\\|", -1)
+      (t, ow.toBoolean, fs.split(',').toSeq.filter(_.nonEmpty))
+    }
 
   /** Atomically commit `writes` across their tables under idempotency key
     * `id`. Returns table → landed version. Re-invoking a completed id
@@ -82,10 +71,9 @@ object Txn extends QueryPack {
       writes: Seq[Write],
       failAfterTables: Int = Int.MaxValue): Map[String, Long] = {
     require(IdOk.pattern.matcher(id).matches(), s"txn id '$id' must be [A-Za-z0-9_-]+")
-    if (Files.exists(doneFile(txnRoot, id)))
-      return Files.readAllLines(doneFile(txnRoot, id)).asScala.filter(_.nonEmpty)
-        .map { l => val Array(t, v) = l.split('|'); (t, v.toLong) }.toMap
-    if (!Files.exists(intentFile(txnRoot, id))) {
+    val done = LogText.pairs(LogText.lines(doneFile(txnRoot, id)))
+    if (done.nonEmpty) return done.map { case (t, v) => (t, v.toLong) }.toMap
+    if (readIntent(txnRoot, id).isEmpty) {
       require(writes.nonEmpty, s"txn $id commits nothing")
       val tables = writes.map(w => norm(w.table))
       require(tables.distinct.size == tables.size,
@@ -94,7 +82,7 @@ object Txn extends QueryPack {
       // only direction is forward, so the data it needs must all exist
       val staged = writes.map(w =>
         (norm(w.table), w.overwrite, TableLog.writeConstrained(w.df, w.table)))
-      writeAtomic(intentFile(txnRoot, id),
+      LogText.replace(intentFile(txnRoot, id),
         staged.map { case (t, ow, fs) => s"$t|$ow|${fs.mkString(",")}" })
     }
     rollForward(txnRoot, id, failAfterTables)
@@ -109,7 +97,7 @@ object Txn extends QueryPack {
         table -> landed.getOrElse(landedVersion(table, tag(id)).getOrElse(
           sys.error(s"txn $id claims committed on $table but no version carries it")))
     }.toMap
-    writeAtomic(doneFile(root, id),
+    LogText.replace(doneFile(root, id),
       versions.toSeq.sortBy(_._1).map { case (t, v) => s"$t|$v" })
     versions
   }
@@ -122,16 +110,18 @@ object Txn extends QueryPack {
     * any time, from any process, concurrently with writers — publishes
     * are idempotent under their tags.
     */
-  def recover(spark: SparkSession, txnRoot: String): Seq[String] = {
+  def recover(spark: SparkSession, txnRoot: String): Seq[String] =
+    intentIds(txnRoot).filter(id => LogText.lines(doneFile(txnRoot, id)).isEmpty)
+      .map { id => rollForward(txnRoot, id, Int.MaxValue); id }
+
+  /** ids of every intent record under `txnRoot`, sorted */
+  private def intentIds(txnRoot: String): Seq[String] = {
     val dir = Paths.get(txnRoot)
     if (!Files.isDirectory(dir)) return Seq.empty
     val st = Files.list(dir)
-    val intents =
-      try st.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".intent")).map(_.stripSuffix(".intent")).toSeq
-      finally st.close()
-    intents.filterNot(id => Files.exists(doneFile(txnRoot, id))).sorted
-      .map { id => rollForward(txnRoot, id, Int.MaxValue); id }
+    try st.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.endsWith(".intent")).map(_.stripSuffix(".intent")).toSeq.sorted
+    finally st.close()
   }
 
   /** The latest per-table versions at which NO cross-table transaction is
@@ -147,17 +137,8 @@ object Txn extends QueryPack {
     val caps = scala.collection.mutable.Map(req.map(t =>
       t -> TableLog.versions(t).lastOption.getOrElse(
         sys.error(s"no committed versions under $t"))): _*)
-    val dir = Paths.get(txnRoot)
-    val ids: Seq[String] =
-      if (!Files.isDirectory(dir)) Seq.empty
-      else {
-        val st = Files.list(dir)
-        try st.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.endsWith(".intent")).map(_.stripSuffix(".intent")).toSeq.sorted
-        finally st.close()
-      }
     val members: Seq[(String, Seq[String])] =
-      ids.map(id => id -> readIntent(txnRoot, id).map(_._1).filter(caps.contains))
+      intentIds(txnRoot).map(id => id -> readIntent(txnRoot, id).map(_._1).filter(caps.contains))
         .filter(_._2.size > 1)
     // tag → landed version, ONE manifest sweep per table: the fixpoint
     // below then does pure map lookups, so the whole snapshot costs

@@ -1217,4 +1217,123 @@ class TableLogSpec extends SparkSpec {
     assert(chain(e).exists(m => m != null && m.contains("duplicate key")),
       s"expected a loud duplicate-key failure, got: ${chain(e).mkString(" | ")}")
   }
+
+  test("table-log text bytes: props, constraints, refs, ndv and row counts") {
+    import java.nio.file.{Files, Paths}
+    Scratch.wipe(s"$root/bytes")
+    val t = s"$root/bytes/t"
+    def text(name: String) = new String(
+      Files.readAllBytes(Paths.get(t, "_log", name)), java.nio.charset.StandardCharsets.UTF_8)
+    def dataFiles = new java.io.File(s"$t/data").listFiles().map(_.getName).toSet
+    TableLog.commitAppend(Seq((1L, "a"), (2L, "b")).toDF("k", "v").coalesce(1), t)
+    val Seq(f0) = dataFiles.toSeq
+    TableLog.commitAppend(Seq((3L, "c")).toDF("k", "v").coalesce(1), t)
+    val Seq(f1) = (dataFiles - f0).toSeq
+    // append-only: every line ends in a newline
+    assert(text("rowcounts.txt") == s"data/$f0|2\ndata/$f1|1\n")
+    // whole-file sidecars: lines joined by newlines, no trailing newline
+    TableLog.setTableProp(t, "graft.b", "2")
+    TableLog.setTableProp(t, "graft.a", "x,y")
+    assert(text("props.txt") == "graft.a|x,y\ngraft.b|2")
+    TableLog.unsetTableProp(t, "graft.a")
+    TableLog.unsetTableProp(t, "graft.b")
+    assert(text("props.txt") == "")
+    TableLog.addCheckConstraint(t, "pos", "k > 0")
+    TableLog.addCheckConstraint(t, "small", "k < 10")
+    assert(text("constraints.txt") == "pos|k > 0\nsmall|k < 10")
+    TableLog.dropCheckConstraint(t, "pos")
+    assert(text("constraints.txt") == "small|k < 10")
+    TableLog.tagVersion(t, "zeta", 0L)
+    TableLog.tagVersion(t, "alpha", 1L)
+    assert(text("refs.txt") == "alpha|1\nzeta|0")
+    TableLog.buildNdvIndex(spark, t, Seq("k", "v"))
+    assert(text("ndv.txt") == "1|k|3\n1|v|3")
+    val logFiles = new java.io.File(s"$t/_log").listFiles().map(_.getName).toSet
+    assert(logFiles == Set("v0.txt", "v1.txt", "rowcounts.txt", "props.txt",
+      "constraints.txt", "refs.txt", "ndv.txt"), "no temp file left behind")
+  }
+
+  test("a sidecar rewrite never shows a reader a half-written file") {
+    Scratch.wipe(s"$root/atomic")
+    val t = s"$root/atomic/t"
+    TableLog.addCheckConstraint(t, "c1", "k > 0")
+    TableLog.setTableProp(t, TableLog.ClusterByProp, "k")
+    // a writer thread flips `write(true)` / `write(false)` while this thread
+    // reads 5 000 times; every read must see the line no writer touches
+    def race(write: Boolean => Unit)(intact: => Boolean): Unit = {
+      @volatile var stop = false
+      @volatile var failure: Option[Throwable] = None
+      val writes = new java.util.concurrent.atomic.AtomicLong
+      val writer = new Thread(() =>
+        try {
+          var on = true
+          while (!stop) { write(on); on = !on; writes.incrementAndGet() }
+        } catch { case e: Throwable => failure = Some(e) })
+      writer.start()
+      val missed = try (1 to 5000).count(_ => !intact)
+        finally { stop = true; writer.join() }
+      assert(failure.isEmpty, failure)
+      assert(writes.get > 0, "the writer never ran")
+      assert(missed == 0, s"$missed of 5000 reads saw a half-written sidecar")
+    }
+    race(on =>
+      if (on) TableLog.addCheckConstraint(t, "c2", "k < 100")
+      else TableLog.dropCheckConstraint(t, "c2")) {
+      TableLog.checkConstraints(t).contains("c1" -> "k > 0")
+    }
+    race(on =>
+      if (on) TableLog.setTableProp(t, "graft.other", "1")
+      else TableLog.unsetTableProp(t, "graft.other")) {
+      TableLog.tableProps(t).get(TableLog.ClusterByProp).contains("k")
+    }
+  }
+
+  test("a torn row-count or bucket append is never misread") {
+    import java.nio.file.{Files, Path, Paths}
+    import java.nio.charset.StandardCharsets.UTF_8
+    Scratch.wipe(s"$root/torn")
+    // a crash mid-append leaves the last line cut after its value's first
+    // digit and without its newline
+    def tear(p: Path, line: String): Unit = {
+      val rest = new String(Files.readAllBytes(p), UTF_8).split('\n').filterNot(_ == line)
+      Files.write(p, (rest :+ line.substring(0, line.lastIndexOf('|') + 2))
+        .mkString("\n").getBytes(UTF_8))
+    }
+    val t = s"$root/torn/t"
+    val rc = Paths.get(t, "_log", "rowcounts.txt")
+    def countsAgree() = assert(
+      TableLog.metadataCount(t).forall(_ == TableLog.read(spark, t).count()))
+    TableLog.commitAppend(spark.range(100).toDF("k").coalesce(1), t)
+    tear(rc, new String(Files.readAllBytes(rc), UTF_8).trim)
+    countsAgree()
+    assert(TableLog.metadataCount(t).isEmpty, "a torn count is absent, not short")
+    // the next append lands on the torn tail; the merged line is dropped
+    TableLog.commitAppend(spark.range(5).toDF("k").coalesce(1), t)
+    countsAgree()
+    TableLog.commitAppend(spark.range(7).toDF("k").coalesce(1), t)
+    countsAgree()
+    assert(new String(Files.readAllBytes(rc), UTF_8).endsWith("|7\n"),
+      "a later append lands on a line of its own")
+
+    val b = s"$root/torn/b"
+    TableLog.commitAppend(spark.range(400).toDF("k"), b, bucketBy = Some(("k", 16)))
+    val bf = Paths.get(b, "_log", "buckets.txt")
+    val before = TableLog.fileBuckets(b)
+    val (cut, id) = before.find(_._2 >= 10).get
+    tear(bf, s"$cut|$id")
+    assert(TableLog.fileBuckets(b) == before - cut, "a torn bucket id is absent, not wrong")
+  }
+
+  test("restore refuses a backup whose MANIFEST is cut short") {
+    import java.nio.file.{Files, Paths}
+    Scratch.wipe(s"$root/shortbak")
+    val (src, bak, dst) = (s"$root/shortbak/src", s"$root/shortbak/bak", s"$root/shortbak/dst")
+    TableLog.commitOverwrite(Seq((1L, "a"), (2L, "b")).toDF("id", "payload"), src)
+    TableLog.backup(spark, src, bak)
+    val mf = Paths.get(bak, "MANIFEST")
+    Files.write(mf, Files.readAllLines(mf).get(0).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val ex = intercept[IllegalArgumentException](TableLog.restore(spark, bak, dst))
+    assert(ex.getMessage.contains("integrity"), s"wrong failure: ${ex.getMessage}")
+    assert(TableLog.versions(dst).isEmpty)
+  }
 }
